@@ -206,8 +206,10 @@ object Conf {
         }
     }
 
-  /** Total length of `paths` through the Hadoop FS API (metadata-only) —
-    * the input-size probe for [[applyChunkShufflePartitions]].
+  /** Length of each of `paths` (in order) through the Hadoop FS API
+    * (metadata-only) — the input-size probe for
+    * [[applyChunkShufflePartitions]] and the byte balance of the chunk
+    * stage.
     *
     * Batched: one `listStatus` RPC per parent directory instead of one
     * `getFileStatus` per path — at 100k files in a handful of directories
@@ -217,26 +219,24 @@ object Conf {
     * `getFileStatus`, preserving the unbatched behavior exactly (including
     * FileNotFoundException for genuinely missing inputs).
     */
-  def totalFileBytes(paths: Seq[String]): Long = {
+  def fileLengths(paths: Seq[String]): Seq[Long] = {
     import org.apache.hadoop.fs.Path
     val conf = new org.apache.hadoop.conf.Configuration()
-    paths
-      .map(new Path(_))
-      .groupBy(p => Option(p.getParent))
-      .iterator
-      .map {
-        case (Some(parent), group) if group.size > 1 =>
-          val fs = parent.getFileSystem(conf)
-          // qualified-path keys: the listing returns fully-qualified Paths
-          // while callers may pass relative/unqualified strings
-          val listed = fs.listStatus(parent)
-            .map(st => st.getPath -> st.getLen).toMap
-          group.map { p =>
-            listed.getOrElse(fs.makeQualified(p), fs.getFileStatus(p).getLen)
-          }.sum
-        case (_, group) =>
-          group.map(p => p.getFileSystem(conf).getFileStatus(p).getLen).sum
-      }
-      .sum
+    val hPaths = paths.map(new Path(_))
+    // qualified-path keys: the listing returns fully-qualified Paths while
+    // callers may pass relative/unqualified strings
+    val listed = hPaths.groupBy(p => Option(p.getParent)).collect {
+      case (Some(parent), group) if group.size > 1 =>
+        parent -> parent.getFileSystem(conf).listStatus(parent)
+          .map(st => st.getPath -> st.getLen).toMap
+    }
+    hPaths.map { p =>
+      val fs = p.getFileSystem(conf)
+      Option(p.getParent).flatMap(listed.get).flatMap(_.get(fs.makeQualified(p)))
+        .getOrElse(fs.getFileStatus(p).getLen)
+    }
   }
+
+  /** Total length of `paths` ([[fileLengths]] summed). */
+  def totalFileBytes(paths: Seq[String]): Long = fileLengths(paths).sum
 }

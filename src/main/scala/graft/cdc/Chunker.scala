@@ -159,9 +159,111 @@ final class ChunkIterator(in: InputStream, params: ChunkerParams, bufSize: Int =
   override def next(): Array[Byte] = { fill(); pending.dequeue() }
 }
 
+/** One chunk found by [[ChunkScan.stats]]: the config that cut it, its
+  * index within that config's chunk stream, xxh64 (seed 42), size, and LZ4
+  * size (0 for configs whose compressed size was not requested).
+  */
+final case class ScannedChunk(config: Int, index: Long, hash: Long, size: Int, compressed: Int)
+
+/** Chunks ONE input stream under several chunker configs from a single
+  * read. Bytes land once in a shared window; every config runs
+  * `Chunker.nextEnd` over it from its own chunk start, so a file is opened
+  * and read once however many configs chunk it. `advance()` reports each
+  * chunk as a span of `window` (`offset`, `length`), valid until the next
+  * call, so callers hash it in place without copying. Per config, the
+  * boundaries equal ChunkIterator's (ChunkerSpec pins that).
+  *
+  * A chunk that runs into the window's end is deferred and rescanned from
+  * its start after the next refill: nextEnd's decision at a position
+  * depends only on the bytes since the chunk start, so this is exact. The
+  * window holds `bufSize` fresh bytes plus the longest pending chunk, i.e.
+  * `bufSize + maxLen` when every config enforces maxLen; it grows (by
+  * doubling) only for an `enforceMax = false` chunk longer than that.
+  *
+  * Closes the stream on exhaustion.
+  */
+final class ChunkScan(in: InputStream, configs: IndexedSeq[ChunkerParams], bufSize: Int) {
+  require(configs.nonEmpty, "ChunkScan needs at least one chunker config")
+  require(bufSize > 0, s"bad read buffer size: $bufSize")
+  private val k = configs.size
+  private val tables = configs.map(p => Gear.table(p.tableSeed)).toArray
+  private val skips = configs.map(Chunker.hashSkip).toArray
+  private val starts = new Array[Int](k) // per-config chunk start in the window
+  private val counts = new Array[Long](k)
+  private var win = new Array[Byte](bufSize + configs.map(_.maxLen).max)
+  private var filled = 0
+  private var eof = false
+  private var cur = k // config being scanned; k = all wait for a refill
+  private var spanOffset = 0
+  private var spanLength = 0
+  private var spanIndex = 0L
+
+  def window: Array[Byte] = win
+  def config: Int = cur
+  def offset: Int = spanOffset
+  def length: Int = spanLength
+  def index: Long = spanIndex
+
+  /** Moves to the next chunk of some config; false once every config has
+    * consumed the whole stream.
+    */
+  def advance(): Boolean = {
+    var found = false
+    while (!found && !(cur == k && eof)) {
+      if (cur == k) refill()
+      else {
+        val s = starts(cur)
+        val end =
+          if (s < filled) Chunker.nextEnd(win, s, filled, tables(cur), configs(cur), skips(cur))
+          else s
+        if (end > s && (end < filled || eof)) {
+          spanOffset = s
+          spanLength = end - s
+          spanIndex = counts(cur)
+          counts(cur) += 1
+          starts(cur) = end
+          found = true
+        } else cur += 1
+      }
+    }
+    found
+  }
+
+  private def refill(): Unit = {
+    val keep = starts.min
+    if (keep > 0) {
+      System.arraycopy(win, keep, win, 0, filled - keep)
+      filled -= keep
+      var c = 0
+      while (c < k) { starts(c) -= keep; c += 1 }
+    }
+    if (win.length - filled < bufSize)
+      win = java.util.Arrays.copyOf(win, math.max(2 * win.length, filled + bufSize))
+    while (!eof && filled < win.length) {
+      val n = in.read(win, filled, win.length - filled)
+      if (n < 0) { eof = true; in.close() } else filled += n
+    }
+    cur = 0
+  }
+
+  /** The scan as [[ScannedChunk]] records, hashed in place on the window;
+    * the LZ4 size is computed only for configs with `lz4(config)`.
+    */
+  def stats(lz4: IndexedSeq[Boolean]): Iterator[ScannedChunk] = new Iterator[ScannedChunk] {
+    private var ready = false
+    override def hasNext: Boolean = { if (!ready) ready = advance(); ready }
+    override def next(): ScannedChunk = {
+      if (!hasNext) throw new NoSuchElementException("ChunkScan exhausted")
+      ready = false
+      ScannedChunk(cur, spanIndex, XXH64.hash(win, spanOffset, spanLength, XXH64.DefaultSeed),
+        spanLength, if (lz4(cur)) Lz4Len(win, spanOffset, spanLength) else 0)
+    }
+  }
+}
+
 object Chunker {
   /** Chunk an in-memory byte array (kernel-level API, used by tests and
-    * small-payload callers; the DataFrame layer streams via ChunkIterator).
+    * small-payload callers; the DataFrame layer streams via ChunkScan).
     */
   def chunk(bytes: Array[Byte], params: ChunkerParams = ChunkerParams.Default): Vector[Array[Byte]] =
     new ChunkIterator(new java.io.ByteArrayInputStream(bytes), params).toVector
@@ -181,8 +283,9 @@ object Chunker {
     * and boundaries so the kernels cannot diverge. The skip start is
     * computed as a distance (`n - start > skip`), not `start + skip`,
     * which would wrap negative within `skip` bytes of Int.MaxValue.
+    * ChunkScan calls it too, over its shared read window.
     */
-  private def nextEnd(
+  private[cdc] def nextEnd(
       bytes: Array[Byte], start: Int, n: Int,
       table: Array[Long], params: ChunkerParams, skip: Int): Int = {
     var h = 0L

@@ -2322,19 +2322,19 @@ object Dedupe {
       edges.unpersist()
       return out
     }
-    var labels = edges
-      .select(col("src").as("id"))
-      .distinct()
-      .withColumn("cluster_id", col("id"))
+    val ids = edges.select(col("src").as("id")).distinct()
+    // every node also points at itself, so one join against `labels`
+    // brings in both its own label and its neighbors' — `labels` appears
+    // ONCE per round and the analyzed plan grows linearly with the
+    // rounds (referenced twice, it doubled every round)
+    val reach = edges
+      .unionByName(ids.select(col("id").as("src"), col("id").as("dst")))
+      .cache()
+    var labels = ids.withColumn("cluster_id", col("id"))
     var iter = 0
     var converged = false
     var toRelease: Option[DataFrame] = None
     while (iter < maxIter && !converged) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "dst")
-          .withColumnRenamed("cluster_id", "n_label"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("n_label")).as("neighbor_min"))
       // carry the old label through the update so materialization and the
       // convergence check share ONE action (the per-iteration fixed cost
       // is Spark job overhead, not data)
@@ -2345,11 +2345,13 @@ object Dedupe {
       // localCheckpoint alone unpersist() is a no-op (checkpoint blocks
       // aren't CacheManager entries), so every round's storage would
       // linger until GC. Bounded plan depth + prompt release.
-      val updated0 = labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("cluster_id").as("old_label"),
-          least(col("cluster_id"), coalesce(col("neighbor_min"), col("cluster_id")))
-            .as("cluster_id"))
+      val updated0 = reach
+        .join(labels.withColumnRenamed("id", "dst")
+          .withColumnRenamed("cluster_id", "n_label"), "dst")
+        .groupBy(col("src").as("id"))
+        .agg(
+          min(when(col("src") === col("dst"), col("n_label"))).as("old_label"),
+          min(col("n_label")).as("cluster_id"))
       val updated =
         if (iter % 8 == 7) updated0.localCheckpoint(true) else updated0.cache()
       val changed = updated.filter(col("old_label") =!= col("cluster_id")).count()
@@ -2359,6 +2361,7 @@ object Dedupe {
       converged = changed == 0
       iter += 1
     }
+    reach.unpersist()
     edges.unpersist()
     labels
   }

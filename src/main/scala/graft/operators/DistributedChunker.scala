@@ -5,7 +5,7 @@ import graft.cdc.{ChunkerParams, Gear, Lz4Len, XXH64}
 
 /** Exact intra-file-parallel CDC chunking for huge files — the piece the
   * reference cannot do at all (its rayon parallelism is one task per whole
-  * file, src/store.rs:103-112) and the per-file `ChunkIterator` path only
+  * file, src/store.rs:103-112) and the per-file `ChunkScan` path only
   * scales across files.
   *
   * Correctness argument (why a split scan is EXACT, not approximate):

@@ -117,7 +117,12 @@ object Estimator {
       .getLong(0)
 
   /** The flagship `de dedup`-equivalent (reference lifecycle SURVEY §3.1):
-    * chunk all files, merge, compute ratios with both chunker configs.
+    * both ratios — the default chunker's and the xet chunker's — come from
+    * ONE scan. Every file is read once and chunked under both configs
+    * (`ChunkRelation.chunkConfigs`; LZ4 sizes only for the default config,
+    * the only one whose compressed bytes are reported), then a single
+    * aggregation keyed on (config, hash) rolls up to at most two collected
+    * rows. Files >= 1 GiB get intra-file split parallelism.
     */
   def estimate(
       spark: SparkSession,
@@ -125,17 +130,40 @@ object Estimator {
       group: String = "default",
       format: String = "raw",
       params: ChunkerParams = ChunkerParams.Default,
-      xetParams: ChunkerParams = ChunkerParams.Xet): EstimationResult = {
-    // input-sized shuffle: derive the partition count from the bytes about
-    // to be chunked (graft.Conf) — both actions run inside this scope, so
-    // the session setting is restored on the way out
+      xetParams: ChunkerParams = ChunkerParams.Xet): EstimationResult =
+    estimateRouted(spark, paths, group, format, params, xetParams,
+      ChunkRelation.LargeFileThreshold)
+
+  /** `estimate` with the DistributedChunker routing threshold exposed. */
+  private[operators] def estimateRouted(
+      spark: SparkSession,
+      paths: Seq[String],
+      group: String,
+      format: String,
+      params: ChunkerParams,
+      xetParams: ChunkerParams,
+      largeFileThreshold: Long): EstimationResult = {
+    // one batched listing sizes both the shuffle (graft.Conf) and the
+    // chunk stage's byte-balanced partitions; the action runs inside this
+    // scope, so the session setting is restored on the way out
+    val files = ChunkRelation.sizeFiles(paths)
     val prevShuffle = graft.Conf.applyChunkShufflePartitions(
-      spark, graft.Conf.totalFileBytes(paths), params)
+      spark, files.map(_.len).sum, params)
     try {
-      // auto-routing: files >= 1 GiB get intra-file split parallelism
-      val chunks = ChunkRelation.chunkFilesAuto(spark, paths, params)
-      val (total, chunkBytes, compressedBytes) = stats(chunks)
-      val xetBytes = uniqueBytes(ChunkRelation.chunkFilesAuto(spark, paths, xetParams))
+      val byConfig = ChunkRelation
+        .chunkConfigs(spark, files, Seq(params, xetParams), Seq(true, false), largeFileThreshold)
+        .groupBy(col("config"), col("hash"))
+        .agg(
+          first(col("size")).as("size"),
+          first(col("compressed")).as("compressed"),
+          sum(col("size")).as("occ_bytes"))
+        .groupBy(col("config"))
+        .agg(sum(col("occ_bytes")), sum(col("size")), sum(col("compressed")))
+        .collect()
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+        .toMap
+      val (total, chunkBytes, compressedBytes) = byConfig.getOrElse(0, (0L, 0L, 0L))
+      val xetBytes = byConfig.get(1).fold(0L)(_._2)
       EstimationResult(
         group = group,
         format = format,

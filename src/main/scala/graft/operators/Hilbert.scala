@@ -177,7 +177,9 @@ object Hilbert {
 
   /** The same chain as chained CTEs for the DuckDB oracle: caller
     * provides CTE `__q(qx, qy)`; this emits `__h0 ... __h<bits>` where
-    * the last carries (qx, qy, hkey).
+    * the last carries (qx, qy, hkey). `bits` is capped at 16, the frame
+    * [[hilbertKey]]'s `require` enforces (`1 <= bits <= 16`): the oracle
+    * only replays keys the Spark side can produce.
     */
   def hilbertCtesSql(bits: Int = ZOrder.Bits): String = {
     val steps = new StringBuilder

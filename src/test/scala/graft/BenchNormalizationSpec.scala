@@ -132,17 +132,14 @@ class BenchNormalizationSpec extends AnyFunSuite {
       Seq("a" -> 10.21), Map("a" -> 0.48), floor) === Seq("a"))
   }
 
-  /** The committed headline artifact, found from either the sbt working
-    * dir or the absolute repo root (the forked test JVM's cwd is the
-    * project base, but a moved artifact must cancel with a message, not
-    * throw an opaque NoSuchFileException).
+  /** The committed headline artifact at the build's base directory (the
+    * forked test JVM's `user.dir`). Cancels only when the artifact is
+    * genuinely absent there, with the path it looked at.
     */
   private def committedArtifact: String = {
-    val candidates = Seq("bench_full.json", "/root/repo/bench_full.json")
-      .map(java.nio.file.Paths.get(_))
-    val found = candidates.find(java.nio.file.Files.exists(_))
-      .getOrElse(cancel(
-        s"committed bench_full.json not found at ${candidates.mkString(" or ")}"))
+    val found = java.nio.file.Paths.get(sys.props("user.dir"), "bench_full.json")
+    if (!java.nio.file.Files.exists(found))
+      cancel(s"committed bench_full.json not found at $found")
     new String(java.nio.file.Files.readAllBytes(found),
       java.nio.charset.StandardCharsets.UTF_8)
   }

@@ -228,6 +228,69 @@ class ChunkerSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ChunkerParams.xetFromTarget(3000))
   }
 
+  /** ChunkIterator's (hash, size, lz4 size) stream — the reference the
+    * multi-config scan must reproduce per config.
+    */
+  private def iteratorStats(data: Array[Byte], p: ChunkerParams): Vector[(Long, Int, Int)] =
+    new ChunkIterator(new java.io.ByteArrayInputStream(data), p, bufSize = 8192)
+      .map(c => (XXH64.hash(c, XXH64.DefaultSeed), c.length, Lz4Len(c)))
+      .toVector
+
+  test("ChunkScan: every config yields ChunkIterator's (hash, size, lz4) stream from one read") {
+    val configs = IndexedSeq(
+      ChunkerParams.Default,
+      ChunkerParams.Xet,
+      ChunkerParams(mask = -1L << (64 - 10), minLen = 256, maxLen = 4096),
+      ChunkerParams(mask = -1L << (64 - 10), minLen = 64, maxLen = 1024, enforceMax = false))
+    val base = randomBytes(600000, 41L)
+    // edited copy: an insert, a delete and an overwrite at scattered points
+    val edited = base.slice(0, 150000) ++ randomBytes(3000, 42L) ++
+      base.slice(150000, 320000) ++ base.slice(330000, 450000) ++
+      randomBytes(500, 43L) ++ base.slice(450500, base.length)
+    val maxLenMultiple = 8 * ChunkerParams.Default.maxLen // a multiple of every maxLen here
+    val inputs = Seq(
+      "random" -> base,
+      "edited copy" -> (base ++ edited),
+      "empty" -> Array.emptyByteArray,
+      "shorter than minLen" -> randomBytes(50, 44L),
+      "exact multiple of maxLen (forced cuts)" -> new Array[Byte](maxLenMultiple),
+      "exact multiple of maxLen (random)" -> randomBytes(maxLenMultiple, 45L))
+    val expected = inputs.map { case (_, d) => configs.map(iteratorStats(d, _)) }
+    for {
+      bufSize <- Seq(1, 4097, 4 << 20)
+      ((name, data), want) <- inputs.zip(expected)
+    } {
+      val scan = new ChunkScan(new java.io.ByteArrayInputStream(data), configs, bufSize)
+      val got = scan.stats(configs.map(_ => true)).toVector
+      configs.indices.foreach { c =>
+        val mine = got.filter(_.config == c)
+        assert(mine.map(_.index) == mine.indices.map(_.toLong), s"$name/$bufSize/config $c: indices")
+        assert(mine.map(x => (x.hash, x.size, x.compressed)) == want(c),
+          s"$name/$bufSize: config $c (${configs(c)}) diverged from ChunkIterator")
+      }
+      assert(!scan.advance(), "an exhausted scan stays exhausted")
+      // only the enforceMax = false config may grow the window
+      val bounded = configs.init
+      val boundedScan = new ChunkScan(new java.io.ByteArrayInputStream(data), bounded, bufSize)
+      while (boundedScan.advance()) ()
+      assert(boundedScan.window.length <= bufSize + bounded.map(_.maxLen).max,
+        s"$name/$bufSize: window ${boundedScan.window.length} beyond read buffer + maxLen")
+    }
+  }
+
+  test("ChunkScan: configs without lz4 report 0 compressed bytes, same hashes and sizes") {
+    val configs = IndexedSeq(ChunkerParams.Default, ChunkerParams.Xet)
+    val data = randomBytes(700000, 46L)
+    val got = new ChunkScan(new java.io.ByteArrayInputStream(data), configs, 1 << 20)
+      .stats(IndexedSeq(false, true)).toVector
+    val default = got.filter(_.config == 0)
+    assert(default.nonEmpty && default.forall(_.compressed == 0))
+    assert(default.map(x => (x.hash, x.size)) ==
+      iteratorStats(data, ChunkerParams.Default).map(x => (x._1, x._2)))
+    assert(got.filter(_.config == 1).map(x => (x.hash, x.size, x.compressed)) ==
+      iteratorStats(data, ChunkerParams.Xet))
+  }
+
   test("lz4 length is positive and compresses repetitive data well") {
     val repetitive = Array.fill[Byte](100000)(7)
     val random = randomBytes(100000, 8L)

@@ -485,6 +485,18 @@ class DedupeSpec extends SparkSpec {
     assert(small(12L) == 0L, "chain end reaches min label")
   }
 
+  test("duplicateClusters: distributed rounds grow the plan linearly, not by doubling") {
+    import spark.implicits._
+    val pairs = (0 until 12).map(i => (i.toLong, i.toLong + 1)).toDF("id_a", "id_b")
+    // rounds 1..7 all run before the every-8th-round localCheckpoint
+    val sizes = (1 to 7).map { rounds =>
+      Dedupe.duplicateClusters(pairs, maxIter = rounds, singleTaskEdgeCap = 0L)
+        .queryExecution.analyzed.collect { case p => p }.size
+    }
+    val steps = sizes.zip(sizes.tail).map { case (a, b) => b - a }
+    assert(steps.forall(_ == steps.head), s"plan nodes per round count: $sizes")
+  }
+
   test("ngram containment: embedded doc scores 1.0 toward its container") {
     import spark.implicits._
     val small = "alpha beta gamma delta epsilon zeta"

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.cdc.{ChunkerParams, XXH64}
+import graft.cdc.{ChunkIterator, Chunker, ChunkerParams, Lz4Len, XXH64}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 
@@ -170,6 +171,137 @@ class EstimatorSpec extends SparkSpec {
     assert(g1.numfiles == 2)
     assert(res.find(_.group == "g2").get.numfiles == 1)
     res.foreach(r => assert(r.dedup_ratio > 0 && r.dedup_ratio <= 1.0))
+  }
+
+  /** (total, unique bytes, unique compressed bytes) of `files` under `p`,
+    * computed in memory with no Spark — the reference for the chunk stage.
+    */
+  private def localStats(files: Seq[Path], p: ChunkerParams): (Long, Long, Long) = {
+    val seen = scala.collection.mutable.HashMap.empty[Long, (Long, Long)]
+    var total = 0L
+    files.foreach { f =>
+      Chunker.chunkStats(Files.readAllBytes(f), p).foreach { case (h, size, comp) =>
+        total += size
+        seen.getOrElseUpdate(h, (size.toLong, comp.toLong))
+      }
+    }
+    (total, seen.values.map(_._1).sum, seen.values.map(_._2).sum)
+  }
+
+  test("estimate equals the two-pass formula on mixed inputs (split-routed, empty, > parallelism)") {
+    val dir = Files.createTempDirectory("graft-est-mixed")
+    val shared = randomBytes(700 << 10, 61L)
+    val contents = Seq(
+      shared ++ randomBytes(600 << 10, 62L), // >= threshold: DistributedChunker
+      randomBytes(1 << 20, 63L) ++ shared, // >= threshold: DistributedChunker
+      Array.emptyByteArray,
+      shared,
+      randomBytes(300 << 10, 64L),
+      shared.slice(100 << 10, 500 << 10),
+      randomBytes(40 << 10, 65L),
+      randomBytes(5000, 66L), // shorter than minLen: one chunk
+      randomBytes(200 << 10, 67L) ++ shared.slice(0, 300 << 10))
+    val files = contents.zipWithIndex.map { case (c, i) =>
+      Files.write(dir.resolve(s"f$i.bin"), c)
+    }
+    val paths = files.map(_.toString)
+    assert(paths.size > spark.sparkContext.defaultParallelism)
+    val threshold = 1L << 20
+    assert(contents.count(_.length >= threshold) == 2)
+    val params = ChunkerParams.Default
+    val xet = ChunkerParams.Xet
+    val r = Estimator.estimateRouted(spark, paths, "g", "f", params, xet, threshold)
+    // the two-pass formula estimate replaced: a default pass and a xet pass
+    val (total, chunkBytes, compressed) =
+      Estimator.stats(ChunkRelation.chunkFilesAuto(spark, paths, params, threshold))
+    val xetBytes =
+      Estimator.uniqueBytes(ChunkRelation.chunkFilesAuto(spark, paths, xet, threshold))
+    assert((r.total_len, r.chunk_bytes, r.compressed_chunk_bytes, r.xet_bytes) ==
+      ((total, chunkBytes, compressed, xetBytes)))
+    assert(r.numfiles == paths.size && r.group == "g" && r.format == "f")
+    assert(r.dedup_ratio == chunkBytes.toDouble / total)
+    assert(r.xet_dedup_ratio == xetBytes.toDouble / total)
+    // and both agree with the Spark-free reference
+    assert((total, chunkBytes, compressed) == localStats(files, params))
+    assert(xetBytes == localStats(files, xet)._2)
+    assert(total == contents.map(_.length.toLong).sum && chunkBytes < total)
+    // the default threshold (no split routing) gives the same figures
+    assert(Estimator.estimate(spark, paths, "g", "f") == r)
+  }
+
+  test("estimate runs at most 3 Spark jobs over 20 files (one scan, one aggregation)") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val dir = Files.createTempDirectory("graft-est-jobs")
+    val shared = randomBytes(96 << 10, 71L)
+    val paths = (0 until 20).map { i =>
+      Files.write(dir.resolve(s"f$i.bin"), shared ++ randomBytes(32 << 10, 72L + i)).toString
+    }
+    val sc = spark.sparkContext
+    val group = s"estimate-jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case g if g == group => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "estimate")
+      val r = Estimator.estimate(spark, paths)
+      assert(r.total_len == paths.size * (128L << 10) && r.chunk_bytes < r.total_len)
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job the estimate ran has been counted
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get() >= 1 && jobs.get() <= 3,
+      s"estimate ran ${jobs.get()} jobs; the fused single-scan estimate runs at most 3")
+  }
+
+  test("chunkFiles rows equal the per-file ChunkIterator stream, row for row") {
+    val dir = Files.createTempDirectory("graft-chunkfiles")
+    val contents = Seq(randomBytes(900 << 10, 81L), Array.emptyByteArray,
+      randomBytes(300 << 10, 82L), randomBytes(20 << 10, 83L), randomBytes(2 << 20, 84L),
+      randomBytes(70 << 10, 85L))
+    val paths = contents.zipWithIndex.map { case (c, i) =>
+      Files.write(dir.resolve(s"f$i.bin"), c).toString
+    }
+    val params = ChunkerParams(mask = -1L << (64 - 12), minLen = 1024, maxLen = 16 * 1024)
+    val expect = contents.zipWithIndex.flatMap { case (c, fi) =>
+      new ChunkIterator(new java.io.ByteArrayInputStream(c), params).zipWithIndex.map {
+        case (b, ci) =>
+          ChunkRow(fi.toLong, ci.toLong, XXH64.hash(b, XXH64.DefaultSeed), b.length.toLong,
+            Lz4Len(b).toLong)
+      }
+    }
+    val got = ChunkRelation.chunkFiles(spark, paths, params)
+    assert(got.columns.toSeq == Seq("file_idx", "chunk_idx", "hash", "size", "compressed"))
+    assert(got.collect().sortBy(r => (r.file_idx, r.chunk_idx)).toSeq == expect)
+    val wide = ChunkRelation.chunkFiles128(spark, paths, params).collect()
+      .sortBy(r => (r.file_idx, r.chunk_idx))
+      .map(r => ChunkRow(r.file_idx, r.chunk_idx, r.hash, r.size, r.compressed)).toSeq
+    assert(wide == expect)
+  }
+
+  test("chunk stage bins balance bytes: largest first, to the least-loaded partition") {
+    val files = Seq(5L, 100L, 40L, 0L, 60L, 30L, 30L).zipWithIndex
+      .map { case (len, i) => SizedFile(i.toLong, s"f$i", len) }
+    val bins = ChunkRelation.balance(files, 3)
+    assert(bins.size == 3 && bins.forall(_.nonEmpty))
+    assert(bins.flatten.sortBy(_.idx) == files)
+    bins.foreach(b => assert(b.map(_.idx) == b.map(_.idx).sorted))
+    // 100 | 60 + 30 | 40 + 30 + 5 + 0
+    assert(bins.map(_.map(_.len).sum).sorted == Seq(75L, 90L, 100L))
+    assert(ChunkRelation.balance(files.take(2), 8).size == 2)
+    assert(ChunkRelation.balance(Nil, 8).isEmpty)
   }
 
   test("segments: ordered provenance stream with correct length") {
