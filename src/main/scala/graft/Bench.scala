@@ -210,7 +210,6 @@ object Bench {
     // first streaming query mid-run (providerClass is lazy)
     graft.streaming.StateBackend.forceResolve()
     graft.streaming.EventStream.forceResolveSink()
-    graft.operators.LineDedupe.forceResolveKnob()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 import graft.cdc.ChunkerParams
 
@@ -9,12 +9,19 @@ import graft.cdc.ChunkerParams
   * partition count tuned for local[32] (32) or Spark's default (200) would
   * put tens of GiB in every reduce partition. These helpers derive the
   * shuffle-partition count FROM the input size, so operators that know
-  * their bytes up front (the grid estimator, the CLI dedup lifecycle) size
-  * their own exchanges instead of riding session defaults.
+  * their wide stage's rows up front size its exchanges instead of riding
+  * session defaults.
+  *
+  * [[sizedSession]] is the one place that decides an operator's shuffle
+  * width: it returns the session to build the wide stage in — the
+  * caller's own when its width already covers the sized count, else a
+  * clone with only `spark.sql.shuffle.partitions` raised. No operator
+  * writes the session it was handed, so concurrent queries on one session
+  * cannot race on the setting and nothing is ever restored.
   *
   * AQE still coalesces DOWN from the derived number at runtime (small
-  * inputs stay as cheap as before — the helpers never return less than the
-  * session's configured floor); what AQE cannot do is split an
+  * inputs stay as cheap as before — the width never drops below the
+  * session's configured value); what AQE cannot do is split an
   * under-partitioned exchange UP, which is exactly the 100 TB failure mode
   * this closes.
   */
@@ -74,19 +81,31 @@ object Conf {
     sizeShufflePartitions(rows, avgChunkBytes = 1L, rowBytes = rowBytes,
       minPartitions = minPartitions, maxPartitions = maxPartitions)
 
-  /** Session-apply twin of [[sizeShufflePartitionsForRows]] — same
-    * grow-never-shrink + restore contract (and the same single-threaded-
-    * per-session caveat) as [[applyChunkShufflePartitions]]. Callers wrap
-    * their actions in try/finally and restore the returned previous value.
+  /** The session to build a wide stage of `rows` shuffle rows, each
+    * `rowBytes` on the wire, in. [[sizeShufflePartitionsForRows]] sizes
+    * the stage with the caller's current width as its floor; when that
+    * width already covers the sized count (every small input) the
+    * caller's own session comes back — a query on a fresh clone costs
+    * ~14 ms more than on the same session (local[4], 200k-row groupBy).
+    * Otherwise a `cloneSession()` of it comes back with only
+    * `spark.sql.shuffle.partitions` raised: every runtime conf the caller
+    * set (AQE, timezone, ANSI, temp views) carries over, and the caller's
+    * session is never written.
+    *
+    * Operators re-bind their inputs into the returned session
+    * (`GraftBridge.rebind`), run the stage's eager work (cache / count /
+    * collect) there, and re-bind what they return to the caller's
+    * session, so the caller's later actions plan at the caller's width.
     */
-  def applyRowShufflePartitions(
-      spark: SparkSession,
-      rows: Long,
-      rowBytes: Long): Int = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val n = sizeShufflePartitionsForRows(rows, rowBytes, minPartitions = prev)
-    if (n != prev) spark.conf.set("spark.sql.shuffle.partitions", n)
-    prev
+  def sizedSession(spark: SparkSession, rows: Long, rowBytes: Long): SparkSession = {
+    val current = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = sizeShufflePartitionsForRows(rows, rowBytes, minPartitions = current)
+    if (n == current) spark
+    else {
+      val sized = GraftBridge.cloneSession(spark)
+      sized.conf.set("spark.sql.shuffle.partitions", n.toLong)
+      sized
+    }
   }
 
   /** Expected average chunk size under `params`: the gear mask fires once
@@ -136,30 +155,13 @@ object Conf {
     math.min(effMax.toLong, math.max(minPartitions.toLong, p)).toInt
   }
 
-  /** Apply [[sizeShufflePartitions]] to the session for a chunk-estimation
-    * job over `totalBytes`, never shrinking below the session's current
-    * setting (small inputs keep their configured layout; big inputs grow).
-    * Returns the previous setting so self-contained operators (whose
-    * actions all run inside their own scope, like `Estimator.estimateGrid`)
-    * can restore it — lazy callers must leave it in place until their
-    * actions have run.
-    *
-    * NOT thread-safe across queries: `spark.sql.shuffle.partitions` is
-    * session-global, so two concurrent estimate/estimateGrid calls on one
-    * SparkSession race on set/restore and can leave either value behind.
-    * Run concurrent estimations on `spark.newSession()` clones (isolated
-    * conf, shared SparkContext) — the CLI and all in-repo callers are
-    * single-threaded per session.
+  /** Shuffle rows of a chunk aggregation over `totalBytes` of raw input
+    * chunked under `params` (one row per expected chunk) — the `rows`
+    * argument of [[sizedSession]] for the estimators.
     */
-  def applyChunkShufflePartitions(
-      spark: SparkSession,
-      totalBytes: Long,
-      params: ChunkerParams): Int = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val n = sizeShufflePartitions(totalBytes, expectedChunkBytes(params),
-      minPartitions = prev)
-    if (n != prev) spark.conf.set("spark.sql.shuffle.partitions", n)
-    prev
+  def chunkRows(totalBytes: Long, params: ChunkerParams): Long = {
+    val avg = expectedChunkBytes(params)
+    (totalBytes + avg - 1) / avg
   }
 
   /** Byte-limit override from an environment knob — the shared parse/
@@ -207,8 +209,8 @@ object Conf {
     }
 
   /** Length of each of `paths` (in order) through the Hadoop FS API
-    * (metadata-only) — the input-size probe for
-    * [[applyChunkShufflePartitions]] and the byte balance of the chunk
+    * (metadata-only) — the input-size probe for the estimators'
+    * [[sizedSession]] and the byte balance of the chunk
     * stage.
     *
     * Batched: one `listStatus` RPC per parent directory instead of one

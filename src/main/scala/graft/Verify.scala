@@ -10,11 +10,10 @@ object Verify {
     // signatures, ...) that the DuckDB oracle SQL reads back
     System.setProperty(Queries.SideTableProp, "1")
     // a typo'd env knob must abort NOW: the per-query catch below would
-    // otherwise swallow the lazy resolution failure per stream_*/lines
+    // otherwise swallow the lazy resolution failure per stream_*
     // query and dump a silently incomplete correctness run
     graft.streaming.StateBackend.forceResolve()
     graft.streaming.EventStream.forceResolveSink()
-    graft.operators.LineDedupe.forceResolveKnob()
     // the dumped oracle SQL reads the side-tables written for THIS sfDir
     System.setProperty(Queries.SfBaseProp, new java.io.File(sfDir).getName)
     System.setProperty(Queries.SfDirProp,

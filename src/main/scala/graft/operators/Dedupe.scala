@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Conf
@@ -22,6 +22,13 @@ import graft.cdc.XXH64
   * shuffles on (band, bucket-hash) whose cardinality ≈ docs × bands; the
   * verify join is keyed by candidate pair, proportional to true-ish pairs,
   * not n².
+  *
+  * Every operator here that knows its wide stage's row count (band,
+  * gram, span-window and block exchanges) builds that stage in
+  * [[graft.Conf.sizedSession]]: inputs are re-bound into it, the eager
+  * cache/count/collect work runs there, and the returned relation is
+  * re-bound to the caller's session. No operator writes the session it
+  * was handed.
   */
 /** Minimal primitive long→long open-addressing hash map (linear probing,
   * load factor ≤ 0.5, doubling growth) for executor-side graph kernels —
@@ -339,7 +346,7 @@ object Dedupe {
     val rowsPerBand = numHashes / bands
 
     val externalSigs = precomputedSigs.isDefined
-    val docs = precomputedSigs.getOrElse(
+    val docs0 = precomputedSigs.getOrElse(
       sigSink(minhashSigRelation(df, idCol, textCol, shingleK, numHashes))
         .cache())
 
@@ -349,10 +356,10 @@ object Dedupe {
     // put the whole corpus's banding in a handful of reduce partitions.
     // Counting the cached signature relation materializes a cache every
     // later step reads anyway, so the probe is one narrow cached scan.
-    val nDocs = docs.count()
-    val prevParts = Conf.applyRowShufflePartitions(spark,
+    val nDocs = docs0.count()
+    val sized = Conf.sizedSession(spark,
       math.multiplyExact(nDocs, bands.toLong), Conf.BandRowShuffleBytes)
-    try {
+    val docs = GraftBridge.rebind(docs0, sized)
 
     // band → bucket key = hash of the band's signature slice
     val banded = bandRelation(docs, bands, rowsPerBand)
@@ -426,9 +433,7 @@ object Dedupe {
     result.count()
     bucketSizes.unpersist()
     if (!externalSigs) docs.unpersist()
-    result
-
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    GraftBridge.rebind(result, spark)
   }
 
   /** Incremental (batch-over-index) MinHash near-dup classification — the
@@ -467,19 +472,20 @@ object Dedupe {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
 
-    val batchDocs = batchSigSink(
+    val batchDocs0 = batchSigSink(
       minhashSigRelation(incoming, idCol, textCol, shingleK, numHashes)).cache()
-    val idxDocs = indexSigSink(
+    val idxDocs0 = indexSigSink(
       minhashSigRelation(index, idCol, textCol, shingleK, numHashes)).cache()
 
     // input-sized band exchange, same discipline as minhashPairs: both
     // sides shuffle on (band, bucket); the counts materialize the caches
     // every later step reads anyway
-    val spark0 = incoming.sparkSession
-    val nSigs = batchDocs.count() + idxDocs.count()
-    val prevParts = Conf.applyRowShufflePartitions(spark0,
+    val spark = incoming.sparkSession
+    val nSigs = batchDocs0.count() + idxDocs0.count()
+    val sized = Conf.sizedSession(spark,
       math.multiplyExact(nSigs, bands.toLong), Conf.BandRowShuffleBytes)
-    try {
+    val batchDocs = GraftBridge.rebind(batchDocs0, sized)
+    val idxDocs = GraftBridge.rebind(idxDocs0, sized)
 
     val batchBands = bandRelation(batchDocs, bands, rowsPerBand)
     val idxBands = bandRelation(idxDocs, bands, rowsPerBand)
@@ -508,7 +514,6 @@ object Dedupe {
       .select(col("id"), col("match_id"))
       .distinct()
 
-    val spark = incoming.sparkSession
     import spark.implicits._
     val verified = candidates
       .join(batchDocs.select(col("id"), col("shingles").as("sh_a")), "id")
@@ -542,9 +547,7 @@ object Dedupe {
     idxSizes.unpersist()
     batchDocs.unpersist()
     idxDocs.unpersist()
-    result
-
-    } finally spark0.conf.set("spark.sql.shuffle.partitions", prevParts)
+    GraftBridge.rebind(result, spark)
   }
 
   // -------------------------------------------------------- n-gram jaccard
@@ -648,11 +651,10 @@ object Dedupe {
     *    document frequency; both builds agree exactly. A zero limit is
     *    the explicit force-shuffle sentinel.
     *
-    * Also applies [[Conf.applyRowShufflePartitions]] for the Σ n_grams-
-    * row gram exchanges (Conf.scala preamble). Returns
-    * (docGrams, perDoc, prevShufflePartitions); the CALLER owns cleanup:
-    * unpersist both relations and restore the partition setting in a
-    * finally.
+    * The gram exchanges carry Σ n_grams rows, so both relations come back
+    * bound to [[Conf.sizedSession]] for that count (Conf.scala preamble):
+    * the caller builds on them there and re-binds its result to its own
+    * session. Returns (docGrams, perDoc); the CALLER unpersists both.
     */
   private def perDocGramRelation(
       df: DataFrame,
@@ -660,10 +662,10 @@ object Dedupe {
       textCol: String,
       k: Int,
       maxGramFreq: Long,
-      broadcastGramDfLimit: Long): (DataFrame, DataFrame, Int) = {
-    val session = df.sparkSession
-    import session.implicits._
-    val docGrams = df
+      broadcastGramDfLimit: Long): (DataFrame, DataFrame) = {
+    val caller = df.sparkSession
+    import caller.implicits._
+    val docGrams0 = df
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -674,11 +676,11 @@ object Dedupe {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the probe aggregates the per-doc cache it materializes anyway, so
     // sizing costs one cached scan
-    val sumGrams = docGrams
+    val sumGrams = docGrams0
       .agg(coalesce(sum(col("n_grams").cast("long")), lit(0L)))
       .as[Long].head()
-    val prevParts = Conf.applyRowShufflePartitions(session, sumGrams,
-      Conf.GramRowShuffleBytes)
+    val session = Conf.sizedSession(caller, sumGrams, Conf.GramRowShuffleBytes)
+    val docGrams = GraftBridge.rebind(docGrams0, session)
     val exploded = docGrams.select(col("id"), col("n_grams"),
       explode(col("grams")).as("gram"))
     // 0 is the explicit force-shuffle sentinel (same contract as the
@@ -717,7 +719,7 @@ object Dedupe {
     })
       .toDF("id", "n_grams", "order_grams", "sorted_grams")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (docGrams, perDoc, prevParts)
+    (docGrams, perDoc)
   }
 
   /** Exact-verification finisher shared by the prefix paths: join the
@@ -839,47 +841,44 @@ object Dedupe {
       result.count()
       result
     } else {
-      val session = df.sparkSession
-      val (docGrams, perDoc, prevParts) = perDocGramRelation(
+      val (docGrams, perDoc) = perDocGramRelation(
         df, idCol, textCol, k, maxGramFreq, broadcastGramDfLimit)
-      try {
-        // floor-relaxed per-doc minimum overlap (see the OPTION comment);
-        // from the FULL gram count — cap-safe, capping only lengthens
-        // prefixes
-        val sized = perDoc
-          .withColumn("n_capped", size(col("order_grams")).cast("long"))
-          .withColumn("c_min",
-            floor(lit(threshold) * col("n_grams")).cast("long"))
-        val prefix = sized
-          .select(col("id"), col("n_capped"), col("c_min"),
-            posexplode(slice(col("order_grams"), lit(1),
-              greatest(lit(0L),
-                least(col("n_capped"),
-                  col("n_capped") - col("c_min") + lit(1L))).cast("int"))))
-          .select(col("id"), (col("pos") + 1).cast("long").as("rank"),
-            col("col").as("gram"), col("n_capped"), col("c_min"))
-        // SELF-join of prefixes (both members of a qualifying pair carry
-        // the smallest shared gram inside their prefix), id-normalized,
-        // positional filter against the pair's larger per-side floor.
-        // SHUFFLE_HASH: same sort-avoidance rationale — and same skew
-        // caveat and guards — as containmentPairs (see the comment
-        // there): df-ascending prefixes starve hot grams from the build
-        // side, maxGramFreq hard-caps buckets, AQE skew-join splits an
-        // oversized build partition at runtime.
-        val cand = prefix.hint("SHUFFLE_HASH").as("l")
-          .join(prefix.as("r"),
-            col("l.gram") === col("r.gram") && col("l.id") < col("r.id") &&
-              lit(1L) + least(col("l.n_capped") - col("l.rank"),
-                col("r.n_capped") - col("r.rank")) >=
-                greatest(col("l.c_min"), col("r.c_min")))
-          .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-          .distinct()
-        val result = finish(verifyPairsByIntersect(cand, perDoc)).cache()
-        result.count()
-        perDoc.unpersist()
-        docGrams.unpersist()
-        result
-      } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // floor-relaxed per-doc minimum overlap (see the OPTION comment);
+      // from the FULL gram count — cap-safe, capping only lengthens
+      // prefixes
+      val sized = perDoc
+        .withColumn("n_capped", size(col("order_grams")).cast("long"))
+        .withColumn("c_min",
+          floor(lit(threshold) * col("n_grams")).cast("long"))
+      val prefix = sized
+        .select(col("id"), col("n_capped"), col("c_min"),
+          posexplode(slice(col("order_grams"), lit(1),
+            greatest(lit(0L),
+              least(col("n_capped"),
+                col("n_capped") - col("c_min") + lit(1L))).cast("int"))))
+        .select(col("id"), (col("pos") + 1).cast("long").as("rank"),
+          col("col").as("gram"), col("n_capped"), col("c_min"))
+      // SELF-join of prefixes (both members of a qualifying pair carry
+      // the smallest shared gram inside their prefix), id-normalized,
+      // positional filter against the pair's larger per-side floor.
+      // SHUFFLE_HASH: same sort-avoidance rationale — and same skew
+      // caveat and guards — as containmentPairs (see the comment
+      // there): df-ascending prefixes starve hot grams from the build
+      // side, maxGramFreq hard-caps buckets, AQE skew-join splits an
+      // oversized build partition at runtime.
+      val cand = prefix.hint("SHUFFLE_HASH").as("l")
+        .join(prefix.as("r"),
+          col("l.gram") === col("r.gram") && col("l.id") < col("r.id") &&
+            lit(1L) + least(col("l.n_capped") - col("l.rank"),
+              col("r.n_capped") - col("r.rank")) >=
+              greatest(col("l.c_min"), col("r.c_min")))
+        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+        .distinct()
+      val result = finish(verifyPairsByIntersect(cand, perDoc)).cache()
+      result.count()
+      perDoc.unpersist()
+      docGrams.unpersist()
+      GraftBridge.rebind(result, df.sparkSession)
     }
   }
 
@@ -968,12 +967,10 @@ object Dedupe {
         .agg(count(lit(1)).as("n_common"),
           first(col("l.n_grams")).as("na"), first(col("r.n_grams")).as("nb")))
     } else {
-      val session = df.sparkSession
       // cached per-doc arrays + broadcast/shuffle df build + input-sized
       // exchanges — the substrate shared with ngramJaccardPairs
-      val (docGrams, perDoc, prevParts) = perDocGramRelation(
+      val (docGrams, perDoc) = perDocGramRelation(
         df, idCol, textCol, k, maxGramFreq, broadcastGramDfLimit)
-      try {
       // required overlap from the FULL gram count (cap-safe: capping only
       // lengthens prefixes), ceil division in pure integers
       val cMin = call_function("div",
@@ -1007,7 +1004,7 @@ object Dedupe {
       // join would sort BOTH gram-keyed relations (Σ grams-scale rows);
       // a per-partition hash build of the prefix side fits memory by
       // construction once the exchange is input-sized (64 MiB target
-      // partitions, see applyRowShufflePartitions above). AQE still
+      // partitions, see perDocGramRelation above). AQE still
       // upgrades to a broadcast join at runtime when the built prefix
       // side measures under the broadcast threshold.
       //
@@ -1043,8 +1040,7 @@ object Dedupe {
       result.count()
       perDoc.unpersist()
       docGrams.unpersist()
-      result
-      } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+      GraftBridge.rebind(result, df.sparkSession)
     }
   }
 
@@ -1131,7 +1127,7 @@ object Dedupe {
     // equal, modulo hash collisions — see the hash128 doc above); the
     // high half is all-zero in 64-bit mode, so (wlo, whi) grouping
     // degenerates to plain 64-bit grouping with no branch in the plan
-    val docWins = df
+    val docWins0 = df
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -1140,11 +1136,11 @@ object Dedupe {
       }
       .toDF("id", "wlo", "whi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sumWins = docWins
+    val sumWins = docWins0
       .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)))
       .as[Long].head()
-    val prevParts = Conf.applyRowShufflePartitions(session, sumWins,
-      Conf.SpanRowShuffleBytes)
+    val docWins = GraftBridge.rebind(docWins0,
+      Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes))
     try {
       val exploded = docWins
         .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
@@ -1191,12 +1187,11 @@ object Dedupe {
         .cache()
       track(spans)
       spans.count()
-      spans
+      GraftBridge.rebind(spans, session)
     } finally {
       // also on failure: a thrown probe/aggregation must not leave the
       // corpus-scale kernel cache pinned
       docWins.unpersist()
-      session.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 
@@ -1274,7 +1269,7 @@ object Dedupe {
     // text rides in the cache alongside the window arrays so the final
     // rewrite (broadcast OR shuffle build) replays from here instead of
     // re-running the tokenize+hash kernel over the corpus
-    val docWins = df
+    val docWins0 = df
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -1283,29 +1278,27 @@ object Dedupe {
       }
       .toDF("id", "text", "wlo", "whi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sumWins = docWins
+    val sumWins = docWins0
       .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)))
       .as[Long].head()
-    val prevParts = Conf.applyRowShufflePartitions(session, sumWins,
-      Conf.SpanRowShuffleBytes)
-    try {
-      val exploded = docWins
-        .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
-        .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
-          col("col.wlo").as("wlo"), col("col.whi").as("whi"))
-      // duplicated windows with their earliest occurrence — min of the
-      // (doc, pos) struct is the lexicographic minimum
-      val dupFirsts = exploded
-        .groupBy(col("wlo"), col("whi"))
-        .agg(count(lit(1)).as("n"),
-          min(struct(col("id"), col("pos"))).as("f"))
-        .filter(col("n") > 1)
-        .select(col("wlo"), col("whi"),
-          col("f.id").as("f_id"), col("f.pos").as("f_pos"))
+    val docWins = GraftBridge.rebind(docWins0,
+      Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes))
+    val exploded = docWins
+      .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
+      .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
+        col("col.wlo").as("wlo"), col("col.whi").as("whi"))
+    // duplicated windows with their earliest occurrence — min of the
+    // (doc, pos) struct is the lexicographic minimum
+    val dupFirsts = exploded
+      .groupBy(col("wlo"), col("whi"))
+      .agg(count(lit(1)).as("n"),
+        min(struct(col("id"), col("pos"))).as("f"))
+      .filter(col("n") > 1)
+      .select(col("wlo"), col("whi"),
+        col("f.id").as("f_id"), col("f.pos").as("f_pos"))
 
-      cutFromDupFirsts(session, docWins, exploded, dupFirsts, w,
-        broadcastDupLimit)
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+    cutFromDupFirsts(session, docWins, exploded, dupFirsts, w,
+      broadcastDupLimit)
   }
 
   /** Shared rewrite tail of [[cutDuplicateSpans]] /
@@ -1315,7 +1308,8 @@ object Dedupe {
     * to KEEP, or the (-1, -1) sentinel for "every occurrence here is
     * redundant" (a window already present in an incremental base) —
     * produce the cleaned corpus via the broadcast or shuffle build.
-    * Materializes, tracks, and releases `docWins`.
+    * Materializes and tracks the result in `docWins`' session, releases
+    * `docWins`, and returns the result bound to `session`.
     */
   private def cutFromDupFirsts(
       session: org.apache.spark.sql.SparkSession,
@@ -1369,7 +1363,7 @@ object Dedupe {
       .cache()
     track(rows)
     rows.count()
-    rows
+    GraftBridge.rebind(rows, session)
     } finally docWins.unpersist() // also on failure — never pin the kernel cache
   }
 
@@ -1408,14 +1402,11 @@ object Dedupe {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val sumWins = wins.agg(count(lit(1))).as[Long].head()
-      val prevParts = Conf.applyRowShufflePartitions(session, sumWins,
-        Conf.SpanRowShuffleBytes)
-      try {
-        val idx = wins.distinct().cache()
-        track(idx)
-        idx.count()
-        idx
-      } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val sized = Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes)
+      val idx = GraftBridge.rebind(wins, sized).distinct().cache()
+      track(idx)
+      idx.count()
+      GraftBridge.rebind(idx, session)
     } finally wins.unpersist()
   }
 
@@ -1460,7 +1451,7 @@ object Dedupe {
     val session = batch.sparkSession
     import session.implicits._
     val w = windowTokens
-    val docWins = batch
+    val docWins0 = batch
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -1472,7 +1463,7 @@ object Dedupe {
     // fold the contract check into the sizing aggregate — one pass over
     // the cached kernel, no extra scan
     val sumWins = try {
-      val statsRow = docWins
+      val statsRow = docWins0
         .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)),
           min(col("id")))
         .head()
@@ -1489,35 +1480,33 @@ object Dedupe {
       }
       statsRow.getLong(0)
     } catch {
-      case e: Throwable => docWins.unpersist(); throw e
+      case e: Throwable => docWins0.unpersist(); throw e
     }
-    val prevParts = Conf.applyRowShufflePartitions(session, sumWins,
-      Conf.SpanRowShuffleBytes)
-    try {
-      val exploded = docWins
-        .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
-        .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
-          col("col.wlo").as("wlo"), col("col.whi").as("whi"))
-      // batch-local window stats, then one lookup join into the base
-      // index: in-base windows keep NOTHING in the batch (the (-1, -1)
-      // sentinel matches no real occurrence), batch-only windows with
-      // n > 1 keep their batch-earliest
-      val batchAgg = exploded
-        .groupBy(col("wlo"), col("whi"))
-        .agg(count(lit(1)).as("n"),
-          min(struct(col("id"), col("pos"))).as("f"))
-      val dupFirsts = batchAgg
-        .join(baseWindows.select(col("wlo"), col("whi"))
-          .withColumn("in_base", lit(true)), Seq("wlo", "whi"), "left")
-        .filter(col("in_base").isNotNull || col("n") > 1)
-        .select(col("wlo"), col("whi"),
-          when(col("in_base").isNotNull, lit(-1L))
-            .otherwise(col("f.id")).as("f_id"),
-          when(col("in_base").isNotNull, lit(-1L))
-            .otherwise(col("f.pos")).as("f_pos"))
-      cutFromDupFirsts(session, docWins, exploded, dupFirsts, w,
-        broadcastDupLimit)
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val docWins = GraftBridge.rebind(docWins0,
+      Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes))
+    val exploded = docWins
+      .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
+      .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
+        col("col.wlo").as("wlo"), col("col.whi").as("whi"))
+    // batch-local window stats, then one lookup join into the base
+    // index: in-base windows keep NOTHING in the batch (the (-1, -1)
+    // sentinel matches no real occurrence), batch-only windows with
+    // n > 1 keep their batch-earliest
+    val batchAgg = exploded
+      .groupBy(col("wlo"), col("whi"))
+      .agg(count(lit(1)).as("n"),
+        min(struct(col("id"), col("pos"))).as("f"))
+    val dupFirsts = batchAgg
+      .join(baseWindows.select(col("wlo"), col("whi"))
+        .withColumn("in_base", lit(true)), Seq("wlo", "whi"), "left")
+      .filter(col("in_base").isNotNull || col("n") > 1)
+      .select(col("wlo"), col("whi"),
+        when(col("in_base").isNotNull, lit(-1L))
+          .otherwise(col("f.id")).as("f_id"),
+        when(col("in_base").isNotNull, lit(-1L))
+          .otherwise(col("f.pos")).as("f_pos"))
+    cutFromDupFirsts(session, docWins, exploded, dupFirsts, w,
+      broadcastDupLimit)
   }
 
   /** Provenance of the spans [[cutDuplicateSpans]] removes — the
@@ -1551,7 +1540,7 @@ object Dedupe {
     val session = df.sparkSession
     import session.implicits._
     val w = windowTokens
-    val docWins = df
+    val docWins0 = df
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -1560,11 +1549,11 @@ object Dedupe {
       }
       .toDF("id", "wlo", "whi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sumWins = docWins
+    val sumWins = docWins0
       .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)))
       .as[Long].head()
-    val prevParts = Conf.applyRowShufflePartitions(session, sumWins,
-      Conf.SpanRowShuffleBytes)
+    val docWins = GraftBridge.rebind(docWins0,
+      Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes))
     try {
       val exploded = docWins
         .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
@@ -1625,11 +1614,8 @@ object Dedupe {
       // (the hammingPairs opt-out rationale)
       if (trackResult) track(spans)
       spans.count()
-      spans
-    } finally {
-      docWins.unpersist() // also on failure — never pin the kernel cache
-      session.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+      GraftBridge.rebind(spans, session)
+    } finally docWins.unpersist() // also on failure — never pin the kernel cache
   }
 
   /** [[mergeRuns]] with the keeper payload: positions (1-based, sorted
@@ -1984,15 +1970,14 @@ object Dedupe {
     val blocks = maxDistance + 1
     val bits = 64 / blocks
 
-    val sigs = sigRelation.select(col("id").cast("long"), col("sig").cast("long"))
+    val sigs0 = sigRelation.select(col("id").cast("long"), col("sig").cast("long"))
       .cache()
 
     // input-sized block exchange (the minhashPairs discipline): the
     // count materializes the sig cache every later step reads anyway
-    val prevParts = Conf.applyRowShufflePartitions(spark,
-      math.multiplyExact(sigs.count(), blocks.toLong),
-      Conf.BlockRowShuffleBytes)
-    try {
+    val sigs = GraftBridge.rebind(sigs0, Conf.sizedSession(spark,
+      math.multiplyExact(sigs0.count(), blocks.toLong),
+      Conf.BlockRowShuffleBytes))
 
     val blocked = sigs
       .as[(Long, Long)]
@@ -2067,9 +2052,8 @@ object Dedupe {
     // relation per call; register it so harness loops (Verify, Bench,
     // ScaleRun — and any long-lived session) can release after consuming
     // (unless the caller opted out to own the lifecycle — see doc).
-    if (trackResult) track(result) else result
-
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    if (trackResult) track(result)
+    GraftBridge.rebind(result, spark)
   }
 
   // ------------------------------------------- tracked-cache lifecycle

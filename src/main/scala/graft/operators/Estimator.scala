@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc.ChunkerParams
 
@@ -122,7 +122,9 @@ object Estimator {
     * (`ChunkRelation.chunkConfigs`; LZ4 sizes only for the default config,
     * the only one whose compressed bytes are reported), then a single
     * aggregation keyed on (config, hash) rolls up to at most two collected
-    * rows. Files >= 1 GiB get intra-file split parallelism.
+    * rows. Files >= 1 GiB get intra-file split parallelism. The job runs in
+    * [[graft.Conf.sizedSession]] for the input's expected chunk count; the
+    * caller's session is never written.
     */
   def estimate(
       spark: SparkSession,
@@ -144,37 +146,35 @@ object Estimator {
       xetParams: ChunkerParams,
       largeFileThreshold: Long): EstimationResult = {
     // one batched listing sizes both the shuffle (graft.Conf) and the
-    // chunk stage's byte-balanced partitions; the action runs inside this
-    // scope, so the session setting is restored on the way out
+    // chunk stage's byte-balanced partitions; the whole job builds and
+    // collects in the sized session
     val files = ChunkRelation.sizeFiles(paths)
-    val prevShuffle = graft.Conf.applyChunkShufflePartitions(
-      spark, files.map(_.len).sum, params)
-    try {
-      val byConfig = ChunkRelation
-        .chunkConfigs(spark, files, Seq(params, xetParams), Seq(true, false), largeFileThreshold)
-        .groupBy(col("config"), col("hash"))
-        .agg(
-          first(col("size")).as("size"),
-          first(col("compressed")).as("compressed"),
-          sum(col("size")).as("occ_bytes"))
-        .groupBy(col("config"))
-        .agg(sum(col("occ_bytes")), sum(col("size")), sum(col("compressed")))
-        .collect()
-        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
-        .toMap
-      val (total, chunkBytes, compressedBytes) = byConfig.getOrElse(0, (0L, 0L, 0L))
-      val xetBytes = byConfig.get(1).fold(0L)(_._2)
-      EstimationResult(
-        group = group,
-        format = format,
-        numfiles = paths.size.toLong,
-        total_len = total,
-        chunk_bytes = chunkBytes,
-        compressed_chunk_bytes = compressedBytes,
-        dedup_ratio = if (total == 0) 0.0 else chunkBytes.toDouble / total,
-        xet_bytes = xetBytes,
-        xet_dedup_ratio = if (total == 0) 0.0 else xetBytes.toDouble / total)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val sized = graft.Conf.sizedSession(spark,
+      graft.Conf.chunkRows(files.map(_.len).sum, params), graft.Conf.ChunkRowShuffleBytes)
+    val byConfig = ChunkRelation
+      .chunkConfigs(sized, files, Seq(params, xetParams), Seq(true, false), largeFileThreshold)
+      .groupBy(col("config"), col("hash"))
+      .agg(
+        first(col("size")).as("size"),
+        first(col("compressed")).as("compressed"),
+        sum(col("size")).as("occ_bytes"))
+      .groupBy(col("config"))
+      .agg(sum(col("occ_bytes")), sum(col("size")), sum(col("compressed")))
+      .collect()
+      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+      .toMap
+    val (total, chunkBytes, compressedBytes) = byConfig.getOrElse(0, (0L, 0L, 0L))
+    val xetBytes = byConfig.get(1).fold(0L)(_._2)
+    EstimationResult(
+      group = group,
+      format = format,
+      numfiles = paths.size.toLong,
+      total_len = total,
+      chunk_bytes = chunkBytes,
+      compressed_chunk_bytes = compressedBytes,
+      dedup_ratio = if (total == 0) 0.0 else chunkBytes.toDouble / total,
+      xet_bytes = xetBytes,
+      xet_dedup_ratio = if (total == 0) 0.0 else xetBytes.toDouble / total)
   }
 
   /** Grid estimation (A5, reference de/estimate.py:41-84) as a SINGLE job:
@@ -182,6 +182,8 @@ object Estimator {
     * on (group, format, hash), then roll up — the scale-preferred shape over
     * per-cell jobs (SURVEY §2.4-A5).
     * Input: (group, format, path) triples. Xet pass is a second single job.
+    * Both jobs run in [[graft.Conf.sizedSession]] for the input's expected
+    * chunk count; the caller's session is never written.
     */
   /** @param sideSink optional (name, df) => df persist-and-read-back hook:
     *   when set, the tag table and both tagged chunk relations flow through
@@ -194,17 +196,17 @@ object Estimator {
       params: ChunkerParams = ChunkerParams.Default,
       xetParams: ChunkerParams = ChunkerParams.Xet,
       sideSink: Option[(String, DataFrame) => DataFrame] = None): Seq[EstimationResult] = {
-    import spark.implicits._
     if (files.isEmpty) return Seq.empty
     // input-sized shuffle (graft.Conf): the (group, format, hash) exchange
     // carries one row per chunk occurrence, so its partition count must
-    // track input bytes, not the session default; both cell passes collect
-    // inside this scope, so the setting is restored on the way out
-    val prevShuffle = graft.Conf.applyChunkShufflePartitions(
-      spark, graft.Conf.totalFileBytes(files.map(_._3)), params)
-    try {
+    // track input bytes, not the session default; both cell passes build
+    // and collect in the sized session
+    val sized = graft.Conf.sizedSession(spark,
+      graft.Conf.chunkRows(graft.Conf.totalFileBytes(files.map(_._3)), params),
+      graft.Conf.ChunkRowShuffleBytes)
+    import sized.implicits._
     val tags = files.zipWithIndex.map { case ((g, f, _), i) => (i.toLong, g, f) }
-    val tagDf0 = spark.createDataset(tags).toDF("file_idx", "group", "format")
+    val tagDf0 = sized.createDataset(tags).toDF("file_idx", "group", "format")
     val tagDf = sideSink.map(f => f("grid_tags", tagDf0)).getOrElse(tagDf0)
     val numFiles = files
       .groupBy { case (g, f, _) => (g, f) }
@@ -212,9 +214,11 @@ object Estimator {
 
     def cellStats(paths: Seq[String], p: ChunkerParams, sinkName: String): DataFrame = {
       val tagged0 = ChunkRelation
-        .chunkFiles(spark, paths, p)
+        .chunkFiles(sized, paths, p)
         .join(broadcast(tagDf), "file_idx")
-      val tagged = sideSink.map(f => f(sinkName, tagged0)).getOrElse(tagged0)
+      // the sink reads back in its own session: the aggregation below must
+      // plan in the sized one
+      val tagged = sideSink.fold(tagged0)(f => GraftBridge.rebind(f(sinkName, tagged0), sized))
       tagged
         .groupBy(col("group"), col("format"), col("hash"))
         .agg(first(col("size")).as("size"), first(col("compressed")).as("compressed"),
@@ -245,7 +249,6 @@ object Estimator {
         if (total == 0) 0.0 else cb.toDouble / total, xb,
         if (total == 0) 0.0 else xb.toDouble / total)
     }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
   /** Byte-ordered occurrence stream annotated with provenance — the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 import graft.Conf
@@ -33,11 +33,11 @@ import graft.Conf
   *
   * 100 TB shape: one corpus-sized line exchange (groupBy line, partial
   * agg collapses hot boilerplate keys map-side), whose result — the
-  * duplicated-line index — is cached and counted INSIDE the
-  * shuffle-sizing window so the sized partition count
-  * ([[Conf.applyRowShufflePartitions]], fed by a single narrow
-  * doc-level byte estimate, no extra explode pass) governs the real
-  * exchange and the expensive groupBy is paid exactly once. The rebuild
+  * duplicated-line index — is cached and counted in the sized session
+  * ([[Conf.sizedSession]], fed by a single narrow doc-level byte
+  * estimate, no extra explode pass) so the sized partition count
+  * governs the real exchange and the expensive groupBy is paid exactly
+  * once. The rebuild
   * then either broadcasts that index (decision bounded by the index's
   * measured BYTES, not row count — raw line strings are unbounded, so a
   * row cap alone could build a multi-GB broadcast) or falls back to a
@@ -61,81 +61,29 @@ object LineDedupe {
     */
   val DefaultBroadcastDupBytes: Long = 128L * 1024 * 1024
 
-  /** Front-half grouping strategy for the report/cut/provenance paths.
-    * `false` (the default — the measured winner): group the corpus's
-    * eligible occurrences by the RAW line string (byte-exact identity;
-    * the exchange key is the line bytes). `true`: group by the 128-bit
-    * salted hash pair ([[withLineHash]]) with the keeper occurrence —
-    * and its line bytes — carried as a min-struct VALUE, so the agg
-    * hash map, the exchange partitioner, and any sort fallback key on
-    * 16 fixed bytes instead of unbounded strings.
-    *
-    * Round-19 adjudication (the verdict's "adopt whichever wins, with
-    * the numbers published"): at the 100× tier, interleaved string→hash
-    * within each round so both sides of every ratio share a host window
-    * ([[graft.LinesAb]]; two NON-interleaved sweeps were discarded —
-    * their sentinel floors read 0.26 s vs 0.44 s, a 1.7× box drift
-    * dwarfing the effect), min-of-3: dedup_lines 88.2 s string vs
-    * 90.0 s hash (1.02×), dedup_lines_cut 82.7 s vs 85.7 s (1.04×) —
-    * hash-first LOSES slightly. The theoretical 16-B-key win never
-    * materializes because the report's semantics force the keeper's
-    * line bytes across the exchange either way (as the min-struct
-    * value), so hash-first only swaps key comparisons for two extra
-    * xxhash64 passes plus wider pre-agg rows. String-keyed stays the
-    * default: byte-exact identity AND the measured winner. The knob
-    * remains for re-measurement on corpora with far longer lines
-    * (where key comparisons could dominate) — in hash mode the REPORT
-    * row grouping weakens to 2⁻¹²⁸-per-pair identity (the cut itself
-    * still byte-verifies before dropping anything — a collision can
-    * only MISS a cut, never take an innocent line), the same
-    * documented trade the persisted [[lineIndex]] already makes.
-    * `SPARK_GRAFT_LINES_HASH_FIRST=0/1` overrides for measurement.
-    * Lazy, with [[forceResolveKnob]] called at harness startup: a val
-    * would throw the validation failure from the OBJECT initializer as
-    * an ExceptionInInitializerError — a LinkageError no NonFatal guard
-    * converts to a -1 marker, crashing a bench mid-catalog instead of
-    * aborting before any timed work.
-    */
-  private[graft] lazy val HashFirstGroup: Boolean =
-    sys.env.get("SPARK_GRAFT_LINES_HASH_FIRST") match {
-      case None => false
-      case Some("1") => true
-      case Some("0") => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_LINES_HASH_FIRST must be 0 or 1, got '$other'")
-    }
-
-  /** Force knob resolution NOW (see [[HashFirstGroup]]); called by
-    * harness mains so a typo'd env var aborts at startup.
-    */
-  def forceResolveKnob(): Unit = { HashFirstGroup; () }
-
   /** The shared front half: duplicated-line classes
     * `(line, n_occ, n_docs, f_id, f_ord)` from the eligible occurrence
-    * relation, under either grouping strategy (see [[HashFirstGroup]]).
-    * The keeper (f_id, f_ord) is the globally earliest occurrence —
-    * min over (id, ord); in hash-first mode the struct carries the
-    * keeper's line bytes too, so line order never decides (id is).
+    * relation, grouped by the raw line string (byte-exact identity). The
+    * keeper (f_id, f_ord) is the globally earliest occurrence — min over
+    * (id, ord).
+    *
+    * Why not group by the 128-bit line hash (keeper and its line bytes
+    * carried as a min-struct value): measured in round 19, interleaved at
+    * the 100× tier, min-of-3, it lost — dedup_lines 88.2 s string vs
+    * 90.0 s hash, dedup_lines_cut 82.7 s vs 85.7 s. The report must ship
+    * the keeper's line bytes across the exchange either way, so the hash
+    * key only adds two xxhash64 passes and wider pre-agg rows, and it
+    * weakens the report's identity to 2⁻¹²⁸ per pair.
     */
-  private def dupClassesOf(elig: DataFrame, hashFirst: Boolean): DataFrame =
-    if (hashFirst)
-      withLineHash(elig)
-        .groupBy(col("llo"), col("lhi"))
-        .agg(count(lit(1)).as("n_occ"),
-          countDistinct(col("id")).as("n_docs"),
-          min(struct(col("id"), col("ord"), col("line"))).as("f"))
-        .filter(col("n_occ") > 1)
-        .select(col("f.line").as("line"), col("n_occ"), col("n_docs"),
-          col("f.id").as("f_id"), col("f.ord").as("f_ord"))
-    else
-      elig
-        .groupBy(col("line"))
-        .agg(count(lit(1)).as("n_occ"),
-          countDistinct(col("id")).as("n_docs"),
-          min(struct(col("id"), col("ord"))).as("f"))
-        .filter(col("n_occ") > 1)
-        .select(col("line"), col("n_occ"), col("n_docs"),
-          col("f.id").as("f_id"), col("f.ord").as("f_ord"))
+  private def dupClassesOf(elig: DataFrame): DataFrame =
+    elig
+      .groupBy(col("line"))
+      .agg(count(lit(1)).as("n_occ"),
+        countDistinct(col("id")).as("n_docs"),
+        min(struct(col("id"), col("ord"))).as("f"))
+      .filter(col("n_occ") > 1)
+      .select(col("line"), col("n_occ"), col("n_docs"),
+        col("f.id").as("f_id"), col("f.ord").as("f_ord"))
 
   /** `(id, ord, line)` — 1-based line ordinal within each document.
     * `split(text, '\n', -1)` keeps trailing empty lines, matching
@@ -165,10 +113,18 @@ object LineDedupe {
     coalesce(sum(octet_length(t).cast("long") + nLines * 32L), lit(0L))
   }
 
+  /** `df` re-bound into [[Conf.sizedSession]] for its line exchange,
+    * sized by [[lineShuffleBytesCol]] (one narrow pass).
+    */
+  private def sizedLines(df: DataFrame, textCol: String): DataFrame = {
+    val bytes = df.agg(lineShuffleBytesCol(textCol)).collect()(0).getLong(0)
+    GraftBridge.rebind(df, Conf.sizedSession(df.sparkSession, bytes, rowBytes = 1L))
+  }
+
   /** Duplicated-line classes: one row per eligible line string occurring
-    * more than once in the corpus. Materialized (cached, counted) inside
-    * the shuffle-sizing window so the sized partition count governs the
-    * line exchange.
+    * more than once in the corpus. Materialized (cached, counted) in the
+    * sized session so the sized partition count governs the line
+    * exchange.
     *
     * CACHE RELEASE: the returned relation is cached and registered in
     * [[Dedupe]]'s tracked-cache registry. The registry is BOUNDED
@@ -190,24 +146,17 @@ object LineDedupe {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      minLineChars: Int = 10,
-      hashFirstGroup: Boolean = HashFirstGroup): DataFrame = {
+      minLineChars: Int = 10): DataFrame = {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
-    val session = df.sparkSession
-    val bytes = df.agg(lineShuffleBytesCol(textCol)).collect()(0).getLong(0)
-    val prevParts = Conf.applyRowShufflePartitions(session, bytes, rowBytes = 1L)
-    try {
-      val rep = dupClassesOf(
-          eligible(linesRelation(df, idCol, textCol), minLineChars),
-          hashFirstGroup)
-        .select(col("line"), col("n_occ"), col("n_docs"),
-          length(col("line")).cast("long").as("line_chars"),
-          col("f_id").as("first_doc"), col("f_ord").as("first_ord"))
-        .cache()
-      Dedupe.track(rep)
-      rep.count()
-      rep
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val rep = dupClassesOf(
+        eligible(linesRelation(sizedLines(df, textCol), idCol, textCol), minLineChars))
+      .select(col("line"), col("n_occ"), col("n_docs"),
+        length(col("line")).cast("long").as("line_chars"),
+        col("f_id").as("first_doc"), col("f_ord").as("first_ord"))
+      .cache()
+    Dedupe.track(rep)
+    rep.count()
+    GraftBridge.rebind(rep, df.sparkSession)
   }
 
   /** Keep-earliest line cut: every eligible line occurring more than once
@@ -232,19 +181,15 @@ object LineDedupe {
       idCol: String,
       textCol: String,
       minLineChars: Int = 10,
-      broadcastDupBytes: Long = DefaultBroadcastDupBytes,
-      hashFirstGroup: Boolean = HashFirstGroup): DataFrame = {
+      broadcastDupBytes: Long = DefaultBroadcastDupBytes): DataFrame = {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
-    val session = df.sparkSession
-    val bytes = df.agg(lineShuffleBytesCol(textCol)).collect()(0).getLong(0)
-    val prevParts = Conf.applyRowShufflePartitions(session, bytes, rowBytes = 1L)
-    try {
-      val elig = eligible(linesRelation(df, idCol, textCol), minLineChars)
-      val dupFirsts = dupClassesOf(elig, hashFirstGroup)
-        .select(col("line"), col("f_id"), col("f_ord"))
-      rebuildFromDupFirsts(df, idCol, textCol, elig, dupFirsts,
-        broadcastDupBytes)
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val in = sizedLines(df, textCol)
+    val elig = eligible(linesRelation(in, idCol, textCol), minLineChars)
+    val dupFirsts = dupClassesOf(elig)
+      .select(col("line"), col("f_id"), col("f_ord"))
+    GraftBridge.rebind(
+      rebuildFromDupFirsts(in, idCol, textCol, elig, dupFirsts, broadcastDupBytes),
+      df.sparkSession)
   }
 
   /** Shared rewrite tail of [[cutDuplicateLines]] /
@@ -255,7 +200,7 @@ object LineDedupe {
     * present in an incremental base) — produce the cleaned corpus.
     *
     * The dup index is hashed ([[withLineHash]]), cached, and counted
-    * here, INSIDE the caller's shuffle-sizing window: the one action
+    * here, in the caller's sized session: the one action
     * both forces the corpus-sized line groupBy to run at the sized
     * partition count and measures the index bytes for the broadcast
     * decision — the groupBy is never recomputed when the returned plan
@@ -339,20 +284,16 @@ object LineDedupe {
       idCol: String,
       textCol: String,
       minLineChars: Int = 10,
-      broadcastDupBytes: Long = DefaultBroadcastDupBytes,
-      hashFirstGroup: Boolean = HashFirstGroup): DataFrame = {
+      broadcastDupBytes: Long = DefaultBroadcastDupBytes): DataFrame = {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
-    val session = df.sparkSession
-    val bytes = df.agg(lineShuffleBytesCol(textCol)).collect()(0).getLong(0)
-    val prevParts = Conf.applyRowShufflePartitions(session, bytes, rowBytes = 1L)
-    try {
-      val elig = eligible(linesRelation(df, idCol, textCol), minLineChars)
-      val dupFirsts = dupClassesOf(elig, hashFirstGroup)
-        .select(col("line"), col("f_id"), col("f_ord"))
+    val elig = eligible(linesRelation(sizedLines(df, textCol), idCol, textCol), minLineChars)
+    val dupFirsts = dupClassesOf(elig)
+      .select(col("line"), col("f_id"), col("f_ord"))
+    GraftBridge.rebind(
       dropsWithKeeper(elig, dupFirsts, broadcastDupBytes)
         .select(col("id").as("doc_id"), col("ord"), col("line_chars"),
-          col("f_id").as("kept_doc"), col("f_ord").as("kept_ord"))
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+          col("f_id").as("kept_doc"), col("f_ord").as("kept_ord")),
+      df.sparkSession)
   }
 
   /** Cross-source line-duplication matrix: [[lineProvenance]] rolled up
@@ -445,23 +386,18 @@ object LineDedupe {
       textCol: String,
       minLineChars: Int = 10): DataFrame = {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
-    val session = df.sparkSession
-    val bytes = df.agg(lineShuffleBytesCol(textCol)).collect()(0).getLong(0)
-    val prevParts = Conf.applyRowShufflePartitions(session, bytes, rowBytes = 1L)
-    try {
-      val lines = df.select(
-        lit(0L).as("id"), lit(0L).as("ord"),
-        explode(split(col(textCol).cast("string"), "\n", -1)).as("line"))
-      // materialized INSIDE the sizing window (the distinct's exchange
-      // must see the applied partition count), cache-tracked for the
-      // harness hook ([[Dedupe.releaseTrackedCaches]])
-      val idx = withLineHash(eligible(lines, minLineChars))
-        .select(col("llo"), col("lhi")).distinct()
-        .cache()
-      Dedupe.track(idx)
-      idx.count()
-      idx
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val lines = sizedLines(df, textCol).select(
+      lit(0L).as("id"), lit(0L).as("ord"),
+      explode(split(col(textCol).cast("string"), "\n", -1)).as("line"))
+    // materialized in the sized session (the distinct's exchange must see
+    // the sized partition count), cache-tracked for the harness hook
+    // ([[Dedupe.releaseTrackedCaches]])
+    val idx = withLineHash(eligible(lines, minLineChars))
+      .select(col("llo"), col("lhi")).distinct()
+      .cache()
+    Dedupe.track(idx)
+    idx.count()
+    GraftBridge.rebind(idx, df.sparkSession)
   }
 
   /** Eligible `(id, ord, line, llo, lhi)` relation — the streaming
@@ -481,9 +417,9 @@ object LineDedupe {
     * iff it is not its line's recorded first. Unique lines keep
     * themselves (their only occurrence IS the first), so the relation
     * may carry every eligible line, not just duplicated ones. The drop
-    * relation is materialized (cached, counted) inside the sizing
-    * window so the corpus-sized occurrences↔firsts join runs at the
-    * sized partition count; cache-tracked (release note on
+    * relation is materialized (cached, counted) in the sized session so
+    * the corpus-sized occurrences↔firsts join runs at the sized
+    * partition count; cache-tracked (release note on
     * [[duplicateLines]]).
     */
   def cutFromFirstLines(
@@ -493,20 +429,16 @@ object LineDedupe {
       minLineChars: Int,
       firsts: DataFrame): DataFrame = {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
-    val session = df.sparkSession
-    val bytes = df.agg(lineShuffleBytesCol(textCol)).collect()(0).getLong(0)
-    val prevParts = Conf.applyRowShufflePartitions(session, bytes, rowBytes = 1L)
-    try {
-      val drops = hashedEligibleLines(df, idCol, textCol, minLineChars)
-        .join(firsts, Seq("llo", "lhi"))
-        .filter(!(col("id") === col("f_id") && col("ord") === col("f_ord")))
-        .select(col("id"), col("ord"),
-          length(col("line")).cast("long").as("line_chars"))
-        .cache()
-      Dedupe.track(drops)
-      drops.count()
-      rebuildFromDrops(df, idCol, textCol, drops)
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val in = sizedLines(df, textCol)
+    val drops = hashedEligibleLines(in, idCol, textCol, minLineChars)
+      .join(firsts, Seq("llo", "lhi"))
+      .filter(!(col("id") === col("f_id") && col("ord") === col("f_ord")))
+      .select(col("id"), col("ord"),
+        length(col("line")).cast("long").as("line_chars"))
+      .cache()
+    Dedupe.track(drops)
+    drops.count()
+    GraftBridge.rebind(rebuildFromDrops(in, idCol, textCol, drops), df.sparkSession)
   }
 
   /** Incremental keep-earliest line cut — the production REFRESH shape
@@ -562,32 +494,32 @@ object LineDedupe {
             "the batch above the base range.")
       }
     }
-    val prevParts = Conf.applyRowShufflePartitions(
-      session, statsRow.getLong(0), rowBytes = 1L)
-    try {
-      val lines = eligible(linesRelation(batch, idCol, textCol), minLineChars)
-      val elig = withLineHash(lines)
-      // batch-local line stats, then one lookup join into the base
-      // index: in-base lines keep NOTHING in the batch (the (-1, -1)
-      // sentinel matches no real occurrence), batch-only lines with
-      // n > 1 keep their batch-earliest
-      val batchAgg = elig
-        .groupBy(col("line"), col("llo"), col("lhi"))
-        .agg(count(lit(1)).as("n"),
-          min(struct(col("id"), col("ord"))).as("f"))
-      val dupFirsts = batchAgg
-        .join(baseLines.select(col("llo"), col("lhi"))
-          .withColumn("in_base", lit(true)), Seq("llo", "lhi"), "left")
-        .filter(col("in_base").isNotNull || col("n") > 1)
-        .select(col("line"),
-          when(col("in_base").isNotNull, lit(-1L))
-            .otherwise(col("f.id")).as("f_id"),
-          when(col("in_base").isNotNull, lit(-1L))
-            .otherwise(col("f.ord")).as("f_ord"))
-      rebuildFromDupFirsts(batch, idCol, textCol,
+    val in = GraftBridge.rebind(batch,
+      Conf.sizedSession(session, statsRow.getLong(0), rowBytes = 1L))
+    val lines = eligible(linesRelation(in, idCol, textCol), minLineChars)
+    val elig = withLineHash(lines)
+    // batch-local line stats, then one lookup join into the base
+    // index: in-base lines keep NOTHING in the batch (the (-1, -1)
+    // sentinel matches no real occurrence), batch-only lines with
+    // n > 1 keep their batch-earliest
+    val batchAgg = elig
+      .groupBy(col("line"), col("llo"), col("lhi"))
+      .agg(count(lit(1)).as("n"),
+        min(struct(col("id"), col("ord"))).as("f"))
+    val dupFirsts = batchAgg
+      .join(baseLines.select(col("llo"), col("lhi"))
+        .withColumn("in_base", lit(true)), Seq("llo", "lhi"), "left")
+      .filter(col("in_base").isNotNull || col("n") > 1)
+      .select(col("line"),
+        when(col("in_base").isNotNull, lit(-1L))
+          .otherwise(col("f.id")).as("f_id"),
+        when(col("in_base").isNotNull, lit(-1L))
+          .otherwise(col("f.ord")).as("f_ord"))
+    GraftBridge.rebind(
+      rebuildFromDupFirsts(in, idCol, textCol,
         lines.select(col("id"), col("ord"), col("line")), dupFirsts,
-        broadcastDupBytes)
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+        broadcastDupBytes),
+      session)
   }
 
   /** Approximate line-duplication triage — the KMV first-pass tier of

@@ -250,6 +250,7 @@ final class DataGenerator(schema: Seq[(String, DType)], seed: Long = 42L) {
       appendRatio: Double = 0.05,
       perColumnUpdates: Boolean = false,
       assertCounts: Boolean = true): Map[String, DataFrame] = {
+    checkDeleteWindows(n, editPoints, editSize)
     val original = generate(spark, n)
     val e = editPoints.size
     val variants = scala.collection.mutable.LinkedHashMap[String, DataFrame](
@@ -263,12 +264,36 @@ final class DataGenerator(schema: Seq[(String, DType)], seed: Long = 42L) {
     }
     // reference asserts counts post-build (de/synthetic.py:65-68)
     if (assertCounts) {
-      require(variants("deleted").count() == n - e.toLong * editSize)
-      require(variants("inserted").count() == n + e.toLong * editSize)
-      require(variants("appended").count() == n + (appendRatio * n).toLong)
-      require(variants("updated").count() == n)
+      def expect(variant: String, want: Long): Unit = {
+        val got = variants(variant).count()
+        require(got == want, s"$variant variant has $got rows, expected $want")
+      }
+      expect("deleted", n - e.toLong * editSize)
+      expect("inserted", n + e.toLong * editSize)
+      expect("appended", n + (appendRatio * n).toLong)
+      expect("updated", n)
     }
     variants.toMap
+  }
+
+  /** The delete windows `[int(p·n) − editSize, int(p·n))` must each lie in
+    * `[0, n)` and must not overlap, or the deleted variant loses
+    * fewer than `editPoints.size × editSize` rows.
+    */
+  private def checkDeleteWindows(n: Long, editPoints: Seq[Double], editSize: Int): Unit = {
+    val windows = editPoints.map { p =>
+      val end = (p * n).toLong
+      (p, end - editSize, end)
+    }.sortBy(_._3)
+    windows.foreach { case (p, lo, hi) =>
+      require(lo >= 0 && hi <= n,
+        s"edit point $p with editSize $editSize deletes rows [$lo, $hi), outside [0, $n)")
+    }
+    windows.zip(windows.drop(1)).foreach { case ((p, _, hi), (q, lo, _)) =>
+      require(lo >= hi,
+        s"edit points $p and $q are closer than editSize $editSize rows " +
+          s"(at n = $n): their delete windows overlap")
+    }
   }
 }
 

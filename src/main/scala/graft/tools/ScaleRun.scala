@@ -304,7 +304,6 @@ object ScaleRun {
     // corpus build and timed work (providerClass is lazy)
     graft.streaming.StateBackend.forceResolve()
     graft.streaming.EventStream.forceResolveSink()
-    graft.operators.LineDedupe.forceResolveKnob()
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse(s"/tmp/graft_scale_x$factor")

@@ -192,7 +192,6 @@ object StreamRestartRun {
     // corpus check and any runs (providerClass is lazy)
     graft.streaming.StateBackend.forceResolve()
     graft.streaming.EventStream.forceResolveSink()
-    graft.operators.LineDedupe.forceResolveKnob()
     val factor = args.headOption.map(_.toInt).getOrElse(100)
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val corpus = args.lift(1).getOrElse(s"/tmp/graft_scale_x$factor")

@@ -23,4 +23,22 @@ object GraftBridge {
     */
   def unloadStateStores(): Unit =
     execution.streaming.state.StateStore.unloadAll()
+
+  /** `SparkSession.cloneSession()` (`private[sql]`): a child session that
+    * starts from a copy of `spark`'s runtime conf, temp views and
+    * registered functions and shares its SparkContext and cache manager.
+    * Conf written on the clone never reaches `spark`.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `ds`'s analyzed plan as a Dataset of `session`: later planning and
+    * actions read `session`'s conf. The cache manager is shared between a
+    * session and its clones, so cached data in the plan is still found.
+    * `ds` itself when it already belongs to `session`.
+    */
+  def rebind[T](ds: Dataset[T], session: SparkSession): Dataset[T] =
+    if (ds.sparkSession eq session) ds
+    else classic.Dataset(session.asInstanceOf[classic.SparkSession],
+      ds.queryExecution.analyzed)(ds.encoder)
 }

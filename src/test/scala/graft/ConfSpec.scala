@@ -36,21 +36,6 @@ class ConfSpec extends SparkSpec {
     }
   }
 
-  test("applyChunkShufflePartitions: grows for big inputs, never shrinks") {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      // small input: setting untouched
-      val p0 = Conf.applyChunkShufflePartitions(spark, 1L << 20,
-        ChunkerParams.Default)
-      assert(p0.toString == prev)
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == prev)
-      // 10 TB input: setting grows past any local default
-      Conf.applyChunkShufflePartitions(spark, 10L * 1000 * 1000 * 1000 * 1000,
-        ChunkerParams.Default)
-      assert(spark.conf.get("spark.sql.shuffle.partitions").toInt > prev.toInt)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   test("sizeShufflePartitionsForRows: gram/band worked examples and clamps") {
     // containment gram exchange, 1 TB of text: ~1.6e11 word-grams
     // (≈6 B/word) × 32 B rows ≈ 5.1 TB shuffle → ~80k partitions
@@ -81,16 +66,79 @@ class ConfSpec extends SparkSpec {
     assert(Conf.sizeShufflePartitionsForRows(0, 32, minPartitions = 32) == 32)
   }
 
-  test("applyRowShufflePartitions: grows for big row counts, never shrinks") {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+  private val Width = "spark.sql.shuffle.partitions"
+  private val TenTB = 10L * 1000 * 1000 * 1000 * 1000
+  private val RowsE11 = 100L * 1000 * 1000 * 1000
+
+  test("sizedSession: small inputs build in the caller's own session") {
+    assert(Conf.sizedSession(spark, 1000L, Conf.GramRowShuffleBytes) eq spark)
+    assert(Conf.sizedSession(spark,
+      Conf.chunkRows(1L << 20, ChunkerParams.Default), Conf.ChunkRowShuffleBytes) eq spark)
+    assert(Conf.sizedSession(spark, 0L, Conf.SpanRowShuffleBytes) eq spark)
+  }
+
+  test("sizedSession: big inputs get a clone at the sized width, the caller keeps its own") {
+    val before = spark.conf.get(Width)
+    val current = before.toInt
+    val chunk = Conf.sizedSession(spark,
+      Conf.chunkRows(TenTB, ChunkerParams.Default), Conf.ChunkRowShuffleBytes)
+    assert(!(chunk eq spark))
+    assert(chunk.conf.get(Width).toInt == Conf.sizeShufflePartitions(TenTB,
+      Conf.expectedChunkBytes(ChunkerParams.Default), minPartitions = current))
+    val rows = Conf.sizedSession(spark, RowsE11, Conf.GramRowShuffleBytes)
+    assert(!(rows eq spark))
+    assert(rows.conf.get(Width).toInt == Conf.sizeShufflePartitionsForRows(
+      RowsE11, Conf.GramRowShuffleBytes, minPartitions = current))
+    assert(rows.conf.get(Width).toInt > current)
+    assert(spark.conf.get(Width) == before)
+    // a caller already at or above the sized width builds in place
+    val wide = spark.newSession()
+    wide.conf.set(Width, "200000")
+    assert(Conf.sizedSession(wide, RowsE11, Conf.GramRowShuffleBytes) eq wide)
+  }
+
+  test("sizedSession: the clone carries the caller's runtime conf and temp views") {
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "false")
+    caller.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    caller.range(3).createOrReplaceTempView("sized_session_view")
+    val width = caller.conf.get(Width)
+    val sized = Conf.sizedSession(caller, RowsE11, Conf.GramRowShuffleBytes)
+    assert(!(sized eq caller))
+    assert(sized.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(sized.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles")
+    assert(sized.table("sized_session_view").count() == 3)
+    assert(caller.conf.get(Width) == width)
+  }
+
+  test("rebind: a cached Dataset moves into the clone, still reads its cache, and plans at each session's width") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "false")
+    caller.conf.set(Width, "3")
+    val df = caller.range(1000).selectExpr("id % 7 AS k").cache()
     try {
-      val p0 = Conf.applyRowShufflePartitions(spark, 1000L, 32L)
-      assert(p0.toString == prev)
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == prev)
-      val p1 = Conf.applyRowShufflePartitions(spark, 100L * 1000 * 1000 * 1000, 32L)
-      assert(p1.toString == prev)
-      assert(spark.conf.get("spark.sql.shuffle.partitions").toInt > prev.toInt)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      df.count()
+      // 1e8 rows × 32 B over 64 MiB partitions → 48
+      val sized = Conf.sizedSession(caller, 100L * 1000 * 1000, Conf.GramRowShuffleBytes)
+      assert(sized.conf.get(Width) == "48")
+      assert(GraftBridge.rebind(df, caller) eq df)
+      val moved = GraftBridge.rebind(df, sized)
+      assert(moved.sparkSession eq sized)
+      assert(moved.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r }.isDefined)
+      def widths(d: org.apache.spark.sql.DataFrame): Seq[Int] =
+        d.queryExecution.executedPlan.collect {
+          case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+      val grouped = moved.groupBy("k").count()
+      assert(widths(grouped) == Seq(48))
+      val back = GraftBridge.rebind(grouped, caller)
+      assert(back.sparkSession eq caller)
+      assert(widths(back) == Seq(3))
+      assert(back.collect().map(_.getLong(1)).sum == 1000L)
+    } finally df.unpersist()
   }
 
   test("parseByteLimit: default, zero sentinel, junk and negatives fail loudly") {

@@ -17,12 +17,10 @@ class QueriesSpec extends SparkSpec {
     // computeIfAbsent-safe. 6 in flight fills the tail without starving
     // the 4-core test session.
     val oracled = Queries.oracles.keySet
-    // several operators size-and-restore spark.sql.shuffle.partitions
-    // around their build; under concurrency the restores can interleave
-    // (A captures 4 → sets 7; B captures 7; A restores 4; B restores 7).
-    // Query RESULTS are partition-count-independent, but later suites in
-    // this JVM must see the original value — snapshot and restore here.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    // no query may write the session it runs on: operators build their
+    // input-sized exchanges in a sized session (Conf.sizedSession), so
+    // the whole runtime conf must read the same after 6 queries in flight
+    val confBefore = spark.conf.getAll
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -40,11 +38,9 @@ class QueriesSpec extends SparkSpec {
     val failures =
       try futures.flatMap(f =>
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-      finally {
-        pool.shutdown()
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      }
+      finally pool.shutdown()
     assert(failures.isEmpty, failures.mkString("\n"))
+    assert(spark.conf.getAll == confBefore)
   }
 
   test("oracle keys are a subset of query keys") {

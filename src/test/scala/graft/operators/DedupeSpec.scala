@@ -37,29 +37,41 @@ class DedupeSpec extends SparkSpec {
     assert(!pairs.exists { case (a, b) => b == 3L || b == 4L || a == 3L || a == 4L })
   }
 
-  test("input-sized exchanges restore the session shuffle-partition setting") {
-    import spark.implicits._
-    // both operators size their wide exchanges from corpus stats
-    // (Conf.applyRowShufflePartitions) and must put the session's value
-    // back afterwards — including on the prefix-filter path whose actions
-    // run inside the operator
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      Dedupe.minhashPairs(docsDf, "doc_id", "text", shingleK = 2,
-        numHashes = 64, bands = 16, threshold = 0.3).collect()
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "7")
-      val docs = Seq((0L, "alpha beta gamma delta epsilon zeta eta theta"),
-        (1L, "alpha beta gamma delta")).toDF("doc_id", "text")
-      Dedupe.containmentPairs(docs, "doc_id", "text", k = 3,
-        thresholdBp = 9000L, usePrefixFilter = true).collect()
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "7")
-      Dedupe.simhashPairs(docs, "doc_id", "text").collect()
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "7")
-      Dedupe.minhashClassify(docs, docs, "doc_id", "text", shingleK = 2)
-        .collect()
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "7")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  test("input-sized operators never write the caller's session conf") {
+    // every operator that sizes its wide exchange from input stats
+    // (Conf.sizedSession) builds it in a sized session and leaves the
+    // caller's session exactly as it was handed over — including the
+    // prefix-filter path and the eager line/estimator paths
+    val caller = spark.newSession()
+    import caller.implicits._
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    val before = caller.conf.getAll
+    def unchanged(): Unit = assert(caller.conf.getAll == before)
+    val docs = Seq((0L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    Dedupe.minhashPairs(docs, "doc_id", "text", shingleK = 2,
+      numHashes = 64, bands = 16, threshold = 0.3).collect()
+    unchanged()
+    Dedupe.containmentPairs(docs, "doc_id", "text", k = 3,
+      thresholdBp = 9000L, usePrefixFilter = true).collect()
+    unchanged()
+    Dedupe.simhashPairs(docs, "doc_id", "text").collect()
+    unchanged()
+    Dedupe.minhashClassify(docs, docs, "doc_id", "text", shingleK = 2)
+      .collect()
+    unchanged()
+    val lines = Seq((0L, "a repeated boilerplate line\nbody one"),
+      (1L, "a repeated boilerplate line\nbody two")).toDF("doc_id", "text")
+    LineDedupe.duplicateLines(lines, "doc_id", "text").collect()
+    unchanged()
+    LineDedupe.cutDuplicateLines(lines, "doc_id", "text").collect()
+    unchanged()
+    val f = java.nio.file.Files.createTempFile("graft-est", ".bin")
+    f.toFile.deleteOnExit()
+    java.nio.file.Files.write(f, Array.tabulate[Byte](1 << 16)(i => (i * 31).toByte))
+    Estimator.estimate(caller, Seq(f.toString, f.toString))
+    unchanged()
+    Dedupe.releaseTrackedCaches()
   }
 
   test("minhashClassify: batch rows classify against the index, best match wins") {

@@ -135,31 +135,6 @@ class LineDedupeSpec extends SparkSpec {
     idx.unpersist()
   }
 
-  test("hash-first and string-keyed groupings produce identical results") {
-    // the round-19 front-half strategy knob ([[LineDedupe.HashFirstGroup]]):
-    // grouping by the 128-bit hash pair (16 B exchange keys) must be
-    // indistinguishable from grouping by the raw line string, on the
-    // report, the cut, and the provenance — collisions aside (2⁻¹²⁸,
-    // unconstructible here), the strategies differ only in plan shape
-    def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[Row] =
-      df.collect().toSeq.sortBy(_.toString)
-    assert(
-      sortedRows(LineDedupe.duplicateLines(fixture, "doc_id", "text",
-        hashFirstGroup = true)) ===
-        sortedRows(LineDedupe.duplicateLines(fixture, "doc_id", "text",
-          hashFirstGroup = false)))
-    assert(
-      sortedRows(LineDedupe.cutDuplicateLines(fixture, "doc_id", "text",
-        hashFirstGroup = true)) ===
-        sortedRows(LineDedupe.cutDuplicateLines(fixture, "doc_id", "text",
-          hashFirstGroup = false)))
-    assert(
-      sortedRows(LineDedupe.lineProvenance(fixture, "doc_id", "text",
-        hashFirstGroup = true)) ===
-        sortedRows(LineDedupe.lineProvenance(fixture, "doc_id", "text",
-          hashFirstGroup = false)))
-  }
-
   test("broadcast and shuffle builds produce identical cuts") {
     val bcast = LineDedupe.cutDuplicateLines(fixture, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq

@@ -102,6 +102,23 @@ class SyntheticSpec extends SparkSpec {
     ins.unpersist()
   }
 
+  test("overlapping or out-of-range delete windows fail up front, naming the points") {
+    val gen = new DataGenerator(schema, 42L)
+    val overlap = intercept[IllegalArgumentException] {
+      gen.generateSyntheticTables(spark, 1000L, Seq(0.5, 0.505), 10)
+    }
+    assert(overlap.getMessage.contains("0.5 and 0.505"), overlap.getMessage)
+    assert(overlap.getMessage.contains("editSize 10"), overlap.getMessage)
+    val outside = intercept[IllegalArgumentException] {
+      gen.generateSyntheticTables(spark, 1000L, Seq(0.005), 10)
+    }
+    assert(outside.getMessage.contains("0.005"), outside.getMessage)
+    assert(outside.getMessage.contains("editSize 10"), outside.getMessage)
+    // windows that only touch are fine: [490, 500) and [500, 510)
+    val touching = gen.generateSyntheticTables(spark, 1000L, Seq(0.5, 0.51), 10)
+    assert(touching("deleted").count() == 980L)
+  }
+
   test("edit points linspace matches reference derivation") {
     val pts = EditPoints.linspace(2)
     assert(pts == Seq(0.25, 0.75))
