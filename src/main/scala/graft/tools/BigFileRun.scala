@@ -2,8 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Harness
+import graft.Harness.num
 import graft.operators.{ChunkRelation, Estimator}
 
 /** End-to-end proof of the >2 GiB SINGLE-FILE chunker path (VERDICT r9/r10
@@ -110,13 +110,7 @@ object BigFileRun {
       println(f"[bigfile] synthesized in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bigfile")
 
     // --- 1+2: auto path (routes through DistributedChunker at this size) +
     // estimator fold ---
@@ -150,20 +144,16 @@ object BigFileRun {
     seq.unpersist()
 
     // --- 4: driver memory bound ---
-    System.gc()
-    val rt = Runtime.getRuntime
-    val usedMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-    val maxMb = rt.maxMemory() / (1024 * 1024)
+    val usedMb = Harness.gcUsedBytes() / (1024 * 1024)
+    val maxMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     println(s"[bigfile] heap after run: $usedMb MiB used of $maxMb MiB max")
     require(usedMb < 2048,
       s"driver heap must stay bounded (candidate collect is ~16k longs/GiB), " +
         s"got $usedMb MiB")
 
-    def n1(d: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, d)
-    def n4(d: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, d)
-    println(s"""{"bigfile_mib":$totalMiB,"chunks":$nChunks,"ratio":${n4(ratio)},""" +
-      s""""auto_secs":${n1(autoSecs)},"seq_secs":${n1(seqSecs)},""" +
-      s""""mibps_auto":${n1(total / autoSecs / (1 << 20))},"heap_used_mb":$usedMb}""")
+    println(s"""{"bigfile_mib":$totalMiB,"chunks":$nChunks,"ratio":${num(ratio, 4)},""" +
+      s""""auto_secs":${num(autoSecs, 1)},"seq_secs":${num(seqSecs, 1)},""" +
+      s""""mibps_auto":${num(total / autoSecs / (1 << 20), 1)},"heap_used_mb":$usedMb}""")
     spark.stop()
   }
 }

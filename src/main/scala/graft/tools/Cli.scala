@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.Harness
 import graft.operators.{CompareFormats, ChunkRelation, Estimator}
 import graft.sources.{PageProfiler, TableFormat}
 import graft.synthetic.{DType, DataGenerator, EditPoints}
@@ -31,20 +32,6 @@ object Cli {
       sys.exit(2)
     }
     (flags.toSet, positional)
-  }
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   /** `dup-spans` body, factored for ToolsSpec: the span relation (cached;
@@ -426,7 +413,7 @@ object Cli {
     case "dedup" :: "--wide" :: files if files.nonEmpty =>
       // 128-bit chunk identity: the 1e9+-chunk configuration where 64-bit
       // birthday collisions would silently conflate distinct chunks
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (total, chunkBytes, compressed) =
         Estimator.stats128(ChunkRelation.chunkFiles128(spark, files))
       val ratio = if (total == 0) 0.0 else chunkBytes.toDouble / total
@@ -435,7 +422,7 @@ object Cli {
       spark.stop()
 
     case "dedup" :: files if files.nonEmpty =>
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val r = Estimator.estimate(spark, files)
       println(f"Deduplication ratio: ${r.dedup_ratio * 100}%.1f%% " +
         f"(${r.chunk_bytes}%d/${r.total_len}%d)")
@@ -454,7 +441,7 @@ object Cli {
         sys.exit(2)
       }
       val rest = positional.tail
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val outDir = rest.headOption.map(Paths.get(_))
         .getOrElse(Files.createTempDirectory("graft-stats"))
       val stream = Files.list(Paths.get(dir))
@@ -488,7 +475,7 @@ object Cli {
         sys.exit(2)
       }
       val rest = positional.tail
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val outDir = rest.headOption.map(Paths.get(_))
         .getOrElse(Files.createTempDirectory("graft-synth"))
       val gen = new DataGenerator(DType.parseSchema(schemaJson), 42L)
@@ -510,7 +497,7 @@ object Cli {
       // reference `de rewrite` writes {stem}-dedup; CDC parquet writing is
       // not reachable from Spark's writer (README coverage map), so this
       // rewrites with zstd + small pages — the closest dedup-friendly knobs
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       files.foreach { f =>
         val src = Paths.get(f)
         val stem = src.getFileName.toString.stripSuffix(".parquet")
@@ -527,7 +514,7 @@ object Cli {
       out.foreach(p => println(s"  $p"))
 
     case "param-impact" :: file :: knob :: Nil =>
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val df = spark.read.parquet(file)
       val outDir = Files.createTempDirectory("graft-param")
       val (baseline, contenders) = knob match {
@@ -546,7 +533,7 @@ object Cli {
       spark.stop()
 
     case "page-chunks" :: files if files.nonEmpty =>
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       PageProfiler.pageSizeHistogram(PageProfiler.pageStats(spark, files))
         .orderBy("bucket").show(100, truncate = false)
       spark.stop()
@@ -555,7 +542,7 @@ object Cli {
       // accept-this-table gate: per-column nulls/distincts/min/max in one
       // aggregation job (HLL distincts — the scale mode; Verify's oracled
       // table_profile query covers the exact mode)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       graft.operators.Profiler
         .profile(spark.read.parquet(file), exactDistinct = false)
         .orderBy("column_name")
@@ -577,7 +564,7 @@ object Cli {
                 "usage: query NAME SF_DIR (or set GRAFT_SF_DIR)")
               sys.exit(2)
             }
-          val spark = session()
+          val spark = Harness.session("graft-cli")
           graft.SparkEntry.queries(name)(spark, sfDir).show(50, truncate = false)
           spark.stop()
         case name :: _ =>
@@ -597,7 +584,7 @@ object Cli {
           System.err.println("usage: eval SF_DIR (or set GRAFT_SF_DIR)")
           sys.exit(2)
         }
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val evals = graft.SparkEntry.queries.keys.filter(_.endsWith("_eval")).toSeq.sorted
       evals.foreach { name =>
         println(s"== $name ==")
@@ -616,7 +603,7 @@ object Cli {
           System.err.println("usage: sql \"SELECT ...\" SF_DIR (or set GRAFT_SF_DIR)")
           sys.exit(2)
         }
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val dir = new java.io.File(sfDir)
       val tables = Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet"))
@@ -633,7 +620,7 @@ object Cli {
       spark.stop()
 
     case "curate" :: file :: Nil =>
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val docs = spark.read.parquet(file)
       val annotated = graft.operators.CuratePipeline.curate(docs, "doc_id", "text")
       graft.operators.CuratePipeline.report(annotated)
@@ -652,7 +639,7 @@ object Cli {
       }
       rest match {
         case dir :: maybeOut if maybeOut.size <= 1 =>
-          val spark = session()
+          val spark = Harness.session("graft-cli")
           val plan = graft.operators.Compaction.plan(spark, dir, targetBytes)
           plan.orderBy("bin", "file_name").show(1000, truncate = false)
           maybeOut.foreach { out =>
@@ -670,7 +657,7 @@ object Cli {
     case "layout" :: file :: xCol :: yCol :: rest if rest.size <= 1 =>
       // z-order vs linear clustering experiment over two numeric columns;
       // with OUTDIR, execute the z-order rewrite the analysis priced
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       import org.apache.spark.sql.functions.col
       val df = spark.read.parquet(file)
       val stats = graft.operators.ZOrder.layoutStats(
@@ -691,7 +678,7 @@ object Cli {
       // tokenizer training: learn K merges over a documents parquet and
       // report the compression they buy
       val k = rest.headOption.map(_.toInt).getOrElse(20)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val docs = spark.read.parquet(file)
       graft.operators.BpeTrain.learn(docs, "text", k)
         .show(k, truncate = false)
@@ -706,7 +693,7 @@ object Cli {
       spark.stop()
 
     case "viz-html" :: rest if rest.size >= 2 =>
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val files = rest.init
       val out = Paths.get(rest.last)
       // ONE distributed chunking pass feeds both renderings
@@ -736,7 +723,7 @@ object Cli {
       // changelog MERGE: CHANGES needs (KEYCOL, seq, op) plus the
       // snapshot's payload columns; stats always print, OUTDIR also
       // writes the merged table
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val snap = spark.read.parquet(snapPath)
       val changes = spark.read.parquet(changesPath)
       require(snap.columns.contains(keyCol),
@@ -761,7 +748,7 @@ object Cli {
     case "pca" :: file :: rest if rest.size <= 1 =>
       // embedding-table PCA: variance-explained report for the top
       // components, optional exact-projection dump
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val emb = spark.read.parquet(file)
       require(emb.columns.contains("vec_id") && emb.columns.contains("embedding"),
         s"expected (vec_id, embedding) columns, got ${emb.columns.mkString(", ")}")
@@ -791,7 +778,7 @@ object Cli {
       // asymmetric containment near-dup over a documents parquet:
       // excerpt/quote-wrapper detection Jaccard can't see
       val thresholdBp = rest.headOption.map(_.toLong).getOrElse(9000L)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val docs = spark.read.parquet(file)
       require(docs.columns.contains("doc_id") && docs.columns.contains("text"),
         s"expected (doc_id, text) columns, got ${docs.columns.mkString(", ")}")
@@ -814,7 +801,7 @@ object Cli {
       // boilerplate/quoted passages a curation pipeline cuts (Lee et al.
       // ACL'22 ExactSubstr mode, fixed window)
       val windowTokens = rest.headOption.map(_.toInt).getOrElse(20)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (spans, rollup) = dupSpansReport(spark, file, windowTokens)
       spans.orderBy(org.apache.spark.sql.functions.col("span_tokens").desc)
         .show(20, truncate = false)
@@ -828,7 +815,7 @@ object Cli {
       // print the removal rollup — hash128 identity, the production
       // configuration (a 64-bit window collision would delete text)
       val windowTokens = rest.headOption.map(_.toInt).getOrElse(20)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (rows, rollup) = cutSpansReport(spark, file, outDir, windowTokens)
       println(rollup)
       rows.unpersist()
@@ -840,7 +827,7 @@ object Cli {
       // (one narrow kernel pass, no per-window shuffle) — run this before
       // committing to a full cut-spans over a big corpus
       val windowTokens = rest.headOption.map(_.toInt).getOrElse(20)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (line, _) = dupSpansApproxReport(spark, file, windowTokens)
       println(line)
       spark.stop()
@@ -850,7 +837,7 @@ object Cli {
       // the base side of incremental span dedup; build once, refresh
       // batches cut against it without re-hashing this corpus
       val windowTokens = rest.headOption.map(_.toInt).getOrElse(20)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (_, rollup) = spanIndexReport(spark, file, outDir, windowTokens)
       println(rollup)
       graft.operators.Dedupe.releaseTrackedCaches()
@@ -861,7 +848,7 @@ object Cli {
       // nightly refresh: cut BATCH documents against a span-index built
       // earlier (plus the batch itself), write the cleaned batch parquet
       val windowTokens = rest.headOption.map(_.toInt).getOrElse(20)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (rows, rollup) =
         cutSpansIncrementalReport(spark, idxDir, file, outDir, windowTokens)
       println(rollup)
@@ -874,7 +861,7 @@ object Cli {
       // boilerplate lines (headers/footers/banners) a RefinedWeb-style
       // line-wise pass removes
       val minChars = rest.headOption.map(_.toInt).getOrElse(10)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (classes, rollup) = dupLinesReport(spark, file, minChars)
       classes.orderBy(org.apache.spark.sql.functions.col("n_occ").desc,
         org.apache.spark.sql.functions.col("line"))
@@ -887,7 +874,7 @@ object Cli {
       // narrow pass, no per-line shuffle) — run this before committing to
       // a full cut-lines over a big corpus
       val minChars = rest.headOption.map(_.toInt).getOrElse(10)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (line, _) = dupLinesApproxReport(spark, file, minChars)
       println(line)
       spark.stop()
@@ -897,7 +884,7 @@ object Cli {
       // line-cleaned corpus (doc_id, n_lines, n_dropped, chars_dropped,
       // text_clean) as parquet and print the removal rollup
       val minChars = rest.headOption.map(_.toInt).getOrElse(10)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (_, rollup) = cutLinesReport(spark, file, outDir, minChars)
       println(rollup)
       spark.stop()
@@ -907,7 +894,7 @@ object Cli {
       // side of incremental line dedup; build once, refresh batches cut
       // against it without re-reading this corpus
       val minChars = rest.headOption.map(_.toInt).getOrElse(10)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (_, rollup) = lineIndexReport(spark, file, outDir, minChars)
       println(rollup)
       graft.operators.Dedupe.releaseTrackedCaches()
@@ -918,7 +905,7 @@ object Cli {
       // nightly refresh: cut BATCH documents against a line-index built
       // earlier (plus the batch itself), write the cleaned batch parquet
       val minChars = rest.headOption.map(_.toInt).getOrElse(10)
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val (_, rollup) =
         cutLinesIncrementalReport(spark, idxDir, file, outDir, minChars)
       println(rollup)
@@ -928,7 +915,7 @@ object Cli {
     case "phash-dedup" :: files if files.nonEmpty =>
       // perceptual (visual) dedup over real image files: decode → dHash →
       // exact groups + hamming<=3 near matches; file_idx keys the report
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       import org.apache.spark.sql.functions.{col, input_file_name}
       val blobs = spark.read.format("binaryFile")
         .load(files: _*)
@@ -970,7 +957,7 @@ object Cli {
       // keyframe near-dup over real Y4M files: from-scratch decode → 4
       // keyframe dHashes per video → hamming<=3 pairs, reported
       // per-keyframe-slot; file_idx keys the report like phash-dedup
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       import org.apache.spark.sql.functions.{col, input_file_name}
       val blobs = spark.read.format("binaryFile")
         .load(files: _*)
@@ -1003,7 +990,7 @@ object Cli {
       spark.stop()
 
     case "viz" :: rest if rest.size >= 2 =>
-      val spark = session()
+      val spark = Harness.session("graft-cli")
       val files = rest.init
       val out = Paths.get(rest.last)
       // reference writes one PNG per input file plus the merged strip

@@ -1,30 +1,27 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.Harness
 
 /** Plan-review tool: dump formatted physical plans for the catalog queries
-  * (or a named subset) so pushdown/pruning/broadcast/codegen can be
-  * audited. `sbt "runMain graft.tools.Explain [sfDir] [query ...]"`.
+  * (or a named subset; an unknown name exits 2) so
+  * pushdown/pruning/broadcast/codegen can be audited.
+  * `sbt "runMain graft.tools.Explain [sfDir] [query ...]"`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq else graft.Queries.all.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val known = graft.Queries.all.keySet
+    val names = known.toSeq.sorted.filter(
+      if (args.length > 1)
+        Harness.orExit(Harness.only("Explain query", args.tail.mkString(","), known))
+      else known)
+    val spark = Harness.session("graft-explain")
     names.foreach { name =>
-      graft.Queries.all.get(name).foreach { fn =>
-        println(s"\n===================== $name =====================")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
-      }
+      println(s"\n===================== $name =====================")
+      try graft.Queries.all(name)(spark, sfDir).explain("formatted")
+      catch { case NonFatal(e) => println(s"explain failed: $e") }
     }
     spark.stop()
   }

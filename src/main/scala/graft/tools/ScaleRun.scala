@@ -1,8 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+
+import graft.Harness
+import graft.Harness.{Failed, minOf, num, timed, writeSingleFile}
 
 /** Scale-validation harness: synthesizes a ~Nx corpus from the sf0.1
   * testdata with the repo's deterministic column transforms, times the
@@ -26,57 +29,6 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.tools.ScaleRun [factor] [outDir]
   */
 object ScaleRun {
-
-  /** Post-GC used heap: two passes with a settling sleep (a single pass
-    * often leaves reference-processing work pending and over-reads).
-    * Shared by the per-query heap probes here and by
-    * [[StreamRestartRun]]'s per-case baseline-delta readings.
-    */
-  private[tools] def gcUsedBytes(): Long = {
-    System.gc(); Thread.sleep(200); System.gc()
-    val rt = Runtime.getRuntime
-    rt.totalMemory() - rt.freeMemory()
-  }
-
-  /** Persist a harness's machine-readable JSON line (the Bench
-    * discipline: the default path is UNTRACKED under target/ so driver
-    * and verification reruns can never clobber a committed copy —
-    * publishing one is an explicit `cp`). NonFatal-safe: losing the
-    * computed sweep to an artifact-write hiccup is never worth it.
-    */
-  private[tools] def writeArtifact(
-      defaultPath: String, envVar: String, line: String): Unit =
-    try {
-      val out = Paths.get(sys.env.getOrElse(envVar, defaultPath))
-      Option(out.getParent)
-        .foreach(p => { Files.createDirectories(p); () })
-      Files.write(out,
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"artifact write failed (non-fatal): $e")
-    }
-
-  /** Write df as a SINGLE parquet file at dir/name (the chunk queries open
-    * paths as plain file streams, not directory tables).
-    */
-  private[tools] def writeSingleFile(df: DataFrame, dir: String, name: String): Unit = {
-    val tmp = s"$dir/_tmp_$name"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val listing = Files.list(Paths.get(tmp))
-    val part =
-      try listing.toArray.map(_.toString)
-        .filter(p => p.endsWith(".parquet") && p.contains("part-"))
-      finally listing.close()
-    require(part.length == 1, s"expected one part file, got ${part.toSeq}")
-    Files.move(Paths.get(part.head), Paths.get(s"$dir/$name"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // best-effort temp cleanup
-    val s = Files.walk(Paths.get(tmp))
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Files.deleteIfExists(p); () })
-    finally s.close()
-  }
 
   /** Every corpus table the builder knows; SPARK_GRAFT_SCALE_TABLES
     * selects a subset (the 1000× streaming tier needs only
@@ -300,40 +252,32 @@ object ScaleRun {
 
   def main(args: Array[String]): Unit = {
     System.setProperty(graft.Queries.SideTableProp, "0")
-    // a typo'd SPARK_GRAFT_STATE_BACKEND must abort NOW, before the
-    // corpus build and timed work (providerClass is lazy)
-    graft.streaming.StateBackend.forceResolve()
-    graft.streaming.EventStream.forceResolveSink()
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse(s"/tmp/graft_scale_x$factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     // SPARK_GRAFT_SCALE_TABLES: comma-separated corpus-table subset
     // (default: all). The 1000× streaming tier builds documents+events
     // only — a 1000× lineitem it will never read would cost tens of GB.
-    val tables = sys.env.get("SPARK_GRAFT_SCALE_TABLES") match {
-      case None => AllCorpusTables
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = want.diff(AllCorpusTables)
-        if (want.isEmpty || unknown.nonEmpty) {
-          System.err.println(s"[scale] SPARK_GRAFT_SCALE_TABLES must name " +
-            s"tables from ${AllCorpusTables.toSeq.sorted.mkString(",")}; " +
-            s"got '$csv'")
-          sys.exit(2)
-        }
-        want
-    }
+    val tables = Harness.onlyFromEnv("SPARK_GRAFT_SCALE_TABLES", AllCorpusTables)
+      .getOrElse(AllCorpusTables)
+    // the shared VM host steals CPU in multi-second bursts (observed:
+    // a min-of-2 1x row reading 4x its quiet-box value), so a fixed two
+    // attempts is not enough for trustworthy ratios — take the min over
+    // SPARK_GRAFT_SCALE_MINOF attempts (default 3; the published sweeps
+    // state the setting). A non-positive count exits 2 rather than
+    // silently publishing min-of-1 numbers.
+    val attempts = Harness.orExit(Harness.positiveInt("SPARK_GRAFT_SCALE_MINOF",
+      sys.env.get("SPARK_GRAFT_SCALE_MINOF"), 3))
+    // tier selection: factors past the 10× tier run the heavy-family
+    // subset — two decades of growth on the shapes where a quadratic or
+    // a state/collect bound would actually break
+    val tierQueries = if (factor > 20) Scale100Queries else ScaleQueries
+    // iteration aid (same convention as SPARK_GRAFT_VERIFY_ONLY /
+    // SPARK_GRAFT_BENCH_ONLY): comma-separated subset; an empty or
+    // unknown list exits 2
+    val queries = Harness.onlyFromEnv("SPARK_GRAFT_SCALE_ONLY", tierQueries.toSet)
+      .fold(tierQueries)(want => tierQueries.filter(want))
+    val spark = Harness.session("graft-scale")
     // SPARK_GRAFT_SCALE_REUSE=1: skip the (deterministic) corpus build
     // when the output dir already holds every selected table —
     // iteration aid for re-measuring single families without the rebuild
@@ -361,70 +305,6 @@ object ScaleRun {
       try graft.SparkEntry.queries(w)(spark, base).count()
       catch { case scala.util.control.NonFatal(_) => () }
 
-    // a failed query must surface as FAILED in the table, never as a
-    // too-fast-to-be-true timing; NaN poisons the ratio visibly
-    def once(fn: () => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { fn(); (System.nanoTime() - t0) / 1e9 }
-      catch { case scala.util.control.NonFatal(e) =>
-        // e.toString, not getMessage: a null/empty message (plain NPE)
-        // would crash the reporter inside the catch handler
-        println(s"[scale] FAILED: ${e.toString.linesIterator.next()}")
-        Double.NaN
-      }
-    }
-    // the shared VM host steals CPU in multi-second bursts (observed:
-    // a min-of-2 1x row reading 4x its quiet-box value), so a fixed two
-    // attempts is not enough for trustworthy ratios — take the min over
-    // SPARK_GRAFT_SCALE_MINOF attempts (default 3; the published sweeps
-    // state the setting)
-    val attempts = sys.env.get("SPARK_GRAFT_SCALE_MINOF") match {
-      case None => 3
-      case Some(s) =>
-        val n =
-          try s.trim.toInt
-          catch {
-            case _: NumberFormatException =>
-              System.err.println(
-                s"[scale] SPARK_GRAFT_SCALE_MINOF must be a positive attempt count, got '$s'")
-              sys.exit(2)
-          }
-        if (n < 1) {
-          // fail loudly rather than silently publishing min-of-1 numbers
-          System.err.println(
-            s"[scale] SPARK_GRAFT_SCALE_MINOF must be >= 1, got $n")
-          sys.exit(2)
-        }
-        n
-    }
-    def minOfN(fn: () => Unit): Double = {
-      var best = graft.operators.Dedupe.withTrackedCaches(once(fn))
-      var i = 1
-      while (!best.isNaN && i < attempts) {
-        best = math.min(best, graft.operators.Dedupe.withTrackedCaches(once(fn)))
-        i += 1
-      }
-      best
-    }
-
-    // tier selection: factors past the 10× tier run the heavy-family
-    // subset — two decades of growth on the shapes where a quadratic or
-    // a state/collect bound would actually break
-    val tierQueries = if (factor > 20) Scale100Queries else ScaleQueries
-    // iteration aid (same convention as SPARK_GRAFT_VERIFY_ONLY /
-    // SPARK_GRAFT_BENCH_ONLY): comma-separated subset; a typo exits 2
-    val queries = sys.env.get("SPARK_GRAFT_SCALE_ONLY") match {
-      case None => tierQueries
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty)
-        val unknown = want.filterNot(tierQueries.contains)
-        if (unknown.nonEmpty) {
-          System.err.println(
-            s"[scale] unknown SPARK_GRAFT_SCALE_ONLY entries: ${unknown.mkString(",")}")
-          sys.exit(2)
-        }
-        tierQueries.filter(want.contains)
-    }
     val qSet = queries.toSet
     // only the shared builds some selected query consumes (Bench's
     // attribution rule): the ngram-pairs build for an unselected consumer
@@ -465,19 +345,13 @@ object ScaleRun {
         graft.Queries.SessionRelationCache.releaseFor(base)
         graft.Queries.SessionRelationCache.releaseFor(out)
         sharedSelected.foreach { case (name, build) =>
-          val a = once(() => build(spark, base))
-          val b = once(() => build(spark, out))
-          // a failed attempt poisons the build's figure in EITHER
-          // direction (the "must surface as FAILED" policy) — min-ing
-          // around a NaN would publish a number for a build that did
-          // not reliably complete
-          def fold(m: Map[String, Double], t: Double) = m.get(name) match {
-            case Some(prev) =>
-              m.updated(name,
-                if (prev.isNaN || t.isNaN) Double.NaN else math.min(prev, t))
-            case None => m.updated(name, t)
-          }
-          s1 = fold(s1, a); sN = fold(sN, b)
+          // a failed attempt poisons the build's figure (the min with
+          // Failed is Failed): a build that did not reliably complete
+          // must surface as FAILED, never as its other attempts' time
+          def fold(m: Map[String, Double], t: Double) =
+            m.updated(name, m.get(name).fold(t)(math.min(_, t)))
+          s1 = fold(s1, timed(build(spark, base)))
+          sN = fold(sN, timed(build(spark, out)))
         }
       }
       (s1, sN)
@@ -499,11 +373,11 @@ object ScaleRun {
       // drop this thread's sink attribution so a batch query can never
       // inherit the previous streaming query's metrics
       graft.streaming.EventStream.clearThreadStateAttribution()
-      val t = minOfN(() => { graft.SparkEntry.queries(name)(spark, dir).count(); () })
+      val t = minOf(attempts)(graft.SparkEntry.queries(name)(spark, dir).count())
       // never publish bounded-state evidence for a FAILED query: a
       // successful early attempt may have set the metrics before a later
-      // attempt poisoned the timing to NaN
-      if (!t.isNaN)
+      // attempt poisoned the timing
+      if (t >= 0)
         graft.streaming.EventStream.lastStateMetricsHere.foreach { m =>
           streamState((dir, name)) = m
           // dedicated UNTIMED run for the heap evidence, reported as a
@@ -518,7 +392,7 @@ object ScaleRun {
           // rides BOTH backends identically, so the hdfs-vs-rocksdb
           // difference isolates where the state lives)
           org.apache.spark.sql.GraftBridge.unloadStateStores()
-          val heapBase = gcUsedBytes()
+          val heapBase = Harness.gcUsedBytes()
           try {
             // same loan bracket as every timed attempt: a stream query
             // that track()s a relation must not leak it into the rest
@@ -527,7 +401,7 @@ object ScaleRun {
               graft.SparkEntry.queries(name)(spark, dir).count()
             }
             streamHeap((dir, name)) =
-              math.max(0L, gcUsedBytes() - heapBase) / (1024 * 1024)
+              math.max(0L, Harness.gcUsedBytes() - heapBase) / (1024 * 1024)
           } catch { case scala.util.control.NonFatal(e) =>
             // a missing heap_delta_mb field must be distinguishable
             // from a probe crash: a systematically failing probe (e.g.
@@ -548,48 +422,30 @@ object ScaleRun {
     // and sentinel_load_index (burstiness across this window). The
     // interleaved 1×/N× ordering stays the primary ratio defense; these
     // fields make the window itself checkable after the fact.
-    val sentinelSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val sentinelQuery: () => Unit = () => {
-      spark.read.parquet(s"$base/lineitem.parquet")
-        .groupBy(col("l_linestatus"))
-        .agg(sum(col("l_extendedprice")).as("sum_price"),
-          avg(col("l_discount")).as("avg_disc"))
-        .collect()
-      ()
-    }
-    def runSentinel(): Unit = {
-      // min-of-2 per sample, same as Bench: a one-off GC hiccup must not
-      // fake a load spike
-      val a = once(sentinelQuery)
-      val b = once(sentinelQuery)
-      val t = if (a.isNaN) b else if (b.isNaN) a else math.min(a, b)
-      if (!t.isNaN) sentinelSecs += t
-    }
-    // two untimed priming runs: C2 ramps a small scan-agg over several
-    // executions and an unprimed first sample would fake a load index
-    once(sentinelQuery); once(sentinelQuery)
-    runSentinel()
+    val sentinel = new Harness.Sentinel(spark, base)
+    sentinel.sample()
 
     val (shared1, sharedN) = timeShared()
-    runSentinel()
-    val timed = queries.map(n => n -> (timeQuery(n, base), timeQuery(n, out))).toMap
-    runSentinel()
-    val t1 = timed.map { case (n, (a, _)) => n -> a }
-    val tN = timed.map { case (n, (_, b)) => n -> b }
+    sentinel.sample()
+    val times = queries.map(n => n -> (timeQuery(n, base), timeQuery(n, out))).toMap
+    sentinel.sample()
+    val t1 = times.map { case (n, (a, _)) => n -> a }
+    val tN = times.map { case (n, (_, b)) => n -> b }
 
-    // Locale.ROOT everywhere: the JSON line is machine-parsed, and even
-    // the human table must not flip to comma decimals on another JVM
-    def n2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    def n1(d: Double): String = "%.1f".formatLocal(java.util.Locale.ROOT, d)
+    // a ratio with a FAILED side is itself the failure marker; the
+    // printed table spells both out as FAILED
+    def ratio(a: Double, b: Double): Double = if (a < 0 || b < 0) Failed else b / a
+    def show(d: Double, places: Int): String = if (d < 0) "FAILED" else num(d, places)
     if (sharedSelected.nonEmpty)
       println(s"[scale] shared builds 1x/${factor}x: " + sharedSelected.map {
         case (n, _) =>
-          s"$n ${n2(shared1(n))}/${n2(sharedN(n))} (${n1(sharedN(n) / shared1(n))}x)"
+          s"$n ${show(shared1(n), 2)}/${show(sharedN(n), 2)} " +
+            s"(${show(ratio(shared1(n), sharedN(n)), 1)}x)"
       }.mkString(", "))
     println(s"| query | 1x (s) | ${factor}x (s) | ratio |")
     println("|---|---|---|---|")
     queries.foreach { n =>
-      println(s"| $n | ${n2(t1(n))} | ${n2(tN(n))} | ${n1(tN(n) / t1(n))}x |")
+      println(s"| $n | ${show(t1(n), 2)} | ${show(tN(n), 2)} | ${show(ratio(t1(n), tN(n)), 1)}x |")
     }
     // bounded-state evidence for the streaming queries: state-store
     // rows/bytes at both tiers (the fixed-state twins must be IDENTICAL)
@@ -601,7 +457,7 @@ object ScaleRun {
           .map { case (r, b) =>
             val heap = streamHeap.get((dir, n))
               .map(h => s", heap +$h MiB").getOrElse("")
-            s"$r rows / ${n2(b / 1048576.0)} MiB$heap"
+            s"$r rows / ${num(b / 1048576.0, 2)} MiB$heap"
           }
           .getOrElse("-")
       println(s"[scale] streaming state (max rows / bytes across triggers, " +
@@ -623,7 +479,7 @@ object ScaleRun {
     // backend until the 60 s maintenance cadence) — a hygienic session
     // would have moved on past them too
     org.apache.spark.sql.GraftBridge.unloadStateStores()
-    val usedMb = gcUsedBytes() / (1024 * 1024)
+    val usedMb = Harness.gcUsedBytes() / (1024 * 1024)
     val maxMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     println(s"[scale] heap after ${factor}x sweep: ${usedMb} MiB used of ${maxMb} MiB max")
     val js = queries.map { n =>
@@ -635,26 +491,21 @@ object ScaleRun {
         }
       }
       val extra = if (st.isEmpty) "" else "," + st.mkString(",")
-      s""""$n":{"t1":${n2(t1(n))},"tN":${n2(tN(n))},"ratio":${n2(tN(n) / t1(n))}$extra}"""
+      s""""$n":{"t1":${num(t1(n), 2)},"tN":${num(tN(n), 2)},"ratio":${num(ratio(t1(n), tN(n)), 2)}$extra}"""
     }.mkString("{", ",", "}")
     val sharedJs = sharedSelected.map { case (n, _) =>
-      s""""$n":{"t1":${n2(shared1(n))},"tN":${n2(sharedN(n))},"ratio":${n2(sharedN(n) / shared1(n))}}"""
+      s""""$n":{"t1":${num(shared1(n), 2)},"tN":${num(sharedN(n), 2)},"ratio":${num(ratio(shared1(n), sharedN(n)), 2)}}"""
     }.mkString("{", ",", "}")
-    val sentinelFloor = sentinelSecs.minOption.getOrElse(-1.0)
-    val sentinelLoad =
-      if (sentinelSecs.size < 2 || sentinelFloor <= 0) -1.0
-      else sentinelSecs.max / sentinelFloor
-    val sentinelJs = sentinelSecs
-      .map(v => "%.3f".formatLocal(java.util.Locale.ROOT, v))
-      .mkString("[", ",", "]")
+    val sentinelJs = sentinel.secs.map(num(_, 3)).mkString("[", ",", "]")
     val line =
       s"""{"scale_factor":$factor,"state_backend":"${graft.streaming.StateBackend.name}","minof":$attempts,""" +
-        s""""sentinel_floor":${n2(sentinelFloor)},"sentinel_load_index":${n2(sentinelLoad)},"sentinel_secs":$sentinelJs,""" +
+        s""""sentinel_floor":${num(sentinel.floor, 2)},"sentinel_load_index":${num(sentinel.loadIndex, 2)},"sentinel_secs":$sentinelJs,""" +
         s""""heap_used_mb":$usedMb,"heap_max_mb":$maxMb,"shared_builds":$sharedJs,"queries":$js}"""
     println(line)
     // machine-readable tier evidence (round-19): the README tier tables
     // cite this artifact instead of being the only copy of the numbers
-    writeArtifact(s"target/scale_x$factor.json", "GRAFT_SCALE_OUT", line)
+    Harness.writeArtifact(
+      sys.env.getOrElse("GRAFT_SCALE_OUT", s"target/scale_x$factor.json"), line)
     spark.stop()
   }
 }

@@ -5,6 +5,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness
+import graft.Harness.num
+
 /** Checkpoint-restart validation at scale for the stateful streaming
   * twins — the production property the fixture-scale restart specs
   * (StreamCdcRestartSpec, StreamDedupRestartSpec) prove only at toy size:
@@ -92,14 +95,14 @@ object StreamRestartRun {
       Files.createLink(srcDir.resolve(s"b$i.parquet"), Paths.get(f))
     }
 
-    // per-case heap BASELINE (ScaleRun's gcUsedBytes discipline — two GC
-    // passes with a settling sleep), taken with every state provider
+    // per-case heap BASELINE (Harness.gcUsedBytes — two GC passes with a
+    // settling sleep), taken with every state provider
     // unloaded: the per-run readings below are DELTAS over this, so a
     // previous case's leftovers and the session's resident caches never
     // smear into the hdfs-vs-rocksdb contrast the way an absolute
     // single-GC reading did
     org.apache.spark.sql.GraftBridge.unloadStateStores()
-    val heapBase = ScaleRun.gcUsedBytes()
+    val heapBase = Harness.gcUsedBytes()
 
     def runOnce(): Double = {
       // start COLD: drop every loaded state provider first. Without
@@ -132,7 +135,7 @@ object StreamRestartRun {
         // delta stays near zero — the per-case heap evidence for the
         // SPARK_GRAFT_STATE_BACKEND flag
         lastHeapMb =
-          math.max(0L, ScaleRun.gcUsedBytes() - heapBase) / (1024 * 1024)
+          math.max(0L, Harness.gcUsedBytes() - heapBase) / (1024 * 1024)
         secs
       } finally q.stop()
     }
@@ -141,7 +144,7 @@ object StreamRestartRun {
     val heapInitial = lastHeapMb
     // the delta lands while the monitor is down: some re-uploads (state
     // keys already present), some genuinely new rows
-    ScaleRun.writeSingleFile(delta(spark.read.parquet(srcDir.toString)),
+    Harness.writeSingleFile(delta(spark.read.parquet(srcDir.toString)),
       work.toString, "delta.parquet")
     Files.createLink(srcDir.resolve("b_delta.parquet"),
       work.resolve("delta.parquet"))
@@ -188,10 +191,6 @@ object StreamRestartRun {
   private var lastHeapMb: Long = 0L
 
   def main(args: Array[String]): Unit = {
-    // a typo'd SPARK_GRAFT_STATE_BACKEND must abort NOW, before the
-    // corpus check and any runs (providerClass is lazy)
-    graft.streaming.StateBackend.forceResolve()
-    graft.streaming.EventStream.forceResolveSink()
     val factor = args.headOption.map(_.toInt).getOrElse(100)
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val corpus = args.lift(1).getOrElse(s"/tmp/graft_scale_x$factor")
@@ -199,15 +198,7 @@ object StreamRestartRun {
       require(Files.exists(Paths.get(s"$corpus/$t.parquet")),
         s"missing $corpus/$t.parquet — run `runMain graft.tools.ScaleRun " +
           s"$factor` first (corpus build is its job, not this harness's)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-stream-restart")
     // opt-in state-store backend (SPARK_GRAFT_STATE_BACKEND=rocksdb):
     // set session-wide so the initial run AND the restart inherit the
     // same provider — a checkpoint must keep the provider it started
@@ -366,7 +357,6 @@ object StreamRestartRun {
       stateRowsBound = Some(linesShards.toLong),
       occurrencesIn = linesOccurrences)
 
-    def n2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     // unsaturated: 256 shards x 2^16 cap tracks 16.7M windows; the
     // SATURATED twin forces cap 2^10 (262k tracked vs ~1M windows at 1x,
     // ~100M at 100x) — the deep-degradation regime the scaladoc promises
@@ -392,27 +382,10 @@ object StreamRestartRun {
         () => linesCase(corpus, "stream_dedup_lines_sat", 1 << 10)))
     // iteration aid (same convention as SPARK_GRAFT_SCALE_ONLY): a
     // comma-separated case subset — e.g. the exact-state twins when
-    // contrasting state backends; a typo exits 2
-    val selected = sys.env.get("SPARK_GRAFT_RESTART_ONLY") match {
-      case None => allCases
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty)
-        if (want.isEmpty) {
-          // an empty filter (unexpanded shell variable) must not run
-          // zero cases, assert nothing, and exit green
-          System.err.println(
-            "[restart] SPARK_GRAFT_RESTART_ONLY is set but names no cases")
-          sys.exit(2)
-        }
-        val known = allCases.map(_._1).toSet
-        val unknown = want.filterNot(known)
-        if (unknown.nonEmpty) {
-          System.err.println(
-            s"[restart] unknown SPARK_GRAFT_RESTART_ONLY entries: ${unknown.mkString(",")}")
-          sys.exit(2)
-        }
-        allCases.filter(c => want.contains(c._1))
-    }
+    // contrasting state backends; an empty or unknown list exits 2
+    // rather than run zero cases, assert nothing, and exit green
+    val selected = Harness.onlyFromEnv("SPARK_GRAFT_RESTART_ONLY", allCases.map(_._1).toSet)
+      .fold(allCases)(want => allCases.filter(c => want(c._1)))
     val results = selected.map { case (n, r1, rN) => (n, r1(), rN()) }
 
     println("| query | tier | initial (s) | restart (s) | state rows | state MiB | heap Δ MiB | events out | occ in |")
@@ -420,8 +393,8 @@ object StreamRestartRun {
     val json = results.map { case (name, r1, rN) =>
       for ((tier, r) <- Seq("1x" -> r1, s"${factor}x" -> rN)) {
         val occ = if (r.occurrencesIn == 0) "-" else r.occurrencesIn.toString
-        println(s"| $name | $tier | ${n2(r.tInitial)} | ${n2(r.tRestart)} | " +
-          s"${r.stateRows} | ${n2(r.stateBytes / 1024.0 / 1024.0)} | " +
+        println(s"| $name | $tier | ${num(r.tInitial, 2)} | ${num(r.tRestart, 2)} | " +
+          s"${r.stateRows} | ${num(r.stateBytes / 1024.0 / 1024.0, 2)} | " +
           s"${r.heapMb} | ${r.sinkRows} | $occ |")
       }
       // the N× recovery bar: restart pays state reload + delta, never a
@@ -430,13 +403,13 @@ object StreamRestartRun {
       // floor — a query whose initial run is itself near the floor, like
       // the event dedup at low factors, can't show a 2× gap)
       require(rN.tRestart < rN.tInitial / 2 || rN.tRestart < 2.5 * r1.tRestart,
-        s"[$name] ${factor}x restart ${n2(rN.tRestart)}s is neither < half " +
-          s"the initial ${n2(rN.tInitial)}s nor near the 1x restart floor " +
-          s"${n2(r1.tRestart)}s — recovery is re-processing the corpus")
-      s""""$name":{"t1_initial":${n2(r1.tInitial)},"t1_restart":${n2(r1.tRestart)},""" +
+        s"[$name] ${factor}x restart ${num(rN.tRestart, 2)}s is neither < half " +
+          s"the initial ${num(rN.tInitial, 2)}s nor near the 1x restart floor " +
+          s"${num(r1.tRestart, 2)}s — recovery is re-processing the corpus")
+      s""""$name":{"t1_initial":${num(r1.tInitial, 2)},"t1_restart":${num(r1.tRestart, 2)},""" +
         s""""t1_state_rows":${r1.stateRows},"t1_state_bytes":${r1.stateBytes},""" +
         s""""t1_heap_delta_mb":${r1.heapMb},""" +
-        s""""tN_initial":${n2(rN.tInitial)},"tN_restart":${n2(rN.tRestart)},""" +
+        s""""tN_initial":${num(rN.tInitial, 2)},"tN_restart":${num(rN.tRestart, 2)},""" +
         s""""tN_state_rows":${rN.stateRows},"tN_state_bytes":${rN.stateBytes},""" +
         s""""tN_heap_delta_mb":${rN.heapMb},""" +
         s""""tN_events_out":${rN.sinkRows},"tN_occurrences_in":${rN.occurrencesIn}}"""
@@ -448,9 +421,9 @@ object StreamRestartRun {
     // state-backend tables cite this artifact instead of being the only
     // copy of the numbers; backend in the name so an hdfs and a rocksdb
     // sweep of the same factor don't clobber each other
-    ScaleRun.writeArtifact(
-      s"target/stream_restart_x${factor}_${graft.streaming.StateBackend.name}.json",
-      "GRAFT_RESTART_OUT", line)
+    Harness.writeArtifact(sys.env.getOrElse("GRAFT_RESTART_OUT",
+      s"target/stream_restart_x${factor}_${graft.streaming.StateBackend.name}.json"),
+      line)
     spark.stop()
   }
 }

@@ -34,11 +34,6 @@ object Viz {
     * width ∝ chunk size. Input = the A6 matrix rows
     * (file_idx, first_seen_in, size, is_unique) in byte order per file.
     */
-  // CSS widths must be locale-invariant (comma-decimal JVM locales would
-  // emit widths browsers discard)
-  private def pctStr(d: Double): String =
-    "%.3f".formatLocal(java.util.Locale.ROOT, d)
-
   def stripDiffHtml(rows: Seq[(Long, Long, Long, Boolean)]): String = {
     val byFile = rows.groupBy(_._1).toSeq.sortBy(_._1)
     val sb = new StringBuilder
@@ -51,7 +46,7 @@ object Viz {
         val pct = size.toDouble * 100 / total
         val opacity = if (unique) "1.0" else "0.5"
         sb.append(
-          f"<div style=${"\""}width:${pctStr(pct)}%s%%;background:#$rgb%06x;opacity:$opacity${"\""}></div>")
+          f"<div style=${"\""}width:${graft.Harness.num(pct, 3)}%s%%;background:#$rgb%06x;opacity:$opacity${"\""}></div>")
       }
       sb.append("</div>")
     }
@@ -93,7 +88,7 @@ object Viz {
           else if (nFiles(h) == 1) "1.0"
           else "0.5"
         sb.append(
-          f"<div style=${"\""}width:${pctStr(pct)}%s%%;background:#$rgb%06x;opacity:$opacity${"\""}></div>")
+          f"<div style=${"\""}width:${graft.Harness.num(pct, 3)}%s%%;background:#$rgb%06x;opacity:$opacity${"\""}></div>")
       }
       sb.append("</div>")
     }

@@ -16,19 +16,8 @@ trait SparkSpec extends AnyFunSuite {
     * name.parquet would stream empty / fail to open).
     */
   def writeFlatParquet(df: org.apache.spark.sql.DataFrame,
-      dir: java.nio.file.Path, name: String): Unit = {
-    val tmp = s"$dir/_tmp_$name"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-    val part =
-      try listing.toArray.map(_.toString)
-        .filter(p => p.endsWith(".parquet") && p.contains("part-"))
-      finally listing.close()
-    require(part.length == 1, s"expected one part file, got ${part.toSeq}")
-    java.nio.file.Files.move(java.nio.file.Paths.get(part.head),
-      java.nio.file.Paths.get(s"$dir/$name"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+      dir: java.nio.file.Path, name: String): Unit =
+    Harness.writeSingleFile(df, dir.toString, name)
 }
 
 object SparkSpec {
@@ -48,18 +37,8 @@ object SparkSpec {
         finally s.close()
       } catch { case scala.util.control.NonFatal(_) => () }
     }, "graft-test-warehouse-purge"))
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir", wh.toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // local[4] whatever SPARK_GRAFT_CPUS says: the forks' processor
+    // budget (build.sbt) is sized for four-core sessions
+    Harness.sessionAt(4, "graft-test", Seq("spark.sql.warehouse.dir" -> wh.toString))
   }
 }

@@ -247,7 +247,7 @@ class DedupeSpec extends SparkSpec {
     // doc 1: P at 1..8 -> span (1, 8)
     // doc 2: "P and then again P": P twice (1..8, 12..19); its windows
     //   recur, and no window straddling the middle does -> (1,8), (12,8)
-    assert(bc((0L, 5L, 8L)) != null || bc.contains((0L, 5L, 8L)))
+    assert(bc.contains((0L, 5L, 8L)), s"doc 0 must carry span (5, 8): $bc")
     assert(bc.contains((1L, 1L, 8L)))
     assert(bc.contains((2L, 1L, 8L)) && bc.contains((2L, 12L, 8L)))
     assert(!bc.exists(_._1 == 3L), "unique doc must contribute no spans")
