@@ -212,20 +212,7 @@ object Bench {
     val only = Harness.onlyFromEnv("SPARK_GRAFT_BENCH_ONLY", SparkEntry.queries.keySet)
     val spark = Harness.session("graft-bench")
 
-    // warmup: exercise scan+shuffle+window+UDF code paths once, discarded
-    // NonFatal only: an OOM/fatally-broken JVM must abort, not proceed into
-    // the timed section and report bogus numbers
-    // stream_dedup/stream_join warm the streaming machinery (state-store
-    // providers, micro-batch planner, join state classes) whose one-time
-    // class-loading otherwise lands on the first timed streaming query;
-    // nothing persists across runs, so no timed work moves out
-    for (w <- Seq("q01_pricing_summary", "q05_window_best", "dedup_exact",
-        "stream_dedup", "stream_join"))
-      SparkEntry.queries.get(w).foreach { fn =>
-        try fn(spark, sfDir).count()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    graft.operators.Dedupe.releaseTrackedCaches()
+    Harness.warmUp(spark, sfDir)
     // code-path warmup on a TINY in-session dataset (never the sf data —
     // that would pre-fill the catalog's shared caches and move real work
     // out of the timed section): JITs the typed-kernel encoders,
@@ -506,9 +493,6 @@ object Bench {
       .mkString("{", ",", "}")
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2_stream_min_of_3","shared_builds":$compactShared,"queries":$compact,"total":${num(total, 2)},"li":${num(loadIndex, 2)},"nt":${num(normalizedTotal, 2)},"ckr":${num(codecRatio, 2)},"ssf":${num(streamFloor, 2)},"remeasured":$remeasured,"sf":"$sfDir"}""")
-    // drop this corpus's session-shared relations (ngram/span/phash/video
-    // builds) — the untracked caches releaseTrackedCaches cannot reclaim
-    Queries.SessionRelationCache.releaseFor(sfDir)
     spark.stop()
   }
 }

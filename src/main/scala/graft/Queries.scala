@@ -57,78 +57,18 @@ object Queries {
     }.sum
   }
 
-  /** Session-scoped shared-relation cache (ONE implementation for the
-    * chunk / ngram-pair / doc-chunk caches): ConcurrentHashMap
-    * .computeIfAbsent gives at-most-once evaluation per key, so two
-    * concurrent first callers cannot both run an expensive build and
-    * orphan a persisted duplicate; key parts join on a NUL separator so
-    * distinct (app, dir, params) tuples cannot alias by concatenation.
-    */
-  private[graft] final class SessionRelationCache[T] {
-    SessionRelationCache.registry.add(this)
-    private val map = new java.util.concurrent.ConcurrentHashMap[String, T]()
-    def getOrElseUpdate(spark: SparkSession, keyParts: String*)(build: => T): T =
-      map.computeIfAbsent(
-        (spark.sparkContext.applicationId +: keyParts).mkString("\u0000"),
-        _ => build)
-
-    /** Evict every entry carrying `part` as one of its NUL-joined key
-      * parts, unpersisting evicted Datasets. Returns evicted count.
-      */
-    def release(part: String): Int = {
-      var n = 0
-      val it = map.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.split('\u0000').contains(part)) {
-          e.getValue match {
-            case d: org.apache.spark.sql.Dataset[_] => d.unpersist()
-            case _ => ()
-          }
-          it.remove(); n += 1
-        }
-      }
-      n
-    }
-  }
-
-  /** Registry of every session-shared relation cache, with the
-    * per-corpus release hook long-lived sessions need: shared builds are
-    * deliberately UNTRACKED (releaseTrackedCaches would recompute them
-    * per consumer), so without this a session sweeping several sf dirs
-    * pins storage for every corpus it ever touched. Harnesses call
-    * [[releaseFor]] when a corpus is done (Bench and ScaleRun do, end of
-    * run); entries keyed by other dirs / sessions are untouched.
-    */
-  private[graft] object SessionRelationCache {
-    private val registry =
-      new java.util.concurrent.ConcurrentLinkedQueue[SessionRelationCache[_]]()
-
-    /** Evict + unpersist every shared relation keyed by `sfDir`, across
-      * all registered caches (chunk, ngram-pair, span-provenance,
-      * phash/video-pair, doc-chunk). Returns total entries evicted.
-      */
-    def releaseFor(sfDir: String): Int = {
-      var n = 0
-      registry.forEach(c => n += c.release(sfDir))
-      n
-    }
-  }
-
   /** The estimator queries (exact, approx, matrix) all need the same chunk
     * relation over the sf directory; chunk once per (session, dir, params)
     * and share the cached Dataset across catalog queries.
     */
-  private val chunkCache =
-    new SessionRelationCache[org.apache.spark.sql.Dataset[ChunkRow]]
-
   private[graft] def sfChunks(
       spark: SparkSession,
       sfDir: String,
       params: graft.cdc.ChunkerParams = graft.cdc.ChunkerParams.Default,
       tables: Seq[String] = Seq("lineitem", "orders"))
       : org.apache.spark.sql.Dataset[ChunkRow] =
-    chunkCache.getOrElseUpdate(spark, sfDir, tables.mkString(","), params.toString) {
+    SessionCaches.shared(spark, "sf_chunks", sfDir, tables.mkString(","),
+        params.toString) {
       val paths = tables.map(t => s"$sfDir/$t.parquet")
       ChunkRelation.chunkFiles(spark, paths, params).cache()
     }
@@ -1963,10 +1903,9 @@ object Queries {
     * components) and its codec pass (synthetic PNG/BMP encode + real
     * decode + thumb + dHash per blob) is the dominant cost — compute
     * once per (session, sf dir) and share the cached pairs, the
-    * ngram_pairs / doc_cdc_chunks sharing discipline. hammingPairs runs
-    * with `trackResult = false` so harness per-query cache releases
-    * don't evict the shared relation (it is pair-count-tiny; blobs and
-    * sigs are never retained past the build).
+    * ngram_pairs / doc_cdc_chunks sharing discipline (the pair relation
+    * is pair-count-tiny; blobs and sigs are never retained past the
+    * build).
     *
     * maxBucketSize = MaxValue: the oracle is brute-force all-pairs
     * bit_count(xor), so the star-pair degradation for over-cap buckets
@@ -1976,17 +1915,15 @@ object Queries {
     * 16-bit band bucket holds ~|groups|/65536 groups (≈ 8 members even
     * at a 100× corpus). Production callers keep the default skew cap.
     */
-  private val phashPairsCache = new SessionRelationCache[DataFrame]
-
   private[graft] def sharedPhashPairs(
       spark: SparkSession, sfDir: String): DataFrame =
-    phashPairsCache.getOrElseUpdate(spark, sfDir) {
+    SessionCaches.shared(spark, "phash_pairs", sfDir) {
       val ids = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"))
       Dedupe.hammingPairs(
         Multimodal.phashRelation(
           Multimodal.jitteredBlobs(ids, "doc_id"), "blob_id", "content"),
-        maxDistance = 3, maxBucketSize = Int.MaxValue, trackResult = false)
+        maxDistance = 3, maxBucketSize = Int.MaxValue)
     }
 
   private def mmPhashNeardup(spark: SparkSession, sfDir: String): DataFrame =
@@ -2035,20 +1972,17 @@ object Queries {
   /** The keyframe-fingerprint PAIR relation feeds mm_video_fp (IS it)
     * and mm_video_dedup (folds it to video-level clusters); its Y4M
     * encode+parse kernel is the dominant cost — same session-shared
-    * discipline (and the same untracked-cache rationale) as
-    * [[sharedPhashPairs]].
+    * discipline as [[sharedPhashPairs]].
     */
-  private val videoPairsCache = new SessionRelationCache[DataFrame]
-
   private[graft] def sharedVideoPairs(
       spark: SparkSession, sfDir: String): DataFrame =
-    videoPairsCache.getOrElseUpdate(spark, sfDir) {
+    SessionCaches.shared(spark, "video_pairs", sfDir) {
       val ids = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"))
       Dedupe.hammingPairs(
         Multimodal.videoFpRelation(
           Multimodal.videoBlobs(ids, "doc_id"), "blob_id", "content"),
-        maxDistance = 3, maxBucketSize = Int.MaxValue, trackResult = false)
+        maxDistance = 3, maxBucketSize = Int.MaxValue)
     }
 
   private def mmVideoFp(spark: SparkSession, sfDir: String): DataFrame =

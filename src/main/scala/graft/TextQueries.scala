@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedupe, Sampling, TextAnalysis}
+import graft.operators.{Dedupe, Sampling, SessionCaches, TextAnalysis}
 
 /** Text-pipeline query catalog: dedup + text-analysis operators over the
   * `documents` table. Oracle SQL provided wherever DuckDB can express the
@@ -439,10 +439,8 @@ object TextQueries {
     * ngramJaccardPairs caches and materializes internally, so reuse is a
     * cheap cached-scan.
     */
-  private val ngramPairsCache = new Queries.SessionRelationCache[DataFrame]
-
   private def sharedNgramPairs(spark: SparkSession, sfDir: String): DataFrame =
-    ngramPairsCache.getOrElseUpdate(spark, sfDir) {
+    SessionCaches.shared(spark, "ngram_pairs", sfDir) {
       Dedupe.ngramJaccardPairs(docs(spark, sfDir), "doc_id", "text", k = 3,
         threshold = 0.3)
     }
@@ -493,10 +491,8 @@ object TextQueries {
     * once per (session, sf dir) as a declared, Bench-timed shared
     * relation — cost stays attributed in `shared_builds`, never hidden.
     */
-  private val clustersCache = new Queries.SessionRelationCache[DataFrame]
-
   private def sharedClusters(spark: SparkSession, sfDir: String): DataFrame =
-    clustersCache.getOrElseUpdate(spark, sfDir) {
+    SessionCaches.shared(spark, "dedup_clusters_rel", sfDir) {
       Dedupe.duplicateClusters(sharedNgramPairs(spark, sfDir), maxIter = 40)
         .cache()
     }
@@ -847,16 +843,13 @@ object TextQueries {
     * dedup_spans_cut it audits (a 64-bit audit of a 128-bit cut could
     * report spans the cut never removed at the collision scale) — and
     * session-shared with dedup_source_matrix (two consumers, one
-    * corpus-scale window-hash pass; the phash_pairs discipline, so
-    * `trackResult = false` and the cache survives harness releases).
+    * corpus-scale window-hash pass; the phash_pairs discipline).
     */
-  private val spanProvCache = new Queries.SessionRelationCache[DataFrame]
-
   private def sharedSpanProvenance(spark: SparkSession, sfDir: String): DataFrame =
-    spanProvCache.getOrElseUpdate(spark, sfDir) {
+    SessionCaches.shared(spark, "span_provenance", sfDir) {
       Dedupe.spanProvenance(docs(spark, sfDir), "doc_id", "text",
         windowTokens = 20, broadcastDupLimit = spansBcastLimit,
-        hash128 = true, trackResult = false)
+        hash128 = true)
     }
 
   private def dedupSpansProvenance(spark: SparkSession, sfDir: String): DataFrame =
@@ -1101,10 +1094,8 @@ object TextQueries {
     * discipline). At 100 TB this is the difference between chunking the
     * corpus once and chunking it per consumer.
     */
-  private val docChunksCache = new Queries.SessionRelationCache[DataFrame]
-
   private[graft] def sharedDocChunks(spark: SparkSession, sfDir: String): DataFrame =
-    docChunksCache.getOrElseUpdate(spark, sfDir) {
+    SessionCaches.shared(spark, "doc_cdc_chunks", sfDir) {
       import graft.plans.CdcChunks
       val df = docs(spark, sfDir)
         .select(col("doc_id"), col("source"),

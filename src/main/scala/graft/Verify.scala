@@ -37,7 +37,7 @@ object Verify {
         // write consumes the result — otherwise a full catalog run would
         // carry one cached RDD per call (the registry bound would evict
         // eventually, but deterministic scoping beats eviction here)
-        graft.operators.Dedupe.withTrackedCaches {
+        graft.operators.SessionCaches.scope {
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case NonFatal(e) =>

@@ -1036,7 +1036,7 @@ object Dedupe {
       val result = finish(verifyPairsByIntersect(cand, perDoc))
       // perDoc feeds four consumers; materialize the (small) pair result
       // before releasing it — tracked so harness loops can release
-      track(result.cache())
+      SessionCaches.track(result.cache())
       result.count()
       perDoc.unpersist()
       docGrams.unpersist()
@@ -1092,7 +1092,7 @@ object Dedupe {
     *         the span's first word, and the span's length in tokens
     *         (run_length + windowTokens − 1). Docs with no duplicated
     *         windows contribute no rows. The result is materialized and
-    *         cache-tracked ([[releaseTrackedCaches]]).
+    *         cache-tracked ([[SessionCaches]]).
     */
   def duplicateSpans(
       df: DataFrame,
@@ -1185,7 +1185,7 @@ object Dedupe {
       }
         .toDF("doc_id", "span_start", "span_tokens")
         .cache()
-      track(spans)
+      SessionCaches.track(spans)
       spans.count()
       GraftBridge.rebind(spans, session)
     } finally {
@@ -1240,7 +1240,7 @@ object Dedupe {
     *         (doc_id, n_tokens, cut_tokens, text_cut) — full token count,
     *         tokens removed, and the surviving normalized text (empty
     *         string when the whole document was redundant). Materialized
-    *         and cache-tracked ([[releaseTrackedCaches]]).
+    *         and cache-tracked ([[SessionCaches]]).
     */
   def cutDuplicateSpans(
       df: DataFrame,
@@ -1361,7 +1361,7 @@ object Dedupe {
     }
       .toDF("doc_id", "n_tokens", "cut_tokens", "text_cut")
       .cache()
-    track(rows)
+    SessionCaches.track(rows)
     rows.count()
     GraftBridge.rebind(rows, session)
     } finally docWins.unpersist() // also on failure — never pin the kernel cache
@@ -1404,7 +1404,7 @@ object Dedupe {
       val sumWins = wins.agg(count(lit(1))).as[Long].head()
       val sized = Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes)
       val idx = GraftBridge.rebind(wins, sized).distinct().cache()
-      track(idx)
+      SessionCaches.track(idx)
       idx.count()
       GraftBridge.rebind(idx, session)
     } finally wins.unpersist()
@@ -1447,7 +1447,7 @@ object Dedupe {
     require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     // the consumed index is hot: refresh its LRU position so a loop of
     // incremental cuts never lets its own cold results evict it
-    touch(baseWindows)
+    SessionCaches.touch(baseWindows)
     val session = batch.sparkSession
     import session.implicits._
     val w = windowTokens
@@ -1526,7 +1526,7 @@ object Dedupe {
     * occurrences flow through input-sized hash/id exchanges; both builds
     * spec-pinned identical. `hash128` as in [[duplicateSpans]].
     *
-    * @return materialized, cache-tracked ([[releaseTrackedCaches]]).
+    * @return materialized, cache-tracked ([[SessionCaches]]).
     */
   def spanProvenance(
       df: DataFrame,
@@ -1534,8 +1534,7 @@ object Dedupe {
       textCol: String,
       windowTokens: Int = 20,
       broadcastDupLimit: Long = 4L * 1000 * 1000,
-      hash128: Boolean = false,
-      trackResult: Boolean = true): DataFrame = {
+      hash128: Boolean = false): DataFrame = {
     require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     val session = df.sparkSession
     import session.implicits._
@@ -1610,9 +1609,7 @@ object Dedupe {
       }
         .toDF("doc_id", "span_start", "span_tokens", "kept_doc", "kept_pos")
         .cache()
-      // trackResult = false: session-shared callers own the lifecycle
-      // (the hammingPairs opt-out rationale)
-      if (trackResult) track(spans)
+      SessionCaches.track(spans)
       spans.count()
       GraftBridge.rebind(spans, session)
     } finally docWins.unpersist() // also on failure — never pin the kernel cache
@@ -1954,17 +1951,10 @@ object Dedupe {
       .toDF("band", "bucket", "id")
   }
 
-  /** `trackResult = false` opts the materialized result cache out of
-    * [[releaseTrackedCaches]] — for callers that pin it in their OWN
-    * session-shared cache (the mm_phash family's pair relation, the
-    * ngram_pairs discipline) and own the lifecycle; harness loops would
-    * otherwise evict the shared relation after the first consumer.
-    */
   def hammingPairs(
       sigRelation: DataFrame,
       maxDistance: Int = 3,
-      maxBucketSize: Int = 2000,
-      trackResult: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 2000): DataFrame = {
     val spark = sigRelation.sparkSession
     import spark.implicits._
     val blocks = maxDistance + 1
@@ -2051,117 +2041,15 @@ object Dedupe {
     // Cache lifecycle: the session would otherwise leak one cached
     // relation per call; register it so harness loops (Verify, Bench,
     // ScaleRun — and any long-lived session) can release after consuming
-    // (unless the caller opted out to own the lifecycle — see doc).
-    if (trackResult) track(result)
+    // (or, inside a shared build, so the shared entry owns it).
+    SessionCaches.track(result)
     GraftBridge.rebind(result, spark)
   }
 
-  // ------------------------------------------- tracked-cache lifecycle
-
-  /** Cached relations returned by [[hammingPairs]] that are still
-    * persisted. Operators that RETURN a cached DataFrame (because their
-    * intermediate caches are scoped out before returning) register it
-    * here; [[releaseTrackedCaches]] is the consumption-side hook.
+  /** [[SessionCaches.release()* SessionCaches.release()]] under its old
+    * name, kept for the layered benchmark's workloads, which call it.
     */
-  private val trackedCaches =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Upper bound on concurrently persisted tracked relations: [[track]]
-    * evicts (unpersists) the LEAST-RECENTLY registered-or-touched
-    * registration once the registry exceeds this (see [[touch]] — the
-    * incremental-cut/cluster operators refresh the position of the
-    * tracked index they consume), so an application that loops the dedup-family
-    * operators with no release discipline at all holds O(1) cached
-    * relations instead of accumulating one per call until executor
-    * memory pressure evicts them (DedupeCacheLifecycleSpec pins the
-    * bound). Sized so a single operator call (which tracks ≤ 3
-    * relations) can never evict its own intermediates, with headroom
-    * for a handful of unconsumed results in flight. Eviction is safe,
-    * not just tolerable: an unpersisted relation stays valid — a later
-    * consume recomputes it (slower, never wrong). Consumers that want
-    * deterministic release still use [[withTrackedCaches]] or
-    * [[releaseTrackedCaches]]; the bound is the backstop.
-    */
-  val MaxTrackedCaches: Int = 8
-
-  // private[operators]: LineDedupe's lineIndex registers here too, so
-  // the one harness hook releases every dedup-family cache
-  private[operators] def track(df: DataFrame): DataFrame =
-    trackedCaches.synchronized {
-      // Spark's cache manager keys by CANONICALIZED plan, so two
-      // registrations of the same operator over the same input share ONE
-      // cache entry — evicting the older registration would unpersist
-      // the newer call's cache through that alias (and, transitively,
-      // let a same-plan loop evict its own just-built result). Keep a
-      // single registration per canonical plan: dropping the older
-      // bookkeeping row leaks nothing, because releasing the newer one
-      // unpersists the shared entry.
-      val canon = df.queryExecution.analyzed.canonicalized
-      trackedCaches.filterInPlace(
-        _.queryExecution.analyzed.canonicalized != canon)
-      trackedCaches += df
-      while (trackedCaches.length > MaxTrackedCaches) {
-        val oldest = trackedCaches.remove(0)
-        try oldest.unpersist()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      df
-    }
-
-  /** Currently registered (still-persisted) tracked relations — the
-    * observable the lifecycle spec asserts on; always ≤
-    * [[MaxTrackedCaches]].
-    */
-  def trackedCacheCount: Int = trackedCaches.synchronized(trackedCaches.length)
-
-  /** LRU touch: refresh a tracked relation's eviction position. The
-    * operators that CONSUME a caller-supplied tracked relation — an
-    * incremental index ([[cutSpansIncremental]]/
-    * [[LineDedupe.cutLinesIncremental]]), a shared pair relation
-    * ([[duplicateClusters]]) — call this on entry, so eviction order is
-    * recency of registration-OR-consumption, not plain FIFO: an
-    * application that interleaves two operator families in a loop keeps
-    * both hot indexes resident while the loop's own cold results are
-    * what the bound evicts (DedupeCacheLifecycleSpec pins the
-    * interleaved loop). Matching is by canonicalized plan, the same key
-    * [[track]] dedupes on; a no-op for untracked inputs.
-    */
-  private[operators] def touch(df: DataFrame): Unit =
-    trackedCaches.synchronized {
-      val canon = df.queryExecution.analyzed.canonicalized
-      val i = trackedCaches.indexWhere(
-        _.queryExecution.analyzed.canonicalized == canon)
-      if (i >= 0 && i != trackedCaches.length - 1) {
-        val entry = trackedCaches.remove(i)
-        trackedCaches += entry
-      }
-    }
-
-  /** Loan bracket for the tracked-cache lifecycle: run `body` (build
-    * AND fully consume any dedup-family results inside it), then
-    * release every tracked relation on the way out — normal return or
-    * exception. The scoped alternative to calling
-    * [[releaseTrackedCaches]] by hand; the harness loops (Verify,
-    * Bench, ScaleRun) bracket each catalog query with it. Don't let a
-    * LAZY result escape the bracket: its cached intermediates are
-    * released on exit, so a later consume recomputes them (valid, just
-    * no longer cached).
-    */
-  def withTrackedCaches[A](body: => A): A =
-    try body finally releaseTrackedCaches()
-
-  /** Unpersist every tracked relation handed out since the last release.
-    * Call after fully consuming a hammingPairs-derived result (the
-    * harness loops call it once per query); a released relation is still
-    * valid, it just recomputes if consumed again.
-    */
-  def releaseTrackedCaches(): Unit = trackedCaches.synchronized {
-    trackedCaches.foreach { df =>
-      try df.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    trackedCaches.clear()
-  }
+  def releaseTrackedCaches(): Unit = SessionCaches.release()
 
   /** LSH-recall evaluation — the operator that MEASURES the dedup
     * operators: brute-force exact-Jaccard ground truth over a (sampled)
@@ -2228,7 +2116,7 @@ object Dedupe {
         .otherwise(call_function("div",
           (col("true_pairs") - col("missed_pairs")) * lit(10000L),
           col("true_pairs"))).as("recall_bp"))
-    val materialized = track(out.cache())
+    val materialized = SessionCaches.track(out.cache())
     materialized.count()
     // minhashPairs hands back a cached relation it cannot release itself
     // (callers normally keep iterating it); this eval consumed it fully
@@ -2260,7 +2148,7 @@ object Dedupe {
       maxIter: Int = 10,
       singleTaskEdgeCap: Long = 1L << 20): DataFrame = {
     // a tracked pair relation being clustered is hot — LRU-refresh it
-    touch(pairs)
+    SessionCaches.touch(pairs)
     val spark = pairs.sparkSession
     // undirected edge list, both directions
     val edges = pairs

@@ -127,15 +127,16 @@ object LineDedupe {
     * exchange.
     *
     * CACHE RELEASE: the returned relation is cached and registered in
-    * [[Dedupe]]'s tracked-cache registry. The registry is BOUNDED
-    * ([[Dedupe.MaxTrackedCaches]]): a long-lived session looping this
+    * [[SessionCaches]]' scoped registry. The registry is BOUNDED
+    * ([[SessionCaches.MaxScoped]]): a long-lived session looping this
     * (or any of the cut/incremental operators below — they cache their
     * intermediate index the same way) holds O(1) cached relations with
     * no release discipline at all — the oldest registration is evicted
     * (unpersisted, still valid, recomputes on a later consume). For
     * deterministic release, bracket build-and-consume in
-    * [[Dedupe.withTrackedCaches]] (the harness loops do) or call
-    * [[Dedupe.releaseTrackedCaches]] / `unpersist()` after consuming.
+    * [[SessionCaches.scope]] (the harness loops do) or call
+    * [[SessionCaches.release()* SessionCaches.release()]] /
+    * `unpersist()` after consuming.
     *
     * @return `(line, n_occ, n_docs, line_chars, first_doc, first_ord)`
     *         where (first_doc, first_ord) is the globally earliest
@@ -154,7 +155,7 @@ object LineDedupe {
         length(col("line")).cast("long").as("line_chars"),
         col("f_id").as("first_doc"), col("f_ord").as("first_ord"))
       .cache()
-    Dedupe.track(rep)
+    SessionCaches.track(rep)
     rep.count()
     GraftBridge.rebind(rep, df.sparkSession)
   }
@@ -234,7 +235,7 @@ object LineDedupe {
       dupFirsts: DataFrame,
       broadcastDupBytes: Long): DataFrame = {
     val idx = withLineHash(dupFirsts).cache()
-    Dedupe.track(idx)
+    SessionCaches.track(idx)
     // one action: materializes the cached index (running the line
     // exchange at the sized partition count) and measures its bytes
     // (UTF-8 string bytes via octet_length — the broadcast build holds
@@ -391,11 +392,11 @@ object LineDedupe {
       explode(split(col(textCol).cast("string"), "\n", -1)).as("line"))
     // materialized in the sized session (the distinct's exchange must see
     // the sized partition count), cache-tracked for the harness hook
-    // ([[Dedupe.releaseTrackedCaches]])
+    // ([[SessionCaches.release()* SessionCaches.release()]])
     val idx = withLineHash(eligible(lines, minLineChars))
       .select(col("llo"), col("lhi")).distinct()
       .cache()
-    Dedupe.track(idx)
+    SessionCaches.track(idx)
     idx.count()
     GraftBridge.rebind(idx, df.sparkSession)
   }
@@ -436,7 +437,7 @@ object LineDedupe {
       .select(col("id"), col("ord"),
         length(col("line")).cast("long").as("line_chars"))
       .cache()
-    Dedupe.track(drops)
+    SessionCaches.track(drops)
     drops.count()
     GraftBridge.rebind(rebuildFromDrops(in, idCol, textCol, drops), df.sparkSession)
   }
@@ -476,7 +477,7 @@ object LineDedupe {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
     // the consumed index is hot: refresh its LRU position so a loop of
     // incremental cuts never lets its own cold results evict it
-    Dedupe.touch(baseLines)
+    SessionCaches.touch(baseLines)
     val session = batch.sparkSession
     // fold the contract check into the sizing aggregate — one narrow
     // doc-level pass, no explode

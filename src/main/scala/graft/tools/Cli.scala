@@ -588,8 +588,9 @@ object Cli {
       val evals = graft.SparkEntry.queries.keys.filter(_.endsWith("_eval")).toSeq.sorted
       evals.foreach { name =>
         println(s"== $name ==")
-        graft.SparkEntry.queries(name)(spark, sfDir).show(25, truncate = false)
-        graft.operators.Dedupe.releaseTrackedCaches()
+        graft.operators.SessionCaches.scope {
+          graft.SparkEntry.queries(name)(spark, sfDir).show(25, truncate = false)
+        }
       }
       spark.stop()
 
@@ -793,7 +794,6 @@ object Cli {
         .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
       println(s"pairs at >= ${thresholdBp}bp containment: ${pairs.count()} ($byRel)")
       pairs.unpersist()
-      graft.operators.Dedupe.releaseTrackedCaches()
       spark.stop()
 
     case "dup-spans" :: file :: rest if rest.size <= 1 =>
@@ -819,7 +819,6 @@ object Cli {
       val (rows, rollup) = cutSpansReport(spark, file, outDir, windowTokens)
       println(rollup)
       rows.unpersist()
-      graft.operators.Dedupe.releaseTrackedCaches()
       spark.stop()
 
     case "dup-spans-approx" :: file :: rest if rest.size <= 1 =>
@@ -840,7 +839,6 @@ object Cli {
       val spark = Harness.session("graft-cli")
       val (_, rollup) = spanIndexReport(spark, file, outDir, windowTokens)
       println(rollup)
-      graft.operators.Dedupe.releaseTrackedCaches()
       spark.stop()
 
     case "cut-spans-incremental" :: idxDir :: file :: outDir :: rest
@@ -853,7 +851,6 @@ object Cli {
         cutSpansIncrementalReport(spark, idxDir, file, outDir, windowTokens)
       println(rollup)
       rows.unpersist()
-      graft.operators.Dedupe.releaseTrackedCaches()
       spark.stop()
 
     case "dup-lines" :: file :: rest if rest.size <= 1 =>
@@ -897,7 +894,6 @@ object Cli {
       val spark = Harness.session("graft-cli")
       val (_, rollup) = lineIndexReport(spark, file, outDir, minChars)
       println(rollup)
-      graft.operators.Dedupe.releaseTrackedCaches()
       spark.stop()
 
     case "cut-lines-incremental" :: idxDir :: file :: outDir :: rest
@@ -909,7 +905,6 @@ object Cli {
       val (_, rollup) =
         cutLinesIncrementalReport(spark, idxDir, file, outDir, minChars)
       println(rollup)
-      graft.operators.Dedupe.releaseTrackedCaches()
       spark.stop()
 
     case "phash-dedup" :: files if files.nonEmpty =>
@@ -986,7 +981,6 @@ object Cli {
             s"${paths((b / 4).toInt)} slot ${b % 4}")
         }
       sigs.unpersist()
-      graft.operators.Dedupe.releaseTrackedCaches()
       spark.stop()
 
     case "viz" :: rest if rest.size >= 2 =>

@@ -301,9 +301,7 @@ object ScaleRun {
     }
 
     // warm code paths once (Bench discipline) so neither side pays codegen
-    for (w <- Seq("dedup_exact", "cdc_estimate"))
-      try graft.SparkEntry.queries(w)(spark, base).count()
-      catch { case scala.util.control.NonFatal(_) => () }
+    Harness.warmUp(spark, base)
 
     val qSet = queries.toSet
     // only the shared builds some selected query consumes (Bench's
@@ -324,7 +322,7 @@ object ScaleRun {
     // Shared builds are timed separately per dir (same attribution as
     // Bench). A naive re-run would hit the session cache and report the
     // cached scan, not the build — so between attempts the per-dir
-    // session relations are EVICTED (releaseFor) and the builds
+    // shared relations are EVICTED (SessionCaches.release) and the builds
     // genuinely rebuild; the min is per build, and the final attempt
     // leaves both dirs' caches warm for the query segment. NOTE one
     // deliberate difference from the old tier-by-tier order: the 1×
@@ -337,13 +335,10 @@ object ScaleRun {
       var s1 = Map.empty[String, Double]
       var sN = Map.empty[String, Double]
       for (attempt <- 0 until attempts if sharedSelected.nonEmpty) {
-        // release before EVERY attempt, including the first: the warmup
-        // queries run against the 1× dir only, so attempt 0's base-side
-        // build could otherwise hit warm session relations while the N×
-        // side is always cold — an asymmetry that let min-of-N pick a
-        // warm base attempt and slightly inflate shared-build ratios
-        graft.Queries.SessionRelationCache.releaseFor(base)
-        graft.Queries.SessionRelationCache.releaseFor(out)
+        // release before EVERY attempt, including the first: attempt 0
+        // must not find either side's relations warm, or min-of-N could
+        // pick a warm attempt and skew the shared-build ratios
+        Seq(base, out).foreach(graft.operators.SessionCaches.release(_))
         sharedSelected.foreach { case (name, build) =>
           // a failed attempt poisons the build's figure (the min with
           // Failed is Failed): a build that did not reliably complete
@@ -397,7 +392,7 @@ object ScaleRun {
             // same loan bracket as every timed attempt: a stream query
             // that track()s a relation must not leak it into the rest
             // of the sweep (and into this very heap delta)
-            graft.operators.Dedupe.withTrackedCaches {
+            graft.operators.SessionCaches.scope {
               graft.SparkEntry.queries(name)(spark, dir).count()
             }
             streamHeap((dir, name)) =
@@ -469,11 +464,9 @@ object ScaleRun {
     // memory headroom after the Nx sweep: a post-GC used-heap reading —
     // the resident state (caches, broadcasts, state stores) the sweep
     // leaves behind, against the configured ceiling. Both corpora are
-    // done: release their session-shared relations first (the untracked
-    // caches releaseTrackedCaches cannot reclaim) so the reading reflects
+    // done: release their shared relations first so the reading reflects
     // what a hygienic long-lived session would actually retain
-    graft.Queries.SessionRelationCache.releaseFor(base)
-    graft.Queries.SessionRelationCache.releaseFor(out)
+    Seq(base, out).foreach(graft.operators.SessionCaches.release(_))
     // also unload the state-store providers the last streaming queries
     // left loaded (a stopped query's state stays in heap on the default
     // backend until the 60 s maintenance cadence) — a hygienic session

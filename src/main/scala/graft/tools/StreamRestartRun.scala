@@ -206,6 +206,8 @@ object StreamRestartRun {
     graft.streaming.StateBackend.providerClass.foreach(c =>
       spark.conf.set("spark.sql.streaming.stateStore.providerClass", c))
     println(s"[restart] state backend: ${graft.streaming.StateBackend.name}")
+    // after the provider conf: the warmed provider is the measured one
+    Harness.warmUp(spark, base)
     import spark.implicits._
 
     val chunk: DataFrame => DataFrame = df => df

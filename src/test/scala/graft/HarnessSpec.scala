@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.Locale
 
-import graft.operators.{Dedupe, LineDedupe}
+import graft.operators.{LineDedupe, SessionCaches}
 
 /** The shared harness of the mains: JSON leaf encoders, the subset-filter and
   * positive-integer parses, the min-of timing's failure poisoning and
@@ -48,7 +48,7 @@ class HarnessSpec extends SparkSpec {
     }
     assert(t === Harness.Failed)
     assert(calls === 2, "a poisoned figure must stop the attempts")
-    assert(Dedupe.trackedCacheCount === 0)
+    assert(SessionCaches.scopedCount === 0)
     val ok = Harness.minOf(2)(())
     assert(ok >= 0)
   }

@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Driver-side helpers behind the catalog: footer-metadata row counts and
-  * the session-scoped shared-relation cache.
-  */
+/** Driver-side helpers behind the catalog: footer-metadata row counts. */
 class QueriesHelpersSpec extends SparkSpec {
 
   test("parquetRowCount: file and directory agree with df.count, hidden files skipped") {
@@ -25,29 +23,5 @@ class QueriesHelpersSpec extends SparkSpec {
     val empty = java.nio.file.Files.createTempDirectory("rowcount-empty")
     intercept[IllegalArgumentException](
       Queries.parquetRowCount(spark, empty.toString))
-  }
-
-  test("SessionRelationCache: single evaluation under concurrent first callers") {
-    val cache = new Queries.SessionRelationCache[String]
-    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val results = (0 until 32).map { _ =>
-        pool.submit(new java.util.concurrent.Callable[String] {
-          def call(): String = cache.getOrElseUpdate(spark, "dirA") {
-            builds.incrementAndGet()
-            Thread.sleep(20) // widen the race window
-            "built"
-          }
-        })
-      }
-      assert(results.map(_.get()).distinct == Seq("built"))
-      assert(builds.get() == 1, s"initializer ran ${builds.get()} times")
-    } finally pool.shutdown()
-    // distinct key parts get distinct entries (no concatenation aliasing)
-    var other = 0
-    cache.getOrElseUpdate(spark, "dir", "A") { other += 1; "x" }
-    cache.getOrElseUpdate(spark, "dirA", "") { other += 1; "y" }
-    assert(other == 2, "key parts must not alias by concatenation")
   }
 }

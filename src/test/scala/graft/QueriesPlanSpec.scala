@@ -395,7 +395,7 @@ class QueriesPlanSpec extends SparkSpec {
       case _ => false
     }
     assert(bad == 0, s"cartesian/nested-loop join in containment plan:\n$plan")
-    graft.operators.Dedupe.releaseTrackedCaches()
+    graft.operators.SessionCaches.release()
   }
 
   test("mm_video_fp: no exchange ever carries blob bytes") {
@@ -413,7 +413,7 @@ class QueriesPlanSpec extends SparkSpec {
         e.output.exists(_.dataType == org.apache.spark.sql.types.BinaryType)
       case _ => false
     } == 0, s"an exchange carries blob bytes:\n$plan")
-    graft.operators.Dedupe.releaseTrackedCaches()
+    graft.operators.SessionCaches.release()
   }
 
   test("event_sessions: ONE user_id exchange feeds window AND session agg") {

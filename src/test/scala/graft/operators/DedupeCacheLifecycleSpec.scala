@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
 
-/** The tracked-cache lifecycle ([[Dedupe.track]] /
-  * [[Dedupe.MaxTrackedCaches]] / [[Dedupe.withTrackedCaches]]): an
+/** The scoped cache lifecycle of the dedup-family operators
+  * ([[SessionCaches.track]] / [[SessionCaches.MaxScoped]] /
+  * [[SessionCaches.scope]]): an
   * application that loops the dedup-family operators with ZERO release
   * discipline must hold O(1) cached relations (bounded-registry
   * eviction), the loan bracket must release on normal exit and on
@@ -36,7 +37,7 @@ class DedupeCacheLifecycleSpec extends SparkSpec {
     df.storageLevel != StorageLevel.NONE
 
   test("a release-free loop of cutDuplicateLines holds O(1) cached relations") {
-    val n = 3 * Dedupe.MaxTrackedCaches // well past the bound
+    val n = 3 * SessionCaches.MaxScoped // well past the bound
     val reports = (1 to n).map { i =>
       // consume fully, never release — the undisciplined embedding app
       val fx = fixture(s"loop iteration $i")
@@ -45,13 +46,13 @@ class DedupeCacheLifecycleSpec extends SparkSpec {
       val rep = LineDedupe.duplicateLines(fx, "doc_id", "text")
       assert(rep.count() === 2L, s"iteration $i")
       // the registry bound is a hard invariant, enforced under its lock
-      assert(Dedupe.trackedCacheCount <= Dedupe.MaxTrackedCaches)
+      assert(SessionCaches.scopedCount <= SessionCaches.MaxScoped)
       rep
     }
     // of the n report relations this loop was handed, at most cap can
     // still be persisted — everything older was evicted (unpersisted)
     val stillPersisted = reports.count(persisted)
-    assert(stillPersisted <= Dedupe.MaxTrackedCaches,
+    assert(stillPersisted <= SessionCaches.MaxScoped,
       s"$stillPersisted of $n loop results still persisted — the " +
         "registry bound did not evict")
     // an evicted relation is still a valid plan: it recomputes
@@ -69,7 +70,7 @@ class DedupeCacheLifecycleSpec extends SparkSpec {
     // registration per distinct relation and the latest result STAYS
     // persisted.
     val fx = fixture("aliased same-plan loop")
-    val n = 3 * Dedupe.MaxTrackedCaches
+    val n = 3 * SessionCaches.MaxScoped
     var last: org.apache.spark.sql.DataFrame = null
     (1 to n).foreach { i =>
       last = LineDedupe.duplicateLines(fx, "doc_id", "text")
@@ -78,7 +79,7 @@ class DedupeCacheLifecycleSpec extends SparkSpec {
     assert(persisted(last),
       "the latest same-plan result was unpersisted by registry eviction " +
         "(canonical-plan aliasing)")
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
     assert(!persisted(last))
   }
 
@@ -98,7 +99,7 @@ class DedupeCacheLifecycleSpec extends SparkSpec {
     // KmvGuardSpec documents). A concurrent suite pushing >= cap
     // registrations between a touch and its assert could evict the hot
     // index; revisit if suite-parallel forking is ever enabled.
-    Dedupe.releaseTrackedCaches() // deterministic start: empty registry
+    SessionCaches.release() // deterministic start: empty registry
     val idxLines = LineDedupe.lineIndex(
       fixture("interleaved lines base"), "text", minLineChars = 10)
     val idxSpans = Dedupe.windowIndex(
@@ -106,7 +107,7 @@ class DedupeCacheLifecycleSpec extends SparkSpec {
         .toDF("doc_id", "text"),
       "text", windowTokens = 5)
     assert(persisted(idxLines) && persisted(idxSpans))
-    val n = 3 * Dedupe.MaxTrackedCaches
+    val n = 3 * SessionCaches.MaxScoped
     (1 to n).foreach { i =>
       // content-unique batches with ids above both base ranges, so every
       // iteration tracks fresh canonical plans (real eviction pressure)
@@ -121,16 +122,16 @@ class DedupeCacheLifecycleSpec extends SparkSpec {
         .toDF("doc_id", "text")
       Dedupe.cutSpansIncremental(idxSpans, batchS, "doc_id", "text",
         windowTokens = 5, baseMaxDocId = Some(1L)).count()
-      assert(Dedupe.trackedCacheCount <= Dedupe.MaxTrackedCaches)
+      assert(SessionCaches.scopedCount <= SessionCaches.MaxScoped)
       assert(persisted(idxLines) && persisted(idxSpans),
         s"iteration $i evicted a hot index — LRU touch did not refresh")
     }
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
     assert(!persisted(idxLines) && !persisted(idxSpans))
   }
 
-  test("withTrackedCaches releases on normal exit") {
-    val rep = Dedupe.withTrackedCaches {
+  test("scope releases on normal exit") {
+    val rep = SessionCaches.scope {
       val r = LineDedupe.duplicateLines(
         fixture("bracket normal exit"), "doc_id", "text")
       assert(r.count() === 2L) // consumed inside the loan scope
@@ -141,10 +142,10 @@ class DedupeCacheLifecycleSpec extends SparkSpec {
     assert(rep.count() === 2L)
   }
 
-  test("withTrackedCaches releases on exception and rethrows") {
+  test("scope releases on exception and rethrows") {
     var rep: org.apache.spark.sql.DataFrame = null
     val boom = intercept[RuntimeException] {
-      Dedupe.withTrackedCaches {
+      SessionCaches.scope {
         rep = LineDedupe.duplicateLines(
           fixture("bracket exception exit"), "doc_id", "text")
         rep.count()

@@ -71,7 +71,7 @@ class DedupeSpec extends SparkSpec {
     java.nio.file.Files.write(f, Array.tabulate[Byte](1 << 16)(i => (i * 31).toByte))
     Estimator.estimate(caller, Seq(f.toString, f.toString))
     unchanged()
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
   }
 
   test("minhashClassify: batch rows classify against the index, best match wins") {
@@ -465,7 +465,7 @@ class DedupeSpec extends SparkSpec {
     assert(foundPairs + missed == truePairs)
     assert(foundPairs >= 1L, "the identical pair matches every band")
     assert(recallBp == foundPairs * 10000L / truePairs)
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
   }
 
   test("duplicateClusters: transitive chains collapse to the min-id cluster") {
@@ -590,7 +590,7 @@ class DedupeSpec extends SparkSpec {
     // and a sane corpus passes full-recall mode untouched
     val sane = (0L until 64L).map(i => (i, i * 0x9e3779b97f4a7c15L)).toDF("id", "sig")
     Dedupe.hammingPairs(sane, maxDistance = 3, maxBucketSize = Int.MaxValue).count()
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
   }
 
   test("minhashPairs full-recall mode refuses an over-limit bucket loudly") {
@@ -650,7 +650,7 @@ class DedupeSpec extends SparkSpec {
     assert(pairs.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L))
   }
 
-  test("hammingPairs cache lifecycle: releaseTrackedCaches releases the result") {
+  test("hammingPairs cache lifecycle: SessionCaches.release releases the result") {
     import spark.implicits._
     import org.apache.spark.storage.StorageLevel
     val sigs = (0L until 200L).map(i => (i, i * 0x9e3779b97f4a7c15L))
@@ -664,9 +664,9 @@ class DedupeSpec extends SparkSpec {
     // unpersist a relation another suite is mid-consuming)
     assert(pairs.storageLevel != StorageLevel.NONE,
       "hammingPairs must hand back its materialized (cached) result")
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
     assert(pairs.storageLevel == StorageLevel.NONE,
-      "releaseTrackedCaches must unpersist the tracked result")
+      "SessionCaches.release must unpersist the tracked result")
   }
 
   test("keepBestPerCluster: argmax score, min-id ties, singletons keep") {

@@ -24,7 +24,7 @@ class EdgeInputSpec extends SparkSpec {
     assert(Dedupe.containmentPairs(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedupe.containmentPairs(emptyDocs, "doc_id", "text",
       usePrefixFilter = true).count() == 0)
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
   }
 
   test("containmentPairs: null/empty texts contribute no grams, no pairs") {
@@ -49,7 +49,7 @@ class EdgeInputSpec extends SparkSpec {
     assert(r.getLong(1) == 0L && r.getLong(2) == 0L && r.getLong(3) == 0L)
     assert(r.getLong(4) == 0L) // false_pos
     assert(r.getLong(5) == 10000L, "empty truth: nothing to miss")
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
   }
 
   test("Pca.covStats fails loudly on an empty corpus") {

@@ -221,6 +221,6 @@ class LinesPropertySpec extends SparkSpec {
       })
     }
     idx.unpersist()
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
   }
 }

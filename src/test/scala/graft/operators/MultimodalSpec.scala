@@ -278,7 +278,7 @@ class MultimodalSpec extends SparkSpec {
       .filter(col("id_a") =!= col("id_b")).distinct()
     val clusters = Dedupe.duplicateClusters(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Dedupe.releaseTrackedCaches()
+    SessionCaches.release()
     // each (2g, 2g+1) pair shares a video => one cluster with min-id
     // canonical; no cross-group merge among the 6 planted groups
     for (g <- 0L until 6L) {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkSpec
-import graft.operators.{Dedupe, LineDedupe, LineIndexMeta}
+import graft.operators.{LineDedupe, LineIndexMeta, SessionCaches}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -40,7 +40,7 @@ class LinesIncrementalGuardSpec extends SparkSpec {
       overlap <- Gen.choose(1L, baseN) // batch min = baseN - overlap
       batchN <- Gen.choose(1L, 8L)
     } yield (baseN, overlap, batchN)
-    Dedupe.withTrackedCaches {
+    SessionCaches.scope {
       (0 until 25).foreach { i =>
         val (baseN, overlap, batchN) =
           gen.pureApply(Gen.Parameters.default, Seed(9100L + i))
@@ -73,7 +73,7 @@ class LinesIncrementalGuardSpec extends SparkSpec {
       sign <- Gen.oneOf(-1, 1)
     } yield (a, math.max(1, a + sign * delta))
     val tmp = java.nio.file.Files.createTempDirectory("lineguard")
-    Dedupe.withTrackedCaches {
+    SessionCaches.scope {
       (0 until 5).foreach { i =>
         val (a, b0) = gen.pureApply(Gen.Parameters.default, Seed(9400L + i))
         val b = if (b0 == a) a + 1 else b0
@@ -96,7 +96,7 @@ class LinesIncrementalGuardSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("lineguard2")
     val docsPath = s"$tmp/docs"
     corpus(0, 5, "s").write.mode("overwrite").parquet(docsPath)
-    Dedupe.withTrackedCaches {
+    SessionCaches.scope {
       // a structurally valid (llo, lhi) index written WITHOUT the
       // sidecar (pre-sidecar layout, or a hand-rolled copy): refuse —
       // the refresh cannot verify minLineChars/maxDocId without it

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkSpec
-import graft.operators.{Dedupe, SpanIndexMeta}
+import graft.operators.{Dedupe, SessionCaches, SpanIndexMeta}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -40,7 +40,7 @@ class SpansIncrementalGuardSpec extends SparkSpec {
       overlap <- Gen.choose(1L, baseN) // batch min = baseN - overlap
       batchN <- Gen.choose(1L, 8L)
     } yield (baseN, overlap, batchN)
-    Dedupe.withTrackedCaches {
+    SessionCaches.scope {
       (0 until 25).foreach { i =>
         val (baseN, overlap, batchN) =
           gen.pureApply(Gen.Parameters.default, Seed(9700L + i))
@@ -76,7 +76,7 @@ class SpansIncrementalGuardSpec extends SparkSpec {
       sign <- Gen.oneOf(-1, 1)
     } yield (a, math.max(2, a + sign * delta))
     val tmp = java.nio.file.Files.createTempDirectory("spanguard")
-    Dedupe.withTrackedCaches {
+    SessionCaches.scope {
       (0 until 5).foreach { i =>
         val (a, b0) = gen.pureApply(Gen.Parameters.default, Seed(9800L + i))
         val b = if (b0 == a) a + 1 else b0
@@ -99,7 +99,7 @@ class SpansIncrementalGuardSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("spanguard2")
     val docsPath = s"$tmp/docs"
     corpus(0, 5, "s").write.mode("overwrite").parquet(docsPath)
-    Dedupe.withTrackedCaches {
+    SessionCaches.scope {
       // a structurally valid (wlo, whi) index written WITHOUT the
       // sidecar (pre-sidecar layout, or a hand-rolled copy): refuse —
       // the refresh cannot verify windowTokens/hash128/maxDocId without it
