@@ -602,7 +602,7 @@ object TextQueries {
           .as("text"))
     val corpus = d.select(col("doc_id"), col("text")).unionByName(excerpts)
     Dedupe.containmentPairs(corpus, "doc_id", "text", k = 3,
-      thresholdBp = 9000L, usePrefixFilter = true)
+      thresholdBp = 9000L)
   }
 
   /** Exact-substring duplicate spans ([[Dedupe.duplicateSpans]], the

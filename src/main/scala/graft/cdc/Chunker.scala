@@ -104,7 +104,7 @@ final class ChunkIterator(in: InputStream, params: ChunkerParams, bufSize: Int =
   private val table = Gear.table(params.tableSeed)
   private val buf = new Array[Byte](bufSize)
   private val pending = scala.collection.mutable.Queue.empty[Array[Byte]]
-  private var carry = new java.io.ByteArrayOutputStream(math.min(params.maxLen, 1 << 20))
+  private val carry = new java.io.ByteArrayOutputStream(math.min(params.maxLen, 1 << 20))
   private var carryLen = 0
   private var h = 0L
   private var eof = false

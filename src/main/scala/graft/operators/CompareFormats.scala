@@ -208,7 +208,7 @@ object CompareFormats {
     }
     val sb = new StringBuilder
     sb.append(f"${"group"}%-12s ${"format"}%-24s ${"files"}%5s ${"total"}%10s ${"chunks"}%10s ${"ratio"}%7s ${"xet"}%7s\n")
-    results.groupBy(_.group).toSeq.sortBy(_._1).foreach { case (group, rs) =>
+    results.groupBy(_.group).toSeq.sortBy(_._1).foreach { case (_, rs) =>
       val best = rs.map(_.dedup_ratio).min
       rs.sortBy(_.dedup_ratio).foreach { r =>
         val star = if (r.dedup_ratio == best) "*" else " "

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Conf
@@ -109,14 +109,12 @@ private[operators] final class LongPairMap(
     i
   }
 
-  /** Slot of (a, b), or -1 when absent — one probe serves a contains +
-    * value reads via [[val1At]]/[[val2At]]. */
+  /** Slot of (a, b), or -1 when absent — one probe serves a membership
+    * test and value reads via [[val1At]]/[[val2At]]. */
   def indexOf(a: Long, b: Long): Int = {
     val i = slot(a, b)
     if (used(i)) i else -1
   }
-
-  def contains(a: Long, b: Long): Boolean = used(slot(a, b))
 
   /** Values at a slot returned by [[indexOf]] (≥ 0; withValues only). */
   def val1At(i: Int): Long = v1(i)
@@ -552,17 +550,6 @@ object Dedupe {
 
   // -------------------------------------------------------- n-gram jaccard
 
-  /** Exact n-gram Jaccard pairs via inverted-index join (the classic
-    * set-similarity-join shape): explode distinct word k-grams, self-join
-    * on gram, count common per pair, Jaccard from integer set sizes. Unlike
-    * the signature-based ops this is fully relational — every step is
-    * SQL-expressible, so it carries a DuckDB oracle.
-    *
-    * Scale: the shuffle is |distinct grams per doc| rows; `maxGramFreq`
-    * prunes stopword-like grams that appear in more than that many docs
-    * (each contributes df² pair-occurrences) — same skew rationale as the
-    * LSH bucket cap. Default ∞ keeps oracle parity; set it at scale.
-    */
   /** Distinct word k-gram hashes of one document — the shared gram kernel
     * (ngram Jaccard, decontamination). Lowercased single-space split;
     * < k words degrade to one whole-text gram (the SQL oracles' ELSE
@@ -626,8 +613,8 @@ object Dedupe {
       .toDF("id", "n_grams", "gram")
   }
 
-  /** Shared substrate of the two PPJoin-style prefix paths
-    * ([[ngramJaccardPairs]], [[containmentPairs]]): the cached per-doc
+  /** Substrate of [[containmentPairs]]' PPJoin-style prefix filter: the
+    * cached per-doc
     * gram-array relation `(id, n_grams, order_grams, sorted_grams)` with
     * grams capped at `maxGramFreq` and ordered two ways — global
     * ascending (document frequency, gram) for prefix/index views, plain
@@ -722,7 +709,7 @@ object Dedupe {
     (docGrams, perDoc)
   }
 
-  /** Exact-verification finisher shared by the prefix paths: join the
+  /** Exact-verification finisher of [[containmentPairs]]: join the
     * (small, distinct) candidate pairs back to the per-doc arrays and
     * count the overlap with the allocation-free sorted-merge kernel —
     * each doc's grams move once, where the explode-style alternative
@@ -747,15 +734,37 @@ object Dedupe {
       .toDF("id_a", "id_b", "n_common", "na", "nb")
   }
 
+  /** Exact n-gram Jaccard pairs via inverted-index join (the classic
+    * set-similarity-join shape): explode distinct word k-grams, self-join
+    * on gram, count common per pair, Jaccard from integer set sizes. Unlike
+    * the signature-based ops this is fully relational — every step is
+    * SQL-expressible, so it carries a DuckDB oracle.
+    *
+    * Scale: the shuffle is |distinct grams per doc| rows; `maxGramFreq`
+    * prunes stopword-like grams that appear in more than that many docs
+    * (each contributes df² pair-occurrences) — same skew rationale as the
+    * LSH bucket cap. Default ∞ keeps oracle parity; set it at scale.
+    * `maxGramFreq` drops over-hot grams before the quadratic step while
+    * n_grams keeps the FULL distinct count, so a capped run still
+    * estimates true Jaccard and only loses pairs whose entire overlap is
+    * hot grams.
+    *
+    * Candidates come from the direct gram self-join: the exploded
+    * (id, n_grams, gram) relation shuffles ONCE on gram and Spark's
+    * ReusedExchange serves both join sides; each gram bucket streams
+    * |bucket|² candidates through the join's spillable buffer (a hot gram
+    * degrades to a slow task, never an OOM), and one pair-keyed count
+    * finishes the job. Cost is Σ_g df(g)² — right whenever the df
+    * distribution is benign (natural corpora after `maxGramFreq`: the cap
+    * drops stopword-like grams and is the hard guardrail).
+    */
   def ngramJaccardPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       k: Int = 3,
       threshold: Double = 0.5,
-      maxGramFreq: Long = Long.MaxValue,
-      usePrefixFilter: Boolean = false,
-      broadcastGramDfLimit: Long = 4L * 1000 * 1000): DataFrame = {
+      maxGramFreq: Long = Long.MaxValue): DataFrame = {
     // Grams are IDENTIFIED BY HASH from the start: each distinct word
     // k-gram string hashes to one xxh64 value — hash equality equals
     // gram-string equality modulo 2^-64 collisions (immaterial); short
@@ -770,52 +779,22 @@ object Dedupe {
     // `size(g)>0` filter (3× per-row evaluation, measured 4× slower), and
     // its generated code takes seconds to janino-compile per executor. The
     // kernel is one tight loop per document, no Generate node at all.
-    //
-    // TWO candidate-generation strategies, identical output (asserted by
-    // DedupeSpec's path-equivalence test AND the driver's DuckDB oracle):
-    //
-    // DEFAULT (usePrefixFilter = false) — direct gram self-join. The
-    // exploded (id, n_grams, gram) relation shuffles ONCE on gram and
-    // Spark's ReusedExchange serves both join sides; each gram bucket
-    // streams |bucket|² candidates through the join's spillable buffer
-    // (a hot gram degrades to a slow task, never an OOM), and one
-    // pair-keyed count finishes the job. Cost is Σ_g df(g)² — the right
-    // choice whenever the df distribution is benign (natural corpora
-    // after `maxGramFreq`: the cap drops stopword-like grams and is the
-    // hard guardrail).
-    //
-    // OPTION (usePrefixFilter = true) — the public All-Pairs / PPJoin
-    // prefix filter (Bayardo et al. WWW'07; Xiao et al. WWW'08) on the
-    // [[perDocGramRelation]] substrate shared with [[containmentPairs]]:
-    // order each document's grams by ascending global document frequency
-    // (ties by gram value — a total order) and join only the prefix a
-    // qualifying pair MUST share. J(A,B) ≥ t forces overlap c ≥ t·|A|
-    // (c ≥ t/(1+t)·(|A|+|B|) and |B| ≥ c give c·(1+t) ≥ t·|A| + t·c),
-    // and the smallest common gram (global order) sits within the first
-    // |A| − c + 1 grams of A, so prefixes of length |A| − ⌈t·|A|⌉ + 1
-    // lose nothing; hot grams sort to the END of every document and
-    // never enter a prefix, collapsing the Σ df² term to the rare-gram
-    // buckets. Float safety: the required overlap relaxes to
-    // floor(t·|A|) — prefixes only ever come out LONGER than necessary,
-    // so exactness survives rounding either way. The PPJoin positional
-    // filter prunes matched occurrences (1 + min(remaining) must cover
-    // the pair's larger per-side floor — lossless at the smallest shared
-    // gram, same argument as the containment variant), candidates
-    // distinct once, and the exact intersection re-derives over ALL
-    // (capped) grams via the sorted-array kernel. Asymptotically faster
-    // whenever hot grams dominate; on benign corpora the two paths now
-    // measure within noise of each other (the per-doc-array substrate
-    // removed the old path's 4-stage overhead).
-    //
-    // In BOTH paths `maxGramFreq` drops over-hot grams before the
-    // quadratic step while n_grams keeps the FULL distinct count, so a
-    // capped run still estimates true Jaccard and only loses pairs
-    // whose entire overlap is hot grams.
     val gsetsAll = gramRows(df, col(idCol), col(textCol), k)
-
+    val gsets =
+      if (maxGramFreq == Long.MaxValue) gsetsAll
+      else gsetsAll.join(
+        gsetsAll.groupBy(col("gram")).agg(count(lit(1)).as("gram_df"))
+          .filter(col("gram_df") <= maxGramFreq).select(col("gram")),
+        "gram")
+    val pairCounts = gsets.as("l")
+      .join(gsets.as("r"),
+        col("l.gram") === col("r.gram") && col("l.id") < col("r.id"))
+      .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
+      .agg(count(lit(1)).as("n_common"),
+        first(col("l.n_grams")).as("na"), first(col("r.n_grams")).as("nb"))
     // containment (|A∩B|/|A|) catches "B embeds A" pairs whose Jaccard is
     // diluted by the larger doc — the asymmetric signal dedup policies use
-    def finish(pairCounts: DataFrame): DataFrame = pairCounts
+    val result = pairCounts
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")).cast("double"))
       .withColumn("containment_a", col("n_common").cast("double") / col("na").cast("double"))
@@ -823,63 +802,9 @@ object Dedupe {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"),
         col("containment_a"), col("containment_b"))
-
-    if (!usePrefixFilter) {
-      val gsets =
-        if (maxGramFreq == Long.MaxValue) gsetsAll
-        else gsetsAll.join(
-          gsetsAll.groupBy(col("gram")).agg(count(lit(1)).as("gram_df"))
-            .filter(col("gram_df") <= maxGramFreq).select(col("gram")),
-          "gram")
-      val result = finish(gsets.as("l")
-        .join(gsets.as("r"),
-          col("l.gram") === col("r.gram") && col("l.id") < col("r.id"))
-        .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
-        .agg(count(lit(1)).as("n_common"),
-          first(col("l.n_grams")).as("na"), first(col("r.n_grams")).as("nb")))
-        .cache()
-      result.count()
-      result
-    } else {
-      val (docGrams, perDoc) = perDocGramRelation(
-        df, idCol, textCol, k, maxGramFreq, broadcastGramDfLimit)
-      // floor-relaxed per-doc minimum overlap (see the OPTION comment);
-      // from the FULL gram count — cap-safe, capping only lengthens
-      // prefixes
-      val sized = perDoc
-        .withColumn("n_capped", size(col("order_grams")).cast("long"))
-        .withColumn("c_min",
-          floor(lit(threshold) * col("n_grams")).cast("long"))
-      val prefix = sized
-        .select(col("id"), col("n_capped"), col("c_min"),
-          posexplode(slice(col("order_grams"), lit(1),
-            greatest(lit(0L),
-              least(col("n_capped"),
-                col("n_capped") - col("c_min") + lit(1L))).cast("int"))))
-        .select(col("id"), (col("pos") + 1).cast("long").as("rank"),
-          col("col").as("gram"), col("n_capped"), col("c_min"))
-      // SELF-join of prefixes (both members of a qualifying pair carry
-      // the smallest shared gram inside their prefix), id-normalized,
-      // positional filter against the pair's larger per-side floor.
-      // SHUFFLE_HASH: same sort-avoidance rationale — and same skew
-      // caveat and guards — as containmentPairs (see the comment
-      // there): df-ascending prefixes starve hot grams from the build
-      // side, maxGramFreq hard-caps buckets, AQE skew-join splits an
-      // oversized build partition at runtime.
-      val cand = prefix.hint("SHUFFLE_HASH").as("l")
-        .join(prefix.as("r"),
-          col("l.gram") === col("r.gram") && col("l.id") < col("r.id") &&
-            lit(1L) + least(col("l.n_capped") - col("l.rank"),
-              col("r.n_capped") - col("r.rank")) >=
-              greatest(col("l.c_min"), col("r.c_min")))
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-        .distinct()
-      val result = finish(verifyPairsByIntersect(cand, perDoc)).cache()
-      result.count()
-      perDoc.unpersist()
-      docGrams.unpersist()
-      GraftBridge.rebind(result, df.sparkSession)
-    }
+      .cache()
+    result.count()
+    result
   }
 
   /** Containment near-dup pairs — the ASYMMETRIC complement of
@@ -896,22 +821,22 @@ object Dedupe {
     * basis points, so the engine row set is exactly reproducible by the
     * DuckDB oracle with no float comparison anywhere.
     *
-    * Candidate generation mirrors the Jaccard operator's two strategies:
-    *
-    *  - DEFAULT — direct gram self-join: one shuffle on gram, Σ df(g)²
-    *    candidate streaming with `maxGramFreq` as the hot-gram guardrail.
-    *  - `usePrefixFilter = true` — the asymmetric prefix filter: only the
-    *    CONTAINED side is prefix-restricted. C(X,·) ≥ t forces overlap
-    *    c ≥ ⌈t·|X|⌉ (integer form: (thresholdBp·|X| + 9999) div 10000),
-    *    and in the global (df, gram) order the smallest shared gram sits
-    *    inside X's first |X| − c + 1 grams — so prefix(X) ⋈ ALL-grams
-    *    index finds every qualifying pair with X contained; both
-    *    directions come out of the ONE join because every document plays
-    *    the contained role on the prefix side. Candidates are then
-    *    exact-verified over all (capped) grams, so the prefix pass only
-    *    prunes, never decides. Hot grams sort to the end of documents and
-    *    out of prefixes — the Σ df² term collapses to rare-gram buckets,
-    *    the same skew story as the Jaccard PPJoin path.
+    * Candidates come from the asymmetric prefix filter (the public
+    * All-Pairs / PPJoin family: Bayardo et al. WWW'07; Xiao et al.
+    * WWW'08): each document's grams are ordered by ascending global
+    * document frequency (ties by gram value — a total order), and only
+    * the CONTAINED side is prefix-restricted. C(X,·) ≥ t forces overlap
+    * c ≥ ⌈t·|X|⌉ (integer form: (thresholdBp·|X| + 9999) div 10000), and
+    * in that order the smallest shared gram sits inside X's first
+    * |X| − c + 1 grams — so prefix(X) ⋈ ALL-grams index finds every
+    * qualifying pair with X contained; both directions come out of the
+    * ONE join because every document plays the contained role on the
+    * prefix side. Candidates are then exact-verified over all (capped)
+    * grams, so the prefix pass only prunes, never decides. Hot grams sort
+    * to the end of documents and out of prefixes, so the Σ df(g)² term of
+    * a direct gram self-join collapses to the rare-gram buckets.
+    * `broadcastGramDfLimit` picks the document-frequency build of
+    * [[perDocGramRelation]] (0 forces the shuffle build).
     *
     * `maxGramFreq` keeps n_grams at the FULL distinct count while capping
     * join fanout, so capped runs under-count only pairs whose entire
@@ -928,123 +853,136 @@ object Dedupe {
       k: Int = 3,
       thresholdBp: Long = 9000L,
       maxGramFreq: Long = Long.MaxValue,
-      usePrefixFilter: Boolean = false,
       broadcastGramDfLimit: Long = 4L * 1000 * 1000): DataFrame = {
     require(thresholdBp >= 1L && thresholdBp <= 10000L,
       s"thresholdBp must be in [1, 10000], got $thresholdBp")
-    val gsetsAll = gramRows(df, col(idCol), col(textCol), k)
-
-    def finish(pairCounts: DataFrame): DataFrame = {
-      val bpA = call_function("div", col("n_common") * lit(10000L),
-        col("na").cast("long"))
-      val bpB = call_function("div", col("n_common") * lit(10000L),
-        col("nb").cast("long"))
-      pairCounts
-        .withColumn("cont_a_bp", bpA)
-        .withColumn("cont_b_bp", bpB)
-        .filter(greatest(col("cont_a_bp"), col("cont_b_bp")) >= thresholdBp)
-        .withColumn("relation",
-          when(col("cont_a_bp") >= thresholdBp &&
-            col("cont_b_bp") >= thresholdBp, lit("mutual"))
-            .when(col("cont_a_bp") >= thresholdBp, lit("a_in_b"))
-            .otherwise(lit("b_in_a")))
-        .select(col("id_a"), col("id_b"), col("n_common"),
-          col("na").cast("long").as("na"), col("nb").cast("long").as("nb"),
-          col("cont_a_bp"), col("cont_b_bp"), col("relation"))
-    }
-
-    if (!usePrefixFilter) {
-      val gsets =
-        if (maxGramFreq == Long.MaxValue) gsetsAll
-        else gsetsAll.join(
-          gsetsAll.groupBy(col("gram")).agg(count(lit(1)).as("gram_df"))
-            .filter(col("gram_df") <= maxGramFreq).select(col("gram")),
-          "gram")
-      finish(gsets.as("l")
-        .join(gsets.as("r"),
-          col("l.gram") === col("r.gram") && col("l.id") < col("r.id"))
-        .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
-        .agg(count(lit(1)).as("n_common"),
-          first(col("l.n_grams")).as("na"), first(col("r.n_grams")).as("nb")))
-    } else {
-      // cached per-doc arrays + broadcast/shuffle df build + input-sized
-      // exchanges — the substrate shared with ngramJaccardPairs
-      val (docGrams, perDoc) = perDocGramRelation(
-        df, idCol, textCol, k, maxGramFreq, broadcastGramDfLimit)
-      // required overlap from the FULL gram count (cap-safe: capping only
-      // lengthens prefixes), ceil division in pure integers
-      val cMin = call_function("div",
-        lit(thresholdBp) * col("n_grams") + lit(9999L), lit(10000L))
-      val sized = perDoc
-        .withColumn("n_capped", size(col("order_grams")).cast("long"))
-        .withColumn("c_min", cMin)
-      val prefix = sized
-        .select(col("id"), col("n_capped"), col("c_min"),
-          posexplode(slice(col("order_grams"), lit(1),
-            greatest(lit(0L), col("n_capped") - col("c_min") + lit(1L))
-              .cast("int"))))
-        .select(col("id"), (col("pos") + 1).cast("long").as("rank"),
-          col("col").as("gram"), col("n_capped"), col("c_min"))
-      val index = sized
-        .select(col("id"), col("n_capped"), posexplode(col("order_grams")))
-        .select(col("id"), (col("pos") + 1).cast("long").as("r_rank"),
-          col("col").as("gram"), col("n_capped").as("r_n"))
-      // contained-side prefix ⋈ full index; normalize to id_a < id_b (the
-      // one join covers both directions because every doc takes the
-      // contained role on the prefix side). The PPJoin POSITIONAL filter
-      // (Xiao et al. WWW'08 §3.2, adapted to containment) prunes matched
-      // occurrences before the distinct: grams after this match number
-      // n_capped − rank per side, so the capped overlap through THIS gram
-      // is ≤ 1 + min(remaining_l, remaining_r). For a pair qualifying in
-      // the l-contained direction the bound holds with room at the pair's
-      // SMALLEST shared gram (no common gram precedes it), so that
-      // occurrence always survives — the filter only drops occurrences
-      // that could not have carried a qualifying overlap, never the pair.
-      // SHUFFLE_HASH on the (smaller) prefix side: the default sort-merge
-      // join would sort BOTH gram-keyed relations (Σ grams-scale rows);
-      // a per-partition hash build of the prefix side fits memory by
-      // construction once the exchange is input-sized (64 MiB target
-      // partitions, see perDocGramRelation above). AQE still
-      // upgrades to a broadcast join at runtime when the built prefix
-      // side measures under the broadcast threshold.
-      //
-      // SKEW CAVEAT (the hash build cannot spill): the 64 MiB target is a
-      // corpus AVERAGE, and the join key is the gram, so one hot gram's
-      // build bucket could in principle concentrate a partition far past
-      // it. Three layers keep that theoretical at this join: (1) the
-      // build side is the df-ASCENDING PREFIX — a gram lands in a doc's
-      // prefix only when the doc has almost no rarer gram, so a
-      // partition-scale bucket (~2M prefix occurrences of ONE gram)
-      // requires millions of near-identical docs, a corpus the pipeline
-      // discipline dedupes exactly BEFORE near-dup pairing (and whose
-      // candidate-pair volume would be the real failure, not the build);
-      // (2) `maxGramFreq`, when set, hard-caps any bucket at the cap;
-      // (3) AQE skew-join (`spark.sql.adaptive.skewJoin.*`, on by
-      // default) splits an oversized shuffled-hash build partition at
-      // runtime, replicating the probe side across the splits — the
-      // spill-free build is bounded even when (1) is violated with AQE
-      // on. Running AQE-off on an un-pre-deduped corpus with unbounded
-      // maxGramFreq is the one unguarded combination: set maxGramFreq.
-      val cand = prefix.hint("SHUFFLE_HASH").as("l")
-        .join(index.as("r"),
-          col("l.gram") === col("r.gram") && col("l.id") =!= col("r.id") &&
-            lit(1L) + least(col("l.n_capped") - col("l.rank"),
-              col("r.r_n") - col("r.r_rank")) >= col("l.c_min"))
-        .select(least(col("l.id"), col("r.id")).as("id_a"),
-          greatest(col("l.id"), col("r.id")).as("id_b"))
-        .distinct()
-      val result = finish(verifyPairsByIntersect(cand, perDoc))
-      // perDoc feeds four consumers; materialize the (small) pair result
-      // before releasing it — tracked so harness loops can release
-      SessionCaches.track(result.cache())
-      result.count()
-      perDoc.unpersist()
-      docGrams.unpersist()
-      GraftBridge.rebind(result, df.sparkSession)
-    }
+    // cached per-doc arrays + broadcast/shuffle df build + input-sized
+    // exchanges
+    val (docGrams, perDoc) = perDocGramRelation(
+      df, idCol, textCol, k, maxGramFreq, broadcastGramDfLimit)
+    // required overlap from the FULL gram count (cap-safe: capping only
+    // lengthens prefixes), ceil division in pure integers
+    val cMin = call_function("div",
+      lit(thresholdBp) * col("n_grams") + lit(9999L), lit(10000L))
+    val sized = perDoc
+      .withColumn("n_capped", size(col("order_grams")).cast("long"))
+      .withColumn("c_min", cMin)
+    val prefix = sized
+      .select(col("id"), col("n_capped"), col("c_min"),
+        posexplode(slice(col("order_grams"), lit(1),
+          greatest(lit(0L), col("n_capped") - col("c_min") + lit(1L))
+            .cast("int"))))
+      .select(col("id"), (col("pos") + 1).cast("long").as("rank"),
+        col("col").as("gram"), col("n_capped"), col("c_min"))
+    val index = sized
+      .select(col("id"), col("n_capped"), posexplode(col("order_grams")))
+      .select(col("id"), (col("pos") + 1).cast("long").as("r_rank"),
+        col("col").as("gram"), col("n_capped").as("r_n"))
+    // contained-side prefix ⋈ full index; normalize to id_a < id_b (the
+    // one join covers both directions because every doc takes the
+    // contained role on the prefix side). The PPJoin POSITIONAL filter
+    // (Xiao et al. WWW'08 §3.2, adapted to containment) prunes matched
+    // occurrences before the distinct: grams after this match number
+    // n_capped − rank per side, so the capped overlap through THIS gram
+    // is ≤ 1 + min(remaining_l, remaining_r). For a pair qualifying in
+    // the l-contained direction the bound holds with room at the pair's
+    // SMALLEST shared gram (no common gram precedes it), so that
+    // occurrence always survives — the filter only drops occurrences
+    // that could not have carried a qualifying overlap, never the pair.
+    // SHUFFLE_HASH on the (smaller) prefix side: the default sort-merge
+    // join would sort BOTH gram-keyed relations (Σ grams-scale rows);
+    // a per-partition hash build of the prefix side fits memory by
+    // construction once the exchange is input-sized (64 MiB target
+    // partitions, see perDocGramRelation above). AQE still
+    // upgrades to a broadcast join at runtime when the built prefix
+    // side measures under the broadcast threshold.
+    //
+    // SKEW CAVEAT (the hash build cannot spill): the 64 MiB target is a
+    // corpus AVERAGE, and the join key is the gram, so one hot gram's
+    // build bucket could in principle concentrate a partition far past
+    // it. Three layers keep that theoretical at this join: (1) the
+    // build side is the df-ASCENDING PREFIX — a gram lands in a doc's
+    // prefix only when the doc has almost no rarer gram, so a
+    // partition-scale bucket (~2M prefix occurrences of ONE gram)
+    // requires millions of near-identical docs, a corpus the pipeline
+    // discipline dedupes exactly BEFORE near-dup pairing (and whose
+    // candidate-pair volume would be the real failure, not the build);
+    // (2) `maxGramFreq`, when set, hard-caps any bucket at the cap;
+    // (3) AQE skew-join (`spark.sql.adaptive.skewJoin.*`, on by
+    // default) splits an oversized shuffled-hash build partition at
+    // runtime, replicating the probe side across the splits — the
+    // spill-free build is bounded even when (1) is violated with AQE
+    // on. Running AQE-off on an un-pre-deduped corpus with unbounded
+    // maxGramFreq is the one unguarded combination: set maxGramFreq.
+    val cand = prefix.hint("SHUFFLE_HASH").as("l")
+      .join(index.as("r"),
+        col("l.gram") === col("r.gram") && col("l.id") =!= col("r.id") &&
+          lit(1L) + least(col("l.n_capped") - col("l.rank"),
+            col("r.r_n") - col("r.r_rank")) >= col("l.c_min"))
+      .select(least(col("l.id"), col("r.id")).as("id_a"),
+        greatest(col("l.id"), col("r.id")).as("id_b"))
+      .distinct()
+    val bpA = call_function("div", col("n_common") * lit(10000L),
+      col("na").cast("long"))
+    val bpB = call_function("div", col("n_common") * lit(10000L),
+      col("nb").cast("long"))
+    val result = verifyPairsByIntersect(cand, perDoc)
+      .withColumn("cont_a_bp", bpA)
+      .withColumn("cont_b_bp", bpB)
+      .filter(greatest(col("cont_a_bp"), col("cont_b_bp")) >= thresholdBp)
+      .withColumn("relation",
+        when(col("cont_a_bp") >= thresholdBp &&
+          col("cont_b_bp") >= thresholdBp, lit("mutual"))
+          .when(col("cont_a_bp") >= thresholdBp, lit("a_in_b"))
+          .otherwise(lit("b_in_a")))
+      .select(col("id_a"), col("id_b"), col("n_common"),
+        col("na").cast("long").as("na"), col("nb").cast("long").as("nb"),
+        col("cont_a_bp"), col("cont_b_bp"), col("relation"))
+    // perDoc feeds four consumers; materialize the (small) pair result
+    // before releasing it — tracked so harness loops can release
+    SessionCaches.track(result.cache())
+    result.count()
+    perDoc.unpersist()
+    docGrams.unpersist()
+    GraftBridge.rebind(result, df.sparkSession)
   }
 
   // ------------------------------------------------- exact substring spans
+  //
+  // Every span operator is one pipeline: the shared front half, its own
+  // duplicated-window aggregate, the shared back half, and its own narrow
+  // finish.
+  //
+  //  - FRONT HALF ([[withSpanWindows]]): one narrow kernel turns each
+  //    document into its rolling window hashes in positional order
+  //    (window identity = the window's word sequence; hashes collide
+  //    with probability 2^-64, or 2^-128 in `hash128` mode). The per-doc
+  //    arrays persist, one aggregate over the cache probes Σ windows,
+  //    and the relation is re-bound into the session sized for that many
+  //    window rows. The corpus tokenizes and hashes exactly ONCE: the
+  //    probe, the operator's aggregate and its finish all read the cache.
+  //    The finish's result is materialized and cache-tracked
+  //    ([[SessionCaches]]); the window cache is released after it, and
+  //    also when anything fails.
+  //  - BACK HALF ([[redundantWindows]]): the operator's duplicated-window
+  //    relation becomes each document's redundant window positions,
+  //    through one of two builds picked from the measured relation size:
+  //     - BROADCAST (≤ `broadcastDupLimit` rows): the relation collects
+  //       into a primitive [[LongPairMap]] and broadcasts; flagging then
+  //       runs fully NARROW over the cached per-doc arrays (window rows
+  //       never shuffle at all). The aggregation's exchange carries
+  //       map-side-combined partials only.
+  //     - SHUFFLE (the 100 TB path): the relation joins back to the
+  //       exploded windows on the hash, and one id-keyed fold collects
+  //       each document's positions. `broadcastDupLimit = 0` is the
+  //       explicit force-shuffle sentinel: the fallback runs, without a
+  //       size probe, even when the relation is empty, so the forcing
+  //       knob and the parity specs genuinely exercise this path on any
+  //       input.
+  //    Both builds are spec-pinned identical.
+  //  - RUN MERGE ([[mergeRuns]]): consecutive redundant positions merge
+  //    into maximal spans (the report and the provenance), or the cut
+  //    drops every token a redundant window covers ([[rebuildCutFromPositions]]).
 
   /** Exact-substring duplicate SPANS — the training-data dedup mode the
     * pair operators don't cover (public algorithm class: Lee et al.,
@@ -1058,26 +996,10 @@ object Dedupe {
     * the spans a curation pipeline CUTS rather than the docs it drops.
     *
     * Relational shape (no suffix array needed for fixed window length):
-    * one narrow kernel emits each doc's rolling window hashes in
-    * positional order (window identity = the window's word sequence;
-    * hashes collide with probability 2^-64 — same documented discipline
-    * as the gram operators); duplicated-window detection is a corpus-wide
-    * hash aggregation; consecutive duplicated positions merge into
-    * maximal spans. Two strategies, picked from measured stats:
-    *
-    *  - BROADCAST (duplicated-window count ≤ `broadcastDupLimit`): only
-    *    the DUPLICATED hashes — typically a tiny fraction of the corpus —
-    *    collect into a primitive set and broadcast; flagging and span
-    *    merging then run fully NARROW over the cached per-doc arrays
-    *    (window rows never shuffle at all). The aggregation's exchange
-    *    carries map-side-combined (hash, count) partials only.
-    *  - SHUFFLE (the 100 TB path): duplicated hashes join back to the
-    *    exploded positions (co-partitioned on the hash from the
-    *    aggregation), then one id-keyed fold merges spans. Exchanges are
-    *    input-sized from the Σ windows probe. `broadcastDupLimit = 0` is
-    *    the explicit force-shuffle sentinel: the fallback runs even when
-    *    the duplicated-window set is empty, so the forcing knob and the
-    *    parity specs genuinely exercise this path on any input.
+    * the span pipeline above with a corpus-wide `(hash, count)`
+    * aggregation as its duplicated-window relation. Its broadcast set is
+    * value-free (keys only — half the map), and every occurrence of a
+    * duplicated window is redundant here, the first one included.
     *
     * Window identity width (`hash128`, mirroring the chunk relation's
     * ChunkRow128 option): 64-bit identity is fine for the REPORT — a
@@ -1118,80 +1040,17 @@ object Dedupe {
       broadcastDupLimit: Long,
       hash128: Boolean,
       loBits: Int): DataFrame = {
-    require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     val session = df.sparkSession
     import session.implicits._
     val w = windowTokens
-    // per-doc window hashes in positional order: hash the concatenation
-    // of the window's word hashes (equal iff the word sequences are
-    // equal, modulo hash collisions — see the hash128 doc above); the
-    // high half is all-zero in 64-bit mode, so (wlo, whi) grouping
-    // degenerates to plain 64-bit grouping with no branch in the plan
-    val docWins0 = df
-      .select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val (lo, hi) = windowHashes128(text, w, hash128, loBits)
-        (id, lo, hi)
-      }
-      .toDF("id", "wlo", "whi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sumWins = docWins0
-      .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)))
-      .as[Long].head()
-    val docWins = GraftBridge.rebind(docWins0,
-      Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes))
-    try {
-      val exploded = docWins
-        .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
-        .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
-          col("col.wlo").as("wlo"), col("col.whi").as("whi"))
-      val dupHashes = exploded
+    withSpanWindows(df, col(idCol), col(textCol), w, hash128, loBits,
+        keepText = false) { wins =>
+      val dupHashes = wins.exploded
         .groupBy(col("wlo"), col("whi")).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1).select(col("wlo"), col("whi"))
-      val spans = {
-        val nDup = dupHashes.count()
-        if (broadcastDupLimit > 0 && nDup <= broadcastDupLimit) {
-          val dupArr = dupHashes.as[(Long, Long)].collect()
-          val set = new LongPairMap(dupArr.length * 2 + 16, withValues = false)
-          dupArr.foreach { case (a, b) => set.put(a, b, 0L, 0L) }
-          val bcSet = session.sparkContext.broadcast(set)
-          docWins
-            .as[(Long, Array[Long], Array[Long])]
-            .flatMap { case (id, lo, hi) =>
-              val s = bcSet.value
-              val dupPos = new scala.collection.mutable.ArrayBuffer[Int]()
-              var i = 0
-              while (i < lo.length) {
-                if (s.contains(lo(i), hi(i))) dupPos += (i + 1)
-                i += 1
-              }
-              mergeRuns(dupPos.toArray, w).iterator.map {
-                case (st, tok) => (id, st, tok)
-              }
-            }
-        } else {
-          exploded
-            .join(dupHashes, Seq("wlo", "whi"))
-            .groupBy(col("id"))
-            .agg(collect_list(col("pos")).as("ps"))
-            .as[(Long, Array[Long])]
-            .flatMap { case (id, ps) =>
-              mergeRuns(ps.map(_.toInt).sorted, w).iterator.map {
-                case (st, tok) => (id, st, tok)
-              }
-            }
-        }
-      }
+      redundantWindows(wins, dupHashes, broadcastDupLimit, keepers = false)(
+        r => mergeRuns(r.pos, w).map { case (_, st, tok) => (r.id, st, tok) })
         .toDF("doc_id", "span_start", "span_tokens")
-        .cache()
-      SessionCaches.track(spans)
-      spans.count()
-      GraftBridge.rebind(spans, session)
-    } finally {
-      // also on failure: a thrown probe/aggregation must not leave the
-      // corpus-scale kernel cache pinned
-      docWins.unpersist()
     }
   }
 
@@ -1205,25 +1064,20 @@ object Dedupe {
     * compounded-overlap corners a repeated substring can survive
     * truncated or not at all — the oracle implements the identical rule.
     *
-    * Same two-strategy shape as the detector, with the min-occurrence
-    * carried alongside: the duplicated-hash → earliest-occurrence map
-    * broadcasts when bounded (the final rewrite is then one fully NARROW
-    * pass over the cached per-doc window arrays — nothing but aggregation
-    * partials ever shuffles; plan-asserted zero-exchange in DedupeSpec),
-    * or the redundant positions flow through input-sized hash/id
-    * exchanges above the bound — in that fallback the rewrite join also
-    * moves the document TEXT through one id-keyed hop (input-sized,
-    * one corpus pass over the wire, the standard price of co-locating
-    * payload with shuffled derivations; AQE broadcasts the positions
-    * side instead whenever it measures small). Both builds are
-    * spec-pinned identical, and both hash the corpus windows exactly ONCE
-    * (the cached (id, text, wlo, whi) relation feeds the probe, the
-    * aggregation, and the final rewrite — no second tokenize+hash scan).
-    * The cache is corpus-scale by design (text + one long per token,
-    * MEMORY_AND_DISK): at 100 TB it spills ~input-sized data to executor
-    * disks, the standard Spark trade of local disk for a second full
-    * tokenize+hash pass of the corpus — size executor storage for the
-    * input, as with any cached-scan pipeline stage.
+    * The span pipeline with the duplicated-hash → earliest-occurrence
+    * relation in the middle; the window cache also carries each
+    * document's text, so the rewrite replays from it instead of a second
+    * tokenize+hash scan. Under the broadcast build the rewrite is one
+    * fully NARROW pass over the cache — nothing but aggregation partials
+    * ever shuffles (plan-asserted zero-exchange in DedupeSpec). Above the
+    * bound the redundant positions flow through input-sized hash/id
+    * exchanges, and the rewrite also moves the document TEXT through one
+    * id-keyed hop (one corpus pass over the wire, the standard price of
+    * co-locating payload with shuffled derivations; AQE broadcasts the
+    * positions side instead whenever it measures small). The cache is
+    * corpus-scale by design (text + one long per token, MEMORY_AND_DISK):
+    * at 100 TB it spills ~input-sized data to executor disks — size
+    * executor storage for the input, as with any cached-scan stage.
     *
     * Identity width: a 64-bit window-hash collision here DELETES innocent
     * text, not just a statistic — run 100 TB-class cuts with
@@ -1261,118 +1115,19 @@ object Dedupe {
       windowTokens: Int,
       broadcastDupLimit: Long,
       hash128: Boolean,
-      loBits: Int): DataFrame = {
-    require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
-    val session = df.sparkSession
-    import session.implicits._
-    val w = windowTokens
-    // text rides in the cache alongside the window arrays so the final
-    // rewrite (broadcast OR shuffle build) replays from here instead of
-    // re-running the tokenize+hash kernel over the corpus
-    val docWins0 = df
-      .select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val (lo, hi) = windowHashes128(text, w, hash128, loBits)
-        (id, text, lo, hi)
-      }
-      .toDF("id", "text", "wlo", "whi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sumWins = docWins0
-      .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)))
-      .as[Long].head()
-    val docWins = GraftBridge.rebind(docWins0,
-      Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes))
-    val exploded = docWins
-      .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
-      .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
-        col("col.wlo").as("wlo"), col("col.whi").as("whi"))
-    // duplicated windows with their earliest occurrence — min of the
-    // (doc, pos) struct is the lexicographic minimum
-    val dupFirsts = exploded
-      .groupBy(col("wlo"), col("whi"))
-      .agg(count(lit(1)).as("n"),
-        min(struct(col("id"), col("pos"))).as("f"))
-      .filter(col("n") > 1)
-      .select(col("wlo"), col("whi"),
-        col("f.id").as("f_id"), col("f.pos").as("f_pos"))
-
-    cutFromDupFirsts(session, docWins, exploded, dupFirsts, w,
-      broadcastDupLimit)
-  }
-
-  /** Shared rewrite tail of [[cutDuplicateSpans]] /
-    * [[cutSpansIncremental]]: given the cached kernel output, the
-    * exploded occurrences, and the redundancy relation
-    * `(wlo, whi, f_id, f_pos)` — where (f_id, f_pos) is the occurrence
-    * to KEEP, or the (-1, -1) sentinel for "every occurrence here is
-    * redundant" (a window already present in an incremental base) —
-    * produce the cleaned corpus via the broadcast or shuffle build.
-    * Materializes and tracks the result in `docWins`' session, releases
-    * `docWins`, and returns the result bound to `session`.
-    */
-  private def cutFromDupFirsts(
-      session: org.apache.spark.sql.SparkSession,
-      docWins: DataFrame,
-      exploded: DataFrame,
-      dupFirsts: DataFrame,
-      w: Int,
-      broadcastDupLimit: Long): DataFrame = {
-    import session.implicits._
-    try {
-    val rows = {
-      val nDup = dupFirsts.count()
-      if (broadcastDupLimit > 0 && nDup <= broadcastDupLimit) {
-        val firsts = dupFirsts.as[(Long, Long, Long, Long)].collect()
-        val m = new LongPairMap(firsts.length * 2 + 16, withValues = true)
-        firsts.foreach { case (a, b, d, p) => m.put(a, b, d, p) }
-        val bcMap = session.sparkContext.broadcast(m)
-        docWins
-          .as[(Long, String, Array[Long], Array[Long])]
-          .map { case (id, text, lo, hi) =>
-            val fm = bcMap.value
-            val redundant = new Array[Boolean](lo.length)
-            var i = 0
-            while (i < lo.length) {
-              val s = fm.indexOf(lo(i), hi(i))
-              if (s >= 0 &&
-                !(fm.val1At(s) == id && fm.val2At(s) == i + 1L))
-                redundant(i) = true
-              i += 1
-            }
-            rebuildCut(w, id, text, redundant)
-          }
-      } else {
-        val redundant = exploded
-          .join(dupFirsts, Seq("wlo", "whi"))
-          .filter(!(col("id") === col("f_id") && col("pos") === col("f_pos")))
-          .groupBy(col("id"))
-          .agg(collect_list(col("pos")).as("ps"))
-        docWins
-          .select(col("id"), col("text"))
-          .join(redundant, Seq("id"), "left")
-          .select(col("id"), col("text"), col("ps"))
-          .as[(Long, String, Array[Long])]
-          .map { case (id, text, ps) =>
-            rebuildCutFromPositions(w, id, text,
-              Option(ps).getOrElse(Array.emptyLongArray))
-          }
-      }
+      loBits: Int): DataFrame =
+    withSpanWindows(df, col(idCol), col(textCol), windowTokens, hash128,
+        loBits, keepText = true) { wins =>
+      cutRows(wins, dupFirsts(wins.exploded), broadcastDupLimit, windowTokens)
     }
-      .toDF("doc_id", "n_tokens", "cut_tokens", "text_cut")
-      .cache()
-    SessionCaches.track(rows)
-    rows.count()
-    GraftBridge.rebind(rows, session)
-    } finally docWins.unpersist() // also on failure — never pin the kernel cache
-  }
 
   /** Distinct window-identity index of a corpus — the persistable side
     * of [[cutSpansIncremental]]: build once over the already-ingested
-    * base (one input-sized distinct), store as parquet, and each
-    * incremental batch cuts against it without re-hashing the base.
-    * Columns (wlo, whi); `hash128` must match the batch-side setting
-    * (the high half is all-zero otherwise, exactly like the operators).
+    * base (the span pipeline's front half and one input-sized distinct),
+    * store as parquet, and each incremental batch cuts against it without
+    * re-hashing the base. Columns (wlo, whi); `hash128` must match the
+    * batch-side setting (the high half is all-zero otherwise, exactly
+    * like the operators).
     *
     * When PERSISTING the index, also write a [[SpanIndexMeta]] sidecar
     * (windowTokens, hash128, the base's max doc id, window count) the
@@ -1384,31 +1139,10 @@ object Dedupe {
       df: DataFrame,
       textCol: String,
       windowTokens: Int = 20,
-      hash128: Boolean = false): DataFrame = {
-    require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
-    val session = df.sparkSession
-    import session.implicits._
-    val w = windowTokens
-    // persist the kernel output before the sizing probe: the count and
-    // the distinct both read the cache, so the corpus tokenizes+hashes
-    // exactly ONCE (the span family's hash-once discipline)
-    val wins = df
-      .select(col(textCol).cast("string")).as[String]
-      .flatMap { text =>
-        val (lo, hi) = windowHashes128(text, w, hash128, loBits = 64)
-        lo.indices.iterator.map(i => (lo(i), hi(i)))
-      }
-      .toDF("wlo", "whi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sumWins = wins.agg(count(lit(1))).as[Long].head()
-      val sized = Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes)
-      val idx = GraftBridge.rebind(wins, sized).distinct().cache()
-      SessionCaches.track(idx)
-      idx.count()
-      GraftBridge.rebind(idx, session)
-    } finally wins.unpersist()
-  }
+      hash128: Boolean = false): DataFrame =
+    withSpanWindows(df, lit(0L), col(textCol), windowTokens, hash128,
+        loBits = 64, keepText = false)(
+      _.exploded.select(col("wlo"), col("whi")).distinct())
 
   /** Incremental keep-earliest span cut — the production REFRESH shape
     * of [[cutDuplicateSpans]]: tonight's `batch` of new documents is
@@ -1428,10 +1162,10 @@ object Dedupe {
     * re-hash. Same `hash128` discipline as the batch cut.
     *
     * @param baseMaxDocId when set, the append-only contract is ENFORCED:
-    *   the batch's smallest id must exceed it (one cheap aggregate over
-    *   the already-cached batch kernel) or the call fails loudly —
-    *   overlapping ids would make "in the base index" no longer imply
-    *   "earlier", silently breaking keep-earliest. The span-index
+    *   the batch's smallest id must exceed it (read from the span
+    *   pipeline's sizing aggregate — no extra pass) or the call fails
+    *   loudly — overlapping ids would make "in the base index" no longer
+    *   imply "earlier", silently breaking keep-earliest. The span-index
     *   sidecar ([[SpanIndexMeta]]) persists this value; pass None only
     *   when the caller proves the invariant some other way.
     */
@@ -1444,69 +1178,36 @@ object Dedupe {
       broadcastDupLimit: Long = 4L * 1000 * 1000,
       hash128: Boolean = false,
       baseMaxDocId: Option[Long] = None): DataFrame = {
-    require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     // the consumed index is hot: refresh its LRU position so a loop of
     // incremental cuts never lets its own cold results evict it
     SessionCaches.touch(baseWindows)
-    val session = batch.sparkSession
-    import session.implicits._
-    val w = windowTokens
-    val docWins0 = batch
-      .select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val (lo, hi) = windowHashes128(text, w, hash128, loBits = 64)
-        (id, text, lo, hi)
-      }
-      .toDF("id", "text", "wlo", "whi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // fold the contract check into the sizing aggregate — one pass over
-    // the cached kernel, no extra scan
-    val sumWins = try {
-      val statsRow = docWins0
-        .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)),
-          min(col("id")))
-        .head()
-      baseMaxDocId.foreach { maxBase =>
-        if (!statsRow.isNullAt(1)) {
-          val minBatch = statsRow.getLong(1)
-          require(minBatch > maxBase,
-            s"append-only id contract violated: batch min doc id $minBatch " +
-              s"<= base corpus max doc id $maxBase. cutSpansIncremental is " +
-              "exactly keep-earliest ONLY when every base id < every batch " +
-              "id; cut the union with cutDuplicateSpans instead, or re-id " +
-              "the batch above the base range.")
-        }
-      }
-      statsRow.getLong(0)
-    } catch {
-      case e: Throwable => docWins0.unpersist(); throw e
+    withSpanWindows(batch, col(idCol), col(textCol), windowTokens, hash128,
+        loBits = 64, keepText = true) { wins =>
+      for (maxBase <- baseMaxDocId; minBatch <- wins.minId)
+        require(minBatch > maxBase,
+          s"append-only id contract violated: batch min doc id $minBatch " +
+            s"<= base corpus max doc id $maxBase. cutSpansIncremental is " +
+            "exactly keep-earliest ONLY when every base id < every batch " +
+            "id; cut the union with cutDuplicateSpans instead, or re-id " +
+            "the batch above the base range.")
+      // batch-local window stats, then one lookup join into the base
+      // index: in-base windows keep NOTHING in the batch (the (-1, -1)
+      // sentinel matches no real occurrence), batch-only windows with
+      // n > 1 keep their batch-earliest
+      val firsts = wins.exploded
+        .groupBy(col("wlo"), col("whi"))
+        .agg(count(lit(1)).as("n"),
+          min(struct(col("id"), col("pos"))).as("f"))
+        .join(baseWindows.select(col("wlo"), col("whi"))
+          .withColumn("in_base", lit(true)), Seq("wlo", "whi"), "left")
+        .filter(col("in_base").isNotNull || col("n") > 1)
+        .select(col("wlo"), col("whi"),
+          when(col("in_base").isNotNull, lit(-1L))
+            .otherwise(col("f.id")).as("f_id"),
+          when(col("in_base").isNotNull, lit(-1L))
+            .otherwise(col("f.pos")).as("f_pos"))
+      cutRows(wins, firsts, broadcastDupLimit, windowTokens)
     }
-    val docWins = GraftBridge.rebind(docWins0,
-      Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes))
-    val exploded = docWins
-      .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
-      .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
-        col("col.wlo").as("wlo"), col("col.whi").as("whi"))
-    // batch-local window stats, then one lookup join into the base
-    // index: in-base windows keep NOTHING in the batch (the (-1, -1)
-    // sentinel matches no real occurrence), batch-only windows with
-    // n > 1 keep their batch-earliest
-    val batchAgg = exploded
-      .groupBy(col("wlo"), col("whi"))
-      .agg(count(lit(1)).as("n"),
-        min(struct(col("id"), col("pos"))).as("f"))
-    val dupFirsts = batchAgg
-      .join(baseWindows.select(col("wlo"), col("whi"))
-        .withColumn("in_base", lit(true)), Seq("wlo", "whi"), "left")
-      .filter(col("in_base").isNotNull || col("n") > 1)
-      .select(col("wlo"), col("whi"),
-        when(col("in_base").isNotNull, lit(-1L))
-          .otherwise(col("f.id")).as("f_id"),
-        when(col("in_base").isNotNull, lit(-1L))
-          .otherwise(col("f.pos")).as("f_pos"))
-    cutFromDupFirsts(session, docWins, exploded, dupFirsts, w,
-      broadcastDupLimit)
   }
 
   /** Provenance of the spans [[cutDuplicateSpans]] removes — the
@@ -1520,10 +1221,9 @@ object Dedupe {
     * different places; the first window's keeper is the deterministic
     * anchor, and the oracle implements the same rule via arg_min).
     *
-    * Same two-strategy discipline as the detector/cut: the duplicated-
-    * hash → earliest-occurrence map broadcasts when bounded (narrow
-    * flag-and-merge over the cached window arrays), else the redundant
-    * occurrences flow through input-sized hash/id exchanges; both builds
+    * The cut's span pipeline, with each redundant position's keeper
+    * carried through the redundancy build (in the broadcast map's values,
+    * or beside the position in the shuffle fold); both builds
     * spec-pinned identical. `hash128` as in [[duplicateSpans]].
     *
     * @return materialized, cache-tracked ([[SessionCaches]]).
@@ -1535,112 +1235,231 @@ object Dedupe {
       windowTokens: Int = 20,
       broadcastDupLimit: Long = 4L * 1000 * 1000,
       hash128: Boolean = false): DataFrame = {
-    require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     val session = df.sparkSession
     import session.implicits._
     val w = windowTokens
+    withSpanWindows(df, col(idCol), col(textCol), w, hash128, loBits = 64,
+        keepText = false) { wins =>
+      redundantWindows(wins, dupFirsts(wins.exploded), broadcastDupLimit,
+          keepers = true)(r => mergeRuns(r.pos, w).map { case (k, st, tok) =>
+        (r.id, st, tok, r.keepDoc(k), r.keepPos(k))
+      })
+        .toDF("doc_id", "span_start", "span_tokens", "kept_doc", "kept_pos")
+    }
+  }
+
+  /** The span pipeline's window relations: `docs` is one row per
+    * document `(id, [text,] wlo, whi)` — text only when `withText` — and
+    * `exploded` one row per window `(id, pos, wlo, whi)` with 1-based
+    * `pos`. The shuffle build reads only `docs`' id and text, so a finish
+    * without the front half may pass `docs` as `(id, text)`. `minId` is
+    * the smallest document id (None when unknown or the input is empty).
+    */
+  private final case class SpanWindows(
+      docs: DataFrame,
+      exploded: DataFrame,
+      withText: Boolean,
+      minId: Option[Long])
+
+  /** One document's redundant windows, what the span pipeline's back half
+    * hands each operator's finish: 1-based window positions in ascending
+    * order and, when asked for, each position's kept occurrence
+    * (doc, pos); `text` is the document's text when the window relation
+    * carries it, else null.
+    */
+  private final case class RedundantWindows(
+      id: Long,
+      text: String,
+      pos: Array[Int],
+      keepDoc: Array[Long],
+      keepPos: Array[Long])
+
+  /** The span pipeline's front half: hash `df`'s documents into their
+    * window arrays once (persisted MEMORY_AND_DISK), probe Σ windows and
+    * the smallest id in one aggregate over the cache, re-bind into the
+    * session sized for Σ windows rows, and run `finish` there. Its result
+    * is materialized and cache-tracked, then re-bound to `df`'s session;
+    * the window cache is released also when anything here fails.
+    */
+  private def withSpanWindows(
+      df: DataFrame,
+      id: Column,
+      text: Column,
+      w: Int,
+      hash128: Boolean,
+      loBits: Int,
+      keepText: Boolean)(
+      finish: SpanWindows => DataFrame): DataFrame = {
+    require(w >= 1, s"windowTokens must be >= 1, got $w")
+    val session = df.sparkSession
+    import session.implicits._
     val docWins0 = df
-      .select(col(idCol).cast("long"), col(textCol).cast("string"))
+      .select(id.cast("long"), text.cast("string"))
       .as[(Long, String)]
-      .map { case (id, text) =>
-        val (lo, hi) = windowHashes128(text, w, hash128, loBits = 64)
-        (id, lo, hi)
+      .map { case (i, t) =>
+        // the high half is all-zero in 64-bit mode, so (wlo, whi)
+        // grouping degenerates to plain 64-bit grouping with no branch
+        // in the plan
+        val (lo, hi) = windowHashes128(t, w, hash128, loBits)
+        (i, if (keepText) t else null, lo, hi)
       }
-      .toDF("id", "wlo", "whi")
+      .toDF("id", "text", "wlo", "whi")
+      .select((if (keepText) Seq("id", "text", "wlo", "whi")
+        else Seq("id", "wlo", "whi")).map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sumWins = docWins0
-      .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)))
-      .as[Long].head()
-    val docWins = GraftBridge.rebind(docWins0,
-      Conf.sizedSession(session, sumWins, Conf.SpanRowShuffleBytes))
     try {
+      val stats = docWins0
+        .agg(coalesce(sum(size(col("wlo")).cast("long")), lit(0L)),
+          min(col("id")))
+        .head()
+      val docWins = GraftBridge.rebind(docWins0,
+        Conf.sizedSession(session, stats.getLong(0), Conf.SpanRowShuffleBytes))
       val exploded = docWins
         .select(col("id"), posexplode(arrays_zip(col("wlo"), col("whi"))))
         .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
           col("col.wlo").as("wlo"), col("col.whi").as("whi"))
-      val dupFirsts = exploded
-        .groupBy(col("wlo"), col("whi"))
-        .agg(count(lit(1)).as("n"),
-          min(struct(col("id"), col("pos"))).as("f"))
-        .filter(col("n") > 1)
-        .select(col("wlo"), col("whi"),
-          col("f.id").as("f_id"), col("f.pos").as("f_pos"))
-      val spans = {
-        val nDup = dupFirsts.count()
-        if (broadcastDupLimit > 0 && nDup <= broadcastDupLimit) {
-          val firsts = dupFirsts.as[(Long, Long, Long, Long)].collect()
-          val m = new LongPairMap(firsts.length * 2 + 16, withValues = true)
-          firsts.foreach { case (a, b, d, p) => m.put(a, b, d, p) }
-          val bcMap = session.sparkContext.broadcast(m)
-          docWins
-            .as[(Long, Array[Long], Array[Long])]
-            .flatMap { case (id, lo, hi) =>
-              val fm = bcMap.value
-              val pos = new scala.collection.mutable.ArrayBuffer[Int]()
-              val keepD = new scala.collection.mutable.ArrayBuffer[Long]()
-              val keepP = new scala.collection.mutable.ArrayBuffer[Long]()
-              var i = 0
-              while (i < lo.length) {
-                val s = fm.indexOf(lo(i), hi(i))
-                if (s >= 0 &&
-                  !(fm.val1At(s) == id && fm.val2At(s) == i + 1L)) {
-                  pos += (i + 1)
-                  keepD += fm.val1At(s); keepP += fm.val2At(s)
-                }
-                i += 1
-              }
-              mergeRunsWithKeeper(id, pos.toArray, keepD.toArray,
-                keepP.toArray, w)
-            }
-        } else {
-          exploded
-            .join(dupFirsts, Seq("wlo", "whi"))
-            .filter(!(col("id") === col("f_id") && col("pos") === col("f_pos")))
-            .groupBy(col("id"))
-            .agg(collect_list(struct(col("pos").as("_1"), col("f_id").as("_2"),
-              col("f_pos").as("_3"))).as("rs"))
-            .as[(Long, Array[(Long, Long, Long)])]
-            .flatMap { case (id, rs) =>
-              val sorted = rs.sortBy(_._1)
-              mergeRunsWithKeeper(id, sorted.map(_._1.toInt),
-                sorted.map(_._2), sorted.map(_._3), w)
-            }
-        }
-      }
-        .toDF("doc_id", "span_start", "span_tokens", "kept_doc", "kept_pos")
-        .cache()
-      SessionCaches.track(spans)
-      spans.count()
-      GraftBridge.rebind(spans, session)
-    } finally docWins.unpersist() // also on failure — never pin the kernel cache
+      val result = finish(SpanWindows(docWins, exploded, keepText,
+        if (stats.isNullAt(1)) None else Some(stats.getLong(1)))).cache()
+      SessionCaches.track(result)
+      result.count()
+      GraftBridge.rebind(result, session)
+    } finally docWins0.unpersist()
   }
 
-  /** [[mergeRuns]] with the keeper payload: positions (1-based, sorted
-    * ascending, parallel to keeper arrays) merge into maximal consecutive
-    * runs; each run reports its FIRST window's keeper.
+  /** Duplicated windows with their earliest occurrence
+    * `(wlo, whi, f_id, f_pos)` — min of the (doc, pos) struct is the
+    * lexicographic minimum. The keep-earliest relation of the cut and its
+    * provenance. */
+  private def dupFirsts(exploded: DataFrame): DataFrame = exploded
+    .groupBy(col("wlo"), col("whi"))
+    .agg(count(lit(1)).as("n"), min(struct(col("id"), col("pos"))).as("f"))
+    .filter(col("n") > 1)
+    .select(col("wlo"), col("whi"),
+      col("f.id").as("f_id"), col("f.pos").as("f_pos"))
+
+  /** The span pipeline's back half: per-document redundant window
+    * positions from a duplicated-window relation `dup`, handed to the
+    * operator's narrow `finish` inside the same typed pass.
+    *
+    * `dup` is `(wlo, whi)` — every occurrence of those windows is
+    * redundant — or `(wlo, whi, f_id, f_pos)`, where (f_id, f_pos) is the
+    * occurrence to KEEP, or the (-1, -1) sentinel for "every occurrence
+    * here is redundant" (a window already in an incremental base).
+    * `keepers` carries each position's (f_id, f_pos) into the result.
+    *
+    * Rows: every document of `wins.docs` under the broadcast build, and
+    * under the shuffle build when `wins.withText` (the cut needs every
+    * document back); otherwise only documents with a redundant window.
     */
-  private def mergeRunsWithKeeper(
-      id: Long,
-      pos: Array[Int],
-      keepDoc: Array[Long],
-      keepPos: Array[Long],
-      w: Int): Iterator[(Long, Long, Long, Long, Long)] = {
-    if (pos.isEmpty) Iterator.empty
-    else {
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Long)]()
-      var startIdx = 0
-      var i = 1
-      while (i <= pos.length) {
-        if (i == pos.length || pos(i) != pos(i - 1) + 1) {
-          out += ((id, pos(startIdx).toLong,
-            (pos(i - 1) - pos(startIdx) + w).toLong,
-            keepDoc(startIdx), keepPos(startIdx)))
-          if (i < pos.length) startIdx = i
+  private def redundantWindows[T: Encoder](
+      wins: SpanWindows,
+      dup: DataFrame,
+      broadcastDupLimit: Long,
+      keepers: Boolean)(
+      finish: RedundantWindows => Iterator[T]): Dataset[T] = {
+    val session = wins.docs.sparkSession
+    import session.implicits._
+    val keyed = dup.columns.contains("f_id")
+    val text = if (wins.withText) col("text") else lit(null).cast("string")
+    // the force-shuffle sentinel skips the size probe
+    val nDup = if (broadcastDupLimit > 0) dup.count() else Long.MaxValue
+    if (nDup <= broadcastDupLimit) {
+      // value-free (keys only, half the map) when there is no keeper
+      val map = new LongPairMap(nDup.toInt * 2 + 16, withValues = keyed)
+      if (keyed)
+        dup.select(col("wlo"), col("whi"), col("f_id"), col("f_pos"))
+          .as[(Long, Long, Long, Long)].collect()
+          .foreach { case (a, b, d, p) => map.put(a, b, d, p) }
+      else
+        dup.select(col("wlo"), col("whi")).as[(Long, Long)].collect()
+          .foreach { case (a, b) => map.put(a, b, 0L, 0L) }
+      val bcMap = session.sparkContext.broadcast(map)
+      wins.docs
+        .select(col("id"), text, col("wlo"), col("whi"))
+        .as[(Long, String, Array[Long], Array[Long])]
+        .flatMap { case (id, t, lo, hi) =>
+          val m = bcMap.value
+          // primitive builders: no boxing, no array until the first hit
+          val pos = new scala.collection.mutable.ArrayBuilder.ofInt
+          val keepD = new scala.collection.mutable.ArrayBuilder.ofLong
+          val keepP = new scala.collection.mutable.ArrayBuilder.ofLong
+          var i = 0
+          while (i < lo.length) {
+            val s = m.indexOf(lo(i), hi(i))
+            if (s >= 0 &&
+              !(keyed && m.val1At(s) == id && m.val2At(s) == i + 1L)) {
+              pos += (i + 1)
+              if (keepers) { keepD += m.val1At(s); keepP += m.val2At(s) }
+            }
+            i += 1
+          }
+          finish(RedundantWindows(id, t, pos.result(), keepD.result(),
+            keepP.result()))
         }
-        i += 1
-      }
-      out.iterator
+    } else {
+      val hits = wins.exploded.join(dup, Seq("wlo", "whi"))
+      val perDoc = (if (keyed)
+        hits.filter(!(col("id") === col("f_id") && col("pos") === col("f_pos")))
+      else hits)
+        .groupBy(col("id"))
+        .agg((if (keepers) collect_list(struct(col("pos").as("_1"),
+          col("f_id").as("_2"), col("f_pos").as("_3")))
+        else collect_list(col("pos"))).as("ps"))
+      val rows = (
+        if (wins.withText) wins.docs.select(col("id"), col("text"))
+          .join(perDoc, Seq("id"), "left")
+        else perDoc.withColumn("text", text)
+      ).select(col("id"), col("text"), col("ps"))
+      if (keepers)
+        rows.as[(Long, String, Array[(Long, Long, Long)])]
+          .flatMap { case (id, t, ps) =>
+            val sorted = Option(ps).getOrElse(Array.empty[(Long, Long, Long)])
+              .sortBy(_._1)
+            finish(RedundantWindows(id, t, sorted.map(_._1.toInt),
+              sorted.map(_._2), sorted.map(_._3)))
+          }
+      else
+        rows.as[(Long, String, Array[Long])]
+          .flatMap { case (id, t, ps) =>
+            finish(RedundantWindows(id, t,
+              Option(ps).fold(Array.emptyIntArray)(_.map(_.toInt).sorted),
+              Array.emptyLongArray, Array.emptyLongArray))
+          }
     }
+  }
+
+  /** The cut's back half and narrow finish: each document's text rebuilt
+    * without the tokens its redundant windows cover. */
+  private def cutRows(
+      wins: SpanWindows,
+      dup: DataFrame,
+      broadcastDupLimit: Long,
+      w: Int): DataFrame = {
+    val session = wins.docs.sparkSession
+    import session.implicits._
+    redundantWindows(wins, dup, broadcastDupLimit, keepers = false)(r =>
+      Iterator.single(rebuildCutFromPositions(w, r.id, r.text, r.pos)))
+      .toDF("doc_id", "n_tokens", "cut_tokens", "text_cut")
+  }
+
+  /** Merge sorted 1-based redundant-window positions into maximal runs
+    * of consecutive positions: (index of the run's first position in
+    * `sorted`, span_start, span_tokens) with
+    * span_tokens = run_length + w − 1.
+    */
+  private def mergeRuns(sorted: Array[Int], w: Int): Iterator[(Int, Long, Long)] = {
+    val out = new scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
+    var start = 0
+    var i = 1
+    while (i <= sorted.length) {
+      if (i == sorted.length || sorted(i) != sorted(i - 1) + 1) {
+        out += ((start, sorted(start).toLong,
+          (sorted(i - 1) - sorted(start) + w).toLong))
+        start = i
+      }
+      i += 1
+    }
+    out.iterator
   }
 
   /** The span family's tokenization (shared with the gram operators):
@@ -1731,6 +1550,12 @@ object Dedupe {
     * (`loBits`, as in [[duplicateSpansImpl]]) — StreamSpansSpec's
     * lo-collision proof replays the finish at the same masked width the
     * stream ran at.
+    *
+    * The span pipeline's shuffle redundancy build and cut finish, without
+    * its front half: no cache, no sizing probe and no broadcast decision,
+    * so the finish runs as one lazy plan (a shuffle join) with no eager
+    * action of its own. The windows are hashed by a flatMap straight to
+    * rows, the text re-read from `df` for the rewrite.
     */
   private[graft] def cutFromFirstOccurrencesImpl(
       df: DataFrame,
@@ -1743,85 +1568,43 @@ object Dedupe {
     val session = df.sparkSession
     import session.implicits._
     val w = windowTokens
-    val h128 = hash128
-    val lb = loBits
-    val base = df
-      .select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-    val exploded = base
+    val docs = df.select(col(idCol).cast("long").as("id"),
+      col(textCol).cast("string").as("text"))
+    val exploded = docs.as[(Long, String)]
       .flatMap { case (id, text) =>
-        val (lo, hi) = windowHashes128(text, w, h128, lb)
+        val (lo, hi) = windowHashes128(text, w, hash128, loBits)
         lo.indices.iterator.map(i => (lo(i), hi(i), id, (i + 1).toLong))
       }
       .toDF("wlo", "whi", "id", "pos")
-    val redundant = exploded
-      .join(firsts, Seq("wlo", "whi"))
-      .filter(!(col("id") === col("f_id") && col("pos") === col("f_pos")))
-      .groupBy(col("id"))
-      .agg(collect_list(col("pos")).as("ps"))
-    base.toDF("id", "text")
-      .join(redundant, Seq("id"), "left")
-      .select(col("id"), col("text"), col("ps"))
-      .as[(Long, String, Array[Long])]
-      .map { case (id, text, ps) =>
-        rebuildCutFromPositions(w, id, text,
-          Option(ps).getOrElse(Array.emptyLongArray))
-      }
-      .toDF("doc_id", "n_tokens", "cut_tokens", "text_cut")
+    cutRows(SpanWindows(docs, exploded, withText = true, minId = None),
+      firsts, broadcastDupLimit = 0L, w)
   }
 
-  /** Cut kernel of [[cutDuplicateSpans]]: drop every token covered by a
-    * redundant window (flag per window position), rebuild the normalized
-    * text from the survivors. Top-level (not nested) so executor closures
-    * reference it through the module, keeping them serializable.
+  /** The cut kernel: drop every token covered by a redundant window
+    * (1-based window POSITIONS, sorted or not) and rebuild the normalized
+    * text from the survivors. The window count is words.length − w + 1,
+    * and the words are tokenized here anyway, so no caller re-runs the
+    * window-hash kernel to size a flag array. Top-level (not nested) so
+    * executor closures reference it through the module, keeping them
+    * serializable.
     */
-  private[operators] def rebuildCut(
+  private def rebuildCutFromPositions(
       w: Int,
       id: Long,
       text: String,
-      redundant: Array[Boolean]): (Long, Long, Long, String) = {
-    val words = tokenizeWords(text)
-    val cut = new Array[Boolean](words.length)
-    var i = 0
-    while (i < redundant.length) {
-      if (redundant(i)) {
-        var t = i
-        while (t < i + w) { cut(t) = true; t += 1 }
-      }
-      i += 1
-    }
-    rebuildFromFlags(id, words, cut)
-  }
-
-  /** [[rebuildCut]] from 1-based redundant-window POSITIONS — the shuffle
-    * builds land here so they never re-run the window-hash kernel just to
-    * size the flag array (the window count is words.length − w + 1, and
-    * the words are tokenized here anyway).
-    */
-  private[operators] def rebuildCutFromPositions(
-      w: Int,
-      id: Long,
-      text: String,
-      redundantPos: Array[Long]): (Long, Long, Long, String) = {
+      redundantPos: Array[Int]): (Long, Long, Long, String) = {
     val words = tokenizeWords(text)
     val nWins = math.max(0, words.length - w + 1)
     val cut = new Array[Boolean](words.length)
     var j = 0
     while (j < redundantPos.length) {
-      val i = (redundantPos(j) - 1).toInt
+      val i = redundantPos(j) - 1
       if (i >= 0 && i < nWins) {
         var t = i
         while (t < i + w) { cut(t) = true; t += 1 }
       }
       j += 1
     }
-    rebuildFromFlags(id, words, cut)
-  }
-
-  private def rebuildFromFlags(
-      id: Long,
-      words: Array[String],
-      cut: Array[Boolean]): (Long, Long, Long, String) = {
     val kept = new StringBuilder
     var nCut = 0L
     var i = 0
@@ -1834,27 +1617,6 @@ object Dedupe {
       i += 1
     }
     (id, words.length.toLong, nCut, kept.toString)
-  }
-
-  /** Merge sorted 1-based duplicated-window positions into maximal runs:
-    * (span_start, span_tokens) with span_tokens = run_length + w − 1.
-    */
-  private def mergeRuns(sorted: Array[Int], w: Int): Array[(Long, Long)] = {
-    if (sorted.isEmpty) Array.empty
-    else {
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      var start = sorted(0)
-      var prev = sorted(0)
-      var i = 1
-      while (i <= sorted.length) {
-        if (i == sorted.length || sorted(i) != prev + 1) {
-          out += ((start.toLong, (prev - start + w).toLong))
-          if (i < sorted.length) { start = sorted(i); prev = sorted(i) }
-        } else prev = sorted(i)
-        i += 1
-      }
-      out.toArray
-    }
   }
 
   // --------------------------------------------------------------- simhash

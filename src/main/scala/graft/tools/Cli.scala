@@ -785,7 +785,7 @@ object Cli {
         s"expected (doc_id, text) columns, got ${docs.columns.mkString(", ")}")
       val pairs = graft.operators.Dedupe
         .containmentPairs(docs, "doc_id", "text", k = 3,
-          thresholdBp = thresholdBp, usePrefixFilter = true)
+          thresholdBp = thresholdBp)
         .cache()
       pairs.orderBy(org.apache.spark.sql.functions.col("cont_a_bp").desc,
         org.apache.spark.sql.functions.col("cont_b_bp").desc)

@@ -334,7 +334,7 @@ object ScaleRun {
     def timeShared(): (Map[String, Double], Map[String, Double]) = {
       var s1 = Map.empty[String, Double]
       var sN = Map.empty[String, Double]
-      for (attempt <- 0 until attempts if sharedSelected.nonEmpty) {
+      for (_ <- 0 until attempts if sharedSelected.nonEmpty) {
         // release before EVERY attempt, including the first: attempt 0
         // must not find either side's relations warm, or min-of-N could
         // pick a warm attempt and skew the shared-build ratios

@@ -208,7 +208,6 @@ object StreamRestartRun {
     println(s"[restart] state backend: ${graft.streaming.StateBackend.name}")
     // after the provider conf: the warmed provider is the measured one
     Harness.warmUp(spark, base)
-    import spark.implicits._
 
     val chunk: DataFrame => DataFrame = df => df
       .select(graft.plans.CdcChunks.cdc_chunks(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Driver-side helpers behind the catalog: footer-metadata row counts. */
 class QueriesHelpersSpec extends SparkSpec {

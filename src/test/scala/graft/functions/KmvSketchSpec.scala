@@ -14,7 +14,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("estimate within 10% for 100k distinct values at k=1024") {
-    import spark.implicits._
     val n = 100000L
     val df = spark.range(n).select(xxhash64(col("id")).as("hash"))
     val est = df.agg(KmvSketch.kmv_distinct(col("hash"), k = 1024)).head().getLong(0)
@@ -24,7 +23,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("stable under repartitioning (merge correctness)") {
-    import spark.implicits._
     val df = spark.range(50000L).select(xxhash64(col("id")).as("hash"))
     val a = df.agg(KmvSketch.kmv_distinct(col("hash"))).head().getLong(0)
     val b = df.repartition(17).agg(KmvSketch.kmv_distinct(col("hash"))).head().getLong(0)
@@ -32,7 +30,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("duplicates don't inflate the estimate") {
-    import spark.implicits._
     val distinct = spark.range(20000L).select(xxhash64(col("id")).as("hash"))
     val duplicated = distinct.union(distinct).union(distinct)
     val a = distinct.agg(KmvSketch.kmv_distinct(col("hash"))).head().getLong(0)
@@ -41,7 +38,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("jaccard estimate from samples: exact below k, accurate above") {
-    import spark.implicits._
     // sets A = [0, 30000), B = [15000, 45000): true jaccard = 15000/45000 = 1/3
     val a = spark.range(0, 30000).select(xxhash64(col("id")).as("h"))
       .agg(KmvSketch.kmv_sample(col("h"))).head().getSeq[Long](0).toArray
@@ -71,7 +67,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("grouped aggregation works (one sketch per group)") {
-    import spark.implicits._
     val df = spark.range(30000L)
       .select((col("id") % 3).as("g"), xxhash64(col("id")).as("hash"))
     val rows = df.groupBy(col("g")).agg(KmvSketch.kmv_distinct(col("hash")).as("est"))
@@ -88,7 +83,6 @@ class KmvSketchSpec extends SparkSpec {
     * (122× saturated), bound 5/√4095 ≈ 7.8 %.
     */
   test("saturated error bound: 500k distinct at k=4096 within 5·rsd") {
-    import spark.implicits._
     val n = 500000L
     val k = 4096
     val df = spark.range(n).select(xxhash64(col("id")).as("hash"))

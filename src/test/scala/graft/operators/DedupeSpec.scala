@@ -53,7 +53,7 @@ class DedupeSpec extends SparkSpec {
       numHashes = 64, bands = 16, threshold = 0.3).collect()
     unchanged()
     Dedupe.containmentPairs(docs, "doc_id", "text", k = 3,
-      thresholdBp = 9000L, usePrefixFilter = true).collect()
+      thresholdBp = 9000L).collect()
     unchanged()
     Dedupe.simhashPairs(docs, "doc_id", "text").collect()
     unchanged()
@@ -125,35 +125,49 @@ class DedupeSpec extends SparkSpec {
     assert(pruned.count() == 0)
   }
 
-  test("ngramJaccardPairs: prefix-filtered path is output-identical") {
+  /** Brute-force gram overlaps, the pair operators' reference: every
+    * pair id_a < id_b sharing a gram that occurs in at most `cap` docs,
+    * as (id_a, id_b, n_common over capped grams, na, nb over ALL grams). */
+  private def pairOverlaps(docs: Seq[(Long, String)], k: Int,
+      cap: Long): Seq[(Long, Long, Long, Long, Long)] = {
+    val full = docs.map { case (id, t) => (id, Dedupe.wordGramHashes(t, k).toSet) }
+    val docFreq = full.flatMap(_._2).groupBy(identity).map { case (g, o) => g -> o.size }
+    val capped = full.map { case (id, gs) => (id, gs, gs.filter(docFreq(_) <= cap)) }
+    for {
+      (a, ga, ca) <- capped
+      (b, gb, cb) <- capped
+      if a < b
+      nc = (ca & cb).size
+      if nc > 0
+    } yield (a, b, nc.toLong, ga.size.toLong, gb.size.toLong)
+  }
+
+  test("ngramJaccardPairs: matches a brute-force set-Jaccard reference") {
     import spark.implicits._
     // corpus engineered with HOT grams (a shared boilerplate tail on every
-    // doc — the distribution the prefix filter exists for) plus exact and
-    // partial overlaps, odd sizes, and a sub-threshold pair
+    // doc) plus exact and partial overlaps, odd sizes, and a sub-threshold
+    // pair
     val boiler = "copyright footer all rights reserved contact us terms"
-    val docs = (0L until 30L).map { i =>
+    val rows = (0L until 30L).map { i =>
       val body =
         if (i % 7 == 0) "identical body shared by the septuple group here"
         else s"unique body number $i with words w${i}a w${i}b w${i}c w${i}d"
       (i, s"$body $boiler")
-    }.toDF("doc_id", "text")
-    def run(prefix: Boolean, cap: Long, bcLimit: Long = 4L * 1000 * 1000) =
-      Dedupe
+    }
+    val docs = rows.toDF("doc_id", "text")
+    for (cap <- Seq(Long.MaxValue, 10L)) {
+      val got = Dedupe
         .ngramJaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.3,
-          maxGramFreq = cap, usePrefixFilter = prefix,
-          broadcastGramDfLimit = bcLimit)
+          maxGramFreq = cap)
         .collect()
         .map(r => ((r.getLong(0), r.getLong(1)),
           (r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
-    for (cap <- Seq(Long.MaxValue, 10L)) {
-      val plain = run(prefix = false, cap)
-      val filtered = run(prefix = true, cap)
-      // bcLimit = 0 forces the shuffle (window-df) perDoc build — the
-      // 100 TB path the small fixture would otherwise never exercise
-      val shuffled = run(prefix = true, cap, bcLimit = 0L)
-      assert(plain.nonEmpty, "test corpus must produce pairs")
-      assert(filtered == plain, s"broadcast path diverges at cap=$cap")
-      assert(shuffled == plain, s"shuffle path diverges at cap=$cap")
+      val want = pairOverlaps(rows, k = 3, cap).map { case (a, b, nc, na, nb) =>
+        (a, b) -> (nc.toDouble / (na + nb - nc).toDouble,
+          nc.toDouble / na.toDouble, nc.toDouble / nb.toDouble)
+      }.filter(_._2._1 >= 0.3).toMap
+      assert(want.nonEmpty, "test corpus must produce pairs")
+      assert(got == want, s"diverges from the reference at cap=$cap")
     }
   }
 
@@ -180,7 +194,7 @@ class DedupeSpec extends SparkSpec {
     assert(jac.count() == 0, "Jaccard at 0.9 must NOT see the excerpt pair")
   }
 
-  test("containmentPairs: asymmetric prefix-filtered path is output-identical") {
+  test("containmentPairs: matches a brute-force set-containment reference, both df builds") {
     import spark.implicits._
     // hot boilerplate tail + excerpt pairs in BOTH directions (excerpt id
     // above and below its source id, so both least/greatest normalizations
@@ -193,31 +207,36 @@ class DedupeSpec extends SparkSpec {
     }
     def halfOf(i: Long) =
       base(i.toInt)._2.split(" ").take(8).mkString(" ")
-    val docs = (base ++ Seq((100L, halfOf(3L)), (101L, halfOf(5L)),
+    val rows = base ++ Seq((100L, halfOf(3L)), (101L, halfOf(5L)),
       // excerpt id BELOW its source: forces the l.id > r.id branch
-      (-7L, halfOf(9L)))).toDF("doc_id", "text")
-    def run(prefix: Boolean, cap: Long, bcLimit: Long = 4L * 1000 * 1000) =
+      (-7L, halfOf(9L)))
+    val docs = rows.toDF("doc_id", "text")
+    def run(cap: Long, bcLimit: Long) =
       Dedupe
         .containmentPairs(docs, "doc_id", "text", k = 3, thresholdBp = 8000L,
-          maxGramFreq = cap, usePrefixFilter = prefix,
-          broadcastGramDfLimit = bcLimit)
+          maxGramFreq = cap, broadcastGramDfLimit = bcLimit)
         .collect()
         .map(r => ((r.getLong(0), r.getLong(1)),
           (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
             r.getLong(6), r.getString(7)))).toMap
     for (cap <- Seq(Long.MaxValue, 10L)) {
-      val plain = run(prefix = false, cap)
-      val filtered = run(prefix = true, cap)
+      val want = pairOverlaps(rows, k = 3, cap).map { case (a, b, nc, na, nb) =>
+        val (bpA, bpB) = (nc * 10000L / na, nc * 10000L / nb)
+        val relation =
+          if (bpA >= 8000L && bpB >= 8000L) "mutual"
+          else if (bpA >= 8000L) "a_in_b" else "b_in_a"
+        (a, b) -> (nc, na, nb, bpA, bpB, relation)
+      }.filter { case (_, v) => math.max(v._4, v._5) >= 8000L }.toMap
+      assert(want.nonEmpty, "test corpus must produce pairs")
+      assert(run(cap, 4L * 1000 * 1000) == want,
+        s"broadcast df build diverges from the reference at cap=$cap")
       // bcLimit = 0 forces the shuffle (window-df) perDoc build — the
-      // 100 TB path the small fixture would otherwise never exercise;
-      // both builds must be row-identical to the direct join
-      val shuffled = run(prefix = true, cap, bcLimit = 0L)
-      assert(plain.nonEmpty, "test corpus must produce pairs")
-      assert(filtered == plain, s"broadcast path diverges at cap=$cap")
-      assert(shuffled == plain, s"shuffle path diverges at cap=$cap")
+      // 100 TB path the small fixture would otherwise never exercise
+      assert(run(cap, 0L) == want,
+        s"shuffle df build diverges from the reference at cap=$cap")
     }
     // the engineered excerpts are present and labeled asymmetric
-    val labels = run(prefix = true, Long.MaxValue)
+    val labels = run(Long.MaxValue, 4L * 1000 * 1000)
     assert(labels((3L, 100L))._6 == "b_in_a")
     assert(labels((-7L, 9L))._6 == "a_in_b")
   }
@@ -375,6 +394,16 @@ class DedupeSpec extends SparkSpec {
       (pl match { case e: ShuffleExchangeExec => Seq(e); case _ => Nil }) ++
         kids.flatMap(exchanges)
     }
+    // the operators return a scan of their materialized result: the
+    // rewrite plan is the plan that filled that cache
+    def rewriteExchanges(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      val cached = df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(cached.size == 1, s"expected one cached result, got $cached")
+      exchanges(cached.head.cacheBuilder.cachedPlan)
+    }
     // under the broadcast limit, the duplicated-hash set / first-occurrence
     // map broadcast and the RESULT relation is one narrow pass over the
     // cached kernel output — the probe and aggregation ran in their own
@@ -383,11 +412,14 @@ class DedupeSpec extends SparkSpec {
       Dedupe.duplicateSpans(docs, "doc_id", "text", windowTokens = 5),
       Dedupe.cutDuplicateSpans(docs, "doc_id", "text", windowTokens = 5,
         hash128 = true))) {
-      df.collect()
-      val ex = exchanges(df.queryExecution.executedPlan)
+      val ex = rewriteExchanges(df)
       assert(ex.isEmpty,
         s"broadcast-path spans plan should be narrow, found exchanges:\n$ex")
     }
+    // control: the forced shuffle build's rewrite does carry exchanges
+    assert(rewriteExchanges(Dedupe.cutDuplicateSpans(docs, "doc_id", "text",
+      windowTokens = 5, broadcastDupLimit = 0L)).nonEmpty)
+    SessionCaches.release()
   }
 
   test("128-bit window identity prevents false cuts under engineered lo collisions") {
@@ -437,6 +469,85 @@ class DedupeSpec extends SparkSpec {
     assert(spans(hash128 = true, loBits = 0, bcLimit = 0L) == spansTruth)
     // and hash128 with an honest lo is a no-op vs the 64-bit result
     assert(cut(hash128 = true, loBits = 64, bcLimit = Long.MaxValue) == truth)
+  }
+
+  /** Spark jobs `body` starts on this thread: its jobs run under a fresh
+    * job group, and a marker job's start (listener events arrive in
+    * order) proves every earlier job has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"span-jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case g if g == group => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "span operator")
+      body
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
+
+  test("span operators start no more Spark jobs than pinned, both builds") {
+    import spark.implicits._
+    val p = "alpha beta gamma delta epsilon zeta eta theta"
+    val docs = Seq(
+      (0L, s"intro words one two $p closing words here"),
+      (1L, s"$p totally different tail of document"),
+      (10L, s"$p and then again $p"),
+      (11L, "no duplicated content in this document at all whatsoever ok"))
+      .toDF("doc_id", "text")
+    val base = docs.filter(col("doc_id") < 10)
+    val batch = docs.filter(col("doc_id") >= 10)
+    var idx: org.apache.spark.sql.DataFrame = null
+    val got = scala.collection.mutable.LinkedHashMap(
+      "windowIndex" -> jobsOf {
+        idx = Dedupe.windowIndex(base, "text", windowTokens = 5)
+      })
+    for ((build, bcLimit) <- Seq("broadcast" -> 4L * 1000 * 1000, "shuffle" -> 0L)) {
+      got(s"duplicateSpans/$build") = jobsOf {
+        Dedupe.duplicateSpans(docs, "doc_id", "text", windowTokens = 5,
+          broadcastDupLimit = bcLimit)
+      }
+      got(s"cutDuplicateSpans/$build") = jobsOf {
+        Dedupe.cutDuplicateSpans(docs, "doc_id", "text", windowTokens = 5,
+          broadcastDupLimit = bcLimit)
+      }
+      got(s"cutSpansIncremental/$build") = jobsOf {
+        Dedupe.cutSpansIncremental(idx, batch, "doc_id", "text",
+          windowTokens = 5, broadcastDupLimit = bcLimit)
+      }
+      got(s"spanProvenance/$build") = jobsOf {
+        Dedupe.spanProvenance(docs, "doc_id", "text", windowTokens = 5,
+          broadcastDupLimit = bcLimit)
+      }
+    }
+    SessionCaches.release()
+    // the counts measured before the span operators shared one front half
+    // and one redundancy build: an added eager action shows up here
+    val pinned = Map(
+      "windowIndex" -> 7,
+      "duplicateSpans/broadcast" -> 11, "duplicateSpans/shuffle" -> 12,
+      "cutDuplicateSpans/broadcast" -> 11, "cutDuplicateSpans/shuffle" -> 13,
+      "cutSpansIncremental/broadcast" -> 13, "cutSpansIncremental/shuffle" -> 15,
+      "spanProvenance/broadcast" -> 11, "spanProvenance/shuffle" -> 12)
+    assert(got.keySet == pinned.keySet)
+    for ((op, n) <- got)
+      assert(n <= pinned(op), s"$op ran $n Spark jobs, pinned at ${pinned(op)}")
   }
 
   test("minhashRecallEval: identity on exact dups, invariants on a border pair") {

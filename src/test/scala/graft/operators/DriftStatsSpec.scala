@@ -91,7 +91,6 @@ class DriftStatsSpec extends SparkSpec {
   }
 
   test("centroidDrift: identical snapshots drift zero") {
-    import spark.implicits._
     val df = spark.range(100).select((col("id") % 5).cast("int").as("label"),
       array((col("id") % 7).cast("float") / 10f,
         (col("id") % 3).cast("float") / 10f).as("embedding"))

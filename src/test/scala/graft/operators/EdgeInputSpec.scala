@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Documented behavior of the round-9 operators on degenerate inputs:
   * empty corpora return empty relations (or a well-defined metrics row),
@@ -23,7 +22,7 @@ class EdgeInputSpec extends SparkSpec {
   test("containmentPairs: empty corpus -> empty pairs, both paths") {
     assert(Dedupe.containmentPairs(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedupe.containmentPairs(emptyDocs, "doc_id", "text",
-      usePrefixFilter = true).count() == 0)
+      broadcastGramDfLimit = 0L).count() == 0)
     SessionCaches.release()
   }
 

@@ -134,7 +134,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("globalShuffleOrder: a bijective, key-pure, partition-invariant permutation") {
-    import spark.implicits._
     val df = spark.range(0, 500).toDF("doc_id")
     val out = Sampling.globalShuffleOrder(df, col("doc_id"), "epoch0")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))

@@ -226,7 +226,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("semanticDedupFromAssignment over exact-k-means buckets collapses planted dups") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val rng = new java.util.Random(13)
     val base = (0L until 60L).map(i => (i, Array.fill(16)(rng.nextFloat() * 2 - 1)))
     def jitter(v: Array[Float], eps: Float) = v.map(_ + eps)
@@ -251,7 +250,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("semanticDedupFromAssignment full-recall refuses a hot bucket, no cache leak") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
     // hostile assignment: every vector lands in one bucket — full-recall
     // mode must refuse up front AND release the assigned/bucketSizes

@@ -48,7 +48,6 @@ class SnapshotDiffSpec extends SparkSpec {
   }
 
   test("scale shape: no exchange ever carries the payload column") {
-    import spark.implicits._
     // wide payload column: the whole point of hashing before the join is
     // that the shuffle moves (key, digest), not this
     val old = spark.range(5000).select(col("id"),

@@ -34,7 +34,6 @@ class StreamDriftSpec extends SparkSpec {
   }
 
   test("state-store counts accumulate across micro-batches (1 file each)") {
-    import spark.implicits._
     // three files, one per micro-batch: every file holds bucket-0 AND
     // bucket-1 rows, so the final per-bucket counts can only be right if
     // the complete-mode aggregation MERGED all three batches' partials

@@ -133,7 +133,6 @@ class StreamLinesSpec extends SparkSpec {
     // batch estimator's partial-agg merge, pinned in LineDedupeSpec)
     // carries the saturated regime. f1 re-ships f0's lines under new
     // doc ids, so the dup mass is real and known: total 3n, distinct 2n.
-    import spark.implicits._
     val n = 20000L
     val k = 1024
     def docsRange(lo: Long, hi: Long, tagBase: Long) =

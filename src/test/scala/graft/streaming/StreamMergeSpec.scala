@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class StreamMergeSpec extends SparkSpec {
   import spark.implicits._

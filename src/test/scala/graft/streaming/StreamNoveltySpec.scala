@@ -2,8 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 class StreamNoveltySpec extends SparkSpec {
 
@@ -32,7 +30,6 @@ class StreamNoveltySpec extends SparkSpec {
   }
 
   test("word state persists across micro-batches (1 file each)") {
-    import spark.implicits._
     // batch 2 re-uses batch 1's words: first-introduction events must NOT
     // re-fire, so doc 3 scores zero new terms — provable only if the
     // word-keyed state survived the batch boundary
@@ -59,7 +56,6 @@ class StreamNoveltySpec extends SparkSpec {
   }
 
   test("out-of-id-order arrival: improvements re-emit, fold lands on batch MIN") {
-    import spark.implicits._
     // batch 1 carries the HIGHER ids (docs 3, 4); batch 2 the lower ones
     // (1, 2) re-using batch 1's words — the old never-revise state would
     // keep first_id 3/4 and silently corrupt the novelty relation

@@ -289,7 +289,6 @@ class StreamSpansSpec extends SparkSpec {
     // same KmvSketch). Every doc carries 9 id-unique words → 5 distinct
     // windows at w=5; f1 re-ships f0's texts, so total 15n windows with
     // 10n distinct.
-    import spark.implicits._
     val n = 2000L
     val w = 5
     val k = 256

@@ -17,7 +17,6 @@ import org.scalacheck.rng.Seed
   * with its documented error.
   */
 class LinesIncrementalGuardSpec extends SparkSpec {
-  import spark.implicits._
 
   private val MinChars = 10
 

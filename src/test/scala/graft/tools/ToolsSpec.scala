@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkSpec
-import graft.operators.{ChunkRelation, CompareFormats, Estimator}
+import graft.operators.{ChunkRelation, CompareFormats}
 import graft.sources.TableFormat
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
