@@ -46,12 +46,18 @@ object Verify {
         }
       }
     }
-    // Harness.str escapes ALL control chars: a tab or CR in the oracle
-    // SQL would otherwise make a strict JSON reader reject the whole file
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Harness.str(k)}: ${Harness.str(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(only))
     spark.stop()
   }
+
+  /** oracle_sql.json for the dumped queries only: a subset run's replay
+    * must not report every unselected query as a missing result.
+    * Harness.str escapes ALL control chars: a tab or CR in the oracle SQL
+    * would otherwise make a strict JSON reader reject the whole file.
+    */
+  private[graft] def oracleJson(only: Option[Set[String]]): String =
+    SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_(k)) }
+      .map { case (k, v) => s"${Harness.str(k)}: ${Harness.str(v)}" }
+      .mkString("{", ",", "}")
 }

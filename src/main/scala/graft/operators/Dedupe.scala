@@ -1361,70 +1361,76 @@ object Dedupe {
     import session.implicits._
     val keyed = dup.columns.contains("f_id")
     val text = if (wins.withText) col("text") else lit(null).cast("string")
-    // the force-shuffle sentinel skips the size probe
-    val nDup = if (broadcastDupLimit > 0) dup.count() else Long.MaxValue
-    if (nDup <= broadcastDupLimit) {
-      // value-free (keys only, half the map) when there is no keeper
-      val map = new LongPairMap(nDup.toInt * 2 + 16, withValues = keyed)
-      if (keyed)
-        dup.select(col("wlo"), col("whi"), col("f_id"), col("f_pos"))
-          .as[(Long, Long, Long, Long)].collect()
-          .foreach { case (a, b, d, p) => map.put(a, b, d, p) }
-      else
-        dup.select(col("wlo"), col("whi")).as[(Long, Long)].collect()
-          .foreach { case (a, b) => map.put(a, b, 0L, 0L) }
-      val bcMap = session.sparkContext.broadcast(map)
-      wins.docs
-        .select(col("id"), text, col("wlo"), col("whi"))
-        .as[(Long, String, Array[Long], Array[Long])]
-        .flatMap { case (id, t, lo, hi) =>
-          val m = bcMap.value
-          // primitive builders: no boxing, no array until the first hit
-          val pos = new scala.collection.mutable.ArrayBuilder.ofInt
-          val keepD = new scala.collection.mutable.ArrayBuilder.ofLong
-          val keepP = new scala.collection.mutable.ArrayBuilder.ofLong
-          var i = 0
-          while (i < lo.length) {
-            val s = m.indexOf(lo(i), hi(i))
-            if (s >= 0 &&
-              !(keyed && m.val1At(s) == id && m.val2At(s) == i + 1L)) {
-              pos += (i + 1)
-              if (keepers) { keepD += m.val1At(s); keepP += m.val2At(s) }
+    // One pass over the relation picks the build and fetches the
+    // broadcast set: at most limit + 1 rows reach the driver, which is the
+    // broadcast build's own ceiling, and a full fetch means SHUFFLE. Above
+    // the limit that is a transient limit-row array the shuffle build
+    // drops, in place of a separate count() re-running the aggregation.
+    // The force-shuffle sentinel (limit 0) fetches nothing.
+    val limit = math.min(broadcastDupLimit, Int.MaxValue - 16L).toInt
+    val small =
+      if (limit <= 0) None
+      else Some((if (keyed) dup.select(col("wlo"), col("whi"), col("f_id"), col("f_pos"))
+        else dup.select(col("wlo"), col("whi"), lit(0L), lit(0L)))
+        .as[(Long, Long, Long, Long)].limit(limit + 1).collect())
+        .filter(_.length <= limit)
+    small match {
+      case Some(rows) =>
+        // value-free (keys only, half the map) when there is no keeper
+        val map = new LongPairMap(rows.length * 2 + 16, withValues = keyed)
+        rows.foreach { case (a, b, d, p) => map.put(a, b, d, p) }
+        val bcMap = session.sparkContext.broadcast(map)
+        wins.docs
+          .select(col("id"), text, col("wlo"), col("whi"))
+          .as[(Long, String, Array[Long], Array[Long])]
+          .flatMap { case (id, t, lo, hi) =>
+            val m = bcMap.value
+            // primitive builders: no boxing, no array until the first hit
+            val pos = new scala.collection.mutable.ArrayBuilder.ofInt
+            val keepD = new scala.collection.mutable.ArrayBuilder.ofLong
+            val keepP = new scala.collection.mutable.ArrayBuilder.ofLong
+            var i = 0
+            while (i < lo.length) {
+              val s = m.indexOf(lo(i), hi(i))
+              if (s >= 0 &&
+                !(keyed && m.val1At(s) == id && m.val2At(s) == i + 1L)) {
+                pos += (i + 1)
+                if (keepers) { keepD += m.val1At(s); keepP += m.val2At(s) }
+              }
+              i += 1
             }
-            i += 1
+            finish(RedundantWindows(id, t, pos.result(), keepD.result(),
+              keepP.result()))
           }
-          finish(RedundantWindows(id, t, pos.result(), keepD.result(),
-            keepP.result()))
-        }
-    } else {
-      val hits = wins.exploded.join(dup, Seq("wlo", "whi"))
-      val perDoc = (if (keyed)
-        hits.filter(!(col("id") === col("f_id") && col("pos") === col("f_pos")))
-      else hits)
-        .groupBy(col("id"))
-        .agg((if (keepers) collect_list(struct(col("pos").as("_1"),
-          col("f_id").as("_2"), col("f_pos").as("_3")))
-        else collect_list(col("pos"))).as("ps"))
-      val rows = (
-        if (wins.withText) wins.docs.select(col("id"), col("text"))
-          .join(perDoc, Seq("id"), "left")
-        else perDoc.withColumn("text", text)
-      ).select(col("id"), col("text"), col("ps"))
-      if (keepers)
-        rows.as[(Long, String, Array[(Long, Long, Long)])]
-          .flatMap { case (id, t, ps) =>
-            val sorted = Option(ps).getOrElse(Array.empty[(Long, Long, Long)])
-              .sortBy(_._1)
-            finish(RedundantWindows(id, t, sorted.map(_._1.toInt),
-              sorted.map(_._2), sorted.map(_._3)))
-          }
-      else
-        rows.as[(Long, String, Array[Long])]
-          .flatMap { case (id, t, ps) =>
-            finish(RedundantWindows(id, t,
-              Option(ps).fold(Array.emptyIntArray)(_.map(_.toInt).sorted),
-              Array.emptyLongArray, Array.emptyLongArray))
-          }
+      case None =>
+        val hits = wins.exploded.join(dup, Seq("wlo", "whi"))
+        val perDoc = (if (keyed)
+          hits.filter(!(col("id") === col("f_id") && col("pos") === col("f_pos")))
+        else hits)
+          .groupBy(col("id"))
+          .agg((if (keepers) collect_list(struct(col("pos").as("_1"),
+            col("f_id").as("_2"), col("f_pos").as("_3")))
+          else collect_list(col("pos"))).as("ps"))
+        val rows = (
+          if (wins.withText) wins.docs.select(col("id"), col("text"))
+            .join(perDoc, Seq("id"), "left")
+          else perDoc.withColumn("text", text)
+        ).select(col("id"), col("text"), col("ps"))
+        if (keepers)
+          rows.as[(Long, String, Array[(Long, Long, Long)])]
+            .flatMap { case (id, t, ps) =>
+              val sorted = Option(ps).getOrElse(Array.empty[(Long, Long, Long)])
+                .sortBy(_._1)
+              finish(RedundantWindows(id, t, sorted.map(_._1.toInt),
+                sorted.map(_._2), sorted.map(_._3)))
+            }
+        else
+          rows.as[(Long, String, Array[Long])]
+            .flatMap { case (id, t, ps) =>
+              finish(RedundantWindows(id, t,
+                Option(ps).fold(Array.emptyIntArray)(_.map(_.toInt).sorted),
+                Array.emptyLongArray, Array.emptyLongArray))
+            }
     }
   }
 

@@ -399,6 +399,8 @@ object EventStream {
     // work in the caller's session is untouched — see [[StateBackend]]
     stateProvider.foreach(cls =>
       session.conf.set("spark.sql.streaming.stateStore.providerClass", cls))
+    // local checkpoint files without Hadoop's per-file shell-outs
+    LocalCheckpointFileManager.use(session)
     val schema = session.read.parquet(dir).schema
     // file-source streams need a directory; a single-file input becomes
     // parent-dir + glob filter

@@ -205,6 +205,7 @@ object StreamRestartRun {
     // with (the two providers' checkpoint state formats differ)
     graft.streaming.StateBackend.providerClass.foreach(c =>
       spark.conf.set("spark.sql.streaming.stateStore.providerClass", c))
+    graft.streaming.LocalCheckpointFileManager.use(spark)
     println(s"[restart] state backend: ${graft.streaming.StateBackend.name}")
     // after the provider conf: the warmed provider is the measured one
     Harness.warmUp(spark, base)
