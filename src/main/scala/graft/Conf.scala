@@ -164,50 +164,6 @@ object Conf {
     (totalBytes + avg - 1) / avg
   }
 
-  /** Byte-limit override from an environment knob — the shared parse/
-    * validate path behind the broadcast→fallback forcing knobs
-    * (`SPARK_GRAFT_SPANS_BCAST_LIMIT`, `SPARK_GRAFT_LINES_BCAST_LIMIT`):
-    * unset → `default`; `0` (or `-1`, Spark's own never-broadcast
-    * convention, accepted as an alias) → the operators' explicit
-    * force-fallback sentinel (a zero limit always takes the shuffle
-    * build, even when the measured index is empty); anything
-    * non-numeric or negative below -1 fails loudly instead of silently
-    * riding the default.
-    */
-  def envByteLimit(name: String, default: Long): Long =
-    parseByteLimit(name, sys.env.get(name), default)
-
-  /** Env-free core of [[envByteLimit]] (spec-testable: `sys.env` can't be
-    * injected under test).
-    */
-  private[graft] def parseByteLimit(
-      name: String,
-      raw: Option[String],
-      default: Long): Long =
-    raw match {
-      case None => default
-      case Some(s) =>
-        val v =
-          try s.trim.toLong
-          catch {
-            case _: NumberFormatException =>
-              throw new IllegalArgumentException(
-                s"$name must be a byte/row count, got '$s'")
-          }
-        // Spark's own broadcast knobs spell "never broadcast" as -1
-        // (spark.sql.autoBroadcastJoinThreshold=-1); accept it as an
-        // alias for this repo's 0 force-shuffle sentinel so operators
-        // used to Spark semantics get the intended fallback instead of
-        // a hard failure.
-        if (v == -1L) 0L
-        else {
-          require(v >= 0,
-            s"$name must be >= 0 (0 forces the shuffle build; -1 is " +
-              s"accepted as an alias for 0), got $v")
-          v
-        }
-    }
-
   /** Length of each of `paths` (in order) through the Hadoop FS API
     * (metadata-only) — the input-size probe for the estimators'
     * [[sizedSession]] and the byte balance of the chunk

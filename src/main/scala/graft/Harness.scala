@@ -234,12 +234,19 @@ object Harness {
     require(part.length == 1, s"expected one part file, got ${part.toSeq}")
     Files.move(Paths.get(part.head), Paths.get(s"$dir/$name"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // best-effort temp cleanup
-    val s = Files.walk(Paths.get(tmp))
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Files.deleteIfExists(p); () })
-    finally s.close()
+    deleteRecursively(Paths.get(tmp))
   }
+
+  /** Delete `root` and everything under it; a no-op when it is absent.
+    * Throws on the first failure — best-effort callers catch.
+    */
+  def deleteRecursively(root: java.nio.file.Path): Unit =
+    if (Files.exists(root)) {
+      val s = Files.walk(root)
+      try s.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { Files.deleteIfExists(p); () })
+      finally s.close()
+    }
 
   /** A JSON string literal: backslash, quote and ALL control characters
     * escaped — a tab or CR in a name or SQL text would otherwise make a

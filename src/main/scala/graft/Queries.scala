@@ -137,14 +137,8 @@ object Queries {
   /** Best-effort recursive cleanup of a scratch dir at JVM exit. */
   private[graft] def cleanupOnExit(dir: java.nio.file.Path): Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        if (java.nio.file.Files.exists(dir)) {
-          val s = java.nio.file.Files.walk(dir)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-          finally s.close()
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }))
+      try Harness.deleteRecursively(dir)
+      catch { case scala.util.control.NonFatal(_) => () }))
 
   /** Read path baked into the dumped oracle SQL. The sf basename comes
     * from the same property Verify sets from its actual sfDir argument
@@ -643,13 +637,7 @@ object Queries {
         spark.sql(s"DROP TABLE IF EXISTS $name")
         val wh = java.net.URI.create(
           spark.conf.get("spark.sql.warehouse.dir")).getPath
-        val loc = java.nio.file.Paths.get(wh, name)
-        if (java.nio.file.Files.exists(loc)) {
-          val s = java.nio.file.Files.walk(loc)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-          finally s.close()
-        }
+        Harness.deleteRecursively(java.nio.file.Paths.get(wh, name))
         write
       }
       fresh(liTbl) {

@@ -614,28 +614,7 @@ object TextQueries {
     */
   private def dedupSpans(spark: SparkSession, sfDir: String): DataFrame =
     Dedupe.duplicateSpans(docs(spark, sfDir), "doc_id", "text",
-      windowTokens = 20, broadcastDupLimit = spansBcastLimit)
-
-  /** ScaleRun's broadcast→shuffle fallback knob for the span family:
-    * `SPARK_GRAFT_SPANS_BCAST_LIMIT=0` forces the shuffle build (the
-    * 100 TB path) through the catalog registrations so the 100× tier can
-    * exercise it; unset = the operators' 4M default. Results are
-    * build-independent (DedupeSpec pins both builds identical). Parse/
-    * validate shared with the line family's knob ([[Conf.envByteLimit]]).
-    */
-  private def spansBcastLimit: Long =
-    Conf.envByteLimit("SPARK_GRAFT_SPANS_BCAST_LIMIT", 4L * 1000 * 1000)
-
-  /** The line family's twin knob (BYTES, matching the operator's
-    * byte-bounded broadcast decision): `SPARK_GRAFT_LINES_BCAST_LIMIT=0`
-    * forces the hash-pair shuffle join (the fallback path) through the
-    * catalog registrations so the scale tiers can measure it; unset =
-    * the operator's 128 MiB default. Results are build-independent
-    * (LineDedupeSpec pins both builds identical).
-    */
-  private def linesBcastBytes: Long =
-    Conf.envByteLimit("SPARK_GRAFT_LINES_BCAST_LIMIT",
-      graft.operators.LineDedupe.DefaultBroadcastDupBytes)
+      windowTokens = 20)
 
   /** The span CUT ([[Dedupe.cutDuplicateSpans]]): Lee et al. keep-one
     * semantics — every duplicated 20-token window keeps its globally
@@ -649,8 +628,16 @@ object TextQueries {
     */
   private def dedupSpansCut(spark: SparkSession, sfDir: String): DataFrame =
     Dedupe.cutDuplicateSpans(docs(spark, sfDir), "doc_id", "text",
-      windowTokens = 20, broadcastDupLimit = spansBcastLimit,
-      hash128 = true)
+      windowTokens = 20, hash128 = true)
+
+  /** The incremental queries' base/batch split: ids below it are the
+    * base, the rest tonight's batch. Null-safe: an empty corpus splits
+    * into empty base + empty batch (the operators handle empties)
+    * instead of NPE-ing on the null max.
+    */
+  private def midDocId(d: DataFrame): Long =
+    (Option(d.agg(max(col("doc_id").cast("long"))).head().get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(-1L) + 1) / 2
 
   /** Incremental span cut ([[Dedupe.cutSpansIncremental]]) — the
     * production refresh: the upper half of doc_ids is "tonight's batch",
@@ -661,50 +648,16 @@ object TextQueries {
     */
   private def dedupSpansIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    // null-safe max: an empty corpus splits into empty base + empty batch
-    // (the operators handle empties) instead of NPE-ing on the null agg
-    val maxId = Option(d.agg(max(col("doc_id").cast("long"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val t = (maxId + 1) / 2
+    val t = midDocId(d)
     val idx = Dedupe.windowIndex(d.filter(col("doc_id") < t), "text",
       windowTokens = 20, hash128 = true)
     // base ids are all < t, so t - 1 bounds them: the refresh-contract
     // guard runs on the catalog path too (r14)
     Dedupe.cutSpansIncremental(idx, d.filter(col("doc_id") >= t),
-      "doc_id", "text", windowTokens = 20,
-      broadcastDupLimit = spansBcastLimit, hash128 = true,
+      "doc_id", "text", windowTokens = 20, hash128 = true,
       baseMaxDocId = Some(t - 1))
   }
 
-  /** Approx tier of the span family — the cheap first-pass "how much
-    * substring duplication is there" a 100 TB curation run wants BEFORE
-    * committing to the full cut (the cdc_estimate_approx discipline,
-    * reusing [[graft.functions.KmvSketch]]): ONE narrow kernel pass over
-    * the corpus, one fused aggregate (total windows + KMV distinct
-    * windows), no per-window shuffle, no exact hash aggregation — the
-    * only exchange is the 256 KB-per-partition sketch merge. Columns:
-    * (total_windows, kmv_distinct_windows, dup_windows, dup_fraction).
-    *
-    * k = 2¹⁸ (2 MiB per partial — the amortized-scratch sketch makes
-    * large k affordable): far above BOTH verification SFs' distinct
-    * windows (17 k at sf0.01, 170 k at sf0.1), so the sketch is provably
-    * exact there and the DuckDB COUNT(DISTINCT) oracle holds — at
-    * sketch-saturating corpus scale it estimates with rsd = 1/√(k−1) ≈
-    * 0.2 % (KmvSketchSpec pins a 5·rsd worst-case bound on a
-    * deterministic saturated stream), which is the point of the tier.
-    * 64-bit window hashing: an approx COUNT needs no 128-bit cut
-    * identity (a collision moves the estimate by ~1 part in 2⁶⁴·rate —
-    * unobservable at any corpus size).
-    */
-  /** Verification-harness guard for the KMV triage wrappers: their
-    * oracles compute exact COUNT(DISTINCT), which the sketch only equals
-    * BELOW its k — if a verification SF ever grows past k the compare
-    * would surface as an unexplained hash mismatch. Make saturation an
-    * explicit error instead: assert every sketch estimate in the (tiny,
-    * already-materialized) result is below k. Catalog-only — the
-    * underlying operators stay saturation-tolerant, because saturated IS
-    * their intended regime at corpus scale (the 100× tier exercises it).
-    */
   /** Opt-in SCOPE for [[assertUnsaturated]] — entered by the
     * verification harness ([[graft.Verify]]) via [[withKmvOracleGuard]],
     * the only context where the exact-COUNT(DISTINCT) oracle applies.
@@ -732,9 +685,18 @@ object TextQueries {
     try body finally kmvGuardScope.set(prev)
   }
 
-  // private[graft] for KmvGuardSpec, which pins the saturation margin.
-  // `enabled` defaults to the thread's guard scope and exists so the
-  // spec can exercise the guard per-call without entering the scope.
+  /** Verification-harness guard for the KMV triage wrappers: their
+    * oracles compute exact COUNT(DISTINCT), which the sketch only equals
+    * BELOW its k — if a verification SF ever grows past k the compare
+    * would surface as an unexplained hash mismatch. Make saturation an
+    * explicit error instead: assert every sketch estimate in the (tiny,
+    * already-materialized) result is below k. Catalog-only — the
+    * underlying operators stay saturation-tolerant, because saturated IS
+    * their intended regime at corpus scale (the 100× tier exercises it).
+    * `private[graft]` for KmvGuardSpec, which pins the saturation
+    * margin; `enabled` defaults to the thread's guard scope and exists so
+    * the spec can exercise the guard per-call without entering the scope.
+    */
   private[graft] def assertUnsaturated(
       df: DataFrame,
       distinctCol: String,
@@ -769,27 +731,19 @@ object TextQueries {
     df
   }
 
-  private def dedupSpansApprox(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val w = 20
-    val row = docs(spark, sfDir)
-      .select(col("text").cast("string")).as[String]
-      .flatMap(t => Dedupe.windowHashes(t, w))
-      .toDF("win")
-      .agg(count(lit(1)).as("total"),
-        graft.functions.KmvSketch.kmv_distinct(col("win"),
-          graft.functions.KmvSketch.TriageK).as("kmv"))
-      .head()
-    val total = row.getLong(0)
-    val kmv = row.getLong(1)
-    val dup = math.max(0L, total - kmv)
-    assertUnsaturated(
-      Seq((total, kmv, dup, if (total == 0) 0.0 else dup.toDouble / total))
-        .toDF("total_windows", "kmv_distinct_windows", "dup_windows",
-          "dup_fraction"),
+  /** Approx tier of the span family ([[Dedupe.approxDuplicateSpans]]):
+    * the cheap first-pass "how much substring duplication is there" a
+    * 100 TB curation run wants BEFORE committing to the full cut. k = 2¹⁸
+    * (2 MiB per partial) is far above BOTH verification SFs' distinct
+    * windows (17 k at sf0.01, 170 k at sf0.1), so the sketch is provably
+    * exact there and the DuckDB COUNT(DISTINCT) oracle holds; at
+    * sketch-saturating corpus scale it estimates with rsd = 1/√(k−1) ≈
+    * 0.2 %, which is the point of the tier.
+    */
+  private def dedupSpansApprox(spark: SparkSession, sfDir: String): DataFrame =
+    assertUnsaturated(Dedupe.approxDuplicateSpans(docs(spark, sfDir), "text"),
       "kmv_distinct_windows", graft.functions.KmvSketch.TriageK,
       "dedup_spans_approx")
-  }
 
   /** Per-source slice of [[dedupSpansApprox]]: WITHIN-source substring
     * duplication, sketched — the triage view that tells a curation run
@@ -804,33 +758,12 @@ object TextQueries {
     * verification SFs: ≤ 9.7 k distinct windows per source), rsd ≈
     * 0.8 % saturated.
     */
-  private def dedupSpansApproxSource(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val w = 20
-    val perSource = docs(spark, sfDir)
-      .select(col("source").cast("string"), col("text").cast("string"))
-      .as[(String, String)]
-      .flatMap { case (src, t) =>
-        Dedupe.windowHashes(t, w).iterator.map(h => (src, h))
-      }
-      .toDF("source", "win")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("total_windows"),
-        graft.functions.KmvSketch.kmv_distinct(col("win"),
-          graft.functions.KmvSketch.SourceTriageK)
-          .as("kmv_distinct_windows"))
-      .withColumn("dup_windows",
-        greatest(lit(0L), col("total_windows") - col("kmv_distinct_windows")))
-      .withColumn("dup_fraction",
-        when(col("total_windows") === 0, lit(0.0))
-          .otherwise(col("dup_windows").cast("double") / col("total_windows")))
-    // localize (|sources|-bounded) so the saturation guard's aggregate
-    // and the harness's consumption don't each rerun the corpus pass
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(perSource.collect(): _*), perSource.schema)
-    assertUnsaturated(local, "kmv_distinct_windows",
-      graft.functions.KmvSketch.SourceTriageK, "dedup_spans_approx_source")
-  }
+  private def dedupSpansApproxSource(spark: SparkSession, sfDir: String): DataFrame =
+    assertUnsaturated(
+      Dedupe.approxDuplicateSpans(docs(spark, sfDir), "text",
+        k = graft.functions.KmvSketch.SourceTriageK, groupCol = Some("source")),
+      "kmv_distinct_windows", graft.functions.KmvSketch.SourceTriageK,
+      "dedup_spans_approx_source")
 
   /** Span-cut PROVENANCE ([[Dedupe.spanProvenance]]) — the audit surface
     * for the cut: one row per redundant maximal span (exactly the token
@@ -848,8 +781,7 @@ object TextQueries {
   private def sharedSpanProvenance(spark: SparkSession, sfDir: String): DataFrame =
     SessionCaches.shared(spark, "span_provenance", sfDir) {
       Dedupe.spanProvenance(docs(spark, sfDir), "doc_id", "text",
-        windowTokens = 20, broadcastDupLimit = spansBcastLimit,
-        hash128 = true)
+        windowTokens = 20, hash128 = true)
     }
 
   private def dedupSpansProvenance(spark: SparkSession, sfDir: String): DataFrame =
@@ -977,8 +909,7 @@ object TextQueries {
   private def dedupLinesMatrix(spark: SparkSession, sfDir: String): DataFrame = {
     val d = pagedDocs(spark, sfDir)
     val prov = graft.operators.LineDedupe.lineProvenance(
-      d, "doc_id", "text", minLineChars = 10,
-      broadcastDupBytes = linesBcastBytes)
+      d, "doc_id", "text", minLineChars = 10)
     graft.operators.LineDedupe.lineSourceMatrix(
       prov, d.select(col("doc_id"), col("source")))
   }
@@ -989,8 +920,7 @@ object TextQueries {
     */
   private def dedupLinesCut(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.LineDedupe.cutDuplicateLines(
-      pagedDocs(spark, sfDir), "doc_id", "text", minLineChars = 10,
-      broadcastDupBytes = linesBcastBytes)
+      pagedDocs(spark, sfDir), "doc_id", "text", minLineChars = 10)
 
   /** Incremental line dedup ([[graft.operators.LineDedupe.cutLinesIncremental]]):
     * lower-half doc_ids are the already-ingested base whose persisted
@@ -1002,16 +932,12 @@ object TextQueries {
     */
   private def dedupLinesIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val d = pagedDocs(spark, sfDir)
-    // null-safe max: an empty corpus splits into empty base + batch
-    val maxId = Option(d.agg(max(col("doc_id").cast("long"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val t = (maxId + 1) / 2
+    val t = midDocId(d)
     val idx = graft.operators.LineDedupe.lineIndex(
       d.filter(col("doc_id") < t), "text", minLineChars = 10)
     graft.operators.LineDedupe.cutLinesIncremental(
       idx, d.filter(col("doc_id") >= t), "doc_id", "text",
-      minLineChars = 10, broadcastDupBytes = linesBcastBytes,
-      baseMaxDocId = Some(t - 1))
+      minLineChars = 10, baseMaxDocId = Some(t - 1))
   }
 
   /** Streaming twin of dedup_spans_cut ([[graft.streaming.StreamSpans]]):

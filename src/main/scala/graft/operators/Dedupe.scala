@@ -984,6 +984,12 @@ object Dedupe {
   //    into maximal spans (the report and the provenance), or the cut
   //    drops every token a redundant window covers ([[rebuildCutFromPositions]]).
 
+  /** The span operators' default broadcast bound: the duplicated-window
+    * relation broadcasts as a [[LongPairMap]] at or below this many rows
+    * and takes the shuffle build above it (`0` forces the shuffle build).
+    */
+  val DefaultBroadcastDupLimit: Long = 4L * 1000 * 1000
+
   /** Exact-substring duplicate SPANS — the training-data dedup mode the
     * pair operators don't cover (public algorithm class: Lee et al.,
     * "Deduplicating Training Data Makes Language Models Better", ACL'22 —
@@ -1021,7 +1027,7 @@ object Dedupe {
       idCol: String,
       textCol: String,
       windowTokens: Int = 20,
-      broadcastDupLimit: Long = 4L * 1000 * 1000,
+      broadcastDupLimit: Long = DefaultBroadcastDupLimit,
       hash128: Boolean = false): DataFrame =
     duplicateSpansImpl(df, idCol, textCol, windowTokens, broadcastDupLimit,
       hash128, loBits = 64)
@@ -1101,7 +1107,7 @@ object Dedupe {
       idCol: String,
       textCol: String,
       windowTokens: Int = 20,
-      broadcastDupLimit: Long = 4L * 1000 * 1000,
+      broadcastDupLimit: Long = DefaultBroadcastDupLimit,
       hash128: Boolean = false): DataFrame =
     cutDuplicateSpansImpl(df, idCol, textCol, windowTokens, broadcastDupLimit,
       hash128, loBits = 64)
@@ -1127,13 +1133,8 @@ object Dedupe {
     * store as parquet, and each incremental batch cuts against it without
     * re-hashing the base. Columns (wlo, whi); `hash128` must match the
     * batch-side setting (the high half is all-zero otherwise, exactly
-    * like the operators).
-    *
-    * When PERSISTING the index, also write a [[SpanIndexMeta]] sidecar
-    * (windowTokens, hash128, the base's max doc id, window count) the
-    * way `Cli span-index` does — the parquet alone records none of
-    * those, and a refresh against a mismatched index is silently wrong;
-    * `Cli cut-spans-incremental` refuses to run without the sidecar.
+    * like the operators). [[persistSpanIndex]] persists it with the
+    * sidecar a refresh needs.
     */
   def windowIndex(
       df: DataFrame,
@@ -1143,6 +1144,29 @@ object Dedupe {
     withSpanWindows(df, lit(0L), col(textCol), windowTokens, hash128,
         loBits = 64, keepText = false)(
       _.exploded.select(col("wlo"), col("whi")).distinct())
+
+  /** Approximate span-duplication triage — the span family's KMV
+    * first-pass tier ([[graft.functions.KmvTriage]]): one narrow pass
+    * counting `windowTokens`-token windows and sketching the distinct
+    * ones, the "how much substring duplication is there" estimate before
+    * committing to a full [[cutDuplicateSpans]]. 64-bit window hashing:
+    * an approximate count needs no 128-bit cut identity. With `groupCol`
+    * (e.g. `source`), one row per group: the WITHIN-group duplication.
+    *
+    * @return materialized `([group,] total_windows,
+    *         kmv_distinct_windows, dup_windows, dup_fraction)`
+    */
+  def approxDuplicateSpans(
+      df: DataFrame,
+      textCol: String,
+      windowTokens: Int = 20,
+      k: Int = graft.functions.KmvSketch.TriageK,
+      groupCol: Option[String] = None): DataFrame = {
+    require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
+    graft.functions.KmvTriage.run(
+      windowHashRows(df, textCol, windowTokens, groupCol.toSeq),
+      "win", "windows", k, groupCol)
+  }
 
   /** Incremental keep-earliest span cut — the production REFRESH shape
     * of [[cutDuplicateSpans]]: tonight's `batch` of new documents is
@@ -1166,8 +1190,9 @@ object Dedupe {
     *   pipeline's sizing aggregate — no extra pass) or the call fails
     *   loudly — overlapping ids would make "in the base index" no longer
     *   imply "earlier", silently breaking keep-earliest. The span-index
-    *   sidecar ([[SpanIndexMeta]]) persists this value; pass None only
-    *   when the caller proves the invariant some other way.
+    *   sidecar ([[SpanIndexMeta]]) persists this value ([[refreshSpans]]
+    *   passes it); pass None only when the caller proves the invariant
+    *   some other way.
     */
   def cutSpansIncremental(
       baseWindows: DataFrame,
@@ -1175,7 +1200,7 @@ object Dedupe {
       idCol: String,
       textCol: String,
       windowTokens: Int = 20,
-      broadcastDupLimit: Long = 4L * 1000 * 1000,
+      broadcastDupLimit: Long = DefaultBroadcastDupLimit,
       hash128: Boolean = false,
       baseMaxDocId: Option[Long] = None): DataFrame = {
     // the consumed index is hot: refresh its LRU position so a loop of
@@ -1210,6 +1235,47 @@ object Dedupe {
     }
   }
 
+  /** [[windowIndex]] of `docs` (hash128) persisted at `dir` with its
+    * [[SpanIndexMeta]] sidecar — the index [[refreshSpans]] cuts
+    * against. Refuses an empty corpus, named by `source`.
+    */
+  def persistSpanIndex(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      dir: String,
+      windowTokens: Int,
+      source: String): SpanIndexMeta =
+    SpanIndexMeta.persist(docs, idCol, source, dir)(
+      windowIndex(docs, textCol, windowTokens, hash128 = true))(
+      SpanIndexMeta(windowTokens, hash128 = true, _, _))
+
+  /** [[cutSpansIncremental]] of `batch` against the index
+    * [[persistSpanIndex]] wrote at `indexDir`, with the refresh contract
+    * enforced: the index needs its sidecar, built at this `windowTokens`
+    * and at 128-bit identity, and every batch id must clear the base's
+    * max doc id.
+    */
+  def refreshSpans(
+      indexDir: String,
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      windowTokens: Int): DataFrame = {
+    val (idx, meta) = SpanIndexMeta.load(batch.sparkSession, indexDir)
+    require(meta.windowTokens == windowTokens,
+      s"span-index at $indexDir was built with windowTokens=${meta.windowTokens} " +
+        s"but this refresh asked for $windowTokens — a mismatched window " +
+        "size cuts the wrong spans; rerun with the index's window size " +
+        "or rebuild the index")
+    require(meta.hash128,
+      s"span-index at $indexDir was built 64-bit (hash128=false) but " +
+        "cut-spans-incremental cuts at 128-bit identity — rebuild the " +
+        "index with `span-index`")
+    cutSpansIncremental(idx, batch, idCol, textCol, windowTokens,
+      hash128 = true, baseMaxDocId = Some(meta.maxDocId))
+  }
+
   /** Provenance of the spans [[cutDuplicateSpans]] removes — the
     * curation AUDIT surface: for every maximal run of REDUNDANT windows
     * (occurrences that are not the corpus-earliest for their hash, i.e.
@@ -1233,7 +1299,7 @@ object Dedupe {
       idCol: String,
       textCol: String,
       windowTokens: Int = 20,
-      broadcastDupLimit: Long = 4L * 1000 * 1000,
+      broadcastDupLimit: Long = DefaultBroadcastDupLimit,
       hash128: Boolean = false): DataFrame = {
     val session = df.sparkSession
     import session.implicits._
@@ -1484,6 +1550,19 @@ object Dedupe {
     */
   private[graft] def windowHashes(text: String, w: Int): Array[Long] =
     windowHashes128(text, w, withHi = false, loBits = 64)._1
+
+  /** One row per 64-bit `w`-token window hash `win` of `textCol`, beside
+    * the `keep` columns — the span family's triage items.
+    */
+  private[graft] def windowHashRows(
+      df: DataFrame,
+      textCol: String,
+      w: Int,
+      keep: Seq[String] = Nil): DataFrame = {
+    val hashes = udf((t: String) => windowHashes(t, w))
+    df.select(keep.map(col) :+
+      explode(hashes(col(textCol).cast("string"))).as("win"): _*)
+  }
 
   /** [[windowHashes]] plus an optional independently-seeded HIGH half
     * (the 128-bit identity the cut path runs at 100 TB scale): window

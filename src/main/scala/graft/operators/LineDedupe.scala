@@ -376,11 +376,7 @@ object LineDedupe {
     *
     * The returned index is cached (release note on [[duplicateLines]];
     * the incremental specs `unpersist()` it directly when done).
-    *
-    * When PERSISTING, also write a [[LineIndexMeta]] sidecar
-    * (minLineChars, the base's max doc id, line count) the way
-    * `Cli line-index` does — the parquet alone records none of those,
-    * and a refresh against a mismatched index is silently wrong.
+    * [[persistLineIndex]] persists it with the sidecar a refresh needs.
     */
   def lineIndex(
       df: DataFrame,
@@ -463,8 +459,9 @@ object LineDedupe {
     * @param baseMaxDocId when set, the append-only contract is ENFORCED
     *   (one cheap aggregate folded into the sizing pass): the batch's
     *   smallest id must exceed it or the call fails loudly. The
-    *   line-index sidecar ([[LineIndexMeta]]) persists this value; pass
-    *   None only when the caller proves the invariant some other way.
+    *   line-index sidecar ([[LineIndexMeta]]) persists this value
+    *   ([[refreshLines]] passes it); pass None only when the caller
+    *   proves the invariant some other way.
     */
   def cutLinesIncremental(
       baseLines: DataFrame,
@@ -523,19 +520,62 @@ object LineDedupe {
       session)
   }
 
+  /** [[lineIndex]] of `docs` persisted at `dir` with its
+    * [[LineIndexMeta]] sidecar — the index [[refreshLines]] cuts
+    * against. Refuses an empty corpus, named by `source`.
+    */
+  def persistLineIndex(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      dir: String,
+      minLineChars: Int,
+      source: String): LineIndexMeta =
+    LineIndexMeta.persist(docs, idCol, source, dir)(
+      lineIndex(docs, textCol, minLineChars))(
+      LineIndexMeta(minLineChars, _, _))
+
+  /** [[cutLinesIncremental]] of `batch` against the index
+    * [[persistLineIndex]] wrote at `indexDir`, with the refresh contract
+    * enforced: the index needs its sidecar, built at this
+    * `minLineChars`, and every batch id must clear the base's max doc id.
+    */
+  def refreshLines(
+      indexDir: String,
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      minLineChars: Int): DataFrame = {
+    val (idx, meta) = LineIndexMeta.load(batch.sparkSession, indexDir)
+    require(meta.minLineChars == minLineChars,
+      s"line-index at $indexDir was built with minLineChars=${meta.minLineChars} " +
+        s"but this refresh asked for $minLineChars — a mismatched " +
+        "eligibility floor cuts the wrong lines; rerun with the index's " +
+        "floor or rebuild the index")
+    cutLinesIncremental(idx, batch, idCol, textCol, minLineChars,
+      baseMaxDocId = Some(meta.maxDocId))
+  }
+
+  /** One row per eligible line's 64-bit hash `lh` — the line family's
+    * triage items.
+    */
+  private[graft] def lineHashRows(
+      df: DataFrame,
+      textCol: String,
+      minLineChars: Int): DataFrame =
+    eligible(df.select(
+        explode(split(col(textCol).cast("string"), "\n", -1)).as("line")),
+      minLineChars)
+      .select(xxhash64(col("line")).as("lh"))
+
   /** Approximate line-duplication triage — the KMV first-pass tier of
-    * the line family, mirroring `dedup_spans_approx`
-    * ([[graft.functions.KmvSketch]]): ONE narrow pass over the corpus
-    * counting total eligible line occurrences and sketching distinct
-    * line identities, giving the "how much boilerplate is there"
-    * estimate (dup mass = total − distinct) before committing to a full
-    * [[cutDuplicateLines]]. The only exchange is one sketch buffer per
-    * map partition (≤ k longs each) — corpus-size-independent. Exact
-    * below k distinct lines; rsd ≈ 1/√(k−2) ≈ 0.2 % at the default
-    * k = 2¹⁸ saturated (the bound pinned in KmvSketchSpec).
+    * the line family ([[graft.functions.KmvTriage]]): ONE narrow pass
+    * over the corpus counting eligible line occurrences and sketching
+    * distinct line identities, the "how much boilerplate is there"
+    * estimate before committing to a full [[cutDuplicateLines]].
     *
-    * @return one row `(total_lines, kmv_distinct_lines, dup_lines,
-    *         dup_fraction)`
+    * @return materialized, one row `(total_lines, kmv_distinct_lines,
+    *         dup_lines, dup_fraction)`
     */
   def approxDuplicateLines(
       df: DataFrame,
@@ -543,18 +583,7 @@ object LineDedupe {
       minLineChars: Int = 10,
       k: Int = graft.functions.KmvSketch.TriageK): DataFrame = {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
-    import df.sparkSession.implicits._
-    val lines = df.select(
-      explode(split(col(textCol).cast("string"), "\n", -1)).as("line"))
-    val row = eligible(lines, minLineChars)
-      .select(xxhash64(col("line")).as("lh"))
-      .agg(count(lit(1)).as("total"),
-        graft.functions.KmvSketch.kmv_distinct(col("lh"), k).as("kmv"))
-      .head()
-    val total = row.getLong(0)
-    val kmv = row.getLong(1)
-    val dup = math.max(0L, total - kmv)
-    Seq((total, kmv, dup, if (total == 0) 0.0 else dup.toDouble / total))
-      .toDF("total_lines", "kmv_distinct_lines", "dup_lines", "dup_fraction")
+    graft.functions.KmvTriage.run(
+      lineHashRows(df, textCol, minLineChars), "lh", "lines", k)
   }
 }

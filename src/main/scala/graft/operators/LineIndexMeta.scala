@@ -1,42 +1,32 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
-
 /** Sidecar metadata for a persisted [[LineDedupe.lineIndex]] — the
-  * refresh-contract guard for [[LineDedupe.cutLinesIncremental]], the
-  * exact analogue of [[SpanIndexMeta]] for the line family. The index
-  * parquet alone is just (llo, lhi) pairs: nothing records the
-  * min-line-length it was built with, and nothing enforces the
-  * append-only id invariant ("every base id < every batch id") that
-  * makes the incremental cut exactly keep-earliest. `Cli line-index`
-  * writes this one-line JSON beside the parquet and
-  * `Cli cut-lines-incremental` refuses loudly unless every field checks
-  * out (and the batch's min id clears `maxDocId`). I/O and field
-  * extraction are the shared [[IndexMetaIO]] core.
+  * refresh-contract guard for [[LineDedupe.refreshLines]], the exact
+  * analogue of [[SpanIndexMeta]] for the line family. The index parquet
+  * alone is just (llo, lhi) pairs: nothing records the min-line-length
+  * it was built with, and nothing enforces the append-only id invariant
+  * ("every base id < every batch id") that makes the incremental cut
+  * exactly keep-earliest. [[LineDedupe.persistLineIndex]] writes this
+  * sidecar beside the parquet and [[LineDedupe.refreshLines]] refuses
+  * loudly unless every field checks out (and the batch's min id clears
+  * `maxDocId`).
   */
 final case class LineIndexMeta(
     minLineChars: Int,
     maxDocId: Long,
     lines: Long)
 
-object LineIndexMeta {
+object LineIndexMeta extends IndexSidecar[LineIndexMeta](
+    "line-index", "_graft_line_index_meta.json", Seq("llo", "lhi"),
+    "minLineChars/max_doc_id") {
 
-  val FileName = "_graft_line_index_meta.json"
+  protected def toJson(meta: LineIndexMeta): String =
+    s"""{"minLineChars":${meta.minLineChars},""" +
+      s""""maxDocId":${meta.maxDocId},"lines":${meta.lines}}"""
 
-  def write(conf: Configuration, dir: String, meta: LineIndexMeta): Unit =
-    IndexMetaIO.write(conf, dir, FileName,
-      s"""{"minLineChars":${meta.minLineChars},""" +
-        s""""maxDocId":${meta.maxDocId},"lines":${meta.lines}}""")
-
-  /** None when the sidecar is absent (callers decide refuse vs warn). */
-  def read(conf: Configuration, dir: String): Option[LineIndexMeta] =
-    IndexMetaIO.read(conf, dir, FileName).map(parse)
-
-  private[operators] def parse(json: String): LineIndexMeta = {
-    def field(name: String) = IndexMetaIO.field("line-index", json, name)
+  protected def fromFields(field: String => String): LineIndexMeta =
     LineIndexMeta(
       minLineChars = field("minLineChars").toInt,
       maxDocId = field("maxDocId").toLong,
       lines = field("lines").toLong)
-  }
 }

@@ -1,18 +1,14 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
-
 /** Sidecar metadata for a persisted span [[Dedupe.windowIndex]] — the
-  * refresh-contract guard for [[Dedupe.cutSpansIncremental]]. The index
-  * parquet alone is just (wlo, whi) pairs: nothing in it records the
-  * window size or hash width it was built with, and nothing enforces
-  * the append-only id invariant ("every base id < every batch id")
-  * that makes the incremental cut exactly keep-earliest. A refresh run
-  * against a mismatched index silently yields a wrong-but-plausible
-  * cut, so `span-index` writes this one-line JSON beside the parquet
-  * and `cut-spans-incremental` refuses loudly unless every field
-  * checks out (and the batch's min id clears `maxDocId`). I/O and
-  * field extraction are the shared [[IndexMetaIO]] core.
+  * refresh-contract guard for [[Dedupe.refreshSpans]]. The index parquet
+  * alone is just (wlo, whi) pairs: nothing in it records the window size
+  * or hash width it was built with, and nothing enforces the append-only
+  * id invariant ("every base id < every batch id") that makes the
+  * incremental cut exactly keep-earliest. [[Dedupe.persistSpanIndex]]
+  * writes this sidecar beside the parquet and [[Dedupe.refreshSpans]]
+  * refuses loudly unless every field checks out (and the batch's min id
+  * clears `maxDocId`).
   */
 final case class SpanIndexMeta(
     windowTokens: Int,
@@ -20,27 +16,18 @@ final case class SpanIndexMeta(
     maxDocId: Long,
     windows: Long)
 
-object SpanIndexMeta {
+object SpanIndexMeta extends IndexSidecar[SpanIndexMeta](
+    "span-index", "_graft_span_index_meta.json", Seq("wlo", "whi"),
+    "windowTokens/hash128/max_doc_id") {
 
-  val FileName = "_graft_span_index_meta.json"
+  protected def toJson(meta: SpanIndexMeta): String =
+    s"""{"windowTokens":${meta.windowTokens},"hash128":${meta.hash128},""" +
+      s""""maxDocId":${meta.maxDocId},"windows":${meta.windows}}"""
 
-  def write(conf: Configuration, dir: String, meta: SpanIndexMeta): Unit =
-    IndexMetaIO.write(conf, dir, FileName,
-      s"""{"windowTokens":${meta.windowTokens},"hash128":${meta.hash128},""" +
-        s""""maxDocId":${meta.maxDocId},"windows":${meta.windows}}""")
-
-  /** None when the sidecar is absent (an index from before the guard —
-    * callers decide whether to refuse or warn).
-    */
-  def read(conf: Configuration, dir: String): Option[SpanIndexMeta] =
-    IndexMetaIO.read(conf, dir, FileName).map(parse)
-
-  private[operators] def parse(json: String): SpanIndexMeta = {
-    def field(name: String) = IndexMetaIO.field("span-index", json, name)
+  protected def fromFields(field: String => String): SpanIndexMeta =
     SpanIndexMeta(
       windowTokens = field("windowTokens").toInt,
       hash128 = field("hash128").toBoolean,
       maxDocId = field("maxDocId").toLong,
       windows = field("windows").toLong)
-  }
 }

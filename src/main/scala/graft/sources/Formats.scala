@@ -72,7 +72,7 @@ object TableFormat {
       val target = dir.resolve(s"$table$ext")
       Files.move(Paths.get(parts.head), target,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      deleteRecursively(tmp)
+      graft.Harness.deleteRecursively(tmp)
       Seq(target.toString)
     } else {
       val moved = parts.zipWithIndex.map { case (p, i) =>
@@ -80,16 +80,10 @@ object TableFormat {
         Files.move(Paths.get(p), target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         target.toString
       }
-      deleteRecursively(tmp)
+      graft.Harness.deleteRecursively(tmp)
       moved
     }
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    }
 
   /** Parquet with the reference's knobs (de/formats.py:84-96): compression,
     * dictionary on/off, row-group size (bytes), data-page size (bytes).

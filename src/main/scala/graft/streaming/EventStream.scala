@@ -336,21 +336,13 @@ object EventStream {
   private[streaming] val finishedDiskSinks =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      val stream = java.nio.file.Files.walk(root)
-      try stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally stream.close()
-    }
-
   /** Delete every finished disk-sink dir (see [[finishedDiskSinks]]);
     * NonFatal-safe per dir — reclamation must never fail a run.
     */
   private[graft] def purgeDiskSinks(): Unit = {
     var p = finishedDiskSinks.poll()
     while (p != null) {
-      try deleteRecursively(p)
+      try graft.Harness.deleteRecursively(p)
       catch { case scala.util.control.NonFatal(_) => () }
       p = finishedDiskSinks.poll()
     }

@@ -49,14 +49,8 @@ object StreamFloor {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       var p = exitPurgeDirs.poll()
       while (p != null) {
-        try {
-          if (java.nio.file.Files.exists(p)) {
-            val s = java.nio.file.Files.walk(p)
-            try s.sorted(java.util.Comparator.reverseOrder())
-              .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-            finally s.close()
-          }
-        } catch { case scala.util.control.NonFatal(_) => () }
+        try graft.Harness.deleteRecursively(p)
+        catch { case scala.util.control.NonFatal(_) => () }
         p = exitPurgeDirs.poll()
       }
     }, "graft-streamfloor-purge"))

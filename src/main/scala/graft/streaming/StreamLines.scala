@@ -130,8 +130,9 @@ object StreamLines {
     approxFinish(agg)
   }
 
-  /** The twin's streaming aggregation, factored so the saturation spec
-    * can drive it through an explicit multi-trigger stream (the
+  /** The twin's streaming aggregation ([[graft.functions.KmvTriage.agg]]
+    * over the batch operator's line items), factored so the saturation
+    * spec can drive it through an explicit multi-trigger stream (the
     * Complete-mode cross-micro-batch sketch-merge path is distinct from
     * the batch estimator's partial-aggregation merge).
     */
@@ -140,23 +141,11 @@ object StreamLines {
       textCol: String,
       minLineChars: Int,
       k: Int): DataFrame =
-    df.select(explode(
-        split(col(textCol).cast("string"), "\n", -1)).as("line"))
-      .filter(length(col("line")) >= minLineChars)
-      .select(xxhash64(col("line")).as("lh"))
-      .agg(count(lit(1)).as("total_lines"),
-        graft.functions.KmvSketch.kmv_distinct(col("lh"), k)
-          .as("kmv_distinct_lines"))
+    graft.functions.KmvTriage.agg(
+      graft.operators.LineDedupe.lineHashRows(df, textCol, minLineChars),
+      "lh", "lines", k)
 
-  /** The batch operator's arithmetic, mirrored exactly (clamped dup
-    * mass, double fraction) so both twins land on one oracle relation.
-    */
+  /** The batch operator's arithmetic, so both twins land on one oracle relation. */
   private[graft] def approxFinish(agg: DataFrame): DataFrame =
-    agg
-      .withColumn("dup_lines",
-        greatest(lit(0L), col("total_lines") - col("kmv_distinct_lines")))
-      .withColumn("dup_fraction",
-        when(col("total_lines") === 0, lit(0.0))
-          .otherwise(col("dup_lines").cast("double")
-            / col("total_lines").cast("double")))
+    graft.functions.KmvTriage.finish(agg, "lines")
 }

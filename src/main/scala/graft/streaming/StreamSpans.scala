@@ -323,8 +323,9 @@ object StreamSpans {
     approxFinish(agg)
   }
 
-  /** The twin's streaming aggregation, factored so the saturation spec
-    * can drive it through an explicit multi-trigger stream (the
+  /** The twin's streaming aggregation ([[graft.functions.KmvTriage.agg]]
+    * over the batch tier's window items), factored so the saturation
+    * spec can drive it through an explicit multi-trigger stream (the
     * Complete-mode cross-micro-batch sketch-merge path is distinct from
     * the batch estimator's partial-aggregation merge).
     */
@@ -332,26 +333,12 @@ object StreamSpans {
       df: DataFrame,
       textCol: String,
       windowTokens: Int,
-      k: Int): DataFrame = {
-    import df.sparkSession.implicits._
-    val w = windowTokens
-    df.select(col(textCol).cast("string")).as[String]
-      .flatMap(t => graft.operators.Dedupe.windowHashes(t, w))
-      .toDF("win")
-      .agg(count(lit(1)).as("total_windows"),
-        graft.functions.KmvSketch.kmv_distinct(col("win"), k)
-          .as("kmv_distinct_windows"))
-  }
+      k: Int): DataFrame =
+    graft.functions.KmvTriage.agg(
+      graft.operators.Dedupe.windowHashRows(df, textCol, windowTokens),
+      "win", "windows", k)
 
-  /** The batch tier's arithmetic, mirrored exactly (clamped dup mass,
-    * double fraction) so both twins land on one oracle relation.
-    */
+  /** The batch tier's arithmetic, so both twins land on one oracle relation. */
   private[graft] def approxFinish(agg: DataFrame): DataFrame =
-    agg
-      .withColumn("dup_windows",
-        greatest(lit(0L), col("total_windows") - col("kmv_distinct_windows")))
-      .withColumn("dup_fraction",
-        when(col("total_windows") === 0, lit(0.0))
-          .otherwise(col("dup_windows").cast("double")
-            / col("total_windows").cast("double")))
+    graft.functions.KmvTriage.finish(agg, "windows")
 }

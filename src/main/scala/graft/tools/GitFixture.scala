@@ -27,12 +27,7 @@ object GitFixture {
     * design, like the S8 source itself.
     */
   def build(dir: Path): Path = synchronized {
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally s.close()
-    }
+    graft.Harness.deleteRecursively(dir)
     Files.createDirectories(dir)
     // blank out global/system git config entirely: repo-local identity
     // alone would still inherit commit.gpgsign, hook paths, or templates

@@ -218,8 +218,8 @@ object ScaleRun {
     "dedup_containment",
     // exact-substring spans: THE token-volume-heavy realistic pipeline
     // job (Lee et al. cut). Window-hash kernel + input-sized hash agg;
-    // run also with SPARK_GRAFT_SPANS_BCAST_LIMIT=0 to exercise the
-    // shuffle build (the 100 TB path) at this tier. The incremental
+    // the operators pick the broadcast or shuffle build from the measured
+    // duplicated-window count. The incremental
     // refresh (lower-half index build + upper-half batch cut) is the
     // production shape and must hold at two decades too. r14 promotions:
     // the provenance relation (now a shared build feeding two queries —

@@ -177,11 +177,8 @@ object StreamRestartRun {
           "state is not key-proportional")
     }
 
-    // best-effort cleanup (hardlinked staging + checkpoint can be large)
-    val s = Files.walk(work)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Files.deleteIfExists(p); () })
-    finally s.close()
+    // cleanup (hardlinked staging + checkpoint can be large)
+    Harness.deleteRecursively(work)
 
     CaseResult(tInitial, tRestart, stateRows, stateBytes, heapMb,
       distinctKeys, sinkRows, occIn)

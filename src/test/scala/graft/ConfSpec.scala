@@ -141,24 +141,6 @@ class ConfSpec extends SparkSpec {
     } finally df.unpersist()
   }
 
-  test("parseByteLimit: default, zero sentinel, junk and negatives fail loudly") {
-    assert(Conf.parseByteLimit("X", None, 42L) == 42L)
-    assert(Conf.parseByteLimit("X", Some("0"), 42L) == 0L)
-    assert(Conf.parseByteLimit("X", Some(" 1048576 "), 42L) == 1048576L)
-    val e = intercept[IllegalArgumentException] {
-      Conf.parseByteLimit("SPARK_GRAFT_LINES_BCAST_LIMIT", Some("128MiB"), 42L)
-    }
-    assert(e.getMessage.contains("SPARK_GRAFT_LINES_BCAST_LIMIT"))
-    // Spark's own never-broadcast convention (-1, as in
-    // autoBroadcastJoinThreshold=-1) is an accepted alias for the 0
-    // force-shuffle sentinel; anything below it still fails loudly
-    assert(Conf.parseByteLimit("X", Some("-1"), 42L) == 0L)
-    val n = intercept[IllegalArgumentException] {
-      Conf.parseByteLimit("X", Some("-2"), 42L)
-    }
-    assert(n.getMessage.contains("0 forces the shuffle build"))
-  }
-
   test("totalFileBytes: batched per-parent listing matches per-file stats") {
     val dir = java.nio.file.Files.createTempDirectory("conf-bytes").toFile
     val sub = new java.io.File(dir, "sub"); sub.mkdirs()

@@ -30,12 +30,8 @@ object SparkSpec {
     // tiny (sf0.001 projections) and reclaimed on JVM exit.
     val wh = java.nio.file.Files.createTempDirectory("graft-test-warehouse")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        val s = java.nio.file.Files.walk(wh)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally s.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
+      try Harness.deleteRecursively(wh)
+      catch { case scala.util.control.NonFatal(_) => () }
     }, "graft-test-warehouse-purge"))
     // local[4] whatever SPARK_GRAFT_CPUS says: the forks' processor
     // budget (build.sbt) is sized for four-core sessions
