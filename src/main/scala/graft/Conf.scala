@@ -85,12 +85,19 @@ object Conf {
     * `rowBytes` on the wire, in. [[sizeShufflePartitionsForRows]] sizes
     * the stage with the caller's current width as its floor; when that
     * width already covers the sized count (every small input) the
-    * caller's own session comes back — a query on a fresh clone costs
-    * ~14 ms more than on the same session (local[4], 200k-row groupBy).
-    * Otherwise a `cloneSession()` of it comes back with only
-    * `spark.sql.shuffle.partitions` raised: every runtime conf the caller
-    * set (AQE, timezone, ANSI, temp views) carries over, and the caller's
-    * session is never written.
+    * caller's own session comes back. Otherwise a `cloneSession()` of it
+    * comes back with only `spark.sql.shuffle.partitions` raised: every
+    * runtime conf the caller set (AQE, timezone, ANSI, temp views) carries
+    * over, and the caller's session is never written.
+    *
+    * Why the caller's own session when it is wide enough: a clone of a
+    * session with its own artifact class loader (Spark's default) gets a
+    * copy of that loader, and Spark's codegen cache is keyed on the loader,
+    * so a query on a fresh clone compiles every generated class again. A
+    * two-aggregate groupBy at local[4] took 0.38–0.46 s on the same session
+    * and 0.52–0.64 s on fresh clones, with 6 compiles each time. Clones of
+    * [[Harness]] sessions, built without per-session loaders, no longer
+    * pay this; clones of a caller's own isolated session still do.
     *
     * Operators re-bind their inputs into the returned session
     * (`GraftBridge.rebind`), run the stage's eager work (cache / count /

@@ -36,8 +36,9 @@ object Harness {
     sys.env.get("SPARK_GRAFT_CPUS"), Runtime.getRuntime.availableProcessors))
 
   /** The session every main runs in: `local[cpus]` with as many shuffle
-    * partitions, UTC, no UI, AQE on, log level WARN. `extraConf` is set
-    * last (Smoke's SQL extensions, the tests' warehouse dir).
+    * partitions, UTC, no UI, AQE on, no per-session artifact class loader,
+    * log level WARN. `extraConf` is set last (Smoke's SQL extensions, the
+    * tests' warehouse dir).
     */
   def session(appName: String, extraConf: (String, String)*): SparkSession =
     sessionAt(cpus(), appName, extraConf)
@@ -60,6 +61,10 @@ object Harness {
       // current TIMESTAMP(MICROS) layout is unaffected by this flag and
       // both are handled adaptively by graft.Events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // sessions and their clones share the executor's class loader, so a
+      // query re-run in a child session reuses its compiled classes; graft
+      // adds no jars or artifacts to any session
+      .config("spark.sql.artifact.isolation.enabled", "false")
     val spark = extraConf
       .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()

@@ -380,6 +380,11 @@ object EventStream {
     // queries running concurrently in the caller's session keep their
     // width — no session-global mutation, no restore to race.
     val session = spark.newSession()
+    // without this a new session gets its own artifact class loader, and
+    // every run recompiles, reloads and re-JITs each generated class (the
+    // codegen cache keys on the loader). The session reads the key once,
+    // on its first artifact access, so it is set before anything else.
+    session.conf.set("spark.sql.artifact.isolation.enabled", "false")
     session.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
     // a re-run of the same sink name must never expose the previous
     // run's footprint if this one turns out stateless or fails

@@ -21,7 +21,7 @@ import java.nio.file.{Files, Paths}
   * The text-dedup commands are thin callers of the operators: each
   * report reads its documents, runs one operator and prints one rollup
   * line. Usage errors (an unknown flag or knob, a non-positive or
-  * non-integer number) exit 2.
+  * non-integer number, an input an operator refuses) exit 2.
   */
 object Cli {
 
@@ -81,12 +81,6 @@ object Cli {
       System.err.println(s"usage: $usage (or set SPARK_GRAFT_SF_DIR)")
       sys.exit(2)
     }
-
-  /** Run `body` in the CLI's session, stopped afterwards (also on failure). */
-  private def withSpark(body: SparkSession => Unit): Unit = {
-    val spark = Harness.session("graft-cli")
-    try body(spark) finally spark.stop()
-  }
 
   /** A parquet with the columns a command needs; refuses any other. */
   private def readWith(spark: SparkSession, file: String, cols: String*): DataFrame = {
@@ -308,7 +302,30 @@ object Cli {
       .toDF("blob_id", "content"))
   }
 
-  def main(args: Array[String]): Unit = args.toList match {
+  /** Each command runs in the CLI's own session, stopped afterwards (also
+    * on failure); the exit code is [[run]]'s.
+    */
+  def main(args: Array[String]): Unit = {
+    val code = run(args.toList) { body =>
+      val spark = Harness.session("graft-cli")
+      try body(spark) finally spark.stop()
+    }
+    if (code != 0) sys.exit(code)
+  }
+
+  /** Runs one command, its sessions lent by `withSpark`, and returns the
+    * exit code. A refused input is a usage error like a bad flag: an
+    * `IllegalArgumentException` (a reader's column check, an index's
+    * refresh contract, an operator's range check) prints its message and
+    * returns 2, not a stack trace.
+    */
+  private[tools] def run(args: List[String])(
+      withSpark: (SparkSession => Unit) => Unit): Int =
+    try { dispatch(args, withSpark); 0 }
+    catch { case e: IllegalArgumentException => System.err.println(e.getMessage); 2 }
+
+  private def dispatch(
+      args: List[String], withSpark: (SparkSession => Unit) => Unit): Unit = args match {
     case "dedup" :: "--wide" :: files if files.nonEmpty => withSpark { spark =>
       // 128-bit chunk identity: the 1e9+-chunk configuration where 64-bit
       // birthday collisions would silently conflate distinct chunks

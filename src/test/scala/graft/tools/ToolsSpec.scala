@@ -348,6 +348,32 @@ class ToolsSpec extends SparkSpec {
     assert(eMeta.getMessage.contains("sidecar"), eMeta.getMessage)
   }
 
+  test("the command line turns a refused input into exit 2 and its message") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-cli-refusal")
+    Seq((40L, "alpha beta gamma delta epsilon zeta eta theta base words"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/base.parquet")
+    Seq((50L, "fresh leading words then alpha beta gamma delta epsilon"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/batch.parquet")
+    // the test session is lent, never stopped
+    def cli(args: String*): Int = Cli.run(args.toList)(body => body(spark))
+    assert(cli("span-index", s"$dir/base.parquet", s"$dir/idx", "5") == 0)
+    // a window-6 cut against the window-5 index: exit 2, the refusal's
+    // message on stderr, no output written
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val code =
+      try cli("cut-spans-incremental", s"$dir/idx", s"$dir/batch.parquet", s"$dir/out", "6")
+      finally System.setErr(stderr)
+    assert(code == 2)
+    val msg = err.toString("UTF-8")
+    assert(msg.contains("windowTokens=5") && !msg.contains("\tat "), msg)
+    assert(!Files.exists(dir.resolve("out")))
+  }
+
   test("ordered chunk dump with payloads (reference store_data path)") {
     val dir = Files.createTempDirectory("graft-dump")
     val f = dir.resolve("x.bin")
