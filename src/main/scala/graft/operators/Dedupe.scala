@@ -6,30 +6,6 @@ import org.apache.spark.sql.expressions.Window
 import graft.Conf
 import graft.cdc.XXH64
 
-/** Deduplication operators for training-data pipelines, from exact to
-  * approximate:
-  *
-  *   - exact: fingerprint groupBy (one shuffle, the A1 merge shape)
-  *   - MinHash + LSH banding: shingle → signature → band buckets →
-  *     candidate pairs → exact Jaccard verify
-  *   - SimHash: 64-bit signature, block-match candidate generation
-  *     (pigeonhole over 4×16-bit blocks guarantees recall at hamming ≤ 3)
-  *   - n-gram Jaccard: exact pairwise verify on candidates only — the
-  *     O(n²) cross join never materializes at scale
-  *
-  * Scale notes: signatures are computed per-row in one narrow pass (UDF
-  * over the token set — no explode/pivot shuffle); candidate generation
-  * shuffles on (band, bucket-hash) whose cardinality ≈ docs × bands; the
-  * verify join is keyed by candidate pair, proportional to true-ish pairs,
-  * not n².
-  *
-  * Every operator here that knows its wide stage's row count (band,
-  * gram, span-window and block exchanges) builds that stage in
-  * [[graft.Conf.sizedSession]]: inputs are re-bound into it, the eager
-  * cache/count/collect work runs there, and the returned relation is
-  * re-bound to the caller's session. No operator writes the session it
-  * was handed.
-  */
 /** Minimal primitive long→long open-addressing hash map (linear probing,
   * load factor ≤ 0.5, doubling growth) for executor-side graph kernels —
   * no boxing, no per-entry node objects.
@@ -152,11 +128,35 @@ private[operators] final class LongPairMap(
   }
 }
 
+/** Deduplication operators for training-data pipelines, from exact to
+  * approximate:
+  *
+  *   - exact: fingerprint groupBy (one shuffle, the A1 merge shape)
+  *   - MinHash + LSH banding: shingle → signature → band buckets →
+  *     candidate pairs → exact Jaccard verify
+  *   - SimHash: 64-bit signature, block-match candidate generation
+  *     (pigeonhole over 4×16-bit blocks guarantees recall at hamming ≤ 3)
+  *   - n-gram Jaccard: exact pairwise verify on candidates only — the
+  *     O(n²) cross join never materializes at scale
+  *
+  * Scale notes: signatures are computed per-row in one narrow pass (UDF
+  * over the token set — no explode/pivot shuffle); candidate generation
+  * shuffles on (band, bucket-hash) whose cardinality ≈ docs × bands; the
+  * verify join is keyed by candidate pair, proportional to true-ish pairs,
+  * not n².
+  *
+  * Every operator here that knows its wide stage's row count (band,
+  * gram, span-window and block exchanges) builds that stage in
+  * [[graft.Conf.sizedSession]]: inputs are re-bound into it, the eager
+  * cache/count/collect work runs there, and the returned relation is
+  * re-bound to the caller's session. No operator writes the session it
+  * was handed.
+  */
 object Dedupe {
 
-  /** Largest band bucket full-recall mode will pair without degrading —
-    * the runtime ceiling behind `maxBucketSize = Int.MaxValue` in
-    * [[hammingPairs]] and [[Similarity.semanticDedupFromAssignment]].
+  /** Largest bucket full-recall mode will pair without degrading — the
+    * runtime ceiling behind `maxBucketSize = Int.MaxValue` in every
+    * [[BucketPairs]] operator.
     * 4096 members clique to ≤ 8.4M within-bucket pairs — heavy but
     * bounded; anything larger means the fingerprint has collapsed and
     * full recall would be quadratic, so the call fails loudly instead.
@@ -231,9 +231,6 @@ object Dedupe {
     sig
   }
 
-  /** The (id, shingles, sig) signature relation — the shared kernel of the
-    * batch and incremental MinHash paths. Narrow, one pass.
-    */
   /** Intersection size of two ASCENDING-sorted long arrays by linear
     * merge — allocation-free, O(|a|+|b|). Every shingle relation in this
     * file sorts its arrays at construction (minhashSigRelation), which
@@ -251,6 +248,9 @@ object Dedupe {
     c
   }
 
+  /** The (id, shingles, sig) signature relation — the shared kernel of the
+    * batch and incremental MinHash paths. Narrow, one pass.
+    */
   private def minhashSigRelation(
       df: DataFrame,
       idCol: String,
@@ -300,7 +300,8 @@ object Dedupe {
       .toDF("band", "bucket", "id")
   }
 
-  /** MinHash-LSH near-duplicate pairs.
+  /** MinHash-LSH near-duplicate pairs: band buckets give the candidates
+    * ([[BucketPairs]]), shingle sets verify them.
     * @return (id_a, id_b, est_jaccard, jaccard) — est from signature
     *         agreement, exact from shingle sets, both per candidate pair.
     * @param maxBucketSize LSH skew guard: a band bucket holding B docs
@@ -310,6 +311,8 @@ object Dedupe {
     *   member pairs with the bucket's min id only (B-1 pairs) — so giant
     *   duplicate clusters, whose docs collide in ALL bands, still surface
     *   through their canonical member instead of vanishing.
+    *   `Int.MaxValue` is full-recall mode, which refuses a bucket past
+    *   [[fullRecallBucketLimit]].
     * @param sigSink optional hook applied to the signature relation
     *   (id, shingles, sig) before use — the catalog passes a
     *   persist-and-read-back function here so the DuckDB oracle can
@@ -320,8 +323,7 @@ object Dedupe {
     *   `maxBucketSize` — over-cap buckets degrade to star pairs, which a
     *   plain slice-equality oracle does not model. Holds trivially at the
     *   driver's verification SF (bucket size is bounded by corpus size).
-    */
-  /** @param precomputedSigs an already-built (and typically cached)
+    * @param precomputedSigs an already-built (and typically cached)
     *   signature relation from [[minhashSigRelation]]'s contract
     *   (id, shingles, sig) — the operator then skips its own signature
     *   pass AND leaves the caller's cache alone (minhashRecallEval shares
@@ -362,52 +364,9 @@ object Dedupe {
     // band → bucket key = hash of the band's signature slice
     val banded = bandRelation(docs, bands, rowsPerBand)
 
-    // skew guard: small buckets pair all-vs-all; over-cap buckets emit
-    // star candidates around their min id (linear, recall via canonical).
-    // Cached: both cap filters consume it, and without the cache the
-    // banding + aggregation pass runs twice
-    val bucketSizes = banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .cache()
-    if (maxBucketSize == Int.MaxValue) {
-      // full-recall mode (oracle-parity callers): the star fallback is
-      // disabled, so refuse a quadratic bucket up front — same enforced
-      // invariant as [[hammingPairs]], reusing the cached sizes agg
-      val maxBucket = bucketSizes
-        .agg(coalesce(max(col("bucket_n")), lit(0L))).as[Long].head()
-      if (maxBucket > fullRecallBucketLimit) {
-        bucketSizes.unpersist()
-        if (!externalSigs) docs.unpersist()
-        throw new IllegalArgumentException(
-          s"minhashPairs full-recall mode (maxBucketSize = Int.MaxValue) found " +
-            s"a band bucket of $maxBucket members > fullRecallBucketLimit " +
-            s"($fullRecallBucketLimit): pairing it would be quadratic. Use the " +
-            s"default skew cap (star degradation) or more bands.")
-      }
-    }
-    val capped = banded.join(
-      bucketSizes.filter(col("bucket_n") <= maxBucketSize).drop("bucket_n"),
-      Seq("band", "bucket"))
-    val cliquePairs = capped
-      .as("l")
-      .join(capped.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    val hotMembers = banded.join(
-      bucketSizes.filter(col("bucket_n") > maxBucketSize).drop("bucket_n"),
-      Seq("band", "bucket"))
-    val hotCenters = hotMembers
-      .groupBy(col("band"), col("bucket"))
-      .agg(min(col("id")).as("center_id"))
-    val starPairs = hotMembers
-      .join(hotCenters, Seq("band", "bucket"))
-      .filter(col("id") =!= col("center_id"))
-      .select(col("center_id").as("id_a"), col("id").as("id_b"))
-    val candidates = cliquePairs.unionByName(starPairs).distinct()
-
-    val verified = candidates
+    val buckets = BucketPairs("minhashPairs", banded, Seq("band", "bucket"),
+      maxBucketSize, (if (externalSigs) Nil else Seq(docs)): _*)
+    val verified = buckets.pairs().distinct()
       .join(docs.select(col("id").as("id_a"), col("shingles").as("sh_a"),
         col("sig").as("sig_a")), "id_a")
       .join(docs.select(col("id").as("id_b"), col("shingles").as("sh_b"),
@@ -423,15 +382,7 @@ object Dedupe {
         (a, b, est, jac)
       }
       .toDF("id_a", "id_b", "est_jaccard", "jaccard")
-
-    // materialize the (small) pair result, then release the cached
-    // signature relation — callers keep a cheap cached handle, executors
-    // don't accumulate pinned blocks across catalog runs
-    val result = verified.filter(col("jaccard") >= threshold).cache()
-    result.count()
-    bucketSizes.unpersist()
-    if (!externalSigs) docs.unpersist()
-    GraftBridge.rebind(result, spark)
+    buckets.materialize(verified.filter(col("jaccard") >= threshold), spark)
   }
 
   /** Incremental (batch-over-index) MinHash near-dup classification — the
@@ -449,7 +400,9 @@ object Dedupe {
     * self-pairs, so a 100 TB index costs its banding scan, not its
     * pair count. Hot index buckets (boilerplate) degrade to their min-id
     * canonical member over `maxBucketSize` — same star discipline as
-    * [[minhashPairs]], bounded candidates per batch doc per band.
+    * [[minhashPairs]], bounded candidates per batch doc per band; full
+    * recall (`Int.MaxValue`) refuses an index bucket past
+    * [[fullRecallBucketLimit]].
     * Deployment shape at scale: the index signature relation is computed
     * once and PERSISTED (it is `indexSigSink`'s output — parquet it);
     * re-banding cached signatures per batch is a narrow scan, no
@@ -492,20 +445,11 @@ object Dedupe {
     // id only (the canonical member a giant duplicate cluster surfaces
     // through); small buckets join in full. Oracle parity precondition:
     // no index bucket exceeds the cap at verification SF.
-    val idxSizes = idxBands
-      .groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .cache()
-    val idxSmall = idxBands.join(
-      idxSizes.filter(col("bucket_n") <= maxBucketSize).drop("bucket_n"),
-      Seq("band", "bucket"))
-    val idxHotCanon = idxBands.join(
-      idxSizes.filter(col("bucket_n") > maxBucketSize).drop("bucket_n"),
-      Seq("band", "bucket"))
-      .groupBy(col("band"), col("bucket"))
-      .agg(min(col("id")).as("id"))
-    val idxCapped = idxSmall.select(col("band"), col("bucket"), col("id"))
-      .unionByName(idxHotCanon.select(col("band"), col("bucket"), col("id")))
+    val idxBuckets = BucketPairs("minhashClassify", idxBands,
+      Seq("band", "bucket"), maxBucketSize, batchDocs, idxDocs)
+    val idxCapped = idxBuckets.small.select(col("band"), col("bucket"), col("id"))
+      .unionByName(idxBuckets.centers()
+        .select(col("band"), col("bucket"), col("center.id").as("id")))
 
     val candidates = batchBands
       .join(idxCapped.withColumnRenamed("id", "match_id"), Seq("band", "bucket"))
@@ -540,12 +484,7 @@ object Dedupe {
         when(col("match_id").isNotNull, lit("neardup")).otherwise(lit("new"))
           .as("status"),
         col("match_id"), col("jaccard"))
-      .cache()
-    result.count()
-    idxSizes.unpersist()
-    batchDocs.unpersist()
-    idxDocs.unpersist()
-    GraftBridge.rebind(result, spark)
+    idxBuckets.materialize(result, spark)
   }
 
   // -------------------------------------------------------- n-gram jaccard
@@ -1731,8 +1670,7 @@ object Dedupe {
   /** SimHash near-dup pairs with hamming distance ≤ maxDistance, candidates
     * via pigeonhole block match: with 4 blocks of 16 bits, any pair at
     * hamming ≤ 3 agrees on ≥ 1 whole block — full recall, no n² join.
-    */
-  /** @param sigSink see minhashPairs — persists (id, sig) for the oracle;
+    * @param sigSink see minhashPairs — persists (id, sig) for the oracle;
     *   pigeonhole block-match has FULL recall at hamming <= maxDistance, so
     *   the oracle is simply all pairs with bit_count(xor) <= maxDistance —
     *   PROVIDED no block bucket exceeds `maxBucketSize` (over-cap buckets
@@ -1757,6 +1695,33 @@ object Dedupe {
       maxDistance, maxBucketSize)
   }
 
+  /** The pigeonhole BAND ROWS of a 64-bit fingerprint relation —
+    * (band, bucket, id) with 64/(maxDistance+1)-bit bucket keys, the
+    * exact banding [[hammingPairs]] joins on, exposed so streaming
+    * consumers ([[graft.streaming.StreamNearDup.bandMatchesFromRows]])
+    * share one block-split definition with the batch path.
+    */
+  def hammingBandRows(
+      sigRelation: DataFrame, maxDistance: Int = 3): DataFrame = {
+    val spark = sigRelation.sparkSession
+    import spark.implicits._
+    sigRelation.select(col("id").cast("long"), col("sig").cast("long"))
+      .as[(Long, Long)]
+      .flatMap { case (id, sig) =>
+        pigeonholeBlocks(sig, maxDistance).map { case (b, key) => (b, key, id) }
+      }
+      .toDF("band", "bucket", "id")
+  }
+
+  /** (block, key) of each of the maxDistance+1 pigeonhole blocks of `sig`:
+    * 64/(maxDistance+1)-bit slices, low bits first. */
+  private def pigeonholeBlocks(sig: Long, maxDistance: Int): Iterator[(Int, Long)] = {
+    val blocks = maxDistance + 1
+    val bits = 64 / blocks
+    val mask = if (bits >= 64) -1L else (1L << bits) - 1L
+    (0 until blocks).iterator.map(b => (b, (sig >>> (b * bits)) & mask))
+  }
+
   /** Generic hamming-ball pair search over ANY 64-bit fingerprint
     * relation `(id LONG, sig LONG)` — the pigeonhole machinery behind
     * [[simhashPairs]], factored out so other fingerprint families (the
@@ -1775,122 +1740,38 @@ object Dedupe {
     * fails loudly past the limit, so "full recall stays cheap" is an
     * enforced invariant, not a comment-level corpus argument.
     */
-  /** The pigeonhole BAND ROWS of a 64-bit fingerprint relation —
-    * (band, bucket, id) with 64/(maxDistance+1)-bit bucket keys, the
-    * exact banding [[hammingPairs]] joins on, exposed so streaming
-    * consumers ([[graft.streaming.StreamNearDup.bandMatchesFromRows]])
-    * share one block-split definition with the batch path.
-    */
-  def hammingBandRows(
-      sigRelation: DataFrame, maxDistance: Int = 3): DataFrame = {
-    val spark = sigRelation.sparkSession
-    import spark.implicits._
-    val blocks = maxDistance + 1
-    val bits = 64 / blocks
-    sigRelation.select(col("id").cast("long"), col("sig").cast("long"))
-      .as[(Long, Long)]
-      .flatMap { case (id, sig) =>
-        (0 until blocks).iterator.map { b =>
-          val mask = if (bits >= 64) -1L else (1L << bits) - 1L
-          (b, (sig >>> (b * bits)) & mask, id)
-        }
-      }
-      .toDF("band", "bucket", "id")
-  }
-
   def hammingPairs(
       sigRelation: DataFrame,
       maxDistance: Int = 3,
       maxBucketSize: Int = 2000): DataFrame = {
     val spark = sigRelation.sparkSession
     import spark.implicits._
-    val blocks = maxDistance + 1
-    val bits = 64 / blocks
-
     val sigs0 = sigRelation.select(col("id").cast("long"), col("sig").cast("long"))
       .cache()
 
     // input-sized block exchange (the minhashPairs discipline): the
     // count materializes the sig cache every later step reads anyway
     val sigs = GraftBridge.rebind(sigs0, Conf.sizedSession(spark,
-      math.multiplyExact(sigs0.count(), blocks.toLong),
+      math.multiplyExact(sigs0.count(), maxDistance + 1L),
       Conf.BlockRowShuffleBytes))
 
     val blocked = sigs
       .as[(Long, Long)]
       .flatMap { case (id, sig) =>
-        (0 until blocks).iterator.map { b =>
-          val mask = if (bits >= 64) -1L else (1L << bits) - 1L
-          (b, (sig >>> (b * bits)) & mask, id, sig)
-        }
+        pigeonholeBlocks(sig, maxDistance).map { case (b, key) => (b, key, id, sig) }
       }
       .toDF("block", "key", "id", "sig")
 
-    // same skew guard as minhashPairs: clique pairs for small buckets,
-    // star-around-min for over-cap buckets; cached for the two cap filters
-    val blockSizes = blocked
-      .groupBy(col("block"), col("key"))
-      .agg(count(lit(1)).as("block_n"))
-      .cache()
-    if (maxBucketSize == Int.MaxValue) {
-      // full-recall mode: no star fallback exists past this point, so the
-      // quadratic-bucket hazard must be refused up front (one tiny agg
-      // over the relation that is cached and consumed below anyway)
-      val maxBucket = blockSizes
-        .agg(coalesce(max(col("block_n")), lit(0L))).as[Long].head()
-      if (maxBucket > fullRecallBucketLimit) {
-        // release BOTH caches before refusing — a thrown require would
-        // otherwise pin sigs/blockSizes for the JVM lifetime
-        blockSizes.unpersist()
-        sigs.unpersist()
-        throw new IllegalArgumentException(
-          s"hammingPairs full-recall mode (maxBucketSize = Int.MaxValue) found a " +
-            s"band bucket of $maxBucket members > fullRecallBucketLimit " +
-            s"($fullRecallBucketLimit): pairing it would be quadratic. Use the " +
-            s"default skew cap (star degradation) or a finer fingerprint.")
-      }
-    }
-    val capped = blocked.join(
-      blockSizes.filter(col("block_n") <= maxBucketSize).drop("block_n"),
-      Seq("block", "key"))
-    val cliquePairs = capped
-      .as("l")
-      .join(capped.as("r"),
-        col("l.block") === col("r.block") && col("l.key") === col("r.key") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-    val hotMembers = blocked.join(
-      blockSizes.filter(col("block_n") > maxBucketSize).drop("block_n"),
-      Seq("block", "key"))
-    val hotCenters = hotMembers
-      .groupBy(col("block"), col("key"))
-      .agg(min(col("id")).as("center_id"))
-    val starPairs = hotMembers
-      .join(hotCenters, Seq("block", "key"))
-      .filter(col("id") =!= col("center_id"))
-      .join(sigs.select(col("id").as("center_id"), col("sig").as("center_sig")), "center_id")
-      .select(col("center_id").as("id_a"), col("id").as("id_b"),
-        col("center_sig").as("sig_a"), col("sig").as("sig_b"))
-    val result = cliquePairs
-      .unionByName(starPairs)
-      .distinct()
+    val buckets = BucketPairs("hammingPairs", blocked, Seq("block", "key"),
+      maxBucketSize, sigs)
+    // distinct over the sigs too: the hamming filter then only reads
+    // grouping columns, so the optimizer pushes it below the dedupe into
+    // the candidate joins (a dropDuplicates on the ids would keep it out)
+    val result = buckets.pairs("sig").distinct()
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
       .filter(col("hamming") <= maxDistance)
       .select(col("id_a"), col("id_b"), col("hamming"))
-      .cache()
-    result.count()
-    blockSizes.unpersist()
-    sigs.unpersist()
-    // the returned relation is materialized (its inputs were just
-    // unpersisted above, so a lazy plan would recompute the sig pass —
-    // including any expensive upstream decode — on every consumption).
-    // Cache lifecycle: the session would otherwise leak one cached
-    // relation per call; register it so harness loops (Verify, Bench,
-    // ScaleRun — and any long-lived session) can release after consuming
-    // (or, inside a shared build, so the shared entry owns it).
-    SessionCaches.track(result)
-    GraftBridge.rebind(result, spark)
+    buckets.materialize(result, spark)
   }
 
   /** [[SessionCaches.release()* SessionCaches.release()]] under its old
@@ -1965,10 +1846,8 @@ object Dedupe {
           col("true_pairs"))).as("recall_bp"))
     val materialized = SessionCaches.track(out.cache())
     materialized.count()
-    // minhashPairs hands back a cached relation it cannot release itself
-    // (callers normally keep iterating it); this eval consumed it fully
-    // into `materialized`, so drop the pin here — otherwise every
-    // dedup_lsh_eval run leaks one cached pairs relation for the JVM life
+    // the pairs relation is tracked, so the next release() would drop it;
+    // this eval consumed it fully into `materialized`, so drop it now
     foundPairs.unpersist()
     sigs.unpersist()
     materialized
@@ -1983,8 +1862,7 @@ object Dedupe {
     * clusters are dense, so diameter is tiny in practice; `maxIter`
     * bounds pathological chains). Each round is one join+aggregate —
     * the standard large-graph CC shape without any graph library.
-    */
-  /** @param singleTaskEdgeCap fast-path bound in DIRECTED edge rows (2×
+    * @param singleTaskEdgeCap fast-path bound in DIRECTED edge rows (2×
     *   the undirected pair count). The default (1M directed rows, ≤ 2M
     *   nodes) keeps the single task's parent map under ~150 MB; raise it
     *   only with executor heap to spare — the distributed path is always
@@ -2140,14 +2018,16 @@ object Dedupe {
   // --------------------------------------------------- embedding near-dup
 
   /** Embedding-cosine near-duplicate pairs via random-hyperplane LSH:
-    * sign-bit signature buckets candidates, exact cosine verifies. Vectors
-    * as Array[Float]; hyperplanes derived deterministically from a seed.
-    * `maxBucketSize` is the same skew guard as minhash/simhash: a hot
-    * signature bucket (e.g. a giant cluster of identical embeddings) would
-    * otherwise go quadratic; over-cap buckets degrade to star candidates
-    * around the bucket's min id.
-    */
-  /** @param sigSink optional hook applied to the (id, sig) signature
+    * sign-bit signature buckets candidates ([[BucketPairs]]), exact cosine
+    * verifies. Vectors as Array[Float]; hyperplanes derived
+    * deterministically from a seed.
+    * @param maxBucketSize the same skew guard as minhash/simhash: a hot
+    *   signature bucket (e.g. a giant cluster of identical embeddings)
+    *   would otherwise go quadratic; over-cap buckets degrade to star
+    *   candidates around the bucket's min id. `Int.MaxValue` is
+    *   full-recall mode, which refuses a bucket past
+    *   [[fullRecallBucketLimit]].
+    * @param sigSink optional hook applied to the (id, sig) signature
     *   relation before use — the catalog passes a persist-and-read-back
     *   function so the DuckDB oracle can recompute bucket collisions from
     *   the exact signatures this run used, then verify cosine from the
@@ -2176,39 +2056,13 @@ object Dedupe {
       .toDF("id", "sig", "vec"))
       .cache()
 
-    // cached: both cap filters (<= and >) consume it — without the cache
-    // the aggregation pass over `sigs` runs twice
-    val bucketSizes = sigs.groupBy(col("sig"))
-      .agg(count(lit(1)).as("bucket_n")).cache()
-    val capped = sigs.join(
-      bucketSizes.filter(col("bucket_n") <= maxBucketSize).drop("bucket_n"), Seq("sig"))
-    val cliquePairs = capped
-      .as("l")
-      .join(capped.as("r"), col("l.sig") === col("r.sig") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.vec").as("vec_a"), col("r.vec").as("vec_b"))
-    val hotMembers = sigs.join(
-      bucketSizes.filter(col("bucket_n") > maxBucketSize).drop("bucket_n"), Seq("sig"))
-    val hotCenters = hotMembers.groupBy(col("sig")).agg(min(col("id")).as("center_id"))
-    val starPairs = hotMembers
-      .join(hotCenters, Seq("sig"))
-      .filter(col("id") =!= col("center_id"))
-      .join(sigs.select(col("id").as("center_id"), col("vec").as("center_vec")), "center_id")
-      .select(col("center_id").as("id_a"), col("id").as("id_b"),
-        col("center_vec").as("vec_a"), col("vec").as("vec_b"))
-
-    val result = cliquePairs
-      .unionByName(starPairs)
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), col("vec_a"), col("vec_b"))
+    val buckets = BucketPairs("embeddingNearDups", sigs, Seq("sig"),
+      maxBucketSize, sigs)
+    val result = buckets.pairs("vec").dropDuplicates("id_a", "id_b")
       .as[(Long, Long, Array[Float], Array[Float])]
       .map { case (a, b, va, vb) => (a, b, Similarity.cosine(va, vb)) }
       .toDF("id_a", "id_b", "cosine")
       .filter(col("cosine") >= minCosine)
-      .cache()
-    result.count()
-    bucketSizes.unpersist()
-    sigs.unpersist()
-    result
+    buckets.materialize(result, spark)
   }
 }

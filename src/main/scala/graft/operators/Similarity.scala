@@ -506,56 +506,11 @@ object Similarity extends Serializable {
     import spark.implicits._
     val assigned = assigned0.select(col("bucket"), col("id"), col("vec"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // bucket-size split (the embeddingNearDups cap discipline): under-cap
-    // buckets do the full within-bucket self-join; over-cap buckets only
-    // compare members to the bucket's min id (star), so a hot centroid
-    // costs O(|bucket|) instead of O(|bucket|²)
-    // cached: both cap filters (<= and >) consume it — without the cache
-    // the aggregation pass over `assigned` runs twice
-    val bucketSizes = assigned.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bucket_n")).cache()
-    if (maxBucketSize == Int.MaxValue) {
-      // full-recall mode: the star fallback is disabled, so refuse a
-      // quadratic bucket up front (same enforced invariant as
-      // [[Dedupe.hammingPairs]]; one tiny agg over the cached sizes)
-      val maxBucket = bucketSizes
-        .agg(coalesce(max(col("bucket_n")), lit(0L))).as[Long].head()
-      if (maxBucket > Dedupe.fullRecallBucketLimit) {
-        // release BOTH caches before refusing — a thrown require would
-        // otherwise pin assigned/bucketSizes for the JVM lifetime
-        bucketSizes.unpersist()
-        assigned.unpersist()
-        throw new IllegalArgumentException(
-          s"semanticDedupFromAssignment full-recall mode found a bucket of " +
-            s"$maxBucket members > fullRecallBucketLimit " +
-            s"(${Dedupe.fullRecallBucketLimit}): pairing it would be quadratic. " +
-            s"Use the default skew cap or grow the bucket fan-out (more components).")
-      }
-    }
-    val capped = assigned.join(
-      bucketSizes.filter(col("bucket_n") <= maxBucketSize).drop("bucket_n"),
-      Seq("bucket"))
-    val cliqueCands = capped.as("a")
-      .join(capped.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("a.vec").as("vec_a"),
-        col("b.id").as("id_b"), col("b.vec").as("vec_b"))
-    val hotMembers = assigned.join(
-      bucketSizes.filter(col("bucket_n") > maxBucketSize).drop("bucket_n"),
-      Seq("bucket"))
-    val hotCenters = hotMembers.groupBy(col("bucket")).agg(min(col("id")).as("center_id"))
-    // center is the bucket min, so id_a < id_b holds like the clique path
-    val starCands = hotMembers
-      .join(hotCenters, Seq("bucket"))
-      .filter(col("id") =!= col("center_id"))
-      .join(assigned.select(col("id").as("center_id"), col("vec").as("center_vec")),
-        "center_id")
-      .select(col("center_id").as("id_a"), col("center_vec").as("vec_a"),
-        col("id").as("id_b"), col("vec").as("vec_b"))
-    val pairs = cliqueCands
-      .unionByName(starCands)
-      .as[(Long, Array[Float], Long, Array[Float])]
-      .map { case (ia, va, ib, vb) => (ia, ib, cosine(va, vb)) }
+    val buckets = BucketPairs("semanticDedupFromAssignment", assigned,
+      Seq("bucket"), maxBucketSize, assigned)
+    val pairs = buckets.pairs("vec")
+      .as[(Long, Long, Array[Float], Array[Float])]
+      .map { case (ia, ib, va, vb) => (ia, ib, cosine(va, vb)) }
       .toDF("id_a", "id_b", "cosine")
       .filter(col("cosine") >= threshold)
     val result = assigned.as("m")
@@ -564,11 +519,7 @@ object Similarity extends Serializable {
       .select(col("id"), col("bucket").cast("long").as("bucket"),
         coalesce(col("dup_of"), col("id")).as("canonical_id"),
         col("dup_of").isNotNull.as("is_dup"))
-      .cache()
-    result.count()
-    bucketSizes.unpersist()
-    assigned.unpersist()
-    result
+    buckets.materialize(result, spark)
   }
 
   /** Shared seeded-init + Lloyd loop; the metric twins below differ only

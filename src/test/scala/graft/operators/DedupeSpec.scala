@@ -16,6 +16,53 @@ class DedupeSpec extends SparkSpec {
       .toDF("doc_id", "text")
   }
 
+  // Content-unique inputs for the bucket pair family: Spark's cache
+  // manager keys entries by CANONICALIZED plan, so two calls over
+  // byte-identical local fixtures would share one cache entry and alias
+  // each other's persistence state. `tag` seeds one extra row.
+  private def tagDocs(tag: String) = {
+    import spark.implicits._
+    docsDf.unionByName(Seq((5L, s"bucket pair family fixture tag $tag"))
+      .toDF("doc_id", "text"))
+  }
+
+  private def tagSigs(tag: String) = {
+    import spark.implicits._
+    ((0L until 64L).map(i => (i, i * 0x9e3779b97f4a7c15L)) :+
+      ((64L, tag.hashCode.toLong << 20))).toDF("id", "sig")
+  }
+
+  private def tagVecs(tag: String) = {
+    import spark.implicits._
+    val rng = new java.util.Random(1)
+    def vec() = Array.fill(8)(rng.nextFloat() * 2 - 1)
+    val v0 = vec()
+    val v1 = v0.clone(); v1(0) = v1(0) + 0.01f
+    val tagged = new java.util.Random(tag.hashCode.toLong)
+    (Seq((0L, v0), (1L, v1)) ++ (2L until 20L).map(i => (i, vec())) :+
+      ((20L, Array.fill(8)(tagged.nextFloat())))).toDF("vec_id", "embedding")
+  }
+
+  /** The five LSH / bucket near-dup operators, each run over the
+    * content-unique fixture of `tag`. */
+  private val bucketPairOps: Seq[(String, String => org.apache.spark.sql.DataFrame)] =
+    Seq(
+      "minhashPairs" -> (tag => Dedupe.minhashPairs(tagDocs(tag), "doc_id",
+        "text", shingleK = 2, threshold = 0.3)),
+      "minhashClassify" -> { tag =>
+        val d = tagDocs(tag)
+        Dedupe.minhashClassify(d.filter(col("doc_id") % 2 === 1),
+          d.filter(col("doc_id") % 2 === 0), "doc_id", "text", shingleK = 2,
+          threshold = 0.3)
+      },
+      "hammingPairs" -> (tag => Dedupe.hammingPairs(tagSigs(tag))),
+      "embeddingNearDups" -> (tag => Dedupe.embeddingNearDups(tagVecs(tag),
+        "vec_id", "embedding", dim = 8, planes = 4, minCosine = 0.9)),
+      "semanticDedupFromAssignment" -> (tag =>
+        Similarity.semanticDedupFromAssignment(tagVecs(tag).select(
+          (col("vec_id") % 3).as("bucket"), col("vec_id").as("id"),
+          col("embedding").as("vec")), threshold = 0.9)))
+
   test("exactDuplicates: identical texts share fp, canonical = min id") {
     val r = Dedupe.exactDuplicates(docsDf, "doc_id", col("text"))
     val rows = r.select("doc_id", "canonical_id", "is_dup").collect()
@@ -552,6 +599,35 @@ class DedupeSpec extends SparkSpec {
       assert(n <= pinned(op), s"$op ran $n Spark jobs, pinned at ${pinned(op)}")
   }
 
+  test("bucket pair operators start no more Spark jobs than pinned") {
+    val got = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    for ((name, op) <- bucketPairOps)
+      got(name) = jobsOf(op("job pin"))
+    // docs 0 and 1 are identical and 2 is their near copy: a cap of 2
+    // sends their 3-member band buckets down the star path
+    got("minhashPairs/capped") = jobsOf {
+      Dedupe.minhashPairs(tagDocs("job pin capped"), "doc_id", "text",
+        shingleK = 2, threshold = 0.3, maxBucketSize = 2)
+    }
+    got("minhashPairs/fullRecall") = jobsOf {
+      Dedupe.minhashPairs(tagDocs("job pin full recall"), "doc_id", "text",
+        shingleK = 2, threshold = 0.3, maxBucketSize = Int.MaxValue)
+    }
+    SessionCaches.release()
+    // the counts measured before the five operators shared one pair
+    // builder. An added eager action shows up here
+    val pinned = Map(
+      "minhashPairs" -> 20, "minhashPairs/capped" -> 21,
+      "minhashPairs/fullRecall" -> 18, "minhashClassify" -> 21,
+      "hammingPairs" -> 16, "embeddingNearDups" -> 17,
+      "semanticDedupFromAssignment" -> 19)
+    info(s"Spark jobs per operator: $got")
+    assert(got.keySet == pinned.keySet)
+    for ((op, n) <- got)
+      assert(n <= pinned(op),
+        s"$op ran $n Spark jobs, pinned at ${pinned(op)} (all: $got)")
+  }
+
   test("minhashRecallEval: identity on exact dups, invariants on a border pair") {
     import spark.implicits._
     // docs 0/1 identical (every band matches — ALWAYS found); docs 2/3 a
@@ -646,6 +722,18 @@ class DedupeSpec extends SparkSpec {
     val uncapped = Dedupe.minhashPairs(df, "doc_id", "text", shingleK = 2,
       threshold = 0.9, maxBucketSize = 2000)
     assert(uncapped.count() == 30L * 29 / 2)
+    // the same 30 docs as a classify INDEX: every band bucket is hot, so
+    // the index side is represented by its min id, the canonical match
+    val batch = Seq((100L, "same text repeated for everyone here"),
+      (101L, "a novel document that shares nothing with the index"))
+      .toDF("doc_id", "text")
+    val classified = Dedupe.minhashClassify(batch, df, "doc_id", "text",
+      shingleK = 2, threshold = 0.9, maxBucketSize = 5)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2)))).toMap
+    assert(classified == Map(100L -> (("neardup", 0L)), 101L -> (("new", -1L))),
+      s"hot index bucket must surface through its min id: $classified")
+    SessionCaches.release()
   }
 
   test("hammingPairs equals brute force on a pseudo-random sig relation") {
@@ -676,6 +764,18 @@ class DedupeSpec extends SparkSpec {
     assert(want.nonEmpty, "fixture must plant at least one near pair")
   }
 
+  /** `refuse` must fail with the full-recall guard's message and leave
+    * the persistent-RDD count where it found it: the refusal releases
+    * every cache it built while checking. */
+  private def assertRefusesWithoutLeak(refuse: => Unit): Unit = {
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[IllegalArgumentException](refuse)
+    assert(e.getMessage.contains("fullRecallBucketLimit"),
+      s"guard must name its threshold, got: ${e.getMessage}")
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "refused full-recall call leaked cached relations")
+  }
+
   test("hammingPairs full-recall mode refuses an over-limit bucket loudly") {
     import spark.implicits._
     // hostile corpus: fullRecallBucketLimit + 1 IDENTICAL signatures —
@@ -684,18 +784,10 @@ class DedupeSpec extends SparkSpec {
     // here, never silently go all-pairs.
     val n = Dedupe.fullRecallBucketLimit.toInt + 1
     val hostile = spark.range(n).select(col("id"), lit(0x5eedL).as("sig"))
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    val e = intercept[IllegalArgumentException] {
+    assertRefusesWithoutLeak {
       Dedupe.hammingPairs(hostile, maxDistance = 3,
         maxBucketSize = Int.MaxValue)
     }
-    assert(e.getMessage.contains("fullRecallBucketLimit"),
-      s"guard must name its threshold, got: ${e.getMessage}")
-    // the refusal must not leak the sigs/blockSizes caches it built while
-    // checking (the ADVICE r10 finding): persistent-RDD count returns to
-    // its pre-call level
-    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
-      "refused full-recall call leaked cached relations")
     // the same corpus under the default skew cap star-degrades fine
     val starred = Dedupe.hammingPairs(hostile, maxDistance = 3)
     assert(starred.count() == (n - 1).toLong,
@@ -715,21 +807,36 @@ class DedupeSpec extends SparkSpec {
     val n = Dedupe.fullRecallBucketLimit.toInt + 1
     val hostile = spark.range(n)
       .select(col("id"), lit("the same text every time again").as("text"))
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    val e = intercept[IllegalArgumentException] {
+    assertRefusesWithoutLeak {
       Dedupe.minhashPairs(hostile, "id", "text",
         numHashes = 16, bands = 4, maxBucketSize = Int.MaxValue)
     }
-    assert(e.getMessage.contains("fullRecallBucketLimit"),
-      s"guard must name its threshold, got: ${e.getMessage}")
-    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
-      "refused full-recall call leaked cached relations")
     // a sane corpus passes full-recall mode untouched
     val sane = (0L until 8L)
       .map(i => (i, s"doc number $i with its own words $i"))
       .toDF("id", "text")
     Dedupe.minhashPairs(sane, "id", "text",
       numHashes = 16, bands = 4, maxBucketSize = Int.MaxValue).unpersist()
+  }
+
+  test("embeddingNearDups full-recall mode refuses an over-limit bucket loudly") {
+    // identical vectors share every hyperplane sign, so the one signature
+    // bucket holds the whole corpus
+    val n = Dedupe.fullRecallBucketLimit.toInt + 1
+    val hostile = spark.range(n)
+      .select(col("id"), lit(Array(1.0f, 0.0f)).as("vec"))
+    assertRefusesWithoutLeak {
+      Dedupe.embeddingNearDups(hostile, "id", "vec", dim = 2,
+        maxBucketSize = Int.MaxValue)
+    }
+    // the default skew cap star-degrades the hot bucket: n-1 pairs, all
+    // around the min id
+    val starred = Dedupe.embeddingNearDups(hostile, "id", "vec", dim = 2)
+      .select(col("id_a"), col("id_b")).collect()
+    assert(starred.length == n - 1,
+      s"default cap must star-degrade the hot bucket, got ${starred.length} pairs")
+    assert(starred.forall(_.getLong(0) == 0L), "every pair links to the min id")
+    SessionCaches.release()
   }
 
   test("simhash: identical text => distance 0; near text small; far text large") {
@@ -763,23 +870,57 @@ class DedupeSpec extends SparkSpec {
     assert(pairs.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L))
   }
 
-  test("hammingPairs cache lifecycle: SessionCaches.release releases the result") {
-    import spark.implicits._
+  test("bucket pair family cache lifecycle: SessionCaches.release releases every result") {
     import org.apache.spark.storage.StorageLevel
-    val sigs = (0L until 200L).map(i => (i, i * 0x9e3779b97f4a7c15L))
-      .toDF("id", "sig")
-    val pairs = Dedupe.hammingPairs(sigs, maxDistance = 3)
-    pairs.count() // consume the materialized result
-    // assert on THIS relation's storage state, not the SparkContext-global
+    // assert on THESE relations' storage state, not the SparkContext-global
     // getPersistentRDDs set: suites share one context and run in parallel,
     // so a global before/after diff races against every concurrent
     // .cache() elsewhere (and draining the global registry here could
     // unpersist a relation another suite is mid-consuming)
-    assert(pairs.storageLevel != StorageLevel.NONE,
-      "hammingPairs must hand back its materialized (cached) result")
+    val results = bucketPairOps.map { case (name, op) =>
+      val r = op("release lifecycle")
+      r.count() // consume the materialized result
+      assert(r.storageLevel != StorageLevel.NONE,
+        s"$name must hand back its materialized (cached) result")
+      name -> r
+    }
     SessionCaches.release()
-    assert(pairs.storageLevel == StorageLevel.NONE,
-      "SessionCaches.release must unpersist the tracked result")
+    val kept = results.collect {
+      case (name, r) if r.storageLevel != StorageLevel.NONE => name
+    }
+    assert(kept.isEmpty,
+      s"SessionCaches.release must unpersist every result; still cached: $kept")
+  }
+
+  test("a release-free loop of the bucket pair family holds O(1) cached results") {
+    import org.apache.spark.storage.StorageLevel
+    // three rounds of all five operators (15 registrations) with no
+    // release: the registry keeps at most MaxScoped, so the first round's
+    // results are evicted (unpersisted) by the two rounds after it
+    val rounds = (1 to 3).map { i =>
+      bucketPairOps.map { case (name, op) =>
+        val r = op(s"release-free loop round $i")
+        r.count()
+        assert(SessionCaches.scopedCount <= SessionCaches.MaxScoped)
+        name -> r
+      }
+    }
+    val results = rounds.flatten
+    val stillPersisted = results.count(_._2.storageLevel != StorageLevel.NONE)
+    assert(stillPersisted <= SessionCaches.MaxScoped,
+      s"$stillPersisted of ${results.size} loop results still persisted: " +
+        results.filter(_._2.storageLevel != StorageLevel.NONE).map(_._1)
+          .groupBy(identity).map { case (n, xs) => s"$n ${xs.size}" }
+          .mkString(", "))
+    val neverEvicted = rounds.head.collect {
+      case (name, r) if r.storageLevel != StorageLevel.NONE => name
+    }
+    assert(neverEvicted.isEmpty,
+      s"first-round results the registry never evicted: $neverEvicted")
+    // an evicted relation is still a valid plan: it recomputes
+    val (_, first) = rounds.head.head
+    assert(first.count() > 0)
+    SessionCaches.release()
   }
 
   test("keepBestPerCluster: argmax score, min-id ties, singletons keep") {
