@@ -86,79 +86,6 @@ object Gear {
     cache.computeIfAbsent(seed, s => Array.tabulate(256)(i => splitmix64(s * 0x2545F4914F6CDD1DL + i.toLong)))
 }
 
-/** Streaming CDC chunker: splits an `InputStream` into content-defined
-  * chunks, reading `bufSize` bytes at a time (reference uses a 1 MiB read
-  * buffer, src/store.rs:14). Memory is bounded by `bufSize + maxLen` when
-  * `enforceMax` is on, so arbitrarily large files stream without
-  * materializing — this is the >2 GB scale path SURVEY §7.4-3 calls for.
-  *
-  * The gear hash state is reset at each boundary; since the gear window is
-  * 64 bytes and minLen ≫ 64, boundary decisions are identical to the
-  * carried-state variant, and reset keeps chunking a pure function of the
-  * chunk-local byte stream.
-  *
-  * Closes the stream on exhaustion.
-  */
-final class ChunkIterator(in: InputStream, params: ChunkerParams, bufSize: Int = 1 << 20)
-    extends Iterator[Array[Byte]] {
-  private val table = Gear.table(params.tableSeed)
-  private val buf = new Array[Byte](bufSize)
-  private val pending = scala.collection.mutable.Queue.empty[Array[Byte]]
-  private val carry = new java.io.ByteArrayOutputStream(math.min(params.maxLen, 1 << 20))
-  private var carryLen = 0
-  private var h = 0L
-  private var eof = false
-
-  private def fill(): Unit = {
-    while (pending.isEmpty && !eof) {
-      val n = in.read(buf)
-      if (n < 0) {
-        eof = true
-        in.close()
-        if (carryLen > 0) { pending.enqueue(carry.toByteArray); carry.reset(); carryLen = 0 }
-      } else {
-        // hash-free warm-up per chunk (see Chunker.hashSkip): positions
-        // below `skip` can never influence an eligible boundary, so they
-        // advance in one bounds computation instead of per-byte hashing;
-        // curLen carries the skip progress across buffer refills
-        val skip = Chunker.hashSkip(params)
-        var i = 0
-        var start = 0
-        var curLen = carryLen
-        while (i < n) {
-          if (curLen < skip) {
-            val adv = math.min(skip - curLen, n - i)
-            curLen += adv
-            i += adv
-            h = 0L
-          }
-          var boundaryAt = -1
-          while (boundaryAt < 0 && i < n) {
-            h = (h << 1) + table(buf(i) & 0xff)
-            curLen += 1
-            i += 1
-            if ((curLen >= params.minLen && (h & params.mask) == 0L) ||
-              (params.enforceMax && curLen >= params.maxLen)) boundaryAt = i
-          }
-          if (boundaryAt >= 0) {
-            carry.write(buf, start, boundaryAt - start)
-            pending.enqueue(carry.toByteArray)
-            carry.reset()
-            start = boundaryAt
-            curLen = 0
-            h = 0L
-          }
-        }
-        carry.write(buf, start, n - start)
-        carryLen = curLen
-      }
-    }
-  }
-
-  override def hasNext: Boolean = { fill(); pending.nonEmpty }
-  override def next(): Array[Byte] = { fill(); pending.dequeue() }
-}
-
 /** One chunk found by [[ChunkScan.stats]]: the config that cut it, its
   * index within that config's chunk stream, xxh64 (seed 42), size, and LZ4
   * size (0 for configs whose compressed size was not requested).
@@ -166,12 +93,14 @@ final class ChunkIterator(in: InputStream, params: ChunkerParams, bufSize: Int =
 final case class ScannedChunk(config: Int, index: Long, hash: Long, size: Int, compressed: Int)
 
 /** Chunks ONE input stream under several chunker configs from a single
-  * read. Bytes land once in a shared window; every config runs
-  * `Chunker.nextEnd` over it from its own chunk start, so a file is opened
-  * and read once however many configs chunk it. `advance()` reports each
-  * chunk as a span of `window` (`offset`, `length`), valid until the next
-  * call, so callers hash it in place without copying. Per config, the
-  * boundaries equal ChunkIterator's (ChunkerSpec pins that).
+  * read — the one streaming chunk kernel. Bytes land once in a shared
+  * window; every config runs `Chunker.nextEnd` over it from its own chunk
+  * start, so a file is opened and read once however many configs chunk it.
+  * `advance()` reports each chunk as a span of `window` (`offset`,
+  * `length`), valid until the next call, so callers hash it in place
+  * without copying. Per config, the boundaries equal the naive reference's
+  * — a per-byte gear walk with no hash skip and no buffering — at every
+  * read buffer size (ChunkerSpec pins that).
   *
   * A chunk that runs into the window's end is deferred and rescanned from
   * its start after the next refill: nextEnd's decision at a position
@@ -262,12 +191,6 @@ final class ChunkScan(in: InputStream, configs: IndexedSeq[ChunkerParams], bufSi
 }
 
 object Chunker {
-  /** Chunk an in-memory byte array (kernel-level API, used by tests and
-    * small-payload callers; the DataFrame layer streams via ChunkScan).
-    */
-  def chunk(bytes: Array[Byte], params: ChunkerParams = ChunkerParams.Default): Vector[Array[Byte]] =
-    new ChunkIterator(new java.io.ByteArrayInputStream(bytes), params).toVector
-
   /** Hash-free prefix per chunk: gear's 64-bit register forgets a byte
     * after 64 shifts, so nothing before (minLen − 64) can influence an
     * ELIGIBLE boundary test (the first one fires at curLen == minLen with
@@ -303,12 +226,11 @@ object Chunker {
 
   /** Per-chunk (hash, size, compressedSize) over an in-memory payload in a
     * SINGLE pass with zero chunk copies: boundary scan + offset-based
-    * xxh64/lz4 directly on the source array. This is the hot kernel for
-    * in-table payloads (cdc_chunks generator, chunkColumn) where the
-    * streaming ChunkIterator's per-chunk ByteArrayOutputStream + copy would
-    * dominate at small chunk sizes (maskBits=5 ⇒ ~32 B chunks).
-    * Boundary semantics are identical to ChunkIterator (gear state resets
-    * at each boundary; ChunkerSpec cross-checks the two paths).
+    * xxh64/lz4 directly on the source array. This is the kernel of the
+    * `cdc_chunks` generator over in-table payloads, where a per-chunk copy
+    * would dominate at small chunk sizes (maskBits=5 ⇒ ~32 B chunks).
+    * Boundaries are `nextEnd`'s, as in `boundaries` and ChunkScan
+    * (ChunkerSpec checks all three against the naive reference).
     */
   def chunkStats(bytes: Array[Byte], params: ChunkerParams): Iterator[(Long, Int, Int)] = {
     if (bytes == null || bytes.isEmpty) Iterator.empty

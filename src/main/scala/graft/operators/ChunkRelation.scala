@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import graft.cdc.{ChunkIterator, ChunkScan, ChunkerParams, Lz4Len, XXH64}
+import graft.cdc.{ChunkScan, ChunkerParams, Lz4Len, XXH64}
 
 /** One row per chunk occurrence — the engine's core relation (SURVEY §1.1):
   * `(file_idx, chunk_idx, hash, size, compressed)`, optionally `data`.
@@ -105,7 +105,7 @@ object ChunkRelation {
     * every config in `configs` (row `config` = index into `configs`).
     * The LZ4 size is computed only for configs with `lz4(config)` and is 0
     * for the others. Files at or above `largeFileThreshold` go through
-    * DistributedChunker, once per config.
+    * DistributedChunker, once per config, sized by the listing above.
     */
   private[graft] def chunkConfigs(
       spark: SparkSession,
@@ -125,7 +125,7 @@ object ChunkRelation {
       }
     }
     val split = for (f <- large; (p, c) <- cfgs.zipWithIndex) yield
-      DistributedChunker.chunkLargeFile(spark, f.path, fileIdx = f.idx, p)
+      DistributedChunker.chunkLargeFile(spark, f, p)
         .select(lit(c).as("config"), col("file_idx"), col("chunk_idx"), col("hash"),
           col("size"), (if (withLz4(c)) col("compressed") else lit(0L)).as("compressed"))
         .as[ConfigChunkRow]
@@ -139,10 +139,8 @@ object ChunkRelation {
       params: ChunkerParams = ChunkerParams.Default): Dataset[ChunkRow128] = {
     import spark.implicits._
     perFile(spark, sizeFiles(paths)) { f =>
-      val scan = new ChunkScan(open(f.path), IndexedSeq(params), params.readBufSize)
-      Iterator.continually(scan.advance()).takeWhile(identity).map { _ =>
-        val (w, off, len) = (scan.window, scan.offset, scan.length)
-        ChunkRow128(f.idx, scan.index,
+      scanFile(f.path, params) { (w, off, len, ci) =>
+        ChunkRow128(f.idx, ci,
           XXH64.hash(w, off, len, XXH64.DefaultSeed),
           XXH64.hash(w, off, len, 0x5ECD5EED5ECD5EEDL), // independent second seed
           len.toLong, Lz4Len(w, off, len).toLong)
@@ -157,12 +155,21 @@ object ChunkRelation {
       params: ChunkerParams = ChunkerParams.Default): Dataset[ChunkRowWithData] = {
     import spark.implicits._
     perFile(spark, sizeFiles(paths)) { f =>
-      new ChunkIterator(open(f.path), params, params.readBufSize).zipWithIndex.map {
-        case (bytes, ci) =>
-          ChunkRowWithData(f.idx, ci.toLong, XXH64.hash(bytes, XXH64.DefaultSeed),
-            bytes.length.toLong, Lz4Len(bytes).toLong, bytes)
+      scanFile(f.path, params) { (w, off, len, ci) =>
+        ChunkRowWithData(f.idx, ci, XXH64.hash(w, off, len, XXH64.DefaultSeed),
+          len.toLong, Lz4Len(w, off, len).toLong, java.util.Arrays.copyOfRange(w, off, off + len))
       }
     }
+  }
+
+  /** `path` chunked under the single config `params` by ChunkScan: `row`
+    * sees each chunk as (window, offset, length, chunk index), in place.
+    */
+  private def scanFile[T](path: String, params: ChunkerParams)(
+      row: (Array[Byte], Int, Int, Long) => T): Iterator[T] = {
+    val scan = new ChunkScan(open(path), IndexedSeq(params), params.readBufSize)
+    Iterator.continually(scan.advance()).takeWhile(identity)
+      .map(_ => row(scan.window, scan.offset, scan.length, scan.index))
   }
 
   /** `f` over every file, the files spread over `min(files,
@@ -192,29 +199,6 @@ object ChunkRelation {
       load.enqueue((bytes + f.len, b))
     }
     bins.toSeq.map(_.result().sortBy(_.idx))
-  }
-
-  /** Chunk an arbitrary binary column (one row in → N chunk rows out): the
-    * generator-shaped surface (SURVEY §2.2) for payloads already inside a
-    * DataFrame, e.g. document text bytes or multimodal blobs.
-    * Input must have columns (id LONG, content BINARY).
-    */
-  def chunkColumn(
-      df: DataFrame,
-      idCol: String,
-      contentCol: String,
-      params: ChunkerParams = ChunkerParams.Default): Dataset[ChunkRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(idCol, contentCol)
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, content) =>
-        val bytes = if (content == null) Array.emptyByteArray else content
-        graft.cdc.Chunker.chunkStats(bytes, params).zipWithIndex.map {
-          case ((hash, size, compressed), ci) =>
-            ChunkRow(id, ci.toLong, hash, size.toLong, compressed.toLong)
-        }
-      }
   }
 
   private def open(path: String): java.io.InputStream = {

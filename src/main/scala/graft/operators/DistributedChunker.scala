@@ -43,19 +43,18 @@ object DistributedChunker {
     */
   val MaxCollectedCandidates: Long = 100000000L
 
+  /** Chunk `file` (its `len` from the caller's listing, `idx` as every
+    * row's file_idx) under `params`.
+    */
   def chunkLargeFile(
       spark: SparkSession,
-      path: String,
-      fileIdx: Long = 0L,
+      file: SizedFile,
       params: ChunkerParams = ChunkerParams.Default,
       splitBytes: Long = 128L << 20,
       hashBatchBytes: Long = 64L << 20): Dataset[ChunkRow] = {
     import spark.implicits._
     require(params.minLen >= 64, "exactness requires minLen >= gear window (64)")
-    val fileLen = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(new org.apache.hadoop.conf.Configuration()).getFileStatus(p).getLen
-    }
+    val (path, fileIdx, fileLen) = (file.path, file.idx, file.len)
     val maskBits = java.lang.Long.bitCount(params.mask)
     val expectedCandidates = fileLen >> math.min(62, maskBits)
     require(expectedCandidates <= MaxCollectedCandidates,

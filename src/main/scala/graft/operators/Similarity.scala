@@ -93,26 +93,6 @@ object Similarity extends Serializable {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
-  /** IVF-style ANN: corpus assigned once to `numCentroids` coarse centroids
-    * (deterministic seeded init + a few Lloyd iterations over a sample),
-    * each query probes its `nprobe` nearest centroids' buckets only.
-    * Returns the same schema as bruteForceTopK; recall < 1 by design.
-    */
-  /** @param assignSink / probeSink optional hooks applied to the
-    *   (bucket, id, vec) assignment and (query_id, bucket) probe relations
-    *   before use — the catalog passes persist-and-read-back functions so
-    *   the DuckDB oracle re-derives everything DOWNSTREAM of the trained
-    *   quantizer (candidate restriction, cosine, top-k ranking) from the
-    *   exact assignments/probes this run used. The quantizer itself is
-    *   engine-computed data, like the LSH signatures of the dedup ops.
-    */
-  /** Train the coarse quantizer on a deterministic driver-side sample
-    * (sampleSize × dim floats, tiny). Ordering by a hash of the id gives
-    * an unbiased uniform sample and plans as TakeOrderedAndProject (per-
-    * partition top-k + driver merge), not a presorted-prefix of the id
-    * space, which would bias the quantizer toward old rows. Shared by
-    * ivfTopK and semanticDedup so their quantizers can never diverge.
-    */
   private def sampleVecs(
       base: DataFrame, sampleSize: Int, seed: Long): Array[Array[Float]] = {
     val spark = base.sparkSession
@@ -125,6 +105,13 @@ object Similarity extends Serializable {
       .map(_._2)
   }
 
+  /** Train the coarse quantizer on a deterministic driver-side sample
+    * (sampleSize × dim floats, tiny). Ordering by a hash of the id gives
+    * an unbiased uniform sample and plans as TakeOrderedAndProject (per-
+    * partition top-k + driver merge), not a presorted-prefix of the id
+    * space, which would bias the quantizer toward old rows. Shared by
+    * ivfTopK and semanticDedup so their quantizers can never diverge.
+    */
   private def trainQuantizer(
       base: DataFrame,
       numCentroids: Int,
@@ -158,6 +145,19 @@ object Similarity extends Serializable {
         .map(_._1)
         .toSeq
 
+  /** IVF-style ANN: corpus assigned once to `numCentroids` coarse centroids
+    * (deterministic seeded init + a few Lloyd iterations over a sample),
+    * each query probes its `nprobe` nearest centroids' buckets only.
+    * Returns the same schema as bruteForceTopK; recall < 1 by design.
+    *
+    * @param assignSink / probeSink optional hooks applied to the
+    *   (bucket, id, vec) assignment and (query_id, bucket) probe relations
+    *   before use — the catalog passes persist-and-read-back functions so
+    *   the DuckDB oracle re-derives everything DOWNSTREAM of the trained
+    *   quantizer (candidate restriction, cosine, top-k ranking) from the
+    *   exact assignments/probes this run used. The quantizer itself is
+    *   engine-computed data, like the LSH signatures of the dedup ops.
+    */
   def ivfTopK(
       df: DataFrame,
       idCol: String,

@@ -53,9 +53,9 @@ final case class CdcChunks(
     val bytes = child.eval(input).asInstanceOf[Array[Byte]]
     if (bytes == null || bytes.isEmpty) Iterator.empty
     else {
-      // single-pass zero-copy kernel: for in-table payloads the streaming
-      // ChunkIterator's per-chunk stream+copy machinery dominated at small
-      // chunk sizes; Chunker.chunkStats hashes/measures in place
+      // single-pass zero-copy kernel: for in-table payloads a per-chunk
+      // copy would dominate at small chunk sizes; Chunker.chunkStats
+      // hashes/measures in place
       graft.cdc.Chunker.chunkStats(bytes, params).zipWithIndex.map {
         case ((hash, size, compressed), i) =>
           InternalRow(i.toLong, hash, size.toLong, compressed.toLong)

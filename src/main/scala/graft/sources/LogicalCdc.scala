@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.cdc.{ChunkIterator, ChunkerParams}
+import graft.cdc.{ChunkScan, ChunkerParams, ScannedChunk}
 import graft.operators.ChunkRow
 
 /** Logical-CDC reader: chunk the UNCOMPRESSED column-chunk page streams of
@@ -20,8 +20,9 @@ import graft.operators.ChunkRow
   *
   * Scale shape: one task per (file, leaf column); each task projects the
   * file schema down to its column's top-level field (so parquet reads only
-  * that subtree's bytes), then streams pages lazily through the chunker —
-  * memory is bounded by one page + maxLen, never the column or file size.
+  * that subtree's bytes), then streams pages lazily through ChunkScan —
+  * memory is bounded by one page plus the scan window (read buffer +
+  * maxLen), never the column or file size.
   * chunk_idx encodes (column ordinal << 40 | position) so per-column chunk
   * order is preserved within the shared file_idx.
   */
@@ -61,10 +62,9 @@ object LogicalCdc {
         // the column ORDINAL from the enumeration stage identifies the leaf
         // (footer column order is deterministic for a given file), so the
         // chunking task skips the name-based footer re-scan
-        chunkOneColumn(path, colIdx, params).zipWithIndex.map {
-          case ((hash, size, compressed), i) =>
-            ChunkRow(fileIdx, (colIdx.toLong << ColIdxShift) | i.toLong,
-              hash, size.toLong, compressed.toLong)
+        chunkOneColumn(path, colIdx, params).map { c =>
+          ChunkRow(fileIdx, (colIdx.toLong << ColIdxShift) | c.index,
+            c.hash, c.size.toLong, c.compressed.toLong)
         }
       }
   }
@@ -81,7 +81,7 @@ object LogicalCdc {
   private def chunkOneColumn(
       path: String,
       colIdx: Int,
-      params: ChunkerParams): Iterator[(Long, Int, Int)] = {
+      params: ChunkerParams): Iterator[ScannedChunk] = {
     import org.apache.parquet.column.page.{DataPage, DataPageV1, DataPageV2}
     val reader = open(path)
     val schema = reader.getFooter.getFileMetaData.getSchema
@@ -132,14 +132,13 @@ object LogicalCdc {
       override def nextElement(): java.io.InputStream =
         new java.io.ByteArrayInputStream(payloads.next())
     }
-    val chunks = new ChunkIterator(new java.io.SequenceInputStream(en), params)
-      .map(c => (graft.cdc.XXH64.hash(c, graft.cdc.XXH64.DefaultSeed), c.length,
-        graft.cdc.Lz4Len(c)))
-    new Iterator[(Long, Int, Int)] {
+    val chunks = new ChunkScan(new java.io.SequenceInputStream(en), IndexedSeq(params),
+      params.readBufSize).stats(IndexedSeq(true))
+    new Iterator[ScannedChunk] {
       override def hasNext: Boolean =
         try chunks.hasNext
         catch { case t: Throwable => closeOnce(); throw t }
-      override def next(): (Long, Int, Int) =
+      override def next(): ScannedChunk =
         try chunks.next()
         catch { case t: Throwable => closeOnce(); throw t }
     }

@@ -2,7 +2,41 @@ package graft.cdc
 
 import org.scalatest.funsuite.AnyFunSuite
 
+object ChunkerSpec {
+
+  /** The naive reference every chunk kernel is checked against: a per-byte
+    * gear walk straight from the definition — `h = (h << 1) + g(b)`, a cut
+    * where `(h & mask) == 0` at or past minLen or at maxLen, h reset at each
+    * cut — with no hash skip and no buffering. (start, length) per chunk.
+    */
+  def noSkipReference(bytes: Array[Byte], p: ChunkerParams): Vector[(Int, Int)] = {
+    val table = Gear.table(p.tableSeed)
+    val out = Vector.newBuilder[(Int, Int)]
+    var h = 0L
+    var start = 0
+    var i = 0
+    while (i < bytes.length) {
+      h = (h << 1) + table(bytes(i) & 0xff)
+      i += 1
+      val curLen = i - start
+      if ((curLen >= p.minLen && (h & p.mask) == 0L) ||
+        (p.enforceMax && curLen >= p.maxLen)) {
+        out += ((start, curLen)); start = i; h = 0L
+      }
+    }
+    if (start < bytes.length) out += ((start, bytes.length - start))
+    out.result()
+  }
+
+  /** The reference's (xxh64 seed 42, size, lz4 size) per chunk. */
+  def referenceStats(bytes: Array[Byte], p: ChunkerParams): Vector[(Long, Int, Int)] =
+    noSkipReference(bytes, p).map { case (s, n) =>
+      (XXH64.hash(bytes, s, n, XXH64.DefaultSeed), n, Lz4Len(bytes, s, n))
+    }
+}
+
 class ChunkerSpec extends AnyFunSuite {
+  import ChunkerSpec.{noSkipReference, referenceStats}
 
   private def randomBytes(n: Int, seed: Long): Array[Byte] = {
     val r = new java.util.Random(seed)
@@ -11,9 +45,13 @@ class ChunkerSpec extends AnyFunSuite {
     a
   }
 
+  /** Chunk payloads as copies of `bytes`, cut at `Chunker.boundaries`. */
+  private def chunk(bytes: Array[Byte], p: ChunkerParams = ChunkerParams.Default): Vector[Array[Byte]] =
+    Chunker.boundaries(bytes, p).map { case (s, n) => java.util.Arrays.copyOfRange(bytes, s, s + n) }
+
   test("chunks concatenate back to the input") {
     val data = randomBytes(1 << 20, 1L)
-    val chunks = Chunker.chunk(data)
+    val chunks = chunk(data)
     assert(chunks.map(_.length).sum == data.length)
     assert(java.util.Arrays.equals(chunks.toArray.flatten, data))
   }
@@ -21,7 +59,7 @@ class ChunkerSpec extends AnyFunSuite {
   test("all chunks >= minLen except possibly the final; all <= maxLen") {
     val p = ChunkerParams.Default
     val data = randomBytes((1 << 20) + 12345, 2L)
-    val chunks = Chunker.chunk(data, p)
+    val chunks = chunk(data, p)
     assert(chunks.nonEmpty)
     chunks.init.foreach(c => assert(c.length >= p.minLen && c.length <= p.maxLen))
     assert(chunks.last.length <= p.maxLen)
@@ -29,30 +67,27 @@ class ChunkerSpec extends AnyFunSuite {
 
   test("average chunk size is in the expected ~64 KiB ballpark") {
     val data = randomBytes(8 << 20, 3L)
-    val chunks = Chunker.chunk(data)
+    val chunks = chunk(data)
     val avg = data.length.toDouble / chunks.size
     // 16 mask bits => expected 64 KiB between boundaries; allow wide slack.
     assert(avg > 16 * 1024 && avg < 200 * 1024, s"avg=$avg")
   }
 
-  test("deterministic across runs and buffer sizes") {
+  test("deterministic across runs") {
+    // read-buffer invariance is the property test's (ChunkScan at 1, 37,
+    // 4097 and 4 MiB read buffers against the naive reference)
     val data = randomBytes(3 << 20, 4L)
-    val a = Chunker.boundaries(data)
-    val b = Chunker.boundaries(data)
-    assert(a == b)
-    val small = new ChunkIterator(new java.io.ByteArrayInputStream(data), ChunkerParams.Default, bufSize = 4097)
-      .map(_.length).toVector
-    assert(small == a.map(_._2))
+    assert(Chunker.boundaries(data) == Chunker.boundaries(data))
   }
 
   test("duplicate content yields duplicate chunk hashes (X ++ X)") {
     val x = randomBytes(2 << 20, 5L)
     val dup = x ++ x
-    val hashes = Chunker.chunk(dup).map(XXH64.hash(_, XXH64.DefaultSeed))
+    val hashes = chunk(dup).map(XXH64.hash(_, XXH64.DefaultSeed))
     val unique = hashes.toSet
     assert(unique.size < hashes.size, "expected duplicated chunk hashes for doubled content")
     // Unique bytes should be close to one copy, well under total.
-    val sizeByHash = Chunker.chunk(dup).map(c => XXH64.hash(c, XXH64.DefaultSeed) -> c.length).toMap
+    val sizeByHash = chunk(dup).map(c => XXH64.hash(c, XXH64.DefaultSeed) -> c.length).toMap
     val uniqueBytes = sizeByHash.values.sum
     assert(uniqueBytes < dup.length * 0.75, s"uniqueBytes=$uniqueBytes total=${dup.length}")
   }
@@ -61,8 +96,8 @@ class ChunkerSpec extends AnyFunSuite {
     val x = randomBytes(4 << 20, 6L)
     val y = x.clone()
     y(2 << 20) = (y(2 << 20) ^ 0x5a).toByte
-    val hx = Chunker.chunk(x).map(XXH64.hash(_, 42L)).toSet
-    val hy = Chunker.chunk(y).map(XXH64.hash(_, 42L))
+    val hx = chunk(x).map(XXH64.hash(_, 42L)).toSet
+    val hy = chunk(y).map(XXH64.hash(_, 42L))
     val changed = hy.count(h => !hx.contains(h))
     assert(changed <= 4, s"changed=$changed of ${hy.size} chunks")
   }
@@ -80,7 +115,7 @@ class ChunkerSpec extends AnyFunSuite {
     (0 until 200).foreach { _ =>
       val n = rng.nextInt(50000)
       val data = randomBytes(n, rng.nextLong())
-      val chunks = Chunker.chunk(data, p)
+      val chunks = chunk(data, p)
       assert(chunks.map(_.length).sum == n)
       if (chunks.nonEmpty) {
         chunks.init.foreach(c => assert(c.length >= p.minLen && c.length <= p.maxLen))
@@ -98,79 +133,15 @@ class ChunkerSpec extends AnyFunSuite {
     r.nextBytes(data)
     val bounds = Chunker.boundaries(data)
     assert(bounds == Vector((0, 39480), (39480, 131072), (170552, 91592)))
-    val hashes = Chunker.chunk(data).map(c => XXH64.hash(c, 42L))
+    val hashes = chunk(data).map(c => XXH64.hash(c, 42L))
     assert(hashes == Vector(230101126712696998L, 1807013923015510247L,
       5897939731392082316L))
   }
 
-  test("hash-skip is boundary-identical to a no-skip reference at coarse masks") {
-    // directed at the warm-up window: minLen > 64 (so the skip engages)
-    // with a COARSE mask (4 bits ⇒ P[boundary] = 1/16 per byte), so many
-    // boundaries land exactly at curLen == minLen — the position where an
-    // off-by-one in hashSkip would first diverge. The production tests
-    // (16 mask bits) almost never exercise that position.
-    def noSkipReference(bytes: Array[Byte], p: ChunkerParams): Vector[(Int, Int)] = {
-      val table = Gear.table(p.tableSeed)
-      val out = Vector.newBuilder[(Int, Int)]
-      var h = 0L
-      var start = 0
-      var i = 0
-      while (i < bytes.length) {
-        h = (h << 1) + table(bytes(i) & 0xff)
-        i += 1
-        val curLen = i - start
-        if ((curLen >= p.minLen && (h & p.mask) == 0L) ||
-          (p.enforceMax && curLen >= p.maxLen)) {
-          out += ((start, curLen)); start = i; h = 0L
-        }
-      }
-      if (start < bytes.length) out += ((start, bytes.length - start))
-      out.result()
-    }
-    val rng = new scala.util.Random(31)
-    for (trial <- 0 until 40) {
-      val p = ChunkerParams(
-        mask = 0xf000000000000000L, // 4 bits: boundaries-at-minLen are common
-        minLen = 65 + rng.nextInt(200), // skip in [1, 200]
-        maxLen = 4096,
-        enforceMax = trial % 2 == 0,
-        tableSeed = rng.nextLong())
-      val data = randomBytes(8192 + rng.nextInt(8192), rng.nextLong())
-      val expect = noSkipReference(data, p)
-      assert(Chunker.boundaries(data, p) == expect, s"boundaries diverged: $p")
-      assert(Chunker.chunkStats(data, p).map(_._2).toVector == expect.map(_._2),
-        s"chunkStats diverged: $p")
-      // streaming path with a refill INSIDE the skip region
-      val streamed = new ChunkIterator(
-        new java.io.ByteArrayInputStream(data), p, bufSize = 37)
-        .map(_.length).toVector
-      assert(streamed == expect.map(_._2), s"ChunkIterator diverged: $p")
-    }
-  }
-
   test("empty input produces no chunks") {
-    assert(Chunker.chunk(Array.emptyByteArray).isEmpty)
+    assert(Chunker.boundaries(Array.emptyByteArray).isEmpty)
     assert(Chunker.chunkStats(Array.emptyByteArray, ChunkerParams.Default).isEmpty)
     assert(Chunker.chunkStats(null, ChunkerParams.Default).isEmpty)
-  }
-
-  test("chunkStats matches the streaming ChunkIterator path exactly") {
-    // the zero-copy kernel and the streaming iterator must agree
-    // (hash, size, compressed) for every chunk, at big and tiny chunk params
-    for {
-      params <- Seq(ChunkerParams.Default,
-        ChunkerParams(mask = -1L << (64 - 5), minLen = 16, maxLen = 256),
-        ChunkerParams(minLen = 64, maxLen = 1024, enforceMax = false))
-      seed <- Seq(11L, 12L)
-    } {
-      val data = randomBytes(300000 + seed.toInt, seed)
-      val streamed = new ChunkIterator(
-        new java.io.ByteArrayInputStream(data), params, bufSize = 8192)
-        .map(c => (XXH64.hash(c, XXH64.DefaultSeed), c.length, Lz4Len(c)))
-        .toVector
-      val stats = Chunker.chunkStats(data, params).toVector
-      assert(stats == streamed, s"mismatch for $params")
-    }
   }
 
   test("xet chunker tracks the default chunker's dedup ratio (documented divergence bound)") {
@@ -187,7 +158,7 @@ class ChunkerSpec extends AnyFunSuite {
     // land within 5 points of each other and of truth; on all-distinct
     // content both report ~1.0.
     def ratio(data: Array[Byte], p: ChunkerParams): Double = {
-      val sizeByHash = Chunker.chunk(data, p)
+      val sizeByHash = chunk(data, p)
         .map(c => XXH64.hash(c, 42L) -> c.length).toMap
       sizeByHash.values.sum.toDouble / data.length
     }
@@ -228,20 +199,24 @@ class ChunkerSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ChunkerParams.xetFromTarget(3000))
   }
 
-  /** ChunkIterator's (hash, size, lz4 size) stream — the reference the
-    * multi-config scan must reproduce per config.
-    */
-  private def iteratorStats(data: Array[Byte], p: ChunkerParams): Vector[(Long, Int, Int)] =
-    new ChunkIterator(new java.io.ByteArrayInputStream(data), p, bufSize = 8192)
-      .map(c => (XXH64.hash(c, XXH64.DefaultSeed), c.length, Lz4Len(c)))
-      .toVector
-
-  test("ChunkScan: every config yields ChunkIterator's (hash, size, lz4) stream from one read") {
+  test("property: every kernel equals the naive no-skip reference, per config, input and read buffer") {
+    // the coarse 4-bit configs (P[boundary] = 1/16 per byte) put many
+    // boundaries exactly at curLen == minLen, the position where an
+    // off-by-one in Chunker.hashSkip would first diverge; minLen 65..265
+    // makes the skipped prefix 1..201 bytes. The production configs
+    // (16 mask bits) almost never exercise that position.
+    val rng = new scala.util.Random(31)
+    val coarse = (65 to 265 by 25).zipWithIndex.map { case (minLen, i) =>
+      ChunkerParams(mask = 0xf000000000000000L, minLen = minLen, maxLen = 4096,
+        enforceMax = i % 2 == 0, tableSeed = rng.nextLong())
+    }
     val configs = IndexedSeq(
       ChunkerParams.Default,
       ChunkerParams.Xet,
+      ChunkerParams(mask = -1L << (64 - 5), minLen = 16, maxLen = 256), // stream_cdc's
       ChunkerParams(mask = -1L << (64 - 10), minLen = 256, maxLen = 4096),
-      ChunkerParams(mask = -1L << (64 - 10), minLen = 64, maxLen = 1024, enforceMax = false))
+      ChunkerParams(mask = -1L << (64 - 10), minLen = 64, maxLen = 1024, enforceMax = false)) ++
+      coarse
     val base = randomBytes(600000, 41L)
     // edited copy: an insert, a delete and an overwrite at scattered points
     val edited = base.slice(0, 150000) ++ randomBytes(3000, 42L) ++
@@ -252,29 +227,35 @@ class ChunkerSpec extends AnyFunSuite {
       "random" -> base,
       "edited copy" -> (base ++ edited),
       "empty" -> Array.emptyByteArray,
-      "shorter than minLen" -> randomBytes(50, 44L),
+      "shorter than minLen" -> randomBytes(configs.map(_.minLen).min - 1, 44L),
       "exact multiple of maxLen (forced cuts)" -> new Array[Byte](maxLenMultiple),
       "exact multiple of maxLen (random)" -> randomBytes(maxLenMultiple, 45L))
-    val expected = inputs.map { case (_, d) => configs.map(iteratorStats(d, _)) }
-    for {
-      bufSize <- Seq(1, 4097, 4 << 20)
-      ((name, data), want) <- inputs.zip(expected)
-    } {
-      val scan = new ChunkScan(new java.io.ByteArrayInputStream(data), configs, bufSize)
-      val got = scan.stats(configs.map(_ => true)).toVector
-      configs.indices.foreach { c =>
-        val mine = got.filter(_.config == c)
-        assert(mine.map(_.index) == mine.indices.map(_.toLong), s"$name/$bufSize/config $c: indices")
-        assert(mine.map(x => (x.hash, x.size, x.compressed)) == want(c),
-          s"$name/$bufSize: config $c (${configs(c)}) diverged from ChunkIterator")
+    for ((name, data) <- inputs) {
+      val want = configs.map(referenceStats(data, _))
+      // the array kernels
+      configs.zip(want).foreach { case (p, w) =>
+        assert(Chunker.boundaries(data, p) == noSkipReference(data, p), s"$name: boundaries diverged: $p")
+        assert(Chunker.chunkStats(data, p).toVector == w, s"$name: chunkStats diverged: $p")
       }
-      assert(!scan.advance(), "an exhausted scan stays exhausted")
-      // only the enforceMax = false config may grow the window
-      val bounded = configs.init
-      val boundedScan = new ChunkScan(new java.io.ByteArrayInputStream(data), bounded, bufSize)
-      while (boundedScan.advance()) ()
-      assert(boundedScan.window.length <= bufSize + bounded.map(_.maxLen).max,
-        s"$name/$bufSize: window ${boundedScan.window.length} beyond read buffer + maxLen")
+      // the streaming kernel: every config from one read; 37 puts a refill
+      // inside the coarse configs' skip region
+      for (bufSize <- Seq(1, 37, 4097, 4 << 20)) {
+        val scan = new ChunkScan(new java.io.ByteArrayInputStream(data), configs, bufSize)
+        val got = scan.stats(configs.map(_ => true)).toVector
+        configs.indices.foreach { c =>
+          val mine = got.filter(_.config == c)
+          assert(mine.map(_.index) == mine.indices.map(_.toLong), s"$name/$bufSize/config $c: indices")
+          assert(mine.map(x => (x.hash, x.size, x.compressed)) == want(c),
+            s"$name/$bufSize: config $c (${configs(c)}) diverged from the reference")
+        }
+        assert(!scan.advance(), "an exhausted scan stays exhausted")
+        // only the enforceMax = false configs may grow the window
+        val bounded = configs.filter(_.enforceMax)
+        val boundedScan = new ChunkScan(new java.io.ByteArrayInputStream(data), bounded, bufSize)
+        while (boundedScan.advance()) ()
+        assert(boundedScan.window.length <= bufSize + bounded.map(_.maxLen).max,
+          s"$name/$bufSize: window ${boundedScan.window.length} beyond read buffer + maxLen")
+      }
     }
   }
 
@@ -286,9 +267,9 @@ class ChunkerSpec extends AnyFunSuite {
     val default = got.filter(_.config == 0)
     assert(default.nonEmpty && default.forall(_.compressed == 0))
     assert(default.map(x => (x.hash, x.size)) ==
-      iteratorStats(data, ChunkerParams.Default).map(x => (x._1, x._2)))
+      referenceStats(data, ChunkerParams.Default).map(x => (x._1, x._2)))
     assert(got.filter(_.config == 1).map(x => (x.hash, x.size, x.compressed)) ==
-      iteratorStats(data, ChunkerParams.Xet))
+      referenceStats(data, ChunkerParams.Xet))
   }
 
   test("lz4 length is positive and compresses repetitive data well") {

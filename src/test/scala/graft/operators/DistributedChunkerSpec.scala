@@ -12,6 +12,9 @@ class DistributedChunkerSpec extends SparkSpec {
     p.toString
   }
 
+  /** `path` as file 0 of a listing. */
+  private def sized(path: String): SizedFile = SizedFile(0L, path, Files.size(java.nio.file.Paths.get(path)))
+
   private def randomBytes(n: Int, seed: Long): Array[Byte] = {
     val r = new java.util.Random(seed)
     val a = new Array[Byte](n)
@@ -27,7 +30,7 @@ class DistributedChunkerSpec extends SparkSpec {
     val path = writeTemp(data)
     val sequential = rows(ChunkRelation.chunkFiles(spark, Seq(path)))
     val parallel = rows(DistributedChunker.chunkLargeFile(
-      spark, path, splitBytes = 1L << 20, hashBatchBytes = 4L << 20))
+      spark, sized(path), splitBytes = 1L << 20, hashBatchBytes = 4L << 20))
     assert(parallel.size == sequential.size, s"${parallel.size} vs ${sequential.size} chunks")
     assert(parallel == sequential)
   }
@@ -37,7 +40,7 @@ class DistributedChunkerSpec extends SparkSpec {
     val path = writeTemp(data)
     val sequential = rows(ChunkRelation.chunkFiles(spark, Seq(path)))
     val parallel = rows(DistributedChunker.chunkLargeFile(
-      spark, path, splitBytes = 777777L, hashBatchBytes = 1L << 20))
+      spark, sized(path), splitBytes = 777777L, hashBatchBytes = 1L << 20))
     assert(parallel == sequential)
   }
 
@@ -46,7 +49,7 @@ class DistributedChunkerSpec extends SparkSpec {
     val path = writeTemp(data)
     val sequential = rows(ChunkRelation.chunkFiles(spark, Seq(path)))
     val parallel = rows(DistributedChunker.chunkLargeFile(
-      spark, path, splitBytes = 300000L))
+      spark, sized(path), splitBytes = 300000L))
     assert(parallel == sequential)
     assert(parallel.map(_._3).sum == data.length.toLong)
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.cdc.{ChunkIterator, Chunker, ChunkerParams, Lz4Len, XXH64}
+import graft.cdc.{Chunker, ChunkerParams, ChunkerSpec, XXH64}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
@@ -266,7 +266,7 @@ class EstimatorSpec extends SparkSpec {
       s"estimate ran ${jobs.get()} jobs; the fused single-scan estimate runs at most 3")
   }
 
-  test("chunkFiles rows equal the per-file ChunkIterator stream, row for row") {
+  test("chunkFiles rows equal the naive reference over each file's bytes, row for row") {
     val dir = Files.createTempDirectory("graft-chunkfiles")
     val contents = Seq(randomBytes(900 << 10, 81L), Array.emptyByteArray,
       randomBytes(300 << 10, 82L), randomBytes(20 << 10, 83L), randomBytes(2 << 20, 84L),
@@ -276,10 +276,9 @@ class EstimatorSpec extends SparkSpec {
     }
     val params = ChunkerParams(mask = -1L << (64 - 12), minLen = 1024, maxLen = 16 * 1024)
     val expect = contents.zipWithIndex.flatMap { case (c, fi) =>
-      new ChunkIterator(new java.io.ByteArrayInputStream(c), params).zipWithIndex.map {
-        case (b, ci) =>
-          ChunkRow(fi.toLong, ci.toLong, XXH64.hash(b, XXH64.DefaultSeed), b.length.toLong,
-            Lz4Len(b).toLong)
+      ChunkerSpec.referenceStats(c, params).zipWithIndex.map {
+        case ((hash, size, compressed), ci) =>
+          ChunkRow(fi.toLong, ci.toLong, hash, size.toLong, compressed.toLong)
       }
     }
     val got = ChunkRelation.chunkFiles(spark, paths, params)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.cdc.{Chunker, ChunkerParams, XXH64}
+import graft.cdc.{ChunkerParams, ChunkerSpec}
 import org.apache.spark.sql.functions._
 
 class CdcChunksSpec extends SparkSpec {
@@ -21,10 +21,10 @@ class CdcChunksSpec extends SparkSpec {
       .select(col("id"), CdcChunks.cdc_chunks(col("content")))
       .collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    val expected = Chunker
-      .chunk(payload, ChunkerParams.Default)
+    val expected = ChunkerSpec
+      .referenceStats(payload, ChunkerParams.Default)
       .zipWithIndex
-      .map { case (c, i) => (i.toLong, XXH64.hash(c, 42L), c.length.toLong) }
+      .map { case ((hash, size, _), i) => (i.toLong, hash, size.toLong) }
     assert(rows.map(r => (r._1, r._2)).toSeq == expected.map(e => (e._1, e._2)))
     assert(rows.map(_._3).sum == payload.length.toLong)
   }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
-import graft.cdc.ChunkerParams
+import graft.cdc.{ChunkerParams, XXH64}
 import graft.operators.{ChunkRelation, Estimator}
 import graft.synthetic.{DType, DataGenerator, EditPoints}
 
@@ -57,6 +57,14 @@ class LogicalCdcSpec extends AnyFunSuite with SparkSpec {
       .sortBy(r => (r.file_idx, r.chunk_idx))
     assert(a == b)
     assert(a.nonEmpty)
+    // golden digest of the sorted (file_idx, chunk_idx, hash, size,
+    // compressed) rows for this fixed fixture: any change to the page
+    // stream, the chunk kernel or the row encoding trips it
+    val rows = java.nio.ByteBuffer.allocate(a.size * 5 * 8)
+    a.foreach(r => rows.putLong(r.file_idx).putLong(r.chunk_idx).putLong(r.hash)
+      .putLong(r.size).putLong(r.compressed))
+    assert(a.size == 678)
+    assert(XXH64.hash(rows.array(), XXH64.DefaultSeed) == -3288596116903934215L)
     // uncompressed logical stream must be at least as large as the
     // compressed physical file (snappy) — sanity that we read real payloads
     val logicalBytes = a.map(_.size).sum

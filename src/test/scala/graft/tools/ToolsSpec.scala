@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.SparkSpec
+import graft.cdc.{Lz4Len, XXH64}
 import graft.operators.{ChunkRelation, CompareFormats}
 import graft.sources.TableFormat
 import org.apache.spark.sql.functions._
@@ -384,6 +385,12 @@ class ToolsSpec extends SparkSpec {
     val withData = ChunkRelation.chunkFilesWithData(spark, Seq(f.toString))
       .orderBy("chunk_idx").collect()
     assert(withData.map(_.data.length.toLong).sum == data.length.toLong)
+    // every row's stats describe its own payload
+    withData.foreach { r =>
+      assert(r.hash == XXH64.hash(r.data, XXH64.DefaultSeed), s"chunk ${r.chunk_idx}: hash")
+      assert(r.compressed == Lz4Len(r.data).toLong, s"chunk ${r.chunk_idx}: compressed")
+      assert(r.size == r.data.length.toLong, s"chunk ${r.chunk_idx}: size")
+    }
     // payload bytes reassemble the file in chunk order
     val reassembled = withData.flatMap(_.data)
     assert(java.util.Arrays.equals(reassembled, data))
