@@ -74,7 +74,7 @@ class ChunkerSpec extends AnyFunSuite {
   }
 
   test("deterministic across runs") {
-    // read-buffer invariance is the property test's (ChunkScan at 1, 37,
+    // read-buffer invariance is the ChunkScan reference test's (1, 37,
     // 4097 and 4 MiB read buffers against the naive reference)
     val data = randomBytes(3 << 20, 4L)
     assert(Chunker.boundaries(data) == Chunker.boundaries(data))
@@ -199,46 +199,58 @@ class ChunkerSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ChunkerParams.xetFromTarget(3000))
   }
 
-  test("property: every kernel equals the naive no-skip reference, per config, input and read buffer") {
-    // the coarse 4-bit configs (P[boundary] = 1/16 per byte) put many
-    // boundaries exactly at curLen == minLen, the position where an
-    // off-by-one in Chunker.hashSkip would first diverge; minLen 65..265
-    // makes the skipped prefix 1..201 bytes. The production configs
-    // (16 mask bits) almost never exercise that position.
+  // The table every kernel is checked against the naive reference over.
+  // The coarse 4-bit configs (P[boundary] = 1/16 per byte) put many
+  // boundaries exactly at curLen == minLen, the position where an
+  // off-by-one in Chunker.hashSkip would first diverge; minLen 65..265
+  // makes the skipped prefix 1..201 bytes. The production configs
+  // (16 mask bits) almost never exercise that position.
+  private lazy val configs: IndexedSeq[ChunkerParams] = {
     val rng = new scala.util.Random(31)
     val coarse = (65 to 265 by 25).zipWithIndex.map { case (minLen, i) =>
       ChunkerParams(mask = 0xf000000000000000L, minLen = minLen, maxLen = 4096,
         enforceMax = i % 2 == 0, tableSeed = rng.nextLong())
     }
-    val configs = IndexedSeq(
+    IndexedSeq(
       ChunkerParams.Default,
       ChunkerParams.Xet,
       ChunkerParams(mask = -1L << (64 - 5), minLen = 16, maxLen = 256), // stream_cdc's
       ChunkerParams(mask = -1L << (64 - 10), minLen = 256, maxLen = 4096),
       ChunkerParams(mask = -1L << (64 - 10), minLen = 64, maxLen = 1024, enforceMax = false)) ++
       coarse
+  }
+
+  private lazy val inputs: Seq[(String, Array[Byte])] = {
     val base = randomBytes(600000, 41L)
     // edited copy: an insert, a delete and an overwrite at scattered points
     val edited = base.slice(0, 150000) ++ randomBytes(3000, 42L) ++
       base.slice(150000, 320000) ++ base.slice(330000, 450000) ++
       randomBytes(500, 43L) ++ base.slice(450500, base.length)
     val maxLenMultiple = 8 * ChunkerParams.Default.maxLen // a multiple of every maxLen here
-    val inputs = Seq(
+    Seq(
       "random" -> base,
       "edited copy" -> (base ++ edited),
       "empty" -> Array.emptyByteArray,
       "shorter than minLen" -> randomBytes(configs.map(_.minLen).min - 1, 44L),
       "exact multiple of maxLen (forced cuts)" -> new Array[Byte](maxLenMultiple),
       "exact multiple of maxLen (random)" -> randomBytes(maxLenMultiple, 45L))
+  }
+
+  test("hash-skip is boundary-identical to a no-skip reference at coarse masks") {
+    for ((name, data) <- inputs; p <- configs)
+      assert(Chunker.boundaries(data, p) == noSkipReference(data, p), s"$name: boundaries diverged: $p")
+  }
+
+  test("property: chunkStats equals the naive reference's (hash, size, lz4) per config and input") {
+    for ((name, data) <- inputs; p <- configs)
+      assert(Chunker.chunkStats(data, p).toVector == referenceStats(data, p), s"$name: chunkStats diverged: $p")
+  }
+
+  test("ChunkScan: every config yields the naive reference's (hash, size, lz4) stream from one read, per read buffer") {
     for ((name, data) <- inputs) {
       val want = configs.map(referenceStats(data, _))
-      // the array kernels
-      configs.zip(want).foreach { case (p, w) =>
-        assert(Chunker.boundaries(data, p) == noSkipReference(data, p), s"$name: boundaries diverged: $p")
-        assert(Chunker.chunkStats(data, p).toVector == w, s"$name: chunkStats diverged: $p")
-      }
-      // the streaming kernel: every config from one read; 37 puts a refill
-      // inside the coarse configs' skip region
+      // every config from one read; 37 puts a refill inside the coarse
+      // configs' skip region
       for (bufSize <- Seq(1, 37, 4097, 4 << 20)) {
         val scan = new ChunkScan(new java.io.ByteArrayInputStream(data), configs, bufSize)
         val got = scan.stats(configs.map(_ => true)).toVector
